@@ -31,16 +31,6 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-def hash60(col: Column) -> Column:
-    """Deterministic 60-bit positive integer hash of a string.
-
-    conv(substr(md5(s),1,15), 16, 10) — 15 hex chars = 60 bits, always
-    non-negative, bit-identical to DuckDB's ('0x'||substr(md5(s),1,15))::bigint.
-    Used for shingle hashing / minhash so the DuckDB oracle can reproduce it.
-    """
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def hash32(col: Column) -> Column:
     """Deterministic 32-bit positive integer hash (first 8 md5 hex chars).
 
@@ -168,13 +158,6 @@ def dup_fraction_of(g: Column) -> Column:
         F.lit(1.0)
         - F.size(F.array_distinct(g)).cast("double") / F.size(g).cast("double")
     )
-
-
-def dup_ngram_fraction(col: Column, n: int) -> Column:
-    """Gopher-style repetition signal: fraction of word n-grams that are
-    repeats of an earlier n-gram (1 - distinct/total). 0.0 for texts too
-    short to have any n-gram."""
-    return dup_fraction_of(word_ngrams_all(col, n))
 
 
 def top_token_fraction_tokens(toks: Column) -> Column:

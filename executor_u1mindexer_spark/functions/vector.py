@@ -93,13 +93,6 @@ def score_transform(metric: str, dist: Column, is_distance: bool) -> Column:
     raise ValueError(f"unknown metric {metric!r}; expected one of {METRICS}")
 
 
-def l2_normalize(a: Column) -> Column:
-    """a / |a| — pre-normalization so cosine becomes a plain dot product
-    (what hnswlib's cosine space does internally once per stored vector)."""
-    n = norm(a)
-    return F.transform(a, lambda x: x / n)
-
-
 def dim_check(col: Column, dim: int) -> Column:
     """Boolean embedding-width validation (executor.py:105-110 raises
     ValueError on width mismatch; relationally this is a filter/assert)."""

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from executor_u1mindexer_spark import cache
 from executor_u1mindexer_spark.functions import text as T
 from executor_u1mindexer_spark.functions import vector as V
+from executor_u1mindexer_spark.operators import graph as G
 
 # MinHash universe/coefficients. P is prime > 2^32; a,b < 2^20 keep
 # a*h32 + b < 2^52 (exact in int64 AND in double — DuckDB-safe).
@@ -666,7 +667,6 @@ def dedup_clusters(
     a_col: str = "id_a",
     b_col: str = "id_b",
     quality_col: str | None = None,
-    max_iters: int = 6,
 ) -> DataFrame:
     """Near-dup CLUSTERING + canonical-doc selection — the keep-list step a
     real dedup pipeline ends with: detector pairs (minhash/simhash/
@@ -680,52 +680,20 @@ def dedup_clusters(
     column is given — "keep the longest copy" is the usual corpus-hygiene
     policy.
 
-    Components via iterative min-label propagation, all DataFrame ops:
-    labels_{t+1}(v) = min(labels_t(v), min over neighbors labels_t(u)),
-    iterated ONLY over the pair-touched node set — the corpus never enters
-    the loop; unpaired docs join in once at the end as singletons. Exact
-    when the component diameter <= the iterations run; each round ends
-    with a scalar sum(label) check (min-propagation strictly lowers the
-    sum until converged) so typical corpora stop after diameter+1 rounds —
-    max_iters is the safety bound for adversarial chain graphs.
+    Components come from graph.connected_components (large-star/
+    small-star contraction, O(log^2 n) rounds), run ONLY over the
+    pair-touched node set — the corpus never enters the loop; unpaired
+    docs join in once at the end as singletons. It raises if it does not
+    converge, so a long near-dup chain can never come back split.
 
     100 TB design: the dominant data (unpaired corpus) is touched exactly
     once by a left join; the loop shuffles only detector-paired ids (a
-    tiny fraction of the corpus by construction). Symmetric edges are
-    built once and pinned; each iteration is one equi-join on src + one
-    partial-aggregated min + one scalar aggregate — bounded shuffles, no
-    driver-collected rows (the convergence check is a 1-row aggregate,
-    the same driver-side scalar any iterate-until-fixpoint algorithm
-    needs). Each converged-loop output is pinned so the final plan is
-    shallow; cluster windows partition by cluster id (cluster sizes are
-    detector-bounded).
+    tiny fraction of the corpus by construction). Cluster windows
+    partition by cluster id (cluster sizes are detector-bounded).
     """
-    edges = pairs.select(
-        F.col(a_col).cast("long").alias("src"), F.col(b_col).cast("long").alias("dst")
-    )
-    sym = cache.pin(
-        edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    )
-    labels = sym.select(F.col("src").alias("id")).distinct().withColumn(
-        "label", F.col("id")
-    )
-    prev_sum = None
-    for _ in range(max_iters):
-        prop = (
-            sym.join(labels, sym["src"] == labels["id"])
-            .select(F.col("dst").alias("id"), F.col("label"))
-        )
-        labels = cache.pin(
-            prop.unionByName(labels.select("id", "label"))
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-        )
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
+    labels = G.connected_components(
+        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+    ).select(F.col("node").alias("id"), F.col("component").alias("label"))
     all_ids = docs.select(F.col(id_col).cast("long").alias("id"))
     out = all_ids.join(labels, on="id", how="left").select(
         "id", F.coalesce("label", F.col("id")).alias("label")

@@ -1,10 +1,12 @@
-"""Graph analytics on relational co-occurrence graphs — bounded-iteration
-PageRank and triangle counting, engineered for cross-engine bit-exactness.
+"""Graph analytics on relational co-occurrence graphs, engineered for
+cross-engine bit-exactness.
 
 A training-data pipeline meets graphs constantly (dedup clusters, link
-graphs for quality signals, co-occurrence structure); the engine already
-has connected components (dedup.near_dedup_clusters). This module adds
-the two classic batch-graph workloads:
+graphs for quality signals, co-occurrence structure). This module holds
+the engine's graph operators: PageRank, triangle counting, connected
+components (also the component step of dedup.dedup_clusters), label
+propagation, bounded-hop BFS and weighted SSSP, link prediction and
+k-core peeling. The two classic batch-graph workloads:
 
 - **PageRank** (Page/Brin/Motwani/Winograd 1999), N fixed iterations of
   the damped power method. All arithmetic is SCALED-INTEGER: ranks live
@@ -43,6 +45,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 10**12
+# rounds between lineage truncations in pagerank / label_propagation
+CHECKPOINT_WINDOW = 8
 
 
 def _idiv(a: str, b: str, engine: str) -> str:
@@ -167,7 +171,6 @@ def pagerank(
     edges: DataFrame,
     n_iter: int = 5,
     damping_pct: int = 85,
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """Scaled-integer PageRank over canonical undirected edges.
 
@@ -177,19 +180,16 @@ def pagerank(
     directions. The uniform init and the (1-d)/n base use the SAME floor
     division the oracle replays.
 
-    checkpoint_every: lineage is truncated every K supersteps, not every
+    Lineage is truncated every CHECKPOINT_WINDOW supersteps, not every
     superstep. Unlike upsert's ~16×-per-batch self-embedding plan, each
     pagerank round references the previous ranks exactly ONCE (share =
-    r ⋈ deg), so plan depth grows LINEARLY inside a window and the
-    per-round eager checkpoint was pure job-launch overhead: a default
-    5-iteration run now compiles to one Spark job instead of six.
-    checkpoint_every=1 restores the strict Pregel-superstep behavior."""
+    r ⋈ deg), so plan depth grows LINEARLY inside a window and a
+    per-round eager checkpoint would be pure job-launch overhead: a
+    default 5-iteration run compiles to one Spark job instead of six."""
     if not (1 <= n_iter <= 50):
         raise ValueError(f"n_iter must be in [1, 50], got {n_iter}")
     if not (0 <= damping_pct <= 100):
         raise ValueError(f"damping_pct must be in [0, 100], got {damping_pct}")
-    if checkpoint_every < 1:
-        raise ValueError(f"checkpoint_every must be >= 1, got {checkpoint_every}")
     # Loop-invariant hoists (the GraphX routing-table idea): after the
     # shared adjacency build, NO iteration shuffles edge-sized rows — the
     # one per-round join is node-keyed (ranks ⋈ adj, which carries
@@ -249,8 +249,8 @@ def pagerank(
         # one (node, rank) row per node at each truncation point — plan
         # depth stays bounded by the checkpoint window (linear within it,
         # see the docstring; same rationale as BPE's per-round truncation
-        # but amortized over K rounds)
-        if (it + 1) % checkpoint_every == 0 and (it + 1) < n_iter:
+        # but amortized over CHECKPOINT_WINDOW rounds)
+        if (it + 1) % CHECKPOINT_WINDOW == 0 and (it + 1) < n_iter:
             r = r.localCheckpoint(eager=True)
     return r
 
@@ -332,19 +332,19 @@ def connected_components(
     "Connected Components in MapReduce and Beyond", SoCC 2014).
 
     Returns (node, component) for every node incident to at least one
-    edge; ``component`` is the component's minimum node id (the same
-    labeling convention as dedup.dedup_clusters).
+    edge; ``component`` is the component's minimum node id.
+    dedup.dedup_clusters takes its duplicate clusters from here.
 
-    Why a second CC algorithm when dedup_clusters already does min-label
-    propagation: propagation converges in O(diameter) rounds — correct
-    for detector pair graphs (tiny, bushy components) but fatal on chain-
-    or path-shaped graphs (event chains, linked lists of revisions) where
-    the diameter grows with the data. Star contraction halves path
-    lengths every alternation, converging in O(log^2 n) rounds with the
-    SAME per-round cost shape (one groupBy-min + one equi-join on the
-    current edge set). A 99-hop user-event chain converges in ~10 rounds
-    here vs 99 rounds of propagation; at 100 TB, chains are unbounded and
-    this is the only shape that survives.
+    Why star contraction rather than min-label propagation: propagation
+    converges in O(diameter) rounds — fine for tiny, bushy components
+    but fatal on chain- or path-shaped graphs (event chains, linked lists
+    of revisions, near-dup chains) where the diameter grows with the
+    data. Star contraction halves path lengths every alternation,
+    converging in O(log^2 n) rounds with the SAME per-round cost shape
+    (one groupBy-min + one equi-join on the current edge set). A 99-hop
+    user-event chain converges in ~10 rounds here vs 99 rounds of
+    propagation; at 100 TB, chains are unbounded and this is the only
+    shape that survives.
 
     Per round: large-star — every node u points its GREATER neighbors at
     m(u) = min(N(u) ∪ {u}); small-star — every node u points its
@@ -451,9 +451,7 @@ def connected_components(
     return members.unionByName(roots).distinct()
 
 
-def label_propagation(
-    edges: DataFrame, n_iter: int = 4, checkpoint_every: int = 8
-) -> DataFrame:
+def label_propagation(edges: DataFrame, n_iter: int = 4) -> DataFrame:
     """Synchronous label propagation (community detection; Raghavan,
     Albert, Kumara 2007) with FULLY DETERMINISTIC semantics: labels
     start as node ids; each round every node adopts the label most
@@ -468,7 +466,7 @@ def label_propagation(
     adjacency arrays, each round is a node-keyed adj ⋈ labels join whose
     fan-out explodes in-partition and partially aggregates map-side
     before the one (node, label) exchange, and lineage truncates every
-    checkpoint_every rounds (each round references the previous labels
+    CHECKPOINT_WINDOW rounds (each round references the previous labels
     exactly once, so in-window plan growth is linear and AQE's
     ReuseExchange materializes the adjacency shuffle once per window).
     The per-node argmax is min_by over the (-count, label) vote struct —
@@ -479,8 +477,6 @@ def label_propagation(
     [NOT IN REFERENCE — executor.py has no graph surface.]"""
     if not (1 <= n_iter <= 50):
         raise ValueError(f"n_iter must be in [1, 50], got {n_iter}")
-    if checkpoint_every < 1:
-        raise ValueError(f"checkpoint_every must be >= 1, got {checkpoint_every}")
     deg, adj = _adjacency(edges)
     labels = deg.select("node", F.col("node").alias("label"))
     # (count desc, label asc) == min of the (-count, label) struct: only
@@ -502,7 +498,7 @@ def label_propagation(
             .agg(F.count(F.lit(1)).alias("__c"))
         )
         labels = votes.groupBy("node").agg(pick.alias("label"))
-        if (it + 1) % checkpoint_every == 0 and (it + 1) < n_iter:
+        if (it + 1) % CHECKPOINT_WINDOW == 0 and (it + 1) < n_iter:
             labels = labels.localCheckpoint(eager=True)
     return labels
 
@@ -1005,14 +1001,7 @@ FROM nonedge ORDER BY aa_micro DESC, a, b LIMIT {k}
 # ---------------------------------------------- k-core decomposition (r13)
 
 
-def kcore(
-    edges: DataFrame,
-    k: int,
-    max_rounds: int = 8,
-    broadcast_keep: bool = False,
-    convergence_probe: bool = True,
-    compact_frac: float = 0.25,
-) -> DataFrame:
+def kcore(edges: DataFrame, k: int, max_rounds: int = 8) -> DataFrame:
     """K-core: the maximal subgraph where every node has degree >= k,
     by synchronous iterative peeling (Seidman 1983; the Batagelj-
     Zaversnik sequential algorithm's distributed form) — each round
@@ -1044,36 +1033,11 @@ def kcore(
     previously removed nodes — and is property-tested against a python
     reference peeling plus a per-round recount twin. Measured A/B at
     sf0.1 (registered row, same session): ~4.6-5.0 s -> ~3.5-4.1 s.
-    Knobs:
 
-    - broadcast_keep: True broadcasts the per-round REMOVED frontier
-      into the loss semi-join so the edge list never shuffles there;
-      the default stays False (shuffle-safe) because at extreme scale
-      a first-round removed set can be a large fraction of the node
-      list, and AQE can still pick the broadcast at runtime.
-    - convergence_probe: bounded driver scalar as an early-exit check,
-      one count job per round — now over the node-sized survivor
-      state, not the edge list. False skips the probes and always runs
-      the bounded max_rounds; post-fixpoint rounds are no-op node-sized
-      filters, and the `converged` verdict (not the probe) is what
-      guards correctness.
-    - compact_frac (r17, VERDICT r16 #6): every round's loss semi-join
-      scans the FULL pinned edge list even when the frontier is tiny —
-      fine while peeling is shallow, the dominant remaining cost on a
-      deep peel at 100 TB. When the nodes removed since the last pin
-      exceed compact_frac of the node count AT that pin, the edge list
-      is re-filtered to current survivors and re-checkpointed, so
-      subsequent loss scans read only surviving edges. The trigger is
-      DATA-ADAPTIVE, reusing the probe's counts (the round-0 probe
-      returns node total + below-k count in one aggregate): a shallow
-      peel (the registered sf0.1 row removes 6.3% of nodes across all
-      rounds) never compacts and pays nothing; a deep peel compacts
-      every time another quarter of the graph dissolves, bounding the
-      per-round scan without reverting to O(E)-per-round checkpoints.
-      Requires the probe (no counts without it); 0 disables. Peeling
-      confluence makes the result independent of compaction: removed
-      sets are always subsets of the survivors at any earlier pin, so
-      every loss edge is still present.
+    The removed frontier (one id per peeled node) is broadcast into the
+    loss semi-join, so the edge list never shuffles there, and an
+    isEmpty() probe on the node-sized survivor state ends the loop at
+    the fixpoint.
     [NOT IN REFERENCE — executor.py has no graph surface.]"""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -1099,37 +1063,15 @@ def kcore(
         .agg(F.count(F.lit(1)).cast("long").alias("__d"))
         .localCheckpoint(eager=True)
     )
-    n_pin: int | None = None  # node count at the last edge-list pin
-    cum_removed = 0
-    for it in range(max_rounds):
-        removed = surv.filter(F.col("__d") < k).select("a")
-        if convergence_probe and compact_frac <= 0:
-            # compaction off: the probe needs no counts — keep the
-            # cheapest short-circuiting form
-            if removed.isEmpty():
-                break
-        elif convergence_probe:
-            if n_pin is None:
-                # one aggregate gives BOTH the probe and the compaction
-                # denominator — no extra job vs the old isEmpty()
-                row0 = surv.agg(
-                    F.count(F.lit(1)).alias("__n"),
-                    F.sum((F.col("__d") < k).cast("long")).alias("__nr"),
-                ).collect()[0]
-                n_pin, n_rem = int(row0["__n"]), int(row0["__nr"] or 0)
-            else:
-                n_rem = removed.count()
-            if n_rem == 0:
-                break
-            cum_removed += n_rem
-        removed_b = removed.select(F.col("a").alias("b"))
-        if broadcast_keep:
-            removed_b = F.broadcast(removed_b)
+    for _ in range(max_rounds):
+        removed = surv.filter(F.col("__d") < k).select(F.col("a").alias("b"))
+        if removed.isEmpty():
+            break
         # edges whose far endpoint was just removed, counted per near
         # endpoint — the only edge-sized touch in the round, and its
         # shuffle carries one row per (survivor, lost-edge) only
         loss = (
-            sym.join(removed_b, "b", "leftsemi")
+            sym.join(F.broadcast(removed), "b", "leftsemi")
             .groupBy("a")
             .agg(F.count(F.lit(1)).cast("long").alias("__l"))
         )
@@ -1144,20 +1086,6 @@ def kcore(
             )
             .localCheckpoint(eager=True)
         )
-        if (
-            compact_frac > 0
-            and convergence_probe
-            and (it + 1) < max_rounds
-            and cum_removed >= compact_frac * n_pin
-        ):
-            keys = surv.select("a")
-            sym = (
-                sym.join(keys, "a", "leftsemi")
-                .join(keys.select(F.col("a").alias("b")), "b", "leftsemi")
-                .localCheckpoint(eager=True)
-            )
-            n_pin -= cum_removed
-            cum_removed = 0
     # a survivor whose every neighbor peeled has no surviving edge — the
     # induced-subgraph recount form had no row for it; drop it here too
     deg = surv.filter(F.col("__d") >= 1).select(

@@ -25,15 +25,6 @@ def physical_plan(df: DataFrame, mode: str = "formatted") -> str:
     )
 
 
-def has_broadcast_join(df: DataFrame) -> bool:
-    plan = physical_plan(df)
-    return "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-
-
-def has_shuffle(df: DataFrame) -> bool:
-    return "Exchange" in physical_plan(df)
-
-
 def pushed_filters(df: DataFrame) -> str:
     """The PushedFilters lines of every scan in the plan."""
     return "\n".join(

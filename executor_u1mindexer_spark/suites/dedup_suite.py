@@ -67,49 +67,11 @@ def near_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     one canonical doc per cluster (longest text wins, ties lowest id).
     The oracle computes the same components with a recursive CTE over the
     identical pair SQL — transitive closure, so any under-iteration or
-    label-propagation bug in the Spark side diverges."""
+    contraction bug in the Spark side diverges."""
     docs = tables.load(spark, sf_dir, "documents")
     pairs = D.minhash_lsh_pairs(docs, threshold=0.5).select("id_a", "id_b")
     return D.dedup_clusters(
         docs.select("doc_id", "n_chars"), pairs, quality_col="n_chars"
-    ).orderBy("doc_id")
-
-
-def near_dedup_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME dedup keep-list as near_dedup_clusters, but components
-    come from graph.connected_components (large-star/small-star
-    contraction, r07) instead of dedup_clusters' min-label propagation —
-    checked against the IDENTICAL transitive-closure oracle. Two
-    independent CC algorithms, one recursive-CTE ground truth: a bug in
-    either algorithm (or a divergence between them) breaks exactly one
-    of the two rows, which localizes it immediately."""
-    from pyspark.sql import Window
-
-    from executor_u1mindexer_spark.operators import graph as G
-
-    docs = tables.load(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_pairs(docs, threshold=0.5).select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    )
-    labels = G.connected_components(pairs)
-    out = (
-        docs.select("doc_id", "n_chars")
-        .join(labels, docs["doc_id"] == labels["node"], "left")
-        .select(
-            "doc_id",
-            "n_chars",
-            F.coalesce("component", F.col("doc_id")).alias("cluster_id"),
-        )
-    )
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.col("n_chars").desc(), F.col("doc_id").asc()
-    )
-    wc = Window.partitionBy("cluster_id")
-    return out.select(
-        "doc_id",
-        "cluster_id",
-        F.count(F.lit(1)).over(wc).cast("long").alias("cluster_size"),
-        (F.row_number().over(w) == 1).alias("is_canonical"),
     ).orderBy("doc_id")
 
 
@@ -202,7 +164,6 @@ QUERIES = {
     "near_dedup_simhash": near_dedup_simhash,
     "near_dedup_embedding_cosine": near_dedup_embedding_cosine,
     "near_dedup_clusters": near_dedup_clusters,
-    "near_dedup_cc_clusters": near_dedup_cc_clusters,
     "near_dedup_containment_prefix": near_dedup_containment_prefix,
     "near_dedup_edit_distance": near_dedup_edit_distance,
     "dedup_repeated_spans": dedup_repeated_spans,
@@ -347,8 +308,8 @@ FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= 3
 """,
     # same minhash pair pipeline as near_dedup_minhash_lsh, then TRUE
     # transitive closure via a recursive CTE — the strongest possible check
-    # on the Spark side's iterative min-label propagation (any
-    # under-iteration or propagation bug breaks cluster_id equality)
+    # on the Spark side's iterative connected components (any
+    # under-iteration or contraction bug breaks cluster_id equality)
     "near_dedup_clusters": f"""
 WITH RECURSIVE t AS (
   SELECT doc_id AS id, str_split(text, ' ') AS toks FROM documents
@@ -503,10 +464,6 @@ FROM cand c JOIN base a ON a.id = c.id_a JOIN base b ON b.id = c.id_b
 WHERE len(list_intersect(a.sh, b.sh)) * 5 >= a.n_sh * 4
 """,
 }
-
-# near_dedup_cc_clusters is star-contraction CC against the SAME
-# recursive-CTE ground truth — two algorithms, one oracle
-ORACLES["near_dedup_cc_clusters"] = ORACLES["near_dedup_clusters"]
 
 
 SNM_WINDOW = 4

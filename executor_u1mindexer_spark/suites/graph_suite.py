@@ -49,10 +49,9 @@ def graph_cc_event_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation-independent answer, while the Spark side must EARN it by
     running general star-contraction CC over a path forest of diameter
     up to ~99 — the graph shape where O(diameter) min-label propagation
-    (dedup_clusters' loop) would need ~99 rounds and large-star/
-    small-star needs ~10. Any contraction bug (dropped connectivity,
-    wrong star roots, premature convergence) diverges on some of the
-    10k per-node labels."""
+    would need ~99 rounds and large-star/small-star needs ~10. Any
+    contraction bug (dropped connectivity, wrong star roots, premature
+    convergence) diverges on some of the 10k per-node labels."""
     ev = tables.load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     chain = ev.select(
@@ -261,28 +260,9 @@ def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes); k=20 would need ~20 rounds at sf0.1 and k=22 dissolves the
     whole graph. The oracle replays all 8 synchronous rounds as chained
     CTEs; peeling confluence (docstring of kcore) is what makes the
-    replay exact rather than order-sensitive.
-
-    Knobs (re-measured after the r16 delta-peeling rewrite of
-    operators/graph.kcore): the removed frontier here is bounded by the
-    part dimension (one long per peeled part), far below any broadcast
-    ceiling at this graph's scale, so broadcast_keep=True keeps the
-    edge list from shuffling in the loss semi-join;
-    convergence_probe=True because the probe is now an isEmpty() on the
-    NODE-sized checkpointed survivor state (~tens of ms) while each
-    skipped post-fixpoint round saved an edge-list scan + checkpoint
-    job — the probe flipped from net-loss to net-win when the per-round
-    state went from O(E) to O(N). Results are identical either way
-    (peeling confluence; the oracle replays all 8 synchronous rounds
-    and rounds past the fixpoint are no-ops)."""
+    replay exact rather than order-sensitive."""
     li = tables.load(spark, sf_dir, "lineitem")
-    return G.kcore(
-        G.consecutive_line_edges(li),
-        K_CORE,
-        KCORE_ROUNDS,
-        broadcast_keep=True,
-        convergence_probe=True,
-    )
+    return G.kcore(G.consecutive_line_edges(li), K_CORE, KCORE_ROUNDS)
 
 
 QUERIES["graph_kcore_membership"] = graph_kcore_membership

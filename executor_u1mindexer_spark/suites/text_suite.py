@@ -393,7 +393,7 @@ def text_bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # N most frequent adjacent-token merges over the corpus, then tokenize with
 # them. Spark shape per merge: one pair-count aggregate (map-side partial,
 # one shuffle) + a 1-row argmax collect + a map-only regexp pass — the
-# iterative-trainer pattern (compare dedup_clusters' fixpoint loop); N
+# iterative-trainer pattern (compare graph.connected_components); N
 # merges = N bounded passes. At 100 TB you learn merges on a bounded
 # deterministic sample (fit_sample) and APPLY map-only; the fixture fits on
 # the full corpus so the oracle can replay learning exactly.

@@ -65,8 +65,3 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Read every fixture table; keys match DuckDB oracle view names."""
     return {name: load(spark, sf_dir, name) for name in TABLES}
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register the fixture tables as temp views for spark.sql queries."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

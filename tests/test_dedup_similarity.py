@@ -82,7 +82,8 @@ def test_dedup_clusters_chain_quality_and_singletons(spark):
     """A 4-node chain (1-2, 2-3, 3-4) must collapse to ONE cluster labeled
     by its min id even though the diameter (3) exceeds one propagation hop;
     the canonical doc is the highest-quality member (ties lowest id);
-    unpaired docs come back as singleton canonicals."""
+    unpaired docs come back as singleton canonicals. A 10-doc pair chain
+    (diameter 9) must also come back whole, as one cluster with id 0."""
     docs = spark.createDataFrame(
         [(i, q) for i, q in [(1, 10), (2, 99), (3, 10), (4, 10), (7, 5)]],
         "doc_id long, n_chars long",
@@ -96,6 +97,12 @@ def test_dedup_clusters_chain_quality_and_singletons(spark):
     assert all(rows[i].cluster_size == 4 for i in (1, 2, 3, 4))
     assert [i for i in (1, 2, 3, 4) if rows[i].is_canonical] == [2]  # best quality
     assert rows[7].cluster_id == 7 and rows[7].cluster_size == 1 and rows[7].is_canonical
+
+    docs = spark.createDataFrame([(i, 1) for i in range(10)], "doc_id long, n_chars long")
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(9)], "id_a long, id_b long")
+    rows = D.dedup_clusters(docs, pairs, quality_col="n_chars").collect()
+    assert {r.cluster_id for r in rows} == {0}
+    assert all(r.cluster_size == 10 for r in rows)
 
 
 def test_dedup_clusters_no_pairs_all_singletons(spark):

@@ -194,30 +194,27 @@ def test_connected_components_plan_depth_constant_across_sizes(spark):
 
 
 def test_pagerank_plan_depth_bounded_by_checkpoint_window(spark):
-    """VERDICT r06 #7 pin, updated for windowed checkpointing: with
-    checkpoint_every=1 (strict Pregel supersteps) the RESULT plan must
-    not grow with n_iter, and with the default window the plan depth one
-    step past a truncation point must equal the depth at one iteration —
-    a lost checkpoint would nest the per-round join+agg without bound
-    and this test is the tripwire (the bench entry is the other half)."""
+    """VERDICT r06 #7 pin, updated for windowed checkpointing: the plan
+    depth one step past a truncation point must equal the depth at one
+    iteration — a lost checkpoint would nest the per-round join+agg
+    without bound and this test is the tripwire (the bench entry is the
+    other half)."""
     edges = [(i, i + 1) for i in range(40)] + [(0, j) for j in range(2, 12)]
     e = _edges_df(spark, edges)
 
-    def depth(n_iter, every):
+    def depth(n_iter):
         plan = (
-            G.pagerank(e, n_iter, checkpoint_every=every)
+            G.pagerank(e, n_iter)
             ._jdf.queryExecution().executedPlan().treeString()
         )
         return len(plan.splitlines())
 
-    strict = [depth(n, 1) for n in (1, 3, 6)]
-    assert max(strict) - min(strict) <= 2, strict
-    # default window (8): iteration 9 sits one past the truncation at 8,
-    # so its residual plan is exactly a single round's — same as n_iter=1
-    assert abs(depth(9, 8) - depth(1, 8)) <= 2
+    # CHECKPOINT_WINDOW (8): iteration 9 sits one past the truncation at
+    # 8, so its residual plan is exactly a single round's — same as n_iter=1
+    assert abs(depth(9) - depth(1)) <= 2
     # and within a window the growth is linear-bounded, never explosive:
     # 6 unchecked rounds stay under 6x a single round's plan
-    assert depth(6, 8) < 6 * depth(1, 8)
+    assert depth(6) < 6 * depth(1)
 
 
 def test_pagerank_adjacency_exchange_reused_within_window(spark):
@@ -305,25 +302,22 @@ def test_label_propagation_matches_python_replay(spark):
 
 
 def test_label_propagation_plan_depth_bounded_by_checkpoint_window(spark):
-    """Windowed-checkpoint pin, same contract as the pagerank twin:
-    strict mode (checkpoint_every=1) must keep the result plan constant
-    across n_iter; the default window must reset the residual plan to a
-    single round's one step past a truncation point, and in-window
-    growth must stay linear-bounded."""
+    """Windowed-checkpoint pin, same contract as the pagerank twin: the
+    window must reset the residual plan to a single round's one step
+    past a truncation point, and in-window growth must stay
+    linear-bounded."""
     edges = [(i, i + 1) for i in range(30)]
     e = _edges_df(spark, edges)
 
-    def depth(n_iter, every):
+    def depth(n_iter):
         plan = (
-            G.label_propagation(e, n_iter, checkpoint_every=every)
+            G.label_propagation(e, n_iter)
             ._jdf.queryExecution().executedPlan().treeString()
         )
         return len(plan.splitlines())
 
-    strict = [depth(n, 1) for n in (1, 4)]
-    assert max(strict) - min(strict) <= 2, strict
-    assert abs(depth(9, 8) - depth(1, 8)) <= 2
-    assert depth(4, 8) < 4 * depth(1, 8)
+    assert abs(depth(9) - depth(1)) <= 2
+    assert depth(4) < 4 * depth(1)
 
 
 def test_connected_components_self_loops_only_is_empty(spark):
@@ -655,8 +649,8 @@ def test_kcore_insufficient_rounds_flags_not_converged(spark):
 
 def test_kcore_matches_reference_peeling_on_random_graphs(spark):
     """Property: distributed synchronous peeling equals a python
-    reference k-core on random graphs, for both knob settings — the
-    confluence claim tested rather than asserted."""
+    reference k-core on random graphs — the confluence claim tested
+    rather than asserted."""
     import random
 
     from executor_u1mindexer_spark.operators import graph as G
@@ -690,14 +684,11 @@ def test_kcore_matches_reference_peeling_on_random_graphs(spark):
             u: sum(v in alive for v in adj[u]) for u in alive
         }
         df = spark.createDataFrame(sorted(edges), "src long, dst long")
-        for bc, probe in ((False, True), (True, False)):
-            got = {
-                r.node: r.core_degree
-                for r in G.kcore(
-                    df, k, max_rounds=20, broadcast_keep=bc, convergence_probe=probe
-                ).collect()
-            }
-            assert got == want, (trial, k, bc, probe)
+        got = {
+            r.node: r.core_degree
+            for r in G.kcore(df, k, max_rounds=20).collect()
+        }
+        assert got == want, (trial, k)
 
 
 def test_kcore_delta_peeling_matches_synchronous_recount_every_round(spark):
@@ -737,45 +728,7 @@ def test_kcore_delta_peeling_matches_synchronous_recount_every_round(spark):
         }
         want = {u: d for u, d in want.items() if d >= 1}
         want_conv = (not want) or min(want.values()) >= k
-        rows = G.kcore(
-            df, k, max_rounds=max_rounds,
-            broadcast_keep=True, convergence_probe=False,
-        ).collect()
+        rows = G.kcore(df, k, max_rounds=max_rounds).collect()
         got = {r.node: r.core_degree for r in rows}
         assert got == want, max_rounds
         assert all(r.converged == want_conv for r in rows), max_rounds
-
-
-def test_kcore_adaptive_compaction_fires_without_changing_results(spark):
-    """r17 internals pin (VERDICT r16 #6): when the nodes peeled since
-    the last edge-list pin exceed compact_frac of the pin's node count,
-    kcore re-filters the pinned edge list to current survivors so the
-    per-round loss scan stops reading dissolved edges. Results must be
-    INDEPENDENT of compaction (confluence: later removed sets are
-    subsets of any earlier pin's survivors): a deep-peel graph where a
-    large fraction dissolves early is run at compact_frac settings that
-    (a) never fire, (b) fire once, (c) fire aggressively, including
-    mid-peel max_rounds cuts, and all outputs must match."""
-    from executor_u1mindexer_spark.operators import graph as G
-
-    # 3-core clique of 5 + a 20-node pendant chain: the chain (80% of
-    # nodes) peels in the first rounds, then cascades — removal
-    # fraction crosses any threshold below ~0.8
-    edges = [(a, b) for a in range(5) for b in range(a + 1, 5)]
-    edges += [(4, 100)] + [(100 + i, 101 + i) for i in range(19)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    for max_rounds in (1, 3, 8):
-        outs = []
-        for frac in (0.0, 0.5, 0.05):
-            rows = G.kcore(
-                df, 3, max_rounds=max_rounds,
-                convergence_probe=True, compact_frac=frac,
-            ).collect()
-            outs.append(
-                (sorted((r.node, r.core_degree) for r in rows),
-                 rows[0].converged if rows else None)
-            )
-        assert outs[0] == outs[1] == outs[2], (max_rounds, outs)
-    # and the clique itself is the 3-core
-    nodes = {n for n, _ in outs[0][0]}
-    assert nodes == {0, 1, 2, 3, 4}
