@@ -1,16 +1,23 @@
-"""Session-lifetime DataFrame cache registry.
+"""The engine's one materialization idiom, plus per-query release hooks.
 
-Some operators persist() an intermediate that is consumed by two branches
-of one query plan (self-join / confirm-join sharing points, where exchange
-reuse does not fire across join aliases). The persist is correct per query,
-but a long-lived session that runs many queries (the grading driver's loop,
-bench.py, the oracle sweep) would accumulate cached blocks indefinitely —
-a slow memory leak. Operators therefore register every persisted
-DataFrame here via ``pin``; query harnesses call ``release_all`` between
-queries (bench.py and tools/oracle_check.py do).
+Every intermediate an operator shares between plan branches (self-join and
+confirm-join sharing points, where exchange reuse does not fire across join
+aliases), every bounded state an iterative operator carries between rounds,
+and every lineage cut in the facade goes through ``materialize``. The policy
+lives here and nowhere else:
 
-Released DataFrames remain valid — Spark recomputes them from lineage on
-next use — so releasing is always safe, merely un-memoized.
+- eager: the DataFrame is computed before the call returns, so no two
+  consumers can race to populate it, and its lineage collapses to one
+  LogicalRDD leaf (``Scan ExistingRDD`` in physical plans);
+- local: blocks stay on the executors that computed them, with no
+  checkpoint directory to configure;
+- not registered for release: a local checkpoint cannot be recomputed once
+  its blocks are dropped, so nothing here unpersists it. Spark's
+  ContextCleaner frees the blocks once the DataFrame is unreachable.
+
+Module-level memos of materialized DataFrames register an ``on_release``
+callback; query harnesses call ``release_all`` between queries (bench.py,
+tools/oracle_check.py, perfbench) so those memos drop their references.
 """
 
 from __future__ import annotations
@@ -19,32 +26,23 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
-_PINNED: list[DataFrame] = []
 _CALLBACKS: list[Callable[[], None]] = []
 
 
-def pin(df: DataFrame) -> DataFrame:
-    """persist() a DataFrame and register it for later release_all()."""
-    df.persist()
-    _PINNED.append(df)
-    return df
+def materialize(df: DataFrame) -> DataFrame:
+    """Eagerly compute ``df`` into a local checkpoint and return it."""
+    return df.localCheckpoint(eager=True)
 
 
 def on_release(cb: Callable[[], None]) -> None:
     """Register a callback run by release_all() (e.g. clearing a
-    module-level DataFrame memo so it cannot hold stale unpersisted refs)."""
+    module-level DataFrame memo so it cannot outlive its query)."""
     _CALLBACKS.append(cb)
 
 
 def release_all() -> None:
-    for df in _PINNED:
-        try:
-            df.unpersist()
-        except Exception:  # noqa: BLE001 — a dead session must not mask cleanup
-            pass
-    _PINNED.clear()
     for cb in _CALLBACKS:
         try:
             cb()
-        except Exception:  # noqa: BLE001
+        except Exception:  # noqa: BLE001 — a dead session must not mask cleanup
             pass

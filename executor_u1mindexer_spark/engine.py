@@ -33,6 +33,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from executor_u1mindexer_spark import cache
 from executor_u1mindexer_spark.operators import knn, maintenance as M, traverse
 
 VECTORS = "vectors"
@@ -95,6 +96,9 @@ class U1MIndexerSpark:
         self._ds_pending = 0  # appended batches since the last compaction
         self._ds_layers = 0  # delete anti-join layers since the last checkpoint
         self._ds_batch_no = 0
+        self._dirty = False  # vector lineage grew since the last checkpoint
+        self._tombstones = 0  # deleted ids, counted by status()
+        self._slot_debt = 0  # freed top slots, charged by capacity admission
         if workspace and os.path.exists(os.path.join(workspace, VECTORS)):
             self._vectors = M.load(spark, os.path.join(workspace, VECTORS))
             doc_path = os.path.join(workspace, DOCSTORE)
@@ -150,11 +154,11 @@ class U1MIndexerSpark:
         here: its append-only lineage grows one externally-rooted union per
         batch (linear, not the vectors' ~16x self-embedding), and the
         compaction points own its truncation (see module note)."""
-        if not getattr(self, "_dirty", False):
+        if not self._dirty:
             return
         self._dirty = False
         n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        self._vectors = self._vectors.coalesce(n).localCheckpoint(eager=True)
+        self._vectors = cache.materialize(self._vectors.coalesce(n))
 
     def _docstore_compact(self) -> None:
         """Collapse the appended batch log to keep-latest-batch per id —
@@ -178,7 +182,7 @@ class U1MIndexerSpark:
                 .drop("__ds_max")
             )
         n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        self._docstore = ds.coalesce(n).localCheckpoint(eager=True)
+        self._docstore = cache.materialize(ds.coalesce(n))
         self._ds_pending = 0
         self._ds_layers = 0
 
@@ -202,18 +206,12 @@ class U1MIndexerSpark:
         query_id_col: str = "query_id",
         query_vec_col: str = "query_embedding",
         with_payload: bool = True,
-        impl: str = "catalyst",
     ) -> DataFrame:
         """Top-k exact KNN with full-payload rows (executor.py:73-125).
 
         traversal_paths (executor.py:86): 'r' searches the root rows; 'c'
         explodes the `chunks` array first, so each chunk Document is a
-        query — the chunk struct must carry the query id/embedding fields.
-
-        impl='arrow' routes scoring through the chunk-packed numpy kernel
-        (bit-identical results, ~20x lower marginal cost for large query
-        batches — see operators/knn.knn_search).
-        """
+        query — the chunk struct must carry the query id/embedding fields."""
         queries = traverse.traverse_flat(queries, traversal_paths, id_col=query_id_col)
         k = limit if limit is not None else self.limit
         # lazy dim check (executor.py:105-110): guard fused into the query
@@ -235,7 +233,6 @@ class U1MIndexerSpark:
             query_vec_col=query_vec_col,
             payload=payload,
             payload_key=M.ID,
-            impl=impl,
         )
 
     def index(
@@ -284,11 +281,11 @@ class U1MIndexerSpark:
             # hnswlib element-count semantics (a delete never refunds
             # room). Internal ids may renumber into freed top slots, but
             # two live rows can never collide.
-            cap = self.max_elements - getattr(self, "_slot_debt", 0)
+            cap = self.max_elements - self._slot_debt
             new_state, rejected = M.upsert_capacity_bound(
                 self._vectors, batch, max(cap, 0)
             )
-            rejected = rejected.localCheckpoint(eager=True)
+            rejected = cache.materialize(rejected)
             self._vectors = new_state.select(M.ID, M.IID, M.EMB)
             docs = docs.join(
                 F.broadcast(rejected.withColumnRenamed(M.ID, id_col)),
@@ -389,8 +386,8 @@ class U1MIndexerSpark:
             freed_top = (int(row["mark_all"]) + 1) - (
                 int(row["mark_surv"]) + 1 if row["mark_surv"] is not None else 0
             )
-            self._slot_debt = getattr(self, "_slot_debt", 0) + max(freed_top, 0)
-        self._tombstones = getattr(self, "_tombstones", 0) + n_hit
+            self._slot_debt += max(freed_top, 0)
+        self._tombstones += n_hit
         self._vectors = M.delete_by_ids(self._vectors, ids_df)
         if self._docstore is not None:
             # eager anti-join over the appended log: drops every copy of
@@ -431,7 +428,7 @@ class U1MIndexerSpark:
         slots, matching hnswlib element_count semantics. Both counts run in
         ONE Spark job (the scalar aggregates cross-join into a single 1-row
         plan) instead of two separate collects."""
-        tombstones = getattr(self, "_tombstones", 0)
+        tombstones = self._tombstones
         vec_n = self._vectors.agg(F.count(F.lit(1)).alias("n_vec"))
         ds = self._docstore_view()
         if ds is not None:

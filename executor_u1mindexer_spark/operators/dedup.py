@@ -8,8 +8,8 @@ query time. MinHash coefficients are fixed module constants.
 
 Scale design (100 TB):
 - exact dedup: one shuffle on the content hash (not the full text);
-- MinHash-LSH: signatures are computed scan-side in whole-stage codegen
-  (nested higher-order functions, no UDF); the only shuffle is the
+- MinHash-LSH: signatures are computed scan-side in one Arrow kernel
+  pass (minhash_signatures_arrow); the only shuffle is the
   band-bucket self-join, whose fan-out is bounded by bucket size; exact
   jaccard runs only on candidate pairs (LSH prunes the O(n^2) space);
 - SimHash: 32-bit signature scan-side; near-pairs via banded prefix join;
@@ -182,7 +182,6 @@ def minhash_lsh_pairs(
     id_col: str = "doc_id",
     threshold: float = 0.5,
     n_shingle: int = 3,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact jaccard confirm.
 
@@ -190,36 +189,14 @@ def minhash_lsh_pairs(
     (band_idx, band_key) CARRYING ONLY IDS — the heavy shingle arrays never
     ride the shuffle; (c) distinct candidate pairs; (d) join shingles back
     and exact-jaccard-confirm only those. Output (id_a < id_b, jaccard).
-
-    impl='arrow' (default) uses the vectorized signature kernel;
-    impl='catalyst' the pure-expression fold — value-identical (tested).
     """
-    if impl == "arrow":
-        # one kernel pass yields signatures AND shingle sets; persist (via
-        # the cache registry, so harnesses can release between queries) so
-        # the banding branch and the jaccard-confirm branch don't each
-        # rerun it
-        both = cache.pin(
-            minhash_signatures_arrow(
-                df, id_col=id_col, text_col=text_col, n_shingle=n_shingle
-            )
-        )
-        sig_df = both.select("id", "sig")
-        shingled = both.select("id", "sh")
-    else:
-        spread = _spread(df.select(id_col, text_col))
-        shingled = spread.select(
-            F.col(id_col).alias("id"),
-            T.word_shingles(F.col(text_col), n_shingle).alias("sh"),
-        )
-        # repartition = materialization barrier: the (interpreted) signature
-        # aggregate is computed exactly once per row and only the (id,
-        # 32-long) signature rides the exchange — downstream band/bucket
-        # logic reuses the physical column instead of re-evaluating the fold.
-        sig_df = spread.select(
-            F.col(id_col).alias("id"),
-            minhash_signature(text_col, n_shingle).alias("sig"),
-        ).repartition(F.col("id"))
+    # one kernel pass yields signatures AND shingle sets; materialize it so
+    # the banding branch and the jaccard-confirm branch don't each rerun it
+    both = cache.materialize(
+        minhash_signatures_arrow(df, id_col=id_col, text_col=text_col, n_shingle=n_shingle)
+    )
+    sig_df = both.select("id", "sig")
+    shingled = both.select("id", "sh")
     banded = sig_df.select(
         "id", F.posexplode(lsh_band_keys(F.col("sig"))).alias("band_idx", "band_key")
     )
@@ -293,11 +270,10 @@ def ngram_jaccard_pairs(
             F.transform(T.word_shingles(F.col("__text"), n_shingle), T.hash32)
         ).alias("sh"),
     ).withColumn("n_sh", F.size("sh"))
-    # persist = the self-join's sharing point: exchange reuse does NOT fire
-    # across join aliases (alias resolution re-ids the subtrees), so without
-    # it BOTH sides recompute scan+shingle+hash+explode — measured ~2x the
-    # whole pipeline. Same pattern as the minhash arrow path above.
-    postings = cache.pin(
+    # the self-join's sharing point: exchange reuse does NOT fire across
+    # join aliases (alias resolution re-ids the subtrees), so without it
+    # BOTH sides recompute scan+shingle+hash+explode
+    postings = cache.materialize(
         base.select("id", "blk", "n_sh", F.explode("sh").alias("h"))
         .repartition(F.col("blk"), F.col("h"))
     )
@@ -361,7 +337,7 @@ def containment_prefix_pairs(
     postings at t=0.8 than a full self-join) and the rare-first order
     keeping per-posting fan-out minimal."""
     proj = _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")))
-    base = cache.pin(
+    base = cache.materialize(
         proj.select(
             "id",
             F.array_distinct(
@@ -1157,7 +1133,7 @@ def edit_distance_pairs(
     verify runs only on pigeonhole survivors, and the key cap bounds
     every Levenshtein at key_len^2 cells."""
     k = d + 1
-    base = cache.pin(
+    base = cache.materialize(
         df.select(
             F.col(id_col).alias("id"),
             F.substring(F.col(text_col), 1, key_len).alias("s"),
@@ -1280,7 +1256,7 @@ def sorted_neighborhood_pairs(
     ).withColumn("__blk", F.substring("__key", 1, block_chars)).withColumn(
         "n_sh", F.size("sh")
     )
-    base = cache.pin(base)
+    base = cache.materialize(base)
     w = W.partitionBy("__blk").orderBy("__key", "id")
     neigh = base.select(
         "id",

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from executor_u1mindexer_spark import cache
+
 SCALE = 10**12
 # rounds between lineage truncations in pagerank / label_propagation
 CHECKPOINT_WINDOW = 8
@@ -144,7 +146,7 @@ def _adjacency(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     from pyspark.sql import Window as _W
 
     directed = _both_directions(edges.select("src", "dst"))
-    adj = (
+    adj = cache.materialize(
         directed.withColumn(
             "__outdeg",
             F.count(F.lit(1)).over(_W.partitionBy("src")).cast("long"),
@@ -157,12 +159,10 @@ def _adjacency(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
             ).alias("__salt"),
         )
         .agg(F.collect_list("dst").alias("__dsts"))
-        .localCheckpoint(eager=True)
     )
-    deg = (
+    deg = cache.materialize(
         adj.groupBy("node")
         .agg(F.max("__outdeg").alias("outdeg"))
-        .localCheckpoint(eager=True)
     )
     return deg, adj
 
@@ -251,7 +251,7 @@ def pagerank(
         # see the docstring; same rationale as BPE's per-round truncation
         # but amortized over CHECKPOINT_WINDOW rounds)
         if (it + 1) % CHECKPOINT_WINDOW == 0 and (it + 1) < n_iter:
-            r = r.localCheckpoint(eager=True)
+            r = cache.materialize(r)
     return r
 
 
@@ -293,7 +293,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
         .groupBy("n")
         .agg(F.count(F.lit(1)).alias("d"))
     )
-    oriented = (
+    oriented = cache.materialize(
         e.join(deg.select(F.col("n").alias("src"), F.col("d").alias("__ds")), "src")
         .join(deg.select(F.col("n").alias("dst"), F.col("d").alias("__dd")), "dst")
         .select(
@@ -308,7 +308,6 @@ def triangle_count(edges: DataFrame) -> DataFrame:
             .otherwise(F.col("src"))
             .alias("hi"),
         )
-        .localCheckpoint(eager=True)
     )
     ab = oriented.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
     bc = oriented.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
@@ -369,14 +368,13 @@ def connected_components(
     """
     if not (1 <= max_rounds <= 200):
         raise ValueError(f"max_rounds must be in [1, 200], got {max_rounds}")
-    e = (
+    e = cache.materialize(
         edges.select(
             F.least("src", "dst").cast("long").alias("src"),
             F.greatest("src", "dst").cast("long").alias("dst"),
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     def _sig(cur: DataFrame) -> tuple[int, int]:
@@ -427,7 +425,7 @@ def connected_components(
     converged = False
     for _ in range(max_rounds):
         prev_e = e
-        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
+        e = cache.materialize(_small_star(_large_star(e)))
         cur = _sig(e)
         if cur == prev:
             # the signature (count + bounded-hash sum) could in principle
@@ -499,7 +497,7 @@ def label_propagation(edges: DataFrame, n_iter: int = 4) -> DataFrame:
         )
         labels = votes.groupBy("node").agg(pick.alias("label"))
         if (it + 1) % CHECKPOINT_WINDOW == 0 and (it + 1) < n_iter:
-            labels = labels.localCheckpoint(eager=True)
+            labels = cache.materialize(labels)
     return labels
 
 
@@ -640,7 +638,7 @@ def bfs_hop_distances(
     compute. [NOT IN REFERENCE — executor.py has no graph surface.]"""
     if not (1 <= max_hops <= 20):
         raise ValueError(f"max_hops must be in [1, 20], got {max_hops}")
-    sym = (
+    sym = cache.materialize(
         edges.select(F.col("src").cast("long").alias("u"), F.col("dst").cast("long").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .unionByName(
@@ -649,29 +647,26 @@ def bfs_hop_distances(
             ).filter(F.col("u") != F.col("v"))
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    visited = (
+    visited = cache.materialize(
         sources.select(F.col(sources.columns[0]).cast("long").alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0).cast("int"))
-        .localCheckpoint(eager=True)
     )
     frontier = visited
     for h in range(1, max_hops + 1):
-        nxt = (
+        nxt = cache.materialize(
             frontier.join(sym, frontier["node"] == sym["u"])
             .select(F.col("v").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .withColumn("dist", F.lit(h).cast("int"))
-            .localCheckpoint(eager=True)
         )
         # bounded driver scalar — the same convergence probe every
         # iterate-until-fixpoint operator here uses
         if nxt.limit(1).count() == 0:
             break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        visited = cache.materialize(visited.unionByName(nxt))
         frontier = nxt
     return visited
 
@@ -752,7 +747,7 @@ def sssp_weighted(
     REFERENCE — executor.py has no graph surface.]"""
     if not (1 <= max_hops <= 20):
         raise ValueError(f"max_hops must be in [1, 20], got {max_hops}")
-    sym = (
+    sym = cache.materialize(
         edges_w.select(
             F.col("src").cast("long").alias("u"),
             F.col("dst").cast("long").alias("v"),
@@ -768,13 +763,11 @@ def sssp_weighted(
         )
         .groupBy("u", "v")
         .agg(F.min("w").alias("w"))
-        .localCheckpoint(eager=True)
     )
-    best = (
+    best = cache.materialize(
         sources.select(F.col(sources.columns[0]).cast("long").alias("node"))
         .distinct()
         .withColumn("cost", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
     )
     frontier = best
     for _h in range(1, max_hops + 1):
@@ -785,20 +778,18 @@ def sssp_weighted(
             .agg(F.min("cost").alias("cost"))
         )
         old = best.select("node", F.col("cost").alias("__old"))
-        improved = (
+        improved = cache.materialize(
             cand.join(old, "node", "left")
             .filter(F.col("__old").isNull() | (F.col("cost") < F.col("__old")))
             .select("node", "cost")
-            .localCheckpoint(eager=True)
         )
         # bounded driver scalar — the module's standard convergence probe
         if improved.limit(1).count() == 0:
             break
-        best = (
+        best = cache.materialize(
             best.unionByName(improved)
             .groupBy("node")
             .agg(F.min("cost").alias("cost"))
-            .localCheckpoint(eager=True)
         )
         frontier = improved
     return best
@@ -1047,7 +1038,7 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 8) -> DataFrame:
     # self-loop edge would otherwise re-enter via the reversed second
     # leg and count 1 toward degree (ADVICE r13). The oracle's sym CTE
     # carries the same a <> b predicate.
-    sym = (
+    sym = cache.materialize(
         _both_directions(
             edges.select(F.col("src").alias("a"), F.col("dst").alias("b")),
             src="a",
@@ -1055,13 +1046,11 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 8) -> DataFrame:
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # (node, surviving-degree) state; one edge-sized groupBy, ONCE.
-    surv = (
+    surv = cache.materialize(
         sym.groupBy("a")
         .agg(F.count(F.lit(1)).cast("long").alias("__d"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(max_rounds):
         removed = surv.filter(F.col("__d") < k).select(F.col("a").alias("b"))
@@ -1075,7 +1064,7 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 8) -> DataFrame:
             .groupBy("a")
             .agg(F.count(F.lit(1)).cast("long").alias("__l"))
         )
-        surv = (
+        surv = cache.materialize(
             surv.filter(F.col("__d") >= k)
             .join(loss, "a", "left")
             .select(
@@ -1084,7 +1073,6 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 8) -> DataFrame:
                 .cast("long")
                 .alias("__d"),
             )
-            .localCheckpoint(eager=True)
         )
     # a survivor whose every neighbor peeled has no surviving edge — the
     # induced-subgraph recount form had no row for it; drop it here too

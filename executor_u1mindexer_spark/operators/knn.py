@@ -199,9 +199,6 @@ def knn_search(
     payload: DataFrame | None = None,
     payload_key: str = "doc_id",
     impl: str = "catalyst",
-    hnsw_m: int = 16,
-    hnsw_ef_construction: int = 100,
-    hnsw_ef_search: int = 50,
 ) -> DataFrame:
     """Top-k exact KNN of each query against the stored vector table.
 
@@ -221,43 +218,7 @@ def knn_search(
     (same fold order), ~10x less per-pair interpretation overhead for
     large query batches; the shape an hnswlib-style per-partition index
     would plug into.
-    impl='hnsw': APPROXIMATE search through the from-scratch deterministic
-    per-partition HNSW graph (operators/hnsw.py + similarity.
-    hnsw_partitioned_topk) — the reference's actual index structure
-    (executor.py:49, 112); sub-linear per-partition search, recall < 1.0
-    possible by construction, same output contract. The hnsw_m /
-    hnsw_ef_construction / hnsw_ef_search knobs forward to the graph
-    (executor.py:22-24's ef/M surface); the exact impls accept-and-ignore
-    them like the reference's exact fallback would.
     """
-    if impl == "hnsw":
-        from executor_u1mindexer_spark.operators.similarity import (
-            hnsw_partitioned_topk,
-        )
-
-        # hnsw_partitioned_topk's gather window already produced the exact
-        # (rank, dist) this tail would compute — re-running the shared
-        # row_number window below would add a second exchange+sort over the
-        # same partition key for a column we just dropped. Reuse it.
-        topk = hnsw_partitioned_topk(
-            stored,
-            queries,
-            k=k,
-            metric=metric,
-            m=hnsw_m,
-            ef_construction=hnsw_ef_construction,
-            ef_search=hnsw_ef_search,
-            id_col=id_col,
-            vec_col=vec_col,
-            query_id_col=query_id_col,
-            query_vec_col=query_vec_col,
-        ).select(
-            query_id_col,
-            id_col,
-            "rank",
-            V.score_transform(metric, F.col("dist"), is_distance).alias("score"),
-        )
-        return _with_payload(topk, payload, id_col, payload_key)
     if impl == "arrow":
         scored = _arrow_scored(
             stored,
@@ -311,12 +272,6 @@ def knn_search(
             V.score_transform(metric, F.col("__dist"), is_distance).alias("score"),
         )
     )
-    return _with_payload(topk, payload, id_col, payload_key)
-
-
-def _with_payload(
-    topk: DataFrame, payload: DataFrame | None, id_col: str, payload_key: str
-) -> DataFrame:
     if payload is not None:
         # executor.py:116 — every match carries the full stored row.
         topk = topk.join(payload, on=topk[id_col] == payload[payload_key], how="inner").drop(

@@ -33,6 +33,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from executor_u1mindexer_spark import cache
+
 ID = "id"
 IID = "internal_id"
 EMB = "emb"
@@ -762,14 +764,13 @@ def rendezvous_resize_audit(
         F.expr(hrw_argmax_sql(n_shards)).alias("s_before"),
         F.expr(hrw_argmax_sql(n_shards + 1)).alias("s_after"),
     )
-    # materialize the <= S*(S+1)-row cube ONCE (eager localCheckpoint,
-    # the module-wide pattern): the three shard-level aggregates below
-    # would otherwise each replay the full scan+argmax lineage — the
-    # plan pin in test_plans asserts the final plan re-reads no parquet
-    cube = (
+    # materialize the <= S*(S+1)-row cube ONCE: the three shard-level
+    # aggregates below would otherwise each replay the full scan+argmax
+    # lineage — the plan pin in test_plans asserts the final plan re-reads
+    # no parquet
+    cube = cache.materialize(
         assigned.groupBy("s_before", "s_after")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint(eager=True)
     )
     spine = spark.range(n_shards + 1).select(F.col("id").alias("shard"))
     before = cube.groupBy(F.col("s_before").alias("shard")).agg(

@@ -61,6 +61,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from executor_u1mindexer_spark import cache
 from executor_u1mindexer_spark.operators.sketch import _hash60_sql
 
 P_MAX = 4096
@@ -169,14 +170,9 @@ def quantile_estimate(
     #
     # The state subtree is referenced FOUR times below (both self-join
     # sides, n_total, err_budget) and exchange reuse does not fire across
-    # the broadcast/aggregate aliases (r10 plan audit: four separate
-    # bucket-shuffle + ntile subtrees, ~4x the state build cost), so the
-    # <= p*s-row state is persist()ed via the session cache registry —
-    # still lazy (computed once at first action), released by the query
-    # harnesses between queries.
-    from executor_u1mindexer_spark import cache
-
-    state = cache.pin(state)
+    # the broadcast/aggregate aliases, so the <= p*s-row state is
+    # materialized once.
+    state = cache.materialize(state)
     sel = state.select("rep_value", *order_cols, "weight")
     key = F.struct(F.col("rep_value"), *[F.col(c) for c in order_cols])
     rhs = sel.select(
@@ -942,20 +938,12 @@ def _merged_value_cdf(
         .cast("long")
         .alias("n_cmp"),
     )
-    # r17 (VERDICT r16 #2/#4): the histogram is the BOUNDED frame
-    # (≤ groups × value-domain rows) every downstream branch of the
-    # two-pass prefix sum re-derives — stats, h2→window, bucket
-    # totals, prior offsets. Those branches prune different columns,
-    # so ReuseExchange never unifies them and the static plan ran
-    # the full scan+union+aggregate SIX times per query (12 scan
-    # nodes in the r16 dumps). One eager localCheckpoint (the
-    # graph-adjacency bounded-state pattern) pays one barrier and
-    # stores domain-bounded rows; every consumer then reads the
-    # materialized state, and the input is scanned exactly twice
-    # (ref + cmp). Aggregation results are unchanged. A/B (interleaved,
-    # 6 reps, 32c): JVM-CPU −34%/−29%/−28%/−13% on mwu_by_type /
-    # ks_by_type / mwu / ks with wall flat-to-better.
-    hist = hist.localCheckpoint(eager=True)
+    # the histogram is the BOUNDED frame (≤ groups × value-domain rows)
+    # every downstream branch of the two-pass prefix sum re-derives —
+    # stats, h2→window, bucket totals, prior offsets. Those branches prune
+    # different columns, so ReuseExchange never unifies them; materialized
+    # once, the input is scanned exactly twice (ref + cmp).
+    hist = cache.materialize(hist)
     stat_aggs = (
         F.min("__y").alias("__mn"),
         F.max("__y").alias("__mx"),

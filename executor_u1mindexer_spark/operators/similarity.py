@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from executor_u1mindexer_spark import cache
 from executor_u1mindexer_spark.functions import text as T
 from executor_u1mindexer_spark.functions import vector as V
 
@@ -620,7 +621,7 @@ def ivf_pq_topk(
         "__v",
         array_to_vector(F.col("__v")).alias("__full"),
     )
-    fit_input = fit_sample(feats, id_col, fit_sample_cap).cache()
+    fit_input = cache.materialize(fit_sample(feats, id_col, fit_sample_cap))
     coarse = KMeans(
         k=n_cells, seed=42, maxIter=max_iter, featuresCol="__full"
     ).fit(fit_input.select("__full"))
@@ -650,7 +651,6 @@ def ivf_pq_topk(
         fit_res,
         m=m, n_codes=n_codes, sub=sub, max_iter=max_iter * 2, id_col=id_col,
     )
-    fit_input.unpersist()
 
     s_enc = (
         coarse.transform(feats.select(id_col, "__v", "__full"))

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from executor_u1mindexer_spark import tables
+from executor_u1mindexer_spark import cache, tables
 from executor_u1mindexer_spark.functions import text as T
 from executor_u1mindexer_spark.operators import dedup as D
 from executor_u1mindexer_spark.operators import pipeline as P
@@ -145,15 +145,8 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides of the self-join compute the identical list. The 50-row list
     # IS materialized once so the two sides share one computation of the
     # BM25 token-aggregate branch — exchange reuse does not fire across
-    # the broadcast alias (r10 plan audit), and without it the branch
-    # runs twice.
-    # r17 (VERDICT r16 #2): the 50-row list is materialized ONCE via an
-    # eager localCheckpoint instead of the r10 lazy cache.pin — the two
-    # self-join sides raced the lazy cache before population, so the
-    # BM25 token-aggregate branch still ran (up to) twice. Interleaved
-    # 8-rep A/B at sf0.1: JVM CPU 2.80 -> 2.03 median (-27%), wall
-    # 1.45 -> 1.40, one fewer Spark job. Bounded state: 50 rows.
-    bm_top = bm_top.localCheckpoint(eager=True)
+    # the broadcast alias, and without it the branch runs twice.
+    bm_top = cache.materialize(bm_top)
     lhs = bm_top.select("doc_id", "score_micro")
     rhs = lhs.select(
         F.col("doc_id").alias("__d2"), F.col("score_micro").alias("__s2")

@@ -48,7 +48,7 @@ cache.on_release(lambda: _STATE_CACHE.clear())
 def _state(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _STATE_CACHE:
-        _STATE_CACHE[key] = cache.pin(
+        _STATE_CACHE[key] = cache.materialize(
             M.index_state(tables.load(spark, sf_dir, "embeddings"))
         )
     return _STATE_CACHE[key]

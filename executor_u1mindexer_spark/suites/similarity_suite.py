@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from executor_u1mindexer_spark import tables
+from executor_u1mindexer_spark import cache, tables
 from executor_u1mindexer_spark.operators import knn, similarity as S
 from executor_u1mindexer_spark.functions import vector as V
 
@@ -677,40 +677,22 @@ def eval_ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     missed neighbor at ANY SF now hash-mismatches)."""
     emb = _emb(spark, sf_dir)
     q = _queries(emb)
-    q2 = q.select("query_id", "query_embedding")
-    # MEASURED NON-CHANGE (r16 optimization round): each lane's result
-    # set is consumed twice and the exact run feeds every lane's hit
-    # semi-join, so the plan textually repeats each retrieval subtree
-    # (26 BNLJ occurrences before). cache.pin()ing the bounded result
-    # sets was tried and REVERTED: the duplicated branches materialize
-    # as CONCURRENT query stages that hide on idle cores, while the
-    # lazy cache adds write/lock overhead on the hot path — interleaved
-    # same-session A/B at sf0.1 read median 3.44 s unpinned vs 4.35 s
-    # pinned. The broadcast hint on the exact side below IS kept: the
-    # semi-joins' build side is n_queries x K rows (bounded metadata at
-    # any corpus scale), and the hint replaces SMJ+exchange pairs with
-    # broadcast-hash semi joins (guide §3.1).
-    # r17 (VERDICT r16 #2): evaluate the shared bounded frames ONCE via
-    # eager localCheckpoint — the package's standard bounded-state
-    # pattern (graph._adjacency), NOT the lazy cache.pin the r16 A/B
-    # rejected. Two frames qualify:
-    # - q (n_queries rows): every lane re-derived it from its own
-    #   embeddings scan — 5 corpus scans to rebuild the same tiny frame;
+    # The shared bounded frames are materialized once:
+    # - q (n_queries rows): otherwise every lane re-derives it from its
+    #   own embeddings scan;
     # - exact (n_queries x K rows): consumed by the exact_control lane
-    #   AND the four broadcast hit-flag builds. The broadcast builds were
-    #   already deduped at runtime by exchange reuse, but the
-    #   exact_control consumption was a genuine second evaluation of the
-    #   corpus-sized BNLJ subtree.
-    # Interleaved A/B at sf0.1 (tools/ab_measure.py, wall + JVM-CPU per
-    # repeat): JVM CPU −11..−21% across three windows; wall neutral on a
-    # quiet host (duplicates hide on idle cores) and BETTER under real
-    # contention (median 15.6 s vs 17.6 s on a loaded window) — the
-    # busy-cluster case is what 100 TB looks like. Oracle green 3 SFs.
-    q = q.localCheckpoint(eager=True)
+    #   AND the four broadcast hit-flag builds; runtime exchange reuse
+    #   dedupes only the broadcast builds, so without it exact_control
+    #   re-evaluates the corpus-sized BNLJ subtree.
+    # The lanes' own result sets are NOT materialized: their duplicated
+    # branches run as concurrent query stages. The broadcast hint on the
+    # exact side keeps the semi-joins' n_queries x K build side off
+    # SMJ+exchange pairs.
+    q = cache.materialize(q)
     q2 = q.select("query_id", "query_embedding")
-    exact = knn.knn_search(emb, q2, k=K, metric="cosine").select(
-        "query_id", "vec_id"
-    ).localCheckpoint(eager=True)
+    exact = cache.materialize(
+        knn.knn_search(emb, q2, k=K, metric="cosine").select("query_id", "vec_id")
+    )
     lanes = {
         "exact_control": exact,
         "hnsw_partitioned": S.hnsw_partitioned_topk(
@@ -861,21 +843,15 @@ def eval_ann_recall_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     build."""
     emb = _emb(spark, sf_dir)
     q = _queries(emb)
-    q2 = q.select("query_id", "query_embedding")
-    # r17 (VERDICT r16 #2): q evaluated ONCE via eager localCheckpoint —
-    # each consumer (both lanes' query sides, qlab, exact's build, nq)
-    # re-derived it from its own embeddings scan. Interleaved A/B at
-    # sf0.1: JVM CPU −16% (4.38 → 3.69 median), wall neutral
-    # (2.44 → 2.40). exact is deliberately NOT checkpointed here: both
-    # its consumers are broadcast hit-flag builds that runtime exchange
-    # reuse already dedupes, so a checkpoint added a serial barrier for
-    # no CPU win (measured: wall +0.4 s, CPU flat).
-    q = q.localCheckpoint(eager=True)
+    # q is materialized once: each consumer (both lanes' query sides,
+    # qlab, exact's build, nq) would otherwise re-derive it from its own
+    # embeddings scan. exact is NOT: both its consumers are broadcast
+    # hit-flag builds that runtime exchange reuse already dedupes.
+    q = cache.materialize(q)
     q2 = q.select("query_id", "query_embedding")
     qlab = q.select("query_id", F.col("query_label").alias("label"))
-    # Pins tried and reverted here exactly as in eval_ann_recall_at_k
-    # (interleaved A/B: median 2.47 s unpinned vs 2.83 s pinned at
-    # sf0.1); the broadcast hint on the exact semi-join side is kept.
+    # As in eval_ann_recall_at_k, the lanes' result sets are not
+    # materialized; the broadcast hint on the exact semi-join side is kept.
     exact = knn.knn_search(emb, q2, k=K, metric="cosine").select(
         "query_id", "vec_id"
     )

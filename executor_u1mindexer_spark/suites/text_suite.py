@@ -491,7 +491,7 @@ def bpe_learn_merges(d: DataFrame, n_merges: int = BPE_MERGES):
         )
         # each iteration stacks one aggregate + one regexp on the lineage;
         # truncate so N merges cost N linear passes, not a 2^N plan
-        cur = cur.localCheckpoint(eager=True)
+        cur = cache.materialize(cur)
     return merges, cur
 
 

@@ -114,19 +114,20 @@ def test_arrow_impl_bit_identical_to_catalyst(spark, emb_df, metric):
 
 
 def test_hnsw_impl_matches_exact_on_fixture(spark, emb_df):
-    """impl='hnsw' routes through the real per-partition graph; on the
-    fixture corpus its recall is effectively 1.0, so the MATCH SETS equal
-    the exact impl's (distances may differ at the last bit — the graph
-    kernel computes 1 - dot on pre-normalized rows), and the output keeps
-    the knn_search contract columns."""
+    """The per-partition HNSW graph search has effectively recall 1.0 on
+    the fixture corpus, so its MATCH SETS equal exact knn_search's
+    (distances may differ at the last bit — the graph kernel computes
+    1 - dot on pre-normalized rows)."""
+    from executor_u1mindexer_spark.operators.similarity import hnsw_partitioned_topk
+
     queries = emb_df.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
     )
-    h = knn.knn_search(emb_df, queries, k=10, impl="hnsw").collect()
-    c = knn.knn_search(emb_df, queries, k=10, impl="catalyst").collect()
+    h = hnsw_partitioned_topk(emb_df, queries, k=10).collect()
+    c = knn.knn_search(emb_df, queries, k=10).collect()
     assert {r.query_id for r in h} == {r.query_id for r in c}
     assert {(r.query_id, r.vec_id) for r in h} == {(r.query_id, r.vec_id) for r in c}
-    assert all(hasattr(r, "rank") and hasattr(r, "score") for r in h)
+    assert all(hasattr(r, "rank") and hasattr(r, "dist") for r in h)
 
 
 def test_arrow_impl_empty_query_batch(spark, emb_df):

@@ -765,20 +765,41 @@ def test_registry_has_no_unpartitioned_window(spark):
 def test_containment_shares_the_shingle_pipeline(spark, sf_dir):
     """containment_prefix_pairs' base (id, shingles, n_sh) feeds FIVE
     plan branches (prefix postings, full postings, doc-frequency input,
-    both confirm-join sides). The cache.pin sharing point must hold —
-    every branch reads the memoized relation — or the scan+shingle+hash
-    pipeline recomputes per branch (~5x at any scale). Also pin the join
-    strategy class: hash joins only, never a cartesian/BNLJ."""
-    from executor_u1mindexer_spark import cache, tables
+    both confirm-join sides). The materialized sharing point must hold —
+    every branch reads the checkpointed relation and none re-reads the
+    parquet — or the scan+shingle+hash pipeline recomputes per branch
+    (~5x at any scale). Also pin the join strategy class: hash joins
+    only, never a cartesian/BNLJ."""
+    from executor_u1mindexer_spark import tables
     from executor_u1mindexer_spark.operators import dedup as D
 
     docs = tables.load(spark, sf_dir, "documents")
     out = D.containment_prefix_pairs(docs)
     plan = plans.physical_plan(out, "simple")
-    assert plan.count("InMemoryTableScan") >= 5, plan
+    assert plan.count("Scan ExistingRDD") >= 5, plan
+    assert "FileScan" not in plan, plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    cache.release_all()
+
+
+def test_package_materializes_only_through_cache():
+    """cache.materialize is the package's one materialization idiom: no
+    other module may checkpoint or persist a DataFrame itself."""
+    import re
+    from pathlib import Path
+
+    import executor_u1mindexer_spark as pkg
+
+    call = re.compile(r"localCheckpoint\(|\.persist\(|\.cache\(\)")
+    root = Path(pkg.__file__).parent
+    offenders = [
+        f"{path.relative_to(root)}:{no}"
+        for path in sorted(root.rglob("*.py"))
+        if path != root / "cache.py"
+        for no, line in enumerate(path.read_text().splitlines(), 1)
+        if call.search(line.split("#", 1)[0])
+    ]
+    assert not offenders, offenders
 
 
 def test_asof_nearest_is_one_exchange_two_windows_no_join(spark, sf_dir):
