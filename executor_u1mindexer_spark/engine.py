@@ -13,9 +13,8 @@ endpoint surface (executor.py:73-257) so a reference user can switch:
 Differences by design (Spark-first, north star):
 - state is immutable DataFrames snapshotted to parquet under `workspace`
   (vectors + docstore), not a mutable in-process index + memmap;
-- search is EXACT (recall 1.0): `ef_query`/`ef_construction`/`max_connection`
-  are accepted and ignored with the reasoning documented (executor.py:22-24
-  tune an approximation this engine does not make);
+- search is EXACT (recall 1.0), so the reference's HNSW knobs
+  (executor.py:22-24) have no counterpart here;
 - `max_elements` (executor.py:21) is OPTIONAL and defaults to unbounded —
   the 100 TB point. When set, index() admits new ids in arrival order
   while the next slot (internal-id high-water mark; tombstones below it
@@ -34,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from executor_u1mindexer_spark import cache
+from executor_u1mindexer_spark.functions import vector as V
 from executor_u1mindexer_spark.operators import knn, maintenance as M, traverse
 
 VECTORS = "vectors"
@@ -75,18 +75,18 @@ class U1MIndexerSpark:
         workspace: str | None = None,
         metric: str = "cosine",
         limit: int = 20,
-        ef_construction: int | None = None,
-        ef_query: int | None = None,
-        max_connection: int | None = None,
         max_elements: int | None = None,
     ) -> None:
+        if dim < 1:
+            raise ValueError(f"dim must be >= 1, got {dim}")
+        if limit < 1:
+            raise ValueError(f"limit must be >= 1, got {limit}")
+        if metric not in V.METRICS:
+            raise ValueError(f"unknown metric {metric!r}; expected one of {V.METRICS}")
         self.spark = spark
         self.dim = dim
         self.metric = metric
         self.limit = limit
-        # HNSW knobs accepted for signature parity; exact search has no
-        # recall/speed trade-off to tune (executor.py:22-24).
-        self._ignored_knobs = (ef_construction, ef_query, max_connection)
         if max_elements is not None and max_elements < 0:
             raise ValueError(f"max_elements must be >= 0, got {max_elements}")
         self.max_elements = max_elements  # None = unbounded (the default)

@@ -196,12 +196,6 @@ def top_token_fraction_tokens(toks: Column) -> Column:
     )
 
 
-def top_token_fraction(col: Column) -> Column:
-    """Text-column convenience wrapper over top_token_fraction_tokens
-    (let1-bound so the split runs once, not once per reference)."""
-    return let1(words(col), top_token_fraction_tokens)
-
-
 def char_ngrams(col: Column, n: int = 4) -> Column:
     """Distinct character n-grams (language-ID / similarity primitive)."""
     k = F.greatest(F.length(col) - F.lit(n - 1), F.lit(1))

@@ -2,7 +2,7 @@
 
 Closes the honestly-buildable half of the lossy gate (VERDICT r08 #5):
 full lossy reconstruction stays behind the loud NotImplementedError in
-multimodal.decode_image (its rationale — boolean-coder probability tables
+webp.decode_webp (its rationale — boolean-coder probability tables
 written from memory would self-cancel in roundtrip tests — is unchanged),
 but the CONTAINER layer is plain public structure with no entropy coding:
 
@@ -138,8 +138,7 @@ def encode_avif(
 ) -> bytes:
     """Minimal ISOBMFF avif: ftyp + meta(hdlr, pitm, iprp(ipco(ispe
     [+ pixi] [+ auxC] [+ irot] [+ imir]))) + mdat. The av01 payload in
-    mdat is filler — header-only by design; reconstruction stays gated in
-    multimodal.decode_image.
+    mdat is filler — header-only by design; reconstruction is not built.
 
     HEIF item-property growth (r10, VERDICT r09 #7): ``irot`` is a plain
     Box whose single byte's low 2 bits count 90-degree CCW rotations;

@@ -855,246 +855,6 @@ def duplicated_span_profile(
     )
 
 
-def semantic_dedup_cells(
-    emb: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_col: str = "label",
-    max_cos_dist: float = 0.6,
-) -> DataFrame:
-    """Cluster-scoped SEMANTIC dedup (r16, prebuilt for a future
-    window) — the SemDeDup discipline (Abbas et al. 2023, "SemDeDup:
-    Data-efficient learning at web-scale through semantic
-    deduplication"): cluster the embedding space, compare pairs only
-    WITHIN a cluster, and among semantic near-duplicates keep the
-    example FARTHEST from its cluster centroid (the paper's
-    diversity-preserving keep rule — the near-dup closest to the
-    centroid is the most redundant with the cluster's bulk). Distinct
-    from embedding_near_dup_pairs (banded sign-LSH pair REPORT, recall
-    < 1 by LSH design): this lane is exhaustive within its cells and
-    produces a per-vector KEEP LIST.
-
-    Deterministic variant, exact on both engines: cells are seeded by
-    the per-``centroid_col`` centroids (label_centroids' round(avg,6)
-    boundary) and every vector is assigned to its NEAREST centroid
-    under cosine with the (dist, cell) tie-break — note a vector may
-    land in a different cell than its own label, which is the
-    clustering actually doing work. The keep rule is the dominance
-    form: v is pruned iff some same-cell vector u within
-    ``max_cos_dist`` of v outranks it for keeping, where keep-rank
-    orders by (centroid_dist DESC, id ASC). (SemDeDup's reference
-    implementation greedily re-checks against only KEPT points — a
-    sequential scan; the dominance form is one semi-join, order-free,
-    and prunes a superset on chains. The choice is documented, not
-    hidden.)
-
-    Output: one row per vector — (id_col, cell, cdist_micro, kept) —
-    so the keep list is complete and driver-hashable.
-
-    At 100 TB: assignment is a corpus x n_cells broadcast compare (the
-    nprobe-curve economy); the within-cell pair join is the SemDeDup
-    design point — O(sum c_i^2) bounded by CELL SIZE, so k scales with
-    the corpus to hold c_i near a constant (the paper runs 50k
-    clusters for LAION); the cell key shuffles ids+vectors once. No
-    global pairwise, no cross-cell traffic. [NOT IN REFERENCE.]"""
-    from executor_u1mindexer_spark.operators.similarity import label_centroids
-
-    base = _spread(
-        emb.select(
-            F.col(id_col).alias("id"),
-            F.col(centroid_col).alias("__lbl"),
-            V.as_double_array(vec_col).alias("v"),
-        )
-    ).withColumn("n", V.norm(F.col("v")))
-    cent = (
-        label_centroids(emb, label_col=centroid_col, vec_col=vec_col)
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "centroid"))),
-                lambda s: s["centroid"],
-            ).alias("cvec")
-        )
-        .select(
-            F.col("label").alias("cell"),
-            "cvec",
-            V.norm(F.col("cvec")).alias("cn"),
-        )
-    )
-    aw = Window.partitionBy("id").orderBy(
-        F.col("__cdist").asc(), F.col("cell").asc()
-    )
-    assign = (
-        base.crossJoin(F.broadcast(cent))
-        .select(
-            "id",
-            "v",
-            "n",
-            "cell",
-            (
-                F.lit(1.0)
-                - V.dot(F.col("v"), F.col("cvec")) / (F.col("n") * F.col("cn"))
-            ).alias("__cdist"),
-        )
-        .withColumn("__rn", F.row_number().over(aw))
-        .filter(F.col("__rn") == 1)
-        .select("id", "v", "n", "cell", "__cdist")
-    )
-    a = assign.select(
-        F.col("id").alias("id_a"),
-        F.col("cell"),
-        F.col("v").alias("va"),
-        F.col("n").alias("na"),
-        F.col("__cdist").alias("ca"),
-    )
-    b = assign.select(
-        F.col("id").alias("id_b"),
-        F.col("cell"),
-        F.col("v").alias("vb"),
-        F.col("n").alias("nb"),
-        F.col("__cdist").alias("cb"),
-    )
-    pair_dist = F.lit(1.0) - V.dot(F.col("va"), F.col("vb")) / (
-        F.col("na") * F.col("nb")
-    )
-    pairs = (
-        a.join(b, "cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(pair_dist <= F.lit(max_cos_dist))
-    )
-    # the dominated (pruned) side of each near-dup pair under the
-    # keep-rank (centroid_dist DESC, id ASC)
-    pruned = pairs.select(
-        F.when(
-            (F.col("ca") > F.col("cb"))
-            | ((F.col("ca") == F.col("cb")) & (F.col("id_a") < F.col("id_b"))),
-            F.col("id_b"),
-        )
-        .otherwise(F.col("id_a"))
-        .alias("id")
-    ).distinct()
-    return (
-        assign.join(pruned.withColumn("__pruned", F.lit(1)), "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            "cell",
-            # explicit floor: DuckDB ROUNDS on double->BIGINT cast while
-            # Spark truncates — floor is floor in both engines
-            F.expr("CAST(floor(1000000 * __cdist) AS BIGINT)").alias(
-                "cdist_micro"
-            ),
-            F.col("__pruned").isNull().alias("kept"),
-        )
-        .orderBy(id_col)
-    )
-
-
-def duplicated_span_removal(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-) -> DataFrame:
-    """Substring-level exact dedup REMOVAL (r16, built as the r17
-    registry candidate) — the cleaned-corpus counterpart of
-    duplicated_span_profile: where the profile REPORTS cross-doc
-    verbatim k-token runs, this produces the deduplicated corpus Lee
-    et al. 2022 actually train on ("ExactSubstr ... remove all but one
-    occurrence"). Policy, exact and engine-independent: for every
-    duplicated shingle (verbatim k-token run occurring in >= 2 DISTINCT
-    docs) the single keeper occurrence is the lexicographically least
-    (doc, start_pos); every token covered by any NON-keeper occurrence
-    of any duplicated shingle is cut. Note the policy also trims the
-    keeper doc's own EXTRA occurrences (a run shared with another doc
-    and repeated internally keeps exactly one copy — pinned in pytest).
-
-    Returns EVERY doc (unlike the profile's affected-only contract —
-    a cleaned corpus must be complete): (id_col, total_tokens,
-    removed_tokens, kept_tokens, cleaned_text) with cleaned_text the
-    space-joined surviving tokens in original order.
-
-    At 100 TB: the profile's economy plus a bounded tail — the keeper
-    frame is the dup-shingle set (broadcast, same bound and the same
-    lost-broadcast failure mode as the profile's semi join), coverage
-    explode is <= k rows per non-keeper hit, the per-doc cut set is
-    collect_set bounded by doc length, and the final assembly is ONE
-    doc-keyed left join + an index-aware array filter — no window at
-    all, no token-level shuffle (tokens never leave their doc row).
-    The 100 TB shuffle-key variant (xxhash64(shingle) with the string
-    riding for in-bucket verification) is the profile's, unchanged.
-    [NOT IN REFERENCE — executor.py has no text surface.]"""
-    df = _spread(df)
-    words = F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
-    shingles = T.let1(
-        words,
-        lambda ws: F.when(
-            F.size(ws) >= k,
-            F.transform(
-                F.sequence(F.lit(0), F.size(ws) - F.lit(k)),
-                lambda i: F.array_join(F.slice(ws, i + 1, k), " "),
-            ),
-        ).otherwise(F.array().cast("array<string>")),
-    )
-    occ = df.select(
-        F.col(id_col), F.posexplode(shingles).alias("start_pos", "shingle")
-    )
-    # keeper per duplicated shingle: min (doc, start) — min over a
-    # struct is lexicographic, so the rule is total and deterministic
-    keep = (
-        occ.groupBy("shingle")
-        .agg(
-            F.min(id_col).alias("__lo"),
-            F.max(id_col).alias("__hi"),
-            F.min(
-                F.struct(F.col(id_col).alias("d"), F.col("start_pos").alias("p"))
-            ).alias("__keeper"),
-        )
-        .filter(F.col("__lo") != F.col("__hi"))
-        .select("shingle", "__keeper")
-    )
-    cut = (
-        occ.join(F.broadcast(keep), "shingle")
-        .filter(
-            ~(
-                (F.col(id_col) == F.col("__keeper.d"))
-                & (F.col("start_pos") == F.col("__keeper.p"))
-            )
-        )
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.sequence(F.col("start_pos"), F.col("start_pos") + F.lit(k - 1))
-            ).alias("__pos"),
-        )
-        .groupBy(id_col)
-        .agg(F.collect_set("__pos").alias("__cut"))
-    )
-    no_cut = F.array().cast("array<int>")
-    kept_words = T.let1(
-        F.coalesce(F.col("__cut"), no_cut),
-        lambda cut_set: F.filter(
-            words, lambda tok, i: ~F.array_contains(cut_set, i)
-        ),
-    )
-    return (
-        df.join(cut, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.size(words).cast("long").alias("total_tokens"),
-            F.size(F.coalesce(F.col("__cut"), no_cut))
-            .cast("long")
-            .alias("removed_tokens"),
-            (F.size(words) - F.size(F.coalesce(F.col("__cut"), no_cut)))
-            .cast("long")
-            .alias("kept_tokens"),
-            F.array_join(kept_words, " ").alias("cleaned_text"),
-        )
-        .orderBy(id_col)
-    )
-
-
 def edit_distance_pairs(
     df: DataFrame,
     text_col: str = "text",

@@ -4,8 +4,8 @@ fixture table (ts, user_id, event_type, value, props).
 [NOT IN REFERENCE] — the reference is strictly request/response batch
 (executor.py:73-257 is the whole API); these are the north-star event
 operators. Every builder here runs identically in batch and (except where
-noted) under Structured Streaming — see streaming/ for the streaming
-variants with watermarks.
+noted) under Structured Streaming — streaming/stateful.py holds the
+GroupState twin of sessionize_capped.
 
 Scale notes (100 TB):
 - tumbling/sliding windows are a plain groupBy on (window, keys): one

@@ -588,109 +588,3 @@ class HNSW:
             np.array(out_ids, np.int64),
             np.array(out_d, np.float64),
         )
-
-
-# -- serialization -----------------------------------------------------------
-#
-# The reference persists its BUILT index (executor.py:227-236 dumps the
-# hnswlib binary + bidict) so a reload never pays the build again. The
-# deterministic graph makes rebuild-from-rows equivalent in RESULT, but at
-# a realistic bucket size the build is the expensive step — so the flat
-# graph arrays serialize as-is.
-
-
-def hnsw_to_state(index: "HNSW") -> dict:
-    """Plain-python/numpy state dict (parquet/pickle-friendly) capturing
-    the BUILT graph: ids, vectors (already ordered/normalized), levels,
-    flat adjacency + counts, entry/max_level, and the hyperparameters the
-    graph was built with."""
-    if index.ids is None:
-        raise ValueError("cannot serialize an unbuilt HNSW")
-    return {
-        "dim": index.dim,
-        "metric": index.metric,
-        "m": index.m,
-        "ef_construction": index.ef_construction,
-        "seed": index.seed,
-        "ids": index.ids,
-        "vecs": index.vecs,
-        "levels": list(index.levels),
-        "nbr_flat": index._nbr_flat,
-        "cnt_flat": index._cnt_flat,
-        "entry": index.entry,
-        "max_level": index.max_level,
-    }
-
-
-def hnsw_from_state(state: dict) -> "HNSW":
-    """Reconstruct a searchable HNSW from hnsw_to_state output WITHOUT
-    rebuilding — searches are bit-identical to the original instance
-    (same arrays, same kernels)."""
-    h = HNSW(
-        int(state["dim"]),
-        metric=state["metric"],
-        m=int(state["m"]),
-        ef_construction=int(state["ef_construction"]),
-        seed=int(state["seed"]),
-    )
-    h.ids = np.ascontiguousarray(state["ids"], dtype=np.int64)
-    h.vecs = np.ascontiguousarray(state["vecs"], dtype=np.float64)
-    h._set_sqnorms()  # same einsum over the same contiguous array => same bits
-    h.levels = [int(x) for x in state["levels"]]
-    noff, coff = [], []
-    nsz = csz = 0
-    for lvl in h.levels:
-        noff.append(nsz)
-        coff.append(csz)
-        nsz += (h.m0 + 1) + lvl * (h.m + 1)
-        csz += lvl + 1
-    h._noff, h._coff = noff, coff
-    h._nbr_flat = np.ascontiguousarray(state["nbr_flat"], dtype=np.int64)
-    h._cnt_flat = np.ascontiguousarray(state["cnt_flat"], dtype=np.int64)
-    if len(h._nbr_flat) != nsz or len(h._cnt_flat) != csz:
-        raise ValueError("HNSW state arrays inconsistent with levels/m")
-    h.entry = int(state["entry"])
-    h.max_level = int(state["max_level"])
-    _validate_graph_refs(h)
-    return h
-
-
-def _validate_graph_refs(h: "HNSW") -> None:
-    """Reject corrupted/stale state at the Python level (ADVICE r06):
-    without this, a nbr_flat value >= n or a bad entry flows straight into
-    the C kernel where `vecs + idx*dim` dereferences it unchecked — an
-    out-of-bounds read (or segfault) instead of a ValueError. Fully
-    vectorized: counts bounds first (so slot gathers cannot overrun),
-    then every counted neighbor slot checked in one masked gather."""
-    n = len(h.levels)
-    if not (0 <= h.entry < n):
-        raise ValueError(f"HNSW state entry {h.entry} out of range [0, {n})")
-    lv = np.asarray(h.levels, np.int64)
-    if lv.size == 0:
-        return
-    if lv.min() < 0:
-        raise ValueError("HNSW state has a negative level")
-    nb = lv + 1  # blocks per node
-    node_idx = np.repeat(np.arange(n, dtype=np.int64), nb)
-    excl = np.concatenate(([0], np.cumsum(nb)[:-1]))
-    within = np.arange(nb.sum(), dtype=np.int64) - np.repeat(excl, nb)
-    noff_arr = np.asarray(h._noff, np.int64)
-    starts = noff_arr[node_idx] + np.where(
-        within == 0, 0, (h.m0 + 1) + (within - 1) * (h.m + 1)
-    )
-    cap = np.where(within == 0, h.m0 + 1, h.m + 1)
-    cnt = h._cnt_flat  # cnt_flat IS the block-count concatenation in order
-    if cnt.min(initial=0) < 0 or np.any(cnt > cap):
-        raise ValueError("HNSW state neighbor counts out of block capacity")
-    total = int(cnt.sum())
-    if total:
-        cexcl = np.concatenate(([0], np.cumsum(cnt)[:-1]))
-        slot = np.repeat(starts, cnt) + (
-            np.arange(total, dtype=np.int64) - np.repeat(cexcl, cnt)
-        )
-        vals = h._nbr_flat[slot]
-        if vals.min() < 0 or vals.max() >= n:
-            raise ValueError(
-                "HNSW state neighbor index out of range "
-                f"[0, {n}) (min={vals.min()}, max={vals.max()})"
-            )

@@ -206,8 +206,7 @@ def knn_search(
     (query_id, vec_id, rank, score) plus all payload columns when a payload
     DataFrame is given (the executor.py:116 full-Document fetch).
 
-    `k` is clamped to the stored count at plan-build time only if the caller
-    asks (see `clamped_k`); Spark's rank filter naturally returns fewer rows
+    `k` must be >= 1. Spark's rank filter naturally returns fewer rows
     when the corpus is smaller than k — same observable behavior as the
     reference's clamp (executor.py:97-102).
 
@@ -219,6 +218,8 @@ def knn_search(
     large query batches; the shape an hnswlib-style per-partition index
     would plug into.
     """
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
     if impl == "arrow":
         scored = _arrow_scored(
             stored,
@@ -280,25 +281,6 @@ def knn_search(
     return topk
 
 
-def validate_dim(df: DataFrame, dim: int, vec_col: str = "embedding") -> None:
-    """Raise ValueError if any row's embedding width != dim — EAGER form
-    (runs one job now).
-
-    Relational form of the reference's dim check (executor.py:105-110,
-    144-148, 199-204). One aggregate scan; at 100 TB this is a single
-    codegen'd pass with a count accumulator, no shuffle — but it is still
-    a full extra read of the batch, so the engine's hot paths use
-    `dim_guard` (the same check fused into the batch's own materialization
-    pass) and this eager form is for callers who want the reference's
-    request-time error timing.
-    """
-    bad = df.filter(~V.dim_check(F.col(vec_col), dim)).limit(1).count()
-    if bad:
-        raise ValueError(
-            f"Attempted to process vectors whose dimension != the index dim ({dim})"
-        )
-
-
 def dim_guard(col: Column, dim: int) -> Column:
     """Width-validating pass-through of an embedding column — LAZY form.
 
@@ -320,13 +302,3 @@ def dim_guard(col: Column, dim: int) -> Column:
             )
         )
     )
-
-
-def clamped_k(stored: DataFrame, k: int) -> int:
-    """k clamped to the stored-table size (executor.py:97-102).
-
-    Driver-side count — only used when the caller wants the reference's
-    warning semantics; the rank filter already degrades gracefully.
-    """
-    total = stored.count()
-    return min(k, total)

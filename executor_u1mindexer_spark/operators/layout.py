@@ -98,22 +98,34 @@ def _proxy_expr(df: DataFrame, colname: str):
 def _rank_space_maps(
     df: DataFrame, cols: list[str], bits: int = BITS_DEFAULT
 ) -> dict[str, DataFrame]:
-    """Batched rank_space_map (r16 optimization, guide §1.2/§2.4): the
-    layout rows call rank_space_map once per dimension, and each call
-    paid TWO serial driver jobs (proxy min/max, coarse-bucket counts)
-    before the main query could even be submitted — four serial
-    barriers per two-dimension row. This form computes the bounded
-    metadata for ALL requested columns in exactly two jobs:
+    """Per column, (value, mapped) for each DISTINCT value: mapped =
+    ((dense_rank - 1) * 2^bits) DIV n_distinct — a uniform integer spread
+    over [0, 2^bits) whatever the raw domain.
+
+    Scale-safe (VERDICT r06 #2): no unpartitioned window anywhere. The
+    distinct set is coarse-bucketed by a deterministic monotone proxy
+    (affine min/max split into N_COARSE ranges — data-deterministic, so
+    bucket ids agree across the counts job and the rank job, unlike a
+    sampled range partitioner); ranks are per-bucket PARTITIONED windows;
+    the exclusive per-bucket rank offsets come from a ≤N_COARSE-row
+    collect (bounded by the constant fan-out, not by data cardinality)
+    broadcast back. global dense_rank = offset(bucket) + local row_number
+    over distinct values — exact, so the mapped values are bit-identical
+    to the single-window formula the DuckDB oracle keeps using. Residual
+    hazard is honest: a dimension whose values cluster inside a narrow
+    sliver of its min/max range (heavy domain skew) lands in few coarse
+    buckets; granularity degrades, correctness never does.
+
+    Batched over columns (r16 optimization, guide §1.2/§2.4): the bounded
+    metadata for ALL requested columns costs exactly two driver jobs,
+    not two per dimension:
 
     - one aggregate over the RAW rows for every column's proxy min/max
       (min/max ignore duplicates, so skipping the per-column distinct
       changes nothing);
     - one union of the per-column distinct sets reduced to their coarse
       bucket ids (ints, so heterogeneous column dtypes never meet) for
-      all the ≤N_COARSE-per-column bucket counts.
-
-    The returned per-column (value, mapped) frames are built exactly as
-    before — bit-identical output, same no-unpartitioned-window shape."""
+      all the ≤N_COARSE-per-column bucket counts."""
     # ADVICE r16: a repeated column would create duplicate __mn_/__mx_
     # agg aliases and silently rely on Row name lookup — dedupe here
     # (the per-column outputs are keyed by name, so one copy suffices).
@@ -188,31 +200,6 @@ def _rank_space_maps(
             )
         )
     return out
-
-
-def rank_space_map(df: DataFrame, col: str, bits: int = BITS_DEFAULT) -> DataFrame:
-    """(value, mapped) for each DISTINCT value of `col`: mapped =
-    ((dense_rank - 1) * 2^bits) DIV n_distinct — a uniform integer spread
-    over [0, 2^bits) whatever the raw domain.
-
-    Scale-safe (VERDICT r06 #2): no unpartitioned window anywhere. The
-    distinct set is coarse-bucketed by a deterministic monotone proxy
-    (affine min/max split into N_COARSE ranges — data-deterministic, so
-    bucket ids agree across the counts job and the rank job, unlike a
-    sampled range partitioner); ranks are per-bucket PARTITIONED windows;
-    the exclusive per-bucket rank offsets come from a ≤N_COARSE-row
-    collect (bounded by the constant fan-out, not by data cardinality)
-    broadcast back. global dense_rank = offset(bucket) + local row_number
-    over distinct values — exact, so the mapped values are bit-identical
-    to the single-window formula the DuckDB oracle keeps using. Residual
-    hazard is honest: a dimension whose values cluster inside a narrow
-    sliver of its min/max range (heavy domain skew) lands in few coarse
-    buckets; granularity degrades, correctness never does.
-
-    Single-column wrapper over _rank_space_maps (r16) — multi-dimension
-    callers pass all their columns there at once so the bounded-metadata
-    driver jobs are paid once, not per dimension."""
-    return _rank_space_maps(df, [col], bits)[col]
 
 
 def zorder_layout_stats(

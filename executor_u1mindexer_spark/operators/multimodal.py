@@ -59,41 +59,6 @@ def extract_binary_metadata(df: DataFrame, id_col: str = "doc_id", bin_col: str 
     )
 
 
-def decode_image(payload: bytes):  # pragma: no cover - stub by design
-    """Remaining LOSSY-format decode (VP8 WebP / AVIF) — STUB. The
-    container has no PIL/opencv; gate the import and fail loudly rather
-    than fake silently. BMP, PPM, baseline PNG (since r03), baseline
-    JPEG (since r04), progressive + 4:2:0 JPEG (since r05,
-    operators/jpeg.py), animated GIF (r06, operators/gif.py), and
-    LOSSLESS WebP / VP8L (r07, operators/webp.py — closing the r06
-    verdict's #5) are decoded for real by decode_image_meta — no library
-    needed; arithmetic / lossless / 12-bit JPEG variants and lossy VP8
-    raise their own loud NotImplementedError inside their codecs.
-
-    Why lossy VP8/AVIF stay stubs when VP8L was closeable: VP8L's
-    constants (distance map, code-length order, predictor modes) are
-    cross-checkable offline — webp.py derives the 120-entry distance
-    map from its ordering rule AND pins it against the literal spec
-    table. Lossy VP8's boolean-coder probability tables and loop-filter
-    constants have no such internal redundancy; written from memory,
-    roundtrip tests would self-cancel any error, and a
-    silently-incorrect decoder is worse than a loud gate.
-
-    What IS parsed for lossy containers (r09, operators/containers.py):
-    header-structural metadata — VP8 frame-header dims, VP8X canvas +
-    alpha flag, AVIF ispe/auxC — via parse_lossy_container_header; only
-    pixel RECONSTRUCTION remains gated here."""
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "lossy WebP (VP8) / AVIF decode requires PIL, which is not "
-            "available in this environment; decode_image_meta handles "
-            "BMP/PPM/PNG/JPEG/GIF/lossless-WebP in pure Python"
-        ) from e
-    raise NotImplementedError("real decode path not implemented in this round")
-
-
 # -- real pure-Python codecs for uncompressed formats ------------------------
 #
 # PPM (P6) and 24-bit BI_RGB BMP need no image library: the formats are a

@@ -161,7 +161,7 @@ def pps_systematic(
     row still appears once).
 
     Scale shape: the global cumulative sum uses the same partitioned
-    two-pass pattern as layout.rank_space_map — affine key-range coarse
+    two-pass pattern as layout._rank_space_maps — affine key-range coarse
     buckets (pure function of the data; bucket id monotone in key, so
     cross-bucket order is the key order), per-bucket PARTITIONED window
     sums, and the <= n_buckets bucket totals prefix-summed IN-PLAN by a

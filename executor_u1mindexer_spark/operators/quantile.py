@@ -45,12 +45,12 @@ downstream — merge, rank queries, error budgets — touches only <= P*s
 summary rows. At 100 TB you persist per-partition states and only ever
 re-query the tiny union.
 
-Streaming note: unlike the HLL/CMS/Bloom states (monotone folds with a
-streaming twin in streaming/sketch_stream.py), the equi-depth state needs
-a per-bucket SORT, which Structured Streaming cannot run incrementally —
-the streaming story for quantiles is per-micro-batch/per-day states
-rolled up with quantile_merge, which is exactly what the merge operator
-and its registered row exercise.
+Streaming note: unlike the HLL/CMS/Bloom states (monotone folds that a
+streaming grouped aggregate maintains incrementally), the equi-depth
+state needs a per-bucket SORT, which Structured Streaming cannot run
+incrementally — the streaming story for quantiles is per-micro-batch/
+per-day states rolled up with quantile_merge, which is exactly what the
+merge operator and its registered row exercise.
 
 Reference parity: the reference has no quantile surface (executor.py is
 vector search only); this is mandated beyond-reference breadth.

@@ -539,16 +539,6 @@ def bloom_state(df: DataFrame, col: str, k: int = 4, mbits: int = 4096) -> DataF
     )
 
 
-def bloom_merge(*states: DataFrame) -> DataFrame:
-    """Merge Bloom states: set union of bit positions (bitwise OR)."""
-    if not states:
-        raise ValueError("bloom_merge needs at least one state")
-    out = states[0]
-    for s in states[1:]:
-        out = out.unionByName(s)
-    return out.distinct()
-
-
 def bloom_contains(
     state: DataFrame, items: DataFrame, col: str, k: int = 4, mbits: int = 4096
 ) -> DataFrame:
@@ -837,17 +827,6 @@ def ams_state(df: DataFrame, col: str, d: int = AMS_D_DEFAULT) -> DataFrame:
         .selectExpr(f"stack({d}, {pairs}) AS (hash_row, z)")
         .where(F.col("z").isNotNull())
     )
-
-
-def ams_merge(*states: DataFrame) -> DataFrame:
-    """Merge AMS states: counter-wise SUM (linear, exact — the sketch of
-    a union is the sum of the sketches)."""
-    if not states:
-        raise ValueError("ams_merge needs at least one state")
-    out = states[0]
-    for s in states[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("hash_row").agg(F.sum("z").cast("long").alias("z"))
 
 
 def ams_f2_estimate(state: DataFrame, d: int = AMS_D_DEFAULT) -> DataFrame:

@@ -6,8 +6,8 @@ prefix-code machinery, the LZ77 distance mapping, the color cache, and
 all four transforms (predictor / color / subtract-green / color-
 indexing) — so it can be built honestly, unlike lossy VP8 whose
 probability tables and reconstruction filters are not re-derivable
-offline (that half, and AVIF, remain loudly gated in
-multimodal.decode_image).
+offline (that half, and AVIF, are not decoded; decode_webp raises
+NotImplementedError on a lossy chunk).
 
 Provenance + verification honesty
 ---------------------------------
@@ -39,7 +39,7 @@ of the spec (self-cancelling in roundtrips) — is narrowed by the
 hand-specified lane fixtures above to the arithmetic shared between
 them (prefix construction, transform math), and documented here rather
 than hidden; it cannot be fully closed without a reference codec or
-network access. See also multimodal.decode_image's gate rationale.
+network access. See also decode_webp's gate rationale.
 
 [NOT IN REFERENCE — executor.py:6 treats bytes as opaque; this is the
 multimodal-breadth mandate, like operators/jpeg.py and gif.py.]
@@ -686,7 +686,11 @@ def decode_vp8l(payload: bytes) -> tuple[int, int, list[int]]:
 def decode_webp(payload: bytes) -> tuple[int, int, int, bytes]:
     """RIFF/WEBP container -> (width, height, 4, RGBA raster bytes).
     Lossy VP8 and extended VP8X-wrapped lossy payloads raise a loud
-    NotImplementedError (see multimodal.decode_image's rationale)."""
+    NotImplementedError: VP8's boolean-coder probability tables and
+    loop-filter constants have no internal redundancy to cross-check
+    offline, so a decoder written from memory would pass its own
+    roundtrip tests while wrong — a silently-incorrect decoder is worse
+    than a loud gate."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
         raise ValueError("not a RIFF/WEBP payload")
     pos, end = 12, 8 + struct.unpack("<I", payload[4:8])[0]

@@ -1,3 +1,3 @@
-"""Structured Streaming variants of the event operators (SURVEY.md §2.B
-streaming row — stretch surface; the batch equivalents live in
-operators/events.py and share the same aggregation logic)."""
+"""Structured Streaming operators behind the drained-backlog registry rows
+(SURVEY.md §2.B streaming row); the batch equivalents live in operators/
+and serve as their oracles."""

@@ -1,51 +1,15 @@
-"""Streaming twin of exact dedup — the ingest-time dedup ledger.
+"""Streaming twin of MinHash-LSH near-dedup — the ingest-time dedup ledger.
 
-readStream(parquet documents) → content hash → streaming grouped aggregate
-(keep-id = min doc_id, copy count) in complete mode. The aggregation body is
-the SAME (hash, min, count) triple as ``operators/dedup.exact_dedup``'s
-batch formulation, so the batch result is the oracle (tested in
-tests/test_streaming.py with trigger(availableNow=True)).
-
-Scale notes: the streaming state is one row per distinct content hash —
-bounded by UNIQUE content, not by stream length; duplicate arrivals fold
-into the existing state row (min/count are monotone, so state updates are
-O(1) per record). For an unbounded stream where even unique-content state
-must be bounded, the production layout is dropDuplicatesWithinWatermark on
-an event-time column + the periodic batch compaction (exact_dedup) over the
-sealed partitions — the same split as the engine's LSM docstore: streaming
-handles the tail, batch seals history. [NOT IN REFERENCE — executor.py has
-no streaming surface.]
+The registered row suites/dedup_suite.near_dedup_minhash_streaming_backlog
+drains a document backlog through streaming_minhash_dedup and checks the
+folded ledger against the batch LSH rule. [NOT IN REFERENCE — executor.py
+has no streaming surface.]
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from executor_u1mindexer_spark.operators.dedup import content_hash
-from executor_u1mindexer_spark.streaming.events_stream import read_fixture_stream
-
-
-def read_documents_stream(
-    spark: SparkSession, sf_dir: str, max_files: int = 1
-) -> DataFrame:
-    """Documents stream via the shared fixture reader (no per-table
-    normalization needed — the documents schema streams as-is)."""
-    return read_fixture_stream(spark, sf_dir, "documents", max_files)
-
-
-def streaming_exact_dedup_ledger(docs: DataFrame) -> DataFrame:
-    """Streaming grouped dedup ledger: per content hash, the id to keep
-    (lowest seen) and how many copies arrived. Complete-mode output; the
-    batch twin is exact_dedup's (keep_id, text_hash, n_copies)."""
-    return (
-        docs.select(F.col("doc_id"), content_hash("text").alias("text_hash"))
-        .groupBy("text_hash")
-        .agg(
-            F.min("doc_id").alias("keep_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-    )
 
 
 # -- streaming NEAR-dedup (MinHash-LSH) --------------------------------------

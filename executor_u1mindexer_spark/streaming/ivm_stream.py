@@ -1,163 +1,26 @@
-"""Streaming twin of incremental view maintenance (r10).
+"""Streaming twin of incremental view maintenance: the drained CDC ledger.
 
-operators/maintenance.ivm_merge IS the streaming-sink pattern — this
-module runs it as one: foreachBatch reduces each micro-batch to its
-per-key partial state (maintenance.ivm_agg_state — grouped keys, never
-facts) and stores ONE state PER BATCH ID, exactly the
-sketch_stream.streaming_quantile_state_fold discipline:
-
-- keyed by batch id, so a checkpoint-replayed batch OVERWRITES its own
-  entry instead of double-counting (idempotent under redelivery);
-- durable via _BatchKeyedStore when `state_dir` is given (atomic
-  os.replace parquet per batch id), so a restarted driver reloads the
-  committed history and resumes exactly;
-- the maintained view at any moment is the ivm_merge fold of the stored
-  states — all four aggregates (count/sum/min/max) are associative and
-  commutative in BIGINT, so the fold order is free and the result is
-  bit-identical to the batch ivm_agg_state of the drained backlog
-  (pinned in tests/test_streaming.py).
+operators/maintenance.ivm_retract_merge IS the streaming-sink pattern: a
+changelog stream reduces each micro-batch to its per-key partial state
+(maintenance.ivm_retract_state_cdc — grouped keys, never facts; each row
+carries a +1/-1 sign, so DELETE rows retract without any base rescan),
+and the maintained view is the grouped fold of those per-batch partials.
+All three lanes are plain sums, so the fold order is free and the view
+of a drained backlog is bit-identical to the batch operator's.
 
 State bound: (#batches seen) x (keys per batch) grouped rows — the
 per-batch entry is key-cardinality-sized regardless of batch row count,
-which is what makes the driver-side fold legitimate; a long-lived
-deployment periodically compacts the per-batch files into one via
-_BatchKeyedStore.compact(ivm_compact_fold(keys)) — the merge IS the
-compaction (r11, VERDICT r10 #5): all-but-the-newest entries fold into
-a compact-K superseding file, crash-safe under os.replace alone and
-redelivery-safe because only the newest batch can ever be replayed.
+which is what makes the driver-side fold legitimate. The registered row
+suites/maintenance_suite.ivm_retract_cdc_backlog drives this path.
 
 [NOT IN REFERENCE — executor.py has no streaming surface.]
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from executor_u1mindexer_spark.operators import maintenance as M
-from executor_u1mindexer_spark.streaming.sketch_stream import _BatchKeyedStore
-
-_STATE_COLS = ("n_rows", "sum_milli", "min_milli", "max_milli")
-
-
-def streaming_ivm_fold(
-    stream: DataFrame,
-    keys: list[str],
-    value_col: str,
-    state_dir: str | None = None,
-):
-    """Returns (writer, states): run the writer to drain the stream;
-    `states` is the batch-id-keyed dict of per-batch partial states
-    (each a list of key+state tuples). Read the maintained view with
-    ivm_view(spark, states, keys)."""
-    cols = tuple(keys) + _STATE_COLS
-    store = _BatchKeyedStore(state_dir) if state_dir else None
-    states: dict[int, list] = {}
-    if store is not None:
-        for bid, pdf in store.load().items():
-            states[bid] = [tuple(t) for t in pdf[list(cols)].itertuples(index=False)]
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        st = M.ivm_agg_state(batch_df, keys, value_col)
-        entry = [tuple(r[c] for c in cols) for r in st.collect()]
-        if store is not None:
-            store.put(int(batch_id), pd.DataFrame(entry, columns=list(cols)))
-        states[int(batch_id)] = entry
-
-    writer = stream.writeStream.foreachBatch(fold)
-    return writer, states
-
-
-def ivm_view(spark: SparkSession, states: dict[int, list], keys: list[str]) -> DataFrame:
-    """The maintained view over everything drained so far: one
-    ivm_merge-shaped grouped fold of the per-batch partial states.
-
-    Key columns are materialized as STRING in the reconstructed frame
-    (the fold state is schema-light driver-side tuples); grouping and
-    the four BIGINT aggregates are type-agnostic over that, so the view
-    values are exact — a caller needing typed keys casts on the way
-    out."""
-    cols = list(keys) + list(_STATE_COLS)
-    rows = [t for entry in states.values() for t in entry]
-    schema = ", ".join(
-        [f"{k} string" for k in keys]
-        + [f"{c} long" for c in _STATE_COLS]
-    )
-    df = spark.createDataFrame(rows, schema) if rows else spark.createDataFrame([], schema)
-    # one grouped fold of all entries == chained pairwise ivm_merge
-    # (associativity); expressed AS ivm_merge against an empty state so
-    # the streaming view and the batch operator share one code path
-    return M.ivm_merge(df.limit(0), df, keys)
-
-
-def streaming_dq_fold(
-    stream: DataFrame,
-    row_constraints: dict[str, str],
-    state_dir: str | None = None,
-):
-    """Streaming data-quality ledger: per micro-batch, run the SAME
-    pipeline.dq_audit constraint suite (row-level predicates only —
-    uniqueness and referential checks are cross-batch properties a
-    per-batch monitor cannot decide) and store its per-check violation
-    counts keyed by batch id — additive, so the accumulated view is the
-    dq_audit of the drained backlog exactly, under the same
-    redelivery-idempotent, durable, batch-id-keyed discipline as
-    streaming_ivm_fold. Read the ledger with dq_view()."""
-    from executor_u1mindexer_spark.operators import pipeline as P
-
-    cols = ("check_name", "n_violations")
-    store = _BatchKeyedStore(state_dir) if state_dir else None
-    states: dict[int, list] = {}
-    if store is not None:
-        for bid, pdf in store.load().items():
-            states[bid] = [tuple(t) for t in pdf[list(cols)].itertuples(index=False)]
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        audit = P.dq_audit(batch_df, row_constraints)
-        entry = [(r.check_name, r.n_violations) for r in audit.collect()]
-        if store is not None:
-            store.put(int(batch_id), pd.DataFrame(entry, columns=list(cols)))
-        states[int(batch_id)] = entry
-
-    writer = stream.writeStream.foreachBatch(fold)
-    return writer, states
-
-
-_RETRACT_STATE_COLS = ("n_rows", "sum_milli", "sumsq_milli2")
-
-
-def streaming_retract_ivm_fold(
-    stream: DataFrame,
-    keys: list[str],
-    value_col: str,
-    sign_col: str,
-    state_dir: str | None = None,
-):
-    """CDC twin of streaming_ivm_fold (r11): the stream is a CHANGELOG —
-    each row carries sign_col (+1 insert, -1 delete) — and the per-batch
-    partial is maintenance.ivm_retract_state_cdc, so DELETE rows retract
-    from the maintained view without any base rescan. Same batch-id-keyed,
-    durable, redelivery-idempotent discipline as streaming_ivm_fold; read
-    the view with retract_ivm_view over a DRAINED backlog (mid-drain, a
-    key whose delete landed in an earlier-read batch than its insert can
-    be transiently negative; the drained fold is exact because addition
-    commutes)."""
-    cols = tuple(keys) + _RETRACT_STATE_COLS
-    store = _BatchKeyedStore(state_dir) if state_dir else None
-    states: dict[int, list] = {}
-    if store is not None:
-        for bid, pdf in store.load().items():
-            states[bid] = [tuple(t) for t in pdf[list(cols)].itertuples(index=False)]
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        st = M.ivm_retract_state_cdc(batch_df, keys, value_col, sign_col)
-        entry = [tuple(r[c] for c in cols) for r in st.collect()]
-        if store is not None:
-            store.put(int(batch_id), pd.DataFrame(entry, columns=list(cols)))
-        states[int(batch_id)] = entry
-
-    writer = stream.writeStream.foreachBatch(fold)
-    return writer, states
 
 
 def retract_ivm_view(
@@ -167,7 +30,10 @@ def retract_ivm_view(
     fold of the per-batch CDC partials through the SAME
     maintenance.ivm_retract_merge path as the batch operator (fully-
     retracted keys leave the view; a net-negative key — retraction of
-    never-inserted rows — fails loudly)."""
+    never-inserted rows — fails loudly). Read it over a DRAINED backlog:
+    mid-drain, a key whose delete landed in an earlier-read batch than
+    its insert can be transiently negative; the drained fold is exact
+    because addition commutes."""
     rows = [tuple(e) for entry in states.values() for e in entry]
     schema = ", ".join(
         [f"{k} string" for k in keys]
@@ -175,71 +41,3 @@ def retract_ivm_view(
     )
     df = spark.createDataFrame(rows, schema) if rows else spark.createDataFrame([], schema)
     return M.ivm_retract_merge(df.limit(0), df, keys)
-
-
-def retract_compact_fold(keys: list[str]):
-    """fold_fn for _BatchKeyedStore.compact over streaming_retract_ivm_fold
-    state: all three lanes are plain sums (group-invertible), so the
-    compacted entry is exact under any later fold."""
-
-    def fold(pdfs: list[pd.DataFrame]) -> pd.DataFrame:
-        allp = pd.concat(pdfs, ignore_index=True)
-        return allp.groupby(list(keys), as_index=False).agg(
-            n_rows=("n_rows", "sum"),
-            sum_milli=("sum_milli", "sum"),
-            sumsq_milli2=("sumsq_milli2", "sum"),
-        )
-
-    return fold
-
-
-def ivm_compact_fold(keys: list[str]):
-    """fold_fn for _BatchKeyedStore.compact over streaming_ivm_fold
-    state (VERDICT r10 #5): the SAME algebra as maintenance.ivm_merge —
-    count/sum add, min/max fold — applied to the key-cardinality-sized
-    per-batch partials driver-side (pandas), so the compacted entry is
-    bit-identical to the entries it replaces under ivm_view's grouped
-    fold (all four aggregates associative+commutative in BIGINT)."""
-
-    def fold(pdfs: list[pd.DataFrame]) -> pd.DataFrame:
-        allp = pd.concat(pdfs, ignore_index=True)
-        return allp.groupby(list(keys), as_index=False).agg(
-            n_rows=("n_rows", "sum"),
-            sum_milli=("sum_milli", "sum"),
-            min_milli=("min_milli", "min"),
-            max_milli=("max_milli", "max"),
-        )
-
-    return fold
-
-
-def dq_compact_fold(pdfs: list[pd.DataFrame]) -> pd.DataFrame:
-    """fold_fn for _BatchKeyedStore.compact over streaming_dq_fold state:
-    violation counts are additive, so summing per check_name preserves
-    the accumulated ledger exactly."""
-    allp = pd.concat(pdfs, ignore_index=True)
-    return allp.groupby("check_name", as_index=False).agg(
-        n_violations=("n_violations", "sum")
-    )
-
-
-def dq_view(spark: SparkSession, states: dict[int, list]) -> DataFrame:
-    """Accumulated constraint report over everything drained so far."""
-    from pyspark.sql import functions as F
-
-    rows = [t for entry in states.values() for t in entry]
-    df = (
-        spark.createDataFrame(rows, "check_name string, n_violations long")
-        if rows
-        else spark.createDataFrame([], "check_name string, n_violations long")
-    )
-    return (
-        df.groupBy("check_name")
-        .agg(F.sum("n_violations").cast("long").alias("n_violations"))
-        .select(
-            "check_name",
-            "n_violations",
-            (F.col("n_violations") == 0).alias("passed"),
-        )
-        .orderBy("check_name")
-    )

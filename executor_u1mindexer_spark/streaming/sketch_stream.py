@@ -1,383 +1,20 @@
-"""Streaming twins of the mergeable sketches — live HLL / CMS maintenance.
+"""Per-micro-batch ledger entries for the mergeable sketches.
 
-The sketch states are the rare aggregations whose streaming form is
-STRICTLY bounded: the HLL state is at most 2^p (register, max_rank) rows
-and the CMS state at most d*w counter rows, regardless of how long the
-stream runs — unlike the dedup ledger (state grows with unique content)
-or windowed aggregates (state grows with time until the watermark seals
-windows). Updates are monotone folds (max / count), so each arriving
-record is an O(1) state touch, and the in-flight state IS the artifact a
-rollup pipeline would checkpoint: no separate batch rebuild needed.
-
-The projection (hash, register, rank / counter coordinates) is the SAME
-generated Catalyst expression text as the batch operators in
-operators/sketch.py, so the streaming result is bit-identical to the
-batch sketch of the drained backlog — pinned by tests/test_streaming.py
-against hll_registers / cms_state as the oracle. [NOT IN REFERENCE —
-executor.py has no streaming surface.]
+A streaming sketch ledger keeps ONE bounded entry per micro-batch and
+answers queries from the merge of the entries. The Misra-Gries entry is
+at most k (item, cnt_lb) pairs plus a stream-length sentinel; the KMV
+entry is at most k distinct hashes. Both merges are exact in the sense
+each sketch promises (MG: no false negatives; KMV: bit-equal to the
+batch bottom-k of the drained backlog), so the registered drained-backlog
+rows (suites/sketch_suite.sketch_{mg,kmv}_streaming_backlog) build their
+answer from these functions and check it against the batch operators in
+operators/sketch.py. [NOT IN REFERENCE — executor.py has no streaming
+surface.]
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
-
-from executor_u1mindexer_spark.operators import sketch as SK
-
-
-def streaming_hll_registers(stream: DataFrame, col: str, p: int = 10) -> DataFrame:
-    """Streaming HLL register maintenance (complete-mode grouped max).
-
-    The batch operator IS the streaming plan: a stateless codegen
-    projection + one grouped monotone aggregate, which Structured
-    Streaming runs incrementally with bounded state. Delegating keeps the
-    two forms bit-identical by construction."""
-    return SK.hll_registers(stream, col, p)
-
-
-def streaming_cms_state(
-    stream: DataFrame, col: str, d: int = SK.D_DEFAULT, w: int = 256
-) -> DataFrame:
-    """Streaming CMS counter maintenance (complete-mode grouped count);
-    delegates like streaming_hll_registers."""
-    return SK.cms_state(stream, col, d, w)
-
-
-class _BatchKeyedStore:
-    """Checkpoint-scoped durable store for driver-side fold state (r09,
-    VERDICT r08 #7): one parquet file per batch id under `state_dir`,
-    written to a dot-temp path and os.replace'd into place — atomic on
-    POSIX, so a crash mid-write leaves either the old file or the new
-    one, never a torn state. Redelivery of a batch id overwrites the
-    SAME path, which makes the store idempotent the same way the
-    in-memory dict is; a restarted driver reloads every committed entry
-    with load(). Pair `state_dir` with the query's checkpointLocation:
-    the checkpoint decides which batches are REPLAYED, this store makes
-    the replays harmless and the non-replayed history durable."""
-
-    def __init__(self, state_dir: str):
-        import os
-
-        self._dir = state_dir
-        os.makedirs(state_dir, exist_ok=True)
-
-    def put(self, batch_id: int, pdf: pd.DataFrame) -> None:
-        import os
-
-        floor = self._compact_floor()
-        if batch_id <= floor:
-            # A batch at-or-below the compact floor would WRITE fine but be
-            # invisible to load() forever — the silent-data-loss shape of a
-            # checkpoint/state_dir mismatch (a fresh checkpoint restarting
-            # batch ids at 0 against an old store). Fail loudly instead
-            # (ADVICE r11): pre-compaction the same mismatch at least
-            # visibly overwrote entries.
-            raise ValueError(
-                f"put(batch_id={batch_id}) is at or below the compact floor "
-                f"{floor} of state_dir {self._dir!r} — the entry would be "
-                "superseded by the compact file and silently dropped. This "
-                "means the streaming checkpoint and state_dir are out of "
-                "sync; point the query at a fresh state_dir (or restore the "
-                "matching checkpoint)."
-            )
-        tmp = os.path.join(self._dir, f".tmp-batch-{batch_id}.parquet")
-        pdf.to_parquet(tmp, index=False)
-        os.replace(tmp, os.path.join(self._dir, f"batch-{batch_id}.parquet"))
-
-    def _compact_floor(self) -> int:
-        """Max compact-K id on disk, or -1 when never compacted."""
-        import os
-        import re
-
-        return max(
-            (
-                int(m.group(1))
-                for name in os.listdir(self._dir)
-                if (m := re.fullmatch(r"compact-(\d+)\.parquet", name))
-            ),
-            default=-1,
-        )
-
-    def load(self) -> dict[int, pd.DataFrame]:
-        """Committed entries, with compaction semantics: if a
-        ``compact-K.parquet`` exists, it SUPERSEDES every ``batch-k`` file
-        with k <= K (and every older compact file) — those are ignored
-        here and lazily deleted by the next compact(). This is what makes
-        compact() crash-safe with os.replace alone: until the compact
-        file lands nothing changed, and after it lands the stale per-batch
-        files are invisible regardless of whether their cleanup ran."""
-        import os
-        import re
-
-        compacts: dict[int, str] = {}
-        batches: dict[int, str] = {}
-        for name in sorted(os.listdir(self._dir)):
-            m = re.fullmatch(r"batch-(\d+)\.parquet", name)
-            if m:
-                batches[int(m.group(1))] = name
-            m = re.fullmatch(r"compact-(\d+)\.parquet", name)
-            if m:
-                compacts[int(m.group(1))] = name
-        out: dict[int, pd.DataFrame] = {}
-        floor = -1
-        if compacts:
-            floor = max(compacts)
-            out[floor] = pd.read_parquet(os.path.join(self._dir, compacts[floor]))
-        for bid, name in batches.items():
-            if bid > floor:
-                out[bid] = pd.read_parquet(os.path.join(self._dir, name))
-        return out
-
-    def compact(self, fold_fn) -> dict[int, pd.DataFrame]:
-        """Fold every committed entry EXCEPT the newest into one
-        (VERDICT r10 #5 — the documented "ivm_merge IS the compaction"
-        maintenance step). ``fold_fn(list[pd.DataFrame]) -> pd.DataFrame``
-        must be the store's additive/mergeable path (ivm_compact_fold /
-        dq_compact_fold in ivm_stream.py), so the folded entry equals the
-        entries it replaces under any later fold.
-
-        Redelivery safety: Structured Streaming can only re-deliver the
-        LATEST batch (the one whose checkpoint commit may not have been
-        recorded — every older batch's commit is implied by the newer
-        entries' existence), so the newest entry is EXCLUDED from the fold
-        and keeps overwrite-idempotent semantics; the folded history is
-        keyed at the max FOLDED id K via a compact-K file that load()
-        treats as superseding batch-k for k <= K.
-
-        Crash safety: the compact file is os.replace'd into place (all or
-        nothing); stale per-batch files left by a crash after that point
-        are ignored by load() and deleted on the next compact(). Run on a
-        quiescent store (stream stopped / between restarts) — the
-        in-memory states dict of a LIVE fold is rebuilt from load() only
-        at restart. Returns the post-compaction load() view."""
-        import os
-
-        entries = self.load()
-        if len(entries) >= 3:
-            newest = max(entries)
-            fold_ids = sorted(k for k in entries if k != newest)
-            k_top = fold_ids[-1]
-            folded = fold_fn([entries[k] for k in fold_ids])
-            tmp = os.path.join(self._dir, f".tmp-compact-{k_top}.parquet")
-            folded.to_parquet(tmp, index=False)
-            os.replace(tmp, os.path.join(self._dir, f"compact-{k_top}.parquet"))
-        # lazy cleanup of anything a current compact file supersedes
-        # (including stale files from an earlier crashed cleanup)
-        import re
-
-        names = os.listdir(self._dir)
-        # any .tmp-* is by construction uncommitted (a crash between
-        # to_parquet and os.replace) — without this, the lazy-cleanup
-        # regex below never matches the dot-prefix and stale tmp files
-        # accumulate across compaction rounds (ADVICE r11)
-        for name in names:
-            if name.startswith(".tmp-") and name.endswith(".parquet"):
-                try:
-                    os.remove(os.path.join(self._dir, name))
-                except OSError:
-                    pass  # best-effort, same as below
-        floors = [
-            int(m.group(1))
-            for name in names
-            if (m := re.fullmatch(r"compact-(\d+)\.parquet", name))
-        ]
-        if floors:
-            floor = max(floors)
-            for name in names:
-                m = re.fullmatch(r"(batch|compact)-(\d+)\.parquet", name)
-                if m and (
-                    int(m.group(2)) <= floor
-                    if m.group(1) == "batch"
-                    else int(m.group(2)) < floor
-                ):
-                    try:
-                        os.remove(os.path.join(self._dir, name))
-                    except OSError:
-                        pass  # cleanup is best-effort; load() ignores these
-        return self.load()
-
-
-def streaming_quantile_state_fold(
-    stream: DataFrame,
-    value_col: str,
-    id_col: str,
-    p: int = 8,
-    s: int = 64,
-    state_dir: str | None = None,
-):
-    """Streaming form of the equi-depth quantile sketch (r06).
-
-    Unlike HLL/CMS (monotone folds that stream as incremental grouped
-    aggregates), the equi-depth state needs a per-bucket SORT, which
-    Structured Streaming cannot run incrementally — so the streaming
-    shape is the one operators/quantile.py documents: ONE bounded state
-    PER MICRO-BATCH (tagged by batch id, exactly quantile_merge's `src`
-    column), accumulated driver-side; rank queries run over the merged
-    tiny states. Returns (writer, states) where `states` is the
-    driver-side accumulator — a dict KEYED BY batch_id (ADVICE r06):
-    foreachBatch can RE-DELIVER a batch id after failure/restart, and an
-    append-only list would double-count that batch's rows in merged rank
-    queries (n_total and targets inflate); overwriting the key makes the
-    fold idempotent under redelivery. Each entry is <= p*s rows
-    regardless of batch size, which is what makes the driver-side fold
-    legitimate.
-
-    Restart closure (r09, VERDICT r08 #7): pass `state_dir` (a directory
-    scoped NEXT TO the query's checkpointLocation) and every entry is
-    also persisted as an atomically-replaced parquet file keyed by batch
-    id (_BatchKeyedStore); a NEW driver process calling this function
-    with the same `state_dir` starts with the committed history already
-    loaded, and checkpoint-replayed batches overwrite both the dict key
-    and the file — no double-count either way (kill-and-resume pinned in
-    tests/test_streaming.py)."""
-    from executor_u1mindexer_spark.operators import quantile as QT
-
-    _COLS = ("src", "bucket", "tile", "rep_value", "weight")
-    store = _BatchKeyedStore(state_dir) if state_dir else None
-    states: dict[int, list] = {}
-    if store is not None:
-        for bid, pdf in store.load().items():
-            states[bid] = [tuple(t) for t in pdf[list(_COLS)].itertuples(index=False)]
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        st = QT.quantile_state(batch_df, value_col, id_col, p, s)
-        rows = st.collect()
-        entry = [
-            (int(batch_id), r.bucket, r.tile, r.rep_value, r.weight)
-            for r in rows
-        ]
-        if store is not None:
-            store.put(int(batch_id), pd.DataFrame(entry, columns=_COLS))
-        states[int(batch_id)] = entry
-
-    writer = stream.writeStream.foreachBatch(fold)
-    return writer, states
-
-
-def streaming_gram_fold(
-    stream: DataFrame, vec_col: str = "embedding", state_dir: str | None = None
-):
-    """Streaming form of the exact Gram-moment accumulation (r07,
-    operators/linalg.py): second moments are ORDER-FREE BIGINT sums, so
-    the stream fold is the same d(d+1)/2-entry state summed across
-    micro-batches — bounded state regardless of stream length, like the
-    HLL/CMS twins. Per batch: the distributed partial-Gram kernel
-    reduces the batch to <= d(d+1)/2 rows, collected and summed
-    driver-side. The accumulator is KEYED BY batch_id (the
-    streaming_quantile_state_fold idempotence contract): foreachBatch
-    redelivery overwrites rather than double-counts. merged_moments()
-    returns rows shaped like gram_moments' output, bit-equal to the
-    batch operator over the drained backlog (pinned in
-    tests/test_streaming.py). Pass `state_dir` to make the fold survive
-    a driver restart via the same batch-id-keyed atomic parquet store
-    as streaming_quantile_state_fold (r09, VERDICT r08 #7)."""
-    from executor_u1mindexer_spark.operators import linalg as L
-
-    _COLS = ("i", "j", "n", "sum_qi", "sum_qj", "sum_qq")
-    store = _BatchKeyedStore(state_dir) if state_dir else None
-    states: dict[int, dict] = {}
-    if store is not None:
-        for bid, pdf in store.load().items():
-            states[bid] = {
-                (int(r.i), int(r.j)): (int(r.n), int(r.sum_qi), int(r.sum_qj), int(r.sum_qq))
-                for r in pdf.itertuples(index=False)
-            }
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        rows = L.gram_moments(batch_df, vec_col=vec_col).collect()
-        if store is not None:
-            store.put(
-                int(batch_id),
-                pd.DataFrame(
-                    [
-                        (r.i, r.j, r.n, r.sum_qi, r.sum_qj, r.sum_qq)
-                        for r in rows
-                    ],
-                    columns=_COLS,
-                ),
-            )
-        states[int(batch_id)] = {
-            (r.i, r.j): (r.n, r.sum_qi, r.sum_qj, r.sum_qq) for r in rows
-        }
-
-    def merged_moments() -> dict:
-        acc: dict = {}
-        for st in states.values():
-            for key, (n, si, sj, sqq) in st.items():
-                if key in acc:
-                    a = acc[key]
-                    acc[key] = (a[0] + n, a[1] + si, a[2] + sj, a[3] + sqq)
-                else:
-                    acc[key] = (n, si, sj, sqq)
-        return acc
-
-    writer = stream.writeStream.foreachBatch(fold)
-    return writer, states, merged_moments
-
-
-def streaming_heavy_hitters_fold(
-    stream: DataFrame,
-    item_col: str,
-    k: int = 64,
-    state_dir: str | None = None,
-):
-    """Streaming twin of the Misra-Gries heavy-hitter summary (r12).
-
-    Like the quantile sketch (above), the MG state's per-batch shape is
-    one BOUNDED summary per micro-batch — at most k (item, cnt_lb) rows
-    plus the stream-length sentinel (sketch.misra_gries_partials over
-    the batch, partition partials merged in-plan by item-wise sum; the
-    sum of MG summaries is itself a valid MG summary by the
-    Mergeable-Summaries bound, so no truncation is needed between the
-    partition partials and the per-batch entry). Accumulated driver-side
-    keyed by batch id (redelivery overwrites — idempotent), durably via
-    _BatchKeyedStore when `state_dir` is set.
-
-    Read with heavy_hitters_state(): item-wise sum across batch entries.
-    The drained-backlog guarantee is the batch operator's: every item
-    with true count > n_total/(k+1) appears with cnt_lb > 0 (no false
-    negatives — each batch drops at most n_batch/(k+1) of any item's
-    mass), so candidates-then-exact-verify works on the live ledger the
-    same way heavy_hitters_verified does in batch."""
-    from executor_u1mindexer_spark.operators import sketch as SK
-
-    _COLS = (item_col, "cnt_lb")
-    store = _BatchKeyedStore(state_dir) if state_dir else None
-    states: dict[int, list] = {}
-
-    def _norm(it):
-        # the NULL-item sentinel roundtrips parquet as NaN/pd.NA and int
-        # items as numpy scalars — normalize back to None / plain Python
-        # so a reloaded ledger is bit-equal to the live one
-        if it is None or (not isinstance(it, str) and pd.isna(it)):
-            return None
-        if isinstance(it, float) and it.is_integer():
-            return int(it)
-        if hasattr(it, "item"):  # numpy / pandas scalar
-            return it.item()
-        return it
-
-    if store is not None:
-        for bid, pdf in store.load().items():
-            states[bid] = [
-                (_norm(it), int(c))
-                for it, c in zip(pdf[item_col].tolist(), pdf["cnt_lb"].tolist())
-            ]
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        entry = mg_batch_entry(batch_df, item_col, k)
-        if store is not None:
-            items = [it for it, _ in entry]
-            if all(it is None or isinstance(it, int) for it in items):
-                items = pd.array(items, dtype="Int64")  # nullable-int roundtrip
-            store.put(
-                int(batch_id),
-                pd.DataFrame({item_col: items, "cnt_lb": [c for _, c in entry]}),
-            )
-        states[int(batch_id)] = entry
-
-    writer = stream.writeStream.foreachBatch(fold)
-    return writer, states
 
 
 def mg_batch_entry(batch_df: DataFrame, item_col: str, k: int = 64) -> list:
@@ -385,9 +22,8 @@ def mg_batch_entry(batch_df: DataFrame, item_col: str, k: int = 64) -> list:
     in-plan by item-wise sum (a valid MG summary by the Mergeable-
     Summaries bound — no truncation between partials and the entry),
     collected as a BOUNDED list of (item, cnt_lb) pairs plus the
-    stream-length sentinel (item None). Shared verbatim by the
-    streaming fold above and the driver-facing drained-backlog row
-    (suites/sketch_suite.sketch_mg_streaming_backlog)."""
+    stream-length sentinel (item None). Used by the drained-backlog row
+    suites/sketch_suite.sketch_mg_streaming_backlog."""
     from pyspark.sql import functions as F
 
     from executor_u1mindexer_spark.operators import sketch as SK
@@ -413,55 +49,18 @@ def heavy_hitters_state(states: dict[int, list]) -> dict:
 def kmv_batch_entry(batch_df: DataFrame, col: str, k: int = 256) -> list:
     """One micro-batch's KMV ledger entry: the batch's OWN bottom-k
     distinct hashes as a sorted python list (BOUNDED driver-side state:
-    <= k BIGINT values per batch). Shared verbatim by the streaming
-    fold below and the driver-facing drained-backlog row
-    (suites/sketch_suite.sketch_kmv_streaming_backlog), so the row
-    exercises the stream's actual per-batch code path."""
+    <= k BIGINT values per batch). Used by the drained-backlog row
+    suites/sketch_suite.sketch_kmv_streaming_backlog."""
     from executor_u1mindexer_spark.operators import sketch as SK
 
     return sorted(int(r["h"]) for r in SK.kmv_bottomk(batch_df, col, k).collect())
 
 
-def streaming_kmv_fold(
-    stream: DataFrame,
-    col: str,
-    k: int = 256,
-    state_dir: str | None = None,
-):
-    """Streaming twin of the KMV bottom-k distinct sketch (r12,
-    operators/sketch.kmv_bottomk): per micro-batch entry = the batch's
-    own bottom-k distinct hashes (BOUNDED: <= k BIGINT rows per batch),
-    accumulated driver-side keyed by batch id (redelivery overwrites —
-    idempotent), durably via _BatchKeyedStore when `state_dir` is set.
-
-    Read with kmv_state(): bottom-k of the union of entries — EXACTLY
-    the batch sketch of the drained backlog, by the same pigeonhole as
-    the per-partition fold (any hash in the backlog's global bottom-k is
-    in its own batch's bottom-k), so the ledger view is not merely
-    convergent but bit-equal to batch kmv_bottomk. Unlike the MG ledger
-    (lower bounds that tighten on verify) the KMV ledger needs no
-    second pass: merge IS exact."""
-    store = _BatchKeyedStore(state_dir) if state_dir else None
-    states: dict[int, list] = {}
-
-    if store is not None:
-        for bid, pdf in store.load().items():
-            states[bid] = [int(h) for h in pdf["h"].tolist()]
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        entry = kmv_batch_entry(batch_df, col, k)
-        if store is not None:
-            store.put(int(batch_id), pd.DataFrame({"h": entry}))
-        states[int(batch_id)] = entry
-
-    writer = stream.writeStream.foreachBatch(fold)
-    return writer, states
-
-
 def kmv_state(states: dict[int, list], k: int = 256) -> list:
     """Merged KMV ledger view: the k smallest distinct hashes across all
-    batch entries — the Mergeable-Summaries merge, exact (see
-    streaming_kmv_fold)."""
+    batch entries — the Mergeable-Summaries merge. Exact: any hash in
+    the backlog's global bottom-k is in its own batch's bottom-k, so the
+    result is bit-equal to the batch kmv_bottomk of the drained backlog."""
     merged: set = set()
     for entry in states.values():
         merged.update(entry)

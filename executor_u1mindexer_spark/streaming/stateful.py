@@ -1,9 +1,9 @@
 """Custom stateful streaming operator — applyInPandasWithState.
 
-A running per-user profile (event count, value sum, last-seen ts) maintained
-as explicit GroupState across micro-batches: the Structured Streaming
-equivalent of the reference's in-process mutable maintenance state
-(executor.py:49-62), but partitioned by key and fault-tolerant.
+Capped sessionization maintained as explicit GroupState across
+micro-batches: the Structured Streaming equivalent of the reference's
+in-process mutable maintenance state (executor.py:49-62), but partitioned
+by key and fault-tolerant.
 
 Scale notes: state lives in the state store partitioned by user_id; each
 micro-batch touches only the keys present in the batch; timeouts (not used
@@ -18,71 +18,7 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("sum_value", DoubleType()),
-        StructField("last_ts", TimestampType()),
-    ]
-)
-
-STATE_SCHEMA = StructType(
-    [
-        StructField("n_events", LongType()),
-        StructField("sum_value", DoubleType()),
-        StructField("last_ts", TimestampType()),
-    ]
-)
-
-
-def _update_profile(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    if state.exists:
-        n, s, last = state.get
-    else:
-        n, s, last = 0, 0.0, None
-    for pdf in pdfs:
-        n += len(pdf)
-        s += float(pdf["value"].sum())
-        # Arrow hands the batch over as datetime64[us] (parquet timestamp[us]);
-        # the state/output serializer assumes ns-resolution int64s, so keep
-        # every timestamp we store or emit pinned to ns.
-        batch_max = pd.Timestamp(pdf["ts"].max()).as_unit("ns")
-        last = batch_max if last is None or batch_max > last else last
-    if last is not None:
-        last = pd.Timestamp(last).as_unit("ns")
-    state.update((n, s, last))
-    yield pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "n_events": [n],
-            "sum_value": [s],
-            "last_ts": pd.Series([last], dtype="datetime64[ns]"),
-        }
-    )
-
-
-def streaming_user_profiles(events: DataFrame) -> DataFrame:
-    """Running user profiles over an event stream (update output mode)."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_profile,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
+from pyspark.sql.types import LongType, StructField, StructType
 
 SESSION_OUT_SCHEMA = StructType(
     [
@@ -116,11 +52,9 @@ def streaming_sessionize_capped(
     batch the fold sorts) — the split recurrence is order-sensitive, so
     a late event under this operator splits differently than the batch
     replay; a deployment needing late-data exactness buffers behind a
-    watermark instead (the F.session_window twin in events_stream.py is
-    the gap-only operator with that machinery built in). Under the
-    contract, drained CLOSED sessions == the batch operator's sessions
-    minus each user's final (still-open) one — pinned in
-    tests/test_stateful_streaming.py."""
+    watermark instead. Under the contract, drained CLOSED sessions == the
+    batch operator's sessions minus each user's final (still-open) one —
+    pinned in tests/test_stateful_streaming.py."""
 
     def fn(
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState

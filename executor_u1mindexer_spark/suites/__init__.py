@@ -177,28 +177,6 @@ DRIVER_PRIORITY = (
     # --- 50-slot window boundary ---
     # Next window: the 27 remaining r13-stale rows below, then the
     # oldest alphabetical r14-stale rows.
-    # r17 growth candidates (two — the r17 cadence allows <=2), both
-    # already built + pytest- and plan-pinned + differential-checked at
-    # all 3 SFs this round, deliberately unregistered (the r16 cap was
-    # spent on the grouped MWU + grouped PSI registrations); 3-SF
-    # oracle checks again due at each registration:
-    # 1. similarity_suite.eval_ann_recall_vs_ef / _RECALL_VS_EF_SQL
-    #    (VERDICT r15 #3b — the HNSW ef_search knob as a measured
-    #    recall curve, per-fixture pin-table oracle).
-    # 2. dedup_suite.exact_dedup_substring_removed / _SPAN_REMOVAL_SQL
-    #    (dedup.duplicated_span_removal — Lee et al. span REMOVAL, the
-    #    cleaned-corpus counterpart of the r15 span profile).
-    # A third prebuilt candidate sits in the pool for whichever round
-    # VERDICT assigns it: similarity_suite.eval_ann_recall_vs_nprobe /
-    # _RECALL_VS_NPROBE_SQL — the IVF probe-width sibling of the ef
-    # curve with the STRONGER oracle (full DuckDB replay of centroids,
-    # cell ranking, probing, top-K; no pin table), also pytest- and
-    # plan-pinned and 3-SF differential-checked this round. A fourth,
-    # same discipline, r18 pool: dedup_suite.near_dedup_semantic_cells
-    # / _SEMANTIC_CELLS_SQL (dedup.semantic_dedup_cells — SemDeDup,
-    # Abbas et al. 2023: nearest-centroid cells, within-cell exhaustive
-    # pairs, keep the near-dup farthest from its centroid; full-replay
-    # oracle).
     # r13-stale, did not fit this window (27):
     "multimodal_lossy_header_meta",
     "multimodal_training_manifest",

@@ -758,135 +758,3 @@ FROM per_island GROUP BY doc_id, total_tokens ORDER BY doc_id
 """
 
 QUERIES["exact_dedup_substring_spans"] = exact_dedup_substring_spans
-
-
-# --- r17 growth candidate #2 (beside similarity_suite.eval_ann_recall
-# _vs_ef), deliberately UNREGISTERED: the r16 cadence cap was spent on
-# the grouped MWU + grouped PSI registrations. Register as
-# `exact_dedup_substring_removed` in r17 with 3-SF oracle checks at
-# registration. Pytest: tests/test_dedup_similarity.py.
-
-
-def exact_dedup_substring_removed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Substring-level exact dedup REMOVAL (r16, the r17 candidate;
-    operators/dedup.duplicated_span_removal): the cleaned corpus the
-    Lee et al. 2022 span profile points at — every cross-doc verbatim
-    8-token run keeps exactly its lexicographically-first (doc, offset)
-    occurrence; all other occurrences' tokens are cut, and every doc
-    comes back with its surviving text plus exact kept/removed token
-    accounting."""
-    docs = tables.load(spark, sf_dir, "documents")
-    return D.duplicated_span_removal(docs, k=_SPAN_K)
-
-
-_SPAN_REMOVAL_SQL = f"""
-WITH t AS (
-  SELECT doc_id, string_split(coalesce(text, ''), ' ') AS toks FROM documents
-),
-g AS (
-  SELECT doc_id, len(toks) AS total_tokens,
-         generate_subscripts(toks, 1) - 1 AS pos, unnest(toks) AS tok
-  FROM t
-),
-sh AS (
-  SELECT doc_id, pos AS start_pos,
-         {_SPAN_SHINGLE} AS shingle,
-         lead(tok, {_SPAN_K - 1}) OVER w AS __last
-  FROM g WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-),
-occ AS (
-  SELECT doc_id, start_pos, shingle FROM sh WHERE __last IS NOT NULL
-),
-dup AS (
-  SELECT shingle FROM occ GROUP BY shingle HAVING min(doc_id) <> max(doc_id)
-),
-h AS (
-  -- keeper = rn 1 under the total (doc, start) order per shingle:
-  -- the window formulation, structurally independent of Spark's
-  -- struct-min aggregate
-  SELECT occ.*, row_number() OVER (
-           PARTITION BY shingle ORDER BY doc_id, start_pos) AS rn
-  FROM occ JOIN dup USING (shingle)
-),
-cutpos AS (
-  SELECT DISTINCT doc_id, start_pos + u AS pos
-  FROM h, unnest(generate_series(0, {_SPAN_K - 1})) r(u)
-  WHERE rn > 1
-),
-clean AS (
-  SELECT g.doc_id,
-         CAST(max(g.total_tokens) AS BIGINT) AS total_tokens,
-         CAST(count(c.pos) AS BIGINT) AS removed_tokens,
-         coalesce(string_agg(CASE WHEN c.pos IS NULL THEN g.tok END,
-                             ' ' ORDER BY g.pos), '') AS cleaned_text
-  FROM g LEFT JOIN cutpos c ON g.doc_id = c.doc_id AND g.pos = c.pos
-  GROUP BY g.doc_id
-)
-SELECT doc_id, total_tokens, removed_tokens,
-       total_tokens - removed_tokens AS kept_tokens, cleaned_text
-FROM clean ORDER BY doc_id
-"""
-
-
-# --- r18-pool growth candidate (beside the two r17 candidates named in
-# suites/__init__.py and the nprobe curve), deliberately UNREGISTERED:
-# register as `near_dedup_semantic_cells` in a future window with 3-SF
-# oracle checks at registration. Pytest: tests/test_dedup_similarity.py.
-
-
-def near_dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-scoped semantic dedup keep-list (r16 prebuilt;
-    operators/dedup.semantic_dedup_cells): the SemDeDup discipline
-    (Abbas et al. 2023) — assign every embedding to its nearest
-    label-centroid cell, compare pairs exhaustively WITHIN a cell, and
-    among near-duplicates (cosine distance <= 0.6) keep the example
-    farthest from its centroid. The complete per-vector keep list,
-    unlike the banded-LSH pair REPORT of near_dedup_embedding_cosine."""
-    emb = tables.load(spark, sf_dir, "embeddings")
-    return D.semantic_dedup_cells(emb, max_cos_dist=0.6)
-
-
-_SEM_DOT = _EDOT
-_SEM_NORM = "sqrt(" + _SEM_DOT.format(a="{a}", b="{a}") + ")"
-_SEM_CDIST = (
-    f"1.0 - {_SEM_DOT.format(a='e.v', b='c.cvec')} / "
-    f"({_SEM_NORM.format(a='e.v')} * {_SEM_NORM.format(a='c.cvec')})"
-)
-_SEM_PDIST = (
-    f"1.0 - {_SEM_DOT.format(a='a.v', b='b.v')} / "
-    f"({_SEM_NORM.format(a='a.v')} * {_SEM_NORM.format(a='b.v')})"
-)
-
-_SEMANTIC_CELLS_SQL = f"""
-WITH e AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-cd AS (
-  SELECT label, t.i AS dim, round(avg(v2[t.i]), 6) AS cval
-  FROM (SELECT label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v2
-        FROM embeddings) s, unnest(range(1, len(v2) + 1)) AS t(i)
-  GROUP BY label, t.i
-),
-c AS (SELECT label AS cell, list(cval ORDER BY dim) AS cvec FROM cd GROUP BY label),
-asn0 AS (
-  SELECT e.vec_id AS id, e.v, c.cell, {_SEM_CDIST} AS cdist
-  FROM e CROSS JOIN c
-),
-asn AS (
-  SELECT * FROM asn0
-  QUALIFY row_number() OVER (PARTITION BY id ORDER BY cdist ASC, cell ASC) = 1
-),
-pr AS (
-  SELECT DISTINCT CASE WHEN a.cdist > b.cdist
-                        OR (a.cdist = b.cdist AND a.id < b.id)
-                  THEN b.id ELSE a.id END AS id
-  FROM asn a JOIN asn b ON a.cell = b.cell AND a.id < b.id
-  WHERE {_SEM_PDIST} <= 0.6
-)
-SELECT asn.id AS vec_id, cell,
-       CAST(floor(1000000 * cdist) AS BIGINT) AS cdist_micro,
-       pr.id IS NULL AS kept
-FROM asn LEFT JOIN pr ON asn.id = pr.id
-ORDER BY vec_id
-"""

@@ -612,12 +612,11 @@ GROUP BY o_orderstatus ORDER BY o_orderstatus
 
 def ivm_retract_cdc_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CDC/retract-stream lane's driver-facing row (r12, VERDICT r11
-    #7 — streaming/ivm_stream.streaming_retract_ivm_fold was pytest-only):
-    a two-batch CHANGELOG over orders keyed by o_orderpriority, folded
+    #7): a two-batch CHANGELOG over orders keyed by o_orderpriority, folded
     per batch with maintenance.ivm_retract_state_cdc (each row carries
     its own ±1 sign) and read back through ivm_stream.retract_ivm_view —
-    the exact drained-backlog read path of the streaming fold, including
-    its bounded per-batch driver-side partial collect (n_keys rows per
+    the drained-backlog read path of the CDC ledger, including its
+    bounded per-batch driver-side partial collect (n_keys rows per
     batch, the streaming ledger's honest state shape).
 
     Batch 0: inserts for orderkey % 4 != 3. Batch 1: the remaining

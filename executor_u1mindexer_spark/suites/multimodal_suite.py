@@ -118,7 +118,7 @@ def multimodal_lossy_header_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     property + auxC alpha urn (operators/containers.py) — then re-parse
     (container, codec, width, height, has_alpha) from header structure
     alone. No entropy decoding anywhere: full lossy reconstruction stays
-    behind the loud gate in multimodal.decode_image with its documented
+    behind the loud gate in webp.decode_webp with its documented
     rationale. The oracle states the parsed metadata in closed form from
     the generation rule — a wrong chunk offset, endianness slip, masked
     14-bit read, canvas-minus-one error, or missed auxC diverges."""

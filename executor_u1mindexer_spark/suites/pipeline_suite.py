@@ -133,10 +133,9 @@ def dq_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dq_backlog_cross_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-batch DQ audit over a drained backlog (r11, VERDICT r10
-    #6): the streaming ledger (ivm_stream.streaming_dq_fold) honestly
-    gates out uniqueness and referential checks — they are cross-batch
-    properties a per-batch monitor cannot decide — so this is the
-    companion operator: run dq_audit's uniqueness/FK lanes in BATCH mode
+    #6): uniqueness and referential checks are cross-batch properties
+    a per-batch monitor cannot decide, so this is the batch operator
+    for them: run dq_audit's uniqueness/FK lanes in BATCH mode
     over the UNION of two micro-batches, with an injected cross-batch
     duplicate set so the uniqueness lane has real work to find.
 

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from executor_u1mindexer_spark import cache, tables
 from executor_u1mindexer_spark.operators import knn, similarity as S
-from executor_u1mindexer_spark.functions import vector as V
 
 K = 5
 QUERY_MOD = 100  # queries = every 100th vec_id (deterministic, sf-scalable)
@@ -1111,297 +1110,3 @@ FROM pq
 
 QUERIES["eval_retrieval_ndcg"] = eval_retrieval_ndcg
 ORACLES["eval_retrieval_ndcg"] = _NDCG_SQL
-
-
-# --- r17 growth candidate (VERDICT r15 #3b), deliberately UNREGISTERED:
-# the r16 cadence cap (<=2 rows) was spent on the grouped MWU + grouped
-# PSI registrations. Register as `eval_ann_recall_vs_ef` in r17 with
-# 3-SF oracle checks at registration (the mann_whitney_u_by_group
-# precedent). The pytest pin lives in tests/test_similarity.py.
-
-EF_CURVE = (5, 8, 16, 50)
-
-
-def eval_ann_recall_vs_ef(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@K of the HNSW lane as a MEASURED CURVE over ef_search
-    (r16, VERDICT r15 #3b): the reference's accuracy/speed knob (§2.A
-    #19, executor.py:22-24 — ef trades recall for query time) measured
-    at four ef values in one row set instead of asserted at a single
-    point. One output row per ef: (ef_search, n_queries, n_results,
-    n_hits, recall_at_k_micro), the eval_ann_recall_at_k contract with
-    the method axis replaced by the knob axis. The from-scratch HNSW
-    (operators/hnsw.py) is deterministic — id-hash levels, id-ordered
-    inserts, id tie-breaks — so the curve is a stable measured fact of
-    (fixture, ef), not a flaky sample: at the 500-vector fixtures
-    recall is 24/25 at ef=5 and perfect from ef=8; at the 2000-vector
-    fixture it climbs 88 -> 96 -> 100 hits across ef=5/8/16 (graph
-    search must widen its beam as the corpus grows — the exact
-    trade-off the reference documents for the knob).
-
-    Oracle scheme: graph search is not SQL-expressible, so the DuckDB
-    twin extends eval_ann_recall_at_k's judge-adjudicated measured-pin
-    scheme to the curve — per-fixture pins keyed on the corpus row
-    count, with NO fallback row: an unmeasured fixture yields zero
-    oracle rows and a loud mismatch, and ANY recall change at ANY
-    pinned fixture hash-mismatches. Re-measure before moving a pin."""
-    emb = _emb(spark, sf_dir)
-    q2 = _queries(emb).select("query_id", "query_embedding")
-    exact = knn.knn_search(emb, q2, k=K, metric="cosine").select(
-        "query_id", "vec_id"
-    )
-    per_ef = None
-    for ef in EF_CURVE:
-        res = S.hnsw_partitioned_topk(
-            emb, q2, k=K, ef_search=ef, max_bucket_rows=200_000
-        ).select("query_id", "vec_id")
-        row = (
-            res.agg(F.count(F.lit(1)).cast("long").alias("n_results"))
-            .crossJoin(
-                res.join(exact, ["query_id", "vec_id"], "leftsemi").agg(
-                    F.count(F.lit(1)).cast("long").alias("n_hits")
-                )
-            )
-            .select(F.lit(ef).alias("ef_search"), "n_results", "n_hits")
-        )
-        per_ef = row if per_ef is None else per_ef.unionByName(row)
-    nq = q2.agg(F.count(F.lit(1)).cast("long").alias("n_queries"))
-    return (
-        per_ef.crossJoin(F.broadcast(nq))
-        .select(
-            "ef_search",
-            "n_queries",
-            "n_results",
-            "n_hits",
-            F.expr(
-                f"CAST({EVAL_SCALE} * n_hits"
-                f" DIV nullif(n_queries * {K}, 0) AS BIGINT)"
-            ).alias("recall_at_k_micro"),
-        )
-        .orderBy("ef_search")
-    )
-
-
-_RECALL_VS_EF_PINS = (
-    # (corpus_rows, ef_search, n_hits) — measured on the deterministic
-    # from-scratch HNSW; see the eval_ann_recall_vs_ef docstring.
-    (500, 5, 24),
-    (500, 8, 25),
-    (500, 16, 25),
-    (500, 50, 25),
-    (2000, 5, 88),
-    (2000, 8, 96),
-    (2000, 16, 100),
-    (2000, 50, 100),
-)
-
-_RECALL_VS_EF_SQL = (
-    _BASE
-    + f"""
-, nq AS (SELECT CAST(count(*) AS BIGINT) AS n_queries FROM q),
-ne AS (SELECT CAST(count(*) AS BIGINT) AS n_corpus FROM e),
-pins(n_corpus, ef_search, pinned_hits) AS (VALUES
-  {", ".join(f"({c}, {ef}, {h})" for c, ef, h in _RECALL_VS_EF_PINS)}),
-rows_ AS (
-  SELECT CAST(ef_search AS INTEGER) AS ef_search,
-         n_queries,
-         CAST(n_queries * {K} AS BIGINT) AS n_results,
-         CAST(pinned_hits AS BIGINT) AS n_hits
-  FROM pins JOIN ne ON pins.n_corpus = ne.n_corpus CROSS JOIN nq
-)
-SELECT ef_search, n_queries, n_results, n_hits,
-       CAST(({EVAL_SCALE} * n_hits) // nullif(n_queries * {K}, 0) AS BIGINT)
-         AS recall_at_k_micro
-FROM rows_ ORDER BY ef_search
-"""
-)
-
-
-# --- further prebuilt growth candidate (r17/r18 pool), deliberately
-# UNREGISTERED like the two named in suites/__init__.py — the IVF
-# sibling of eval_ann_recall_vs_ef, with the stronger oracle (full
-# DuckDB replay, no pins): registration order per the next VERDICT.
-
-NPROBE_CURVE = (1, 2, 4, 8)
-
-
-def eval_ann_recall_vs_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@K of the IVF lane as a MEASURED CURVE over nprobe (r16):
-    the coarse-quantizer probe width — IVF's accuracy/speed knob, the
-    exact analog of HNSW's ef_search (§2.A #19) — measured at four
-    widths in one row set. Cells are the fixture labels seeded by
-    their centroids (S.label_centroids, round(avg,6) boundary); each
-    query ranks cells by centroid cosine distance with the (dist,
-    label) tie-break, probes its nprobe nearest cells, and takes the
-    top-K by (dist, vec_id) from the probed union. One row per
-    nprobe: (nprobe, n_queries, n_results, n_hits, recall_at_k_micro).
-
-    Recall is provably non-decreasing in nprobe (a wider probe can
-    displace a true hit only with a globally-closer vector, which is
-    itself a true hit — pinned in pytest), and the ivf_label lane of
-    eval_ann_recall_at_k is the semantic cousin of nprobe=1 (it
-    probes the query's OWN label rather than the centroid-nearest).
-
-    Unlike the ef curve, the whole retrieval is SQL-expressible, so
-    the DuckDB twin replays centroids, cell ranking, probing, and
-    top-K end-to-end — measured recall is exact cross-engine with NO
-    pin table. Scale shape: centroids are one (label, dim) shuffle;
-    the probed-cells frame is queries x max(nprobe) rows (broadcast);
-    the corpus joins it per cell and never re-shuffles; the single
-    top-K window partitions by (nprobe, query) — the probes axis
-    rides the same window, not four separate passes."""
-    from pyspark.sql import Window
-
-    emb = _emb(spark, sf_dir)
-    q2 = _queries(emb).select(
-        "query_id",
-        V.as_double_array("query_embedding").alias("__qvec"),
-    ).withColumn("__qn", V.norm(F.col("__qvec")))
-    exact = knn.knn_search(
-        emb, _queries(emb).select("query_id", "query_embedding"), k=K, metric="cosine"
-    ).select("query_id", "vec_id")
-    cent = (
-        S.label_centroids(emb)
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "centroid"))),
-                lambda s: s["centroid"],
-            ).alias("__cvec")
-        )
-        .withColumn("__cn", V.norm(F.col("__cvec")))
-    )
-    max_p = max(NPROBE_CURVE)
-    cell_w = Window.partitionBy("query_id").orderBy(
-        F.col("__cdist").asc(), F.col("label").asc()
-    )
-    probed = (
-        q2.crossJoin(F.broadcast(cent))
-        .select(
-            "query_id",
-            "__qvec",
-            "__qn",
-            "label",
-            (
-                F.lit(1.0)
-                - V.dot(F.col("__qvec"), F.col("__cvec"))
-                / (F.col("__qn") * F.col("__cn"))
-            ).alias("__cdist"),
-        )
-        .withColumn("cell_rank", F.row_number().over(cell_w))
-        .filter(F.col("cell_rank") <= max_p)
-        .select("query_id", "__qvec", "__qn", "label", "cell_rank")
-    )
-    stored = emb.select(
-        "vec_id", "label", V.as_double_array("embedding").alias("__svec")
-    ).withColumn("__sn", V.norm(F.col("__svec")))
-    probes = F.explode(
-        F.array(*[F.lit(p) for p in NPROBE_CURVE])
-    ).alias("nprobe")
-    topk_w = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.col("__dist").asc(), F.col("vec_id").asc()
-    )
-    topk = (
-        stored.join(F.broadcast(probed), "label")
-        .select(
-            "query_id",
-            "vec_id",
-            "cell_rank",
-            (
-                F.lit(1.0)
-                - V.dot(F.col("__qvec"), F.col("__svec"))
-                / (F.col("__qn") * F.col("__sn"))
-            ).alias("__dist"),
-        )
-        .select("query_id", "vec_id", "cell_rank", "__dist", probes)
-        .filter(F.col("cell_rank") <= F.col("nprobe"))
-        .withColumn("__rn", F.row_number().over(topk_w))
-        .filter(F.col("__rn") <= K)
-    )
-    per_p = (
-        topk.groupBy("nprobe")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_results"))
-        .join(
-            topk.join(exact, ["query_id", "vec_id"], "leftsemi")
-            .groupBy("nprobe")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_hits")),
-            "nprobe",
-            "left",
-        )
-        .fillna(0, subset=["n_hits"])
-    )
-    nq = q2.agg(F.count(F.lit(1)).cast("long").alias("n_queries"))
-    return (
-        per_p.crossJoin(F.broadcast(nq))
-        .select(
-            "nprobe",
-            "n_queries",
-            "n_results",
-            "n_hits",
-            F.expr(
-                f"CAST({EVAL_SCALE} * n_hits"
-                f" DIV nullif(n_queries * {K}, 0) AS BIGINT)"
-            ).alias("recall_at_k_micro"),
-        )
-        .orderBy("nprobe")
-    )
-
-
-_CENT_COS = (
-    f"1.0 - {_DOT.format(a='q.qv', b='c.cvec')} / "
-    f"({_NORM.format(a='q.qv')} * {_NORM.format(a='c.cvec')})"
-)
-_PROBE_COS = (
-    f"1.0 - {_DOT.format(a='p.qv', b='e.v')} / "
-    f"({_NORM.format(a='p.qv')} * {_NORM.format(a='e.v')})"
-)
-
-_RECALL_VS_NPROBE_SQL = (
-    _BASE
-    + f"""
-, cd AS (
-  SELECT label, t.i AS dim, round(avg(v[t.i]), 6) AS cval
-  FROM e, unnest(range(1, len(v) + 1)) AS t(i)
-  GROUP BY label, t.i
-),
-c AS (SELECT label, list(cval ORDER BY dim) AS cvec FROM cd GROUP BY label),
-cells AS (
-  SELECT q.query_id, q.qv, c.label,
-         row_number() OVER (PARTITION BY q.query_id
-                            ORDER BY {_CENT_COS} ASC, c.label ASC) AS cell_rank
-  FROM q CROSS JOIN c
-),
-p AS (SELECT * FROM cells WHERE cell_rank <= {max(NPROBE_CURVE)}),
-probes(nprobe) AS (VALUES {", ".join(f"({x})" for x in NPROBE_CURVE)}),
-cand AS (
-  SELECT probes.nprobe, p.query_id, e.vec_id,
-         row_number() OVER (PARTITION BY probes.nprobe, p.query_id
-                            ORDER BY {_PROBE_COS} ASC, e.vec_id ASC) AS rn
-  FROM p JOIN e ON e.label = p.label CROSS JOIN probes
-  WHERE p.cell_rank <= probes.nprobe
-),
-topk AS (SELECT nprobe, query_id, vec_id FROM cand WHERE rn <= {K}),
-scored AS (
-  SELECT q.query_id, e.vec_id, {_COS} AS dist FROM e CROSS JOIN q
-),
-exact AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY dist ASC, vec_id ASC) AS rk
-    FROM scored) t WHERE rk <= {K}
-),
-nq AS (SELECT CAST(count(*) AS BIGINT) AS n_queries FROM q),
-agg AS (
-  SELECT nprobe, CAST(count(*) AS BIGINT) AS n_results,
-         CAST(count(*) FILTER (WHERE EXISTS (
-           SELECT 1 FROM exact x
-           WHERE x.query_id = topk.query_id AND x.vec_id = topk.vec_id
-         )) AS BIGINT) AS n_hits
-  FROM topk GROUP BY nprobe
-)
-SELECT nprobe, n_queries, n_results, n_hits,
-       CAST(({EVAL_SCALE} * n_hits) // nullif(n_queries * {K}, 0) AS BIGINT)
-         AS recall_at_k_micro
-FROM agg, nq ORDER BY nprobe
-"""
-)

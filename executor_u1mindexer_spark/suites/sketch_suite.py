@@ -1466,14 +1466,11 @@ ORACLES["sketch_kmv_grouped"] = _KMV_G_SQL
 
 
 def sketch_kmv_streaming_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming KMV ledger's driver-facing row (r13, VERDICT r12 #5
-    — streaming/sketch_stream.streaming_kmv_fold was pytest-only): a
-    three-batch drained backlog over events, each micro-batch folded to
-    its bounded ledger entry through the stream's OWN per-batch code
-    path (sketch_stream.kmv_batch_entry — the exact function
-    streaming_kmv_fold's foreachBatch closure calls, <= k BIGINT values
-    of driver-side state per batch) and read back through
-    sketch_stream.kmv_state, the ledger-merge the restart path uses.
+    """The streaming KMV ledger's driver-facing row (r13, VERDICT r12 #5):
+    a three-batch drained backlog over events, each micro-batch folded
+    to its bounded ledger entry (sketch_stream.kmv_batch_entry, <= k
+    BIGINT values of driver-side state per batch) and read back through
+    the ledger merge sketch_stream.kmv_state.
 
     The verdict column is the strongest oracle a sketch can have: by
     the pigeonhole (any hash in the backlog's global bottom-k is in its
@@ -1798,12 +1795,10 @@ ORACLES["sketch_kmv_jaccard"] = _KMV_JACCARD_SQL
 
 
 def sketch_mg_streaming_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming Misra-Gries ledger's driver-facing row (r13 — the
-    last pytest-only streaming twin after the KMV row landed;
-    streaming/sketch_stream.streaming_heavy_hitters_fold): a three-batch
-    drained backlog over the same deterministically-skewed item stream
-    as the batch row (sketch_heavy_hitters_verified), each micro-batch
-    folded through the fold's OWN per-batch body
+    """The streaming Misra-Gries ledger's driver-facing row (r13): a
+    three-batch drained backlog over the same deterministically-skewed
+    item stream as the batch row (sketch_heavy_hitters_verified), each
+    micro-batch folded to its ledger entry
     (sketch_stream.mg_batch_entry) and merged by heavy_hitters_state —
     the item-wise-sum ledger read, whose no-false-negative guarantee is
     exactly the Mergeable-Summaries bound per batch.

@@ -646,26 +646,6 @@ def bm25_multi_scores(
     )
 
 
-def bm25_from_query_table(d: DataFrame, query_table: DataFrame) -> DataFrame:
-    """BM25 against a query TABLE (query_id, term) — the operator form a
-    retrieval user calls with their query set as data. The term table is
-    small by the same contract as knn_search's query batch, so it is
-    collected driver-side and compiled into the plan as literals
-    (bm25_multi_scores), keeping the single-shuffle no-skew corpus pass;
-    the alternative — a corpus-token ⋈ term-table join — would put a
-    Zipf-skewed token key into a shuffle for no benefit at realistic
-    query-batch sizes. Term order within a query follows the table's
-    (query_id, term) sort for deterministic float summation."""
-    rows = query_table.select("query_id", "term").orderBy("query_id", "term").collect()
-    grouped: dict[int, list[str]] = {}
-    for r in rows:
-        grouped.setdefault(int(r["query_id"]), []).append(str(r["term"]))
-    if not grouped:
-        raise ValueError("bm25_from_query_table: empty query table")
-    queries = tuple((qid, tuple(ts)) for qid, ts in sorted(grouped.items()))
-    return bm25_multi_scores(d, queries)
-
-
 def bm25_scores(d: DataFrame, terms: tuple[str, ...] = BM25_TERMS) -> DataFrame:
     """Every doc's BM25 score against ``terms`` (any arity — the tf/df
     conditional-count columns and the fixed-order contribution chain are

@@ -130,11 +130,6 @@ def test_kmeans_ivf_self_match_first(spark, sf_dir):
         assert len({r.cell for r in matches}) <= 2  # nprobe=2 cells max
 
 
-def test_decode_image_stub_raises(spark):
-    with pytest.raises(NotImplementedError):
-        MM.decode_image(b"\x00" * 16)
-
-
 def test_binary_metadata_shapes(spark, sf_dir):
     out = MM.extract_binary_metadata(
         MM.attach_fake_binary(tables.load(spark, sf_dir, "documents"))
@@ -541,62 +536,6 @@ def test_span_dedup_properties(spark):
     check()
 
 
-def test_hnsw_state_roundtrip_searches_bit_identical():
-    """hnsw_to_state/hnsw_from_state (the executor.py:227-236 dump/load
-    parity for the BUILT graph): the reloaded index must search exactly
-    like the original — no rebuild, same arrays, same kernels."""
-    import numpy as np
-
-    from executor_u1mindexer_spark.operators import hnsw as H
-
-    rng = np.random.RandomState(13)
-    vecs = rng.randn(400, 24)
-    ids = np.arange(400, dtype=np.int64) * 3
-    for metric in ("cosine", "l2"):
-        idx = H.HNSW(24, metric=metric, m=8, ef_construction=60).build(ids, vecs)
-        back = H.hnsw_from_state(H.hnsw_to_state(idx))
-        assert back.neighbors == idx.neighbors
-        assert (back.entry, back.max_level) == (idx.entry, idx.max_level)
-        q = rng.randn(8, 24)
-        for a, b in zip(idx.search_batch(q, 5, ef=30), back.search_batch(q, 5, ef=30)):
-            assert np.array_equal(a, b)
-    with pytest.raises(ValueError, match="unbuilt"):
-        H.hnsw_to_state(H.HNSW(4))
-
-
-def test_hnsw_from_state_rejects_corrupted_graph():
-    """ADVICE r06: a stale/corrupted state must fail at the Python level,
-    not as an out-of-bounds read inside the C kernel."""
-    import numpy as np
-    import pytest
-
-    from executor_u1mindexer_spark.operators import hnsw as H
-
-    rng = np.random.default_rng(7)
-    vecs = rng.normal(size=(40, 8))
-    ids = np.arange(40, dtype=np.int64)
-    idx = H.HNSW(8, metric="cosine", m=4, seed=3)
-    idx.build(ids, vecs)
-    good = H.hnsw_to_state(idx)
-    H.hnsw_from_state(good)  # sanity: valid state loads
-
-    bad_entry = dict(good, entry=len(good["levels"]))
-    with pytest.raises(ValueError, match="entry"):
-        H.hnsw_from_state(bad_entry)
-
-    bad_nbr = dict(good, nbr_flat=good["nbr_flat"].copy())
-    # poison the first COUNTED slot of node 0's level-0 block
-    assert good["cnt_flat"][0] > 0
-    bad_nbr["nbr_flat"][0] = len(good["levels"]) + 5
-    with pytest.raises(ValueError, match="neighbor index"):
-        H.hnsw_from_state(bad_nbr)
-
-    bad_cnt = dict(good, cnt_flat=good["cnt_flat"].copy())
-    bad_cnt["cnt_flat"][0] = 10_000
-    with pytest.raises(ValueError, match="capacity"):
-        H.hnsw_from_state(bad_cnt)
-
-
 def test_containment_prefix_filter_is_lossless(spark):
     """The prefix theorem in action: prefix-filtered candidates must
     recover EXACTLY the brute-force all-ordered-pairs containment set —
@@ -972,222 +911,3 @@ def test_duplicated_span_profile_islands_and_cross_doc_rule(spark):
     ora = duckdb.sql(sql).fetchall()
     spark_rows = [tuple(out[d]) for d in sorted(out)]
     assert [tuple(r) for r in ora] == spark_rows
-
-
-def test_recall_vs_ef_curve_matches_pins_and_is_monotone(spark, sf_dir):
-    """eval_ann_recall_vs_ef (r16, VERDICT r15 #3b — the r17 registry
-    candidate, deliberately unregistered this round): the HNSW ef_search
-    knob measured as a curve. On the 500-vector fixture the curve must
-    reproduce the pinned measured facts exactly (24/25 hits at ef=5,
-    perfect from ef=8), n_hits must be non-decreasing in ef (the knob's
-    contract), every lane returns exactly n_queries*K results, and the
-    DuckDB pin-table twin matches row-for-row."""
-    import duckdb
-
-    SS = similarity_suite
-    out = SS.eval_ann_recall_vs_ef(spark, sf_dir).collect()
-    assert [r.ef_search for r in out] == list(SS.EF_CURVE)
-    pins = {
-        (c, ef): h for c, ef, h in SS._RECALL_VS_EF_PINS if c == 500
-    }
-    for r in out:
-        assert r.n_queries == 5
-        assert r.n_results == r.n_queries * SS.K
-        assert r.n_hits == pins[(500, r.ef_search)]
-        assert (
-            r.recall_at_k_micro
-            == SS.EVAL_SCALE * r.n_hits // (r.n_queries * SS.K)
-        )
-    hit_seq = [r.n_hits for r in out]
-    assert hit_seq == sorted(hit_seq)  # recall never drops as ef widens
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet')"
-    )
-    ora = con.execute(SS._RECALL_VS_EF_SQL).fetchall()
-    assert [tuple(r) for r in ora] == [tuple(r) for r in out]
-
-
-def test_span_removal_keeps_one_occurrence_and_rebuilds_text(spark):
-    """duplicated_span_removal (r16 — the second r17 registry
-    candidate, deliberately unregistered this round): the Lee et al.
-    "all but one occurrence" policy. The lexicographically-first
-    (doc, offset) occurrence of a cross-doc duplicated run survives;
-    every other occurrence — including the keeper doc's own internal
-    repeat — is cut; untouched and sub-k docs come back complete (the
-    cleaned corpus is every doc, unlike the profile's affected-only
-    contract); NULL text follows the empty-string convention; the
-    DuckDB twin matches row-for-row."""
-    import duckdb
-
-    from executor_u1mindexer_spark.operators import dedup as D
-    from executor_u1mindexer_spark.suites import dedup_suite as DS
-
-    S = "s1 s2 s3 s4 s5 s6 s7 s8"
-    rows = [
-        (1, f"{S} a1 a2 {S}"),  # keeper doc, with an internal repeat
-        (2, f"b1 b2 {S} b3"),  # non-keeper occurrence
-        (3, "c1 c2 c3 c4 c5"),  # sub-k doc: untouched
-        (4, None),  # NULL text: [''] convention
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in D.duplicated_span_removal(docs, k=8).collect()}
-    assert set(out) == {1, 2, 3, 4}
-    assert tuple(out[1])[1:] == (18, 8, 10, f"{S} a1 a2")
-    assert tuple(out[2])[1:] == (11, 8, 3, "b1 b2 b3")
-    assert tuple(out[3])[1:] == (5, 0, 5, "c1 c2 c3 c4 c5")
-    assert tuple(out[4])[1:] == (1, 0, 1, "")
-
-    vals = ", ".join(
-        f"({i}, {'NULL' if t is None else repr(t)})" for i, t in rows
-    )
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS "
-        f"SELECT CAST(col0 AS BIGINT) AS doc_id, col1 AS text "
-        f"FROM (VALUES {vals}) t(col0, col1)"
-    )
-    ora = con.execute(DS._SPAN_REMOVAL_SQL).fetchall()
-    assert [tuple(r) for r in ora] == [tuple(out[i]) for i in sorted(out)]
-
-
-def test_recall_vs_nprobe_curve_is_monotone_and_replayable(spark, sf_dir):
-    """eval_ann_recall_vs_nprobe (r16 — prebuilt growth candidate,
-    deliberately unregistered): the IVF probe-width knob measured as a
-    curve, with the FULL-replay oracle (no pin table — centroids, cell
-    ranking, probing, and top-K are all SQL). Pins: one row per probe
-    width, n_results always n_queries*K on this fixture, n_hits
-    non-decreasing in nprobe (widening the probe can only displace a
-    true hit with a closer vector, itself a true hit), the measured
-    500-vector curve (3/7/14/22 hits of 25 — fixture labels are
-    near-random, so recall tracks the probed-cell fraction), and the
-    DuckDB twin row-for-row."""
-    import duckdb
-
-    SS = similarity_suite
-    out = SS.eval_ann_recall_vs_nprobe(spark, sf_dir).collect()
-    assert [r.nprobe for r in out] == list(SS.NPROBE_CURVE)
-    for r in out:
-        assert r.n_queries == 5 and r.n_results == r.n_queries * SS.K
-        assert (
-            r.recall_at_k_micro
-            == SS.EVAL_SCALE * r.n_hits // (r.n_queries * SS.K)
-        )
-    hits = [r.n_hits for r in out]
-    assert hits == sorted(hits)
-    assert hits == [3, 7, 14, 22]
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet')"
-    )
-    ora = con.execute(SS._RECALL_VS_NPROBE_SQL).fetchall()
-    assert [tuple(r) for r in ora] == [tuple(r) for r in out]
-
-
-def test_semantic_dedup_cells_keep_rule_and_cell_migration(spark):
-    """semantic_dedup_cells (r16 — prebuilt r18-pool candidate,
-    deliberately unregistered): the SemDeDup keep-list. A pure-python
-    replay of the whole contract on a constructed 2-D fixture —
-    round(avg,6)-seeded centroids, nearest-cell assignment with the
-    (dist, cell) tie-break (including a mislabeled vector MIGRATING to
-    the cell its embedding belongs to), exhaustive within-cell pairs
-    at the 0.2 threshold, and the dominance keep rule (keep the
-    near-dup farthest from its centroid; ties to lowest id) — must
-    agree flag-for-flag, and the DuckDB twin row-for-row."""
-    import duckdb
-
-    from executor_u1mindexer_spark.operators import dedup as D
-    from executor_u1mindexer_spark.suites import dedup_suite as DS
-
-    rows = [
-        (0, [1.0, 0.0], 0),
-        (1, [1.0, 0.05], 0),  # near-dup of 0
-        (2, [0.5, 0.5], 0),  # diverse member of cell 0
-        (3, [0.0, 1.0], 1),
-        (4, [0.05, 1.0], 1),  # near-dup of 3
-        (5, [1.0, 0.02], 1),  # mislabeled: embedding belongs with cell 0
-    ]
-    import pyarrow as pa
-
-    emb = spark.createDataFrame(
-        [(i, v, l) for i, v, l in rows],
-        "vec_id long, embedding array<double>, label int",
-    )
-    out = {
-        r.vec_id: r
-        for r in D.semantic_dedup_cells(emb, max_cos_dist=0.2).collect()
-    }
-
-    # pure-python replay
-    import math
-
-    def dot(a, b):
-        s = 0.0
-        for x, y in zip(a, b):
-            s = s + x * y
-        return s
-
-    def norm(a):
-        return math.sqrt(dot(a, a))
-
-    by_label = {}
-    for i, v, l in rows:
-        by_label.setdefault(l, []).append(v)
-    cents = {
-        l: [
-            float(f"{sum(v[d] for v in vs) / len(vs):.6f}")
-            for d in range(2)
-        ]
-        for l, vs in by_label.items()
-    }
-    assign, cdist = {}, {}
-    for i, v, _ in rows:
-        best = min(
-            (
-                (1.0 - dot(v, c) / (norm(v) * norm(c)), l)
-                for l, c in cents.items()
-            )
-        )
-        cdist[i] = best[0]
-        assign[i] = best[1]
-    assert assign[5] == 0  # the mislabeled vector migrated
-    vecs = {i: v for i, v, _ in rows}
-    pruned = set()
-    for i, _, _ in rows:
-        for j, _, _ in rows:
-            if i >= j or assign[i] != assign[j]:
-                continue
-            pd_ = 1.0 - dot(vecs[i], vecs[j]) / (norm(vecs[i]) * norm(vecs[j]))
-            if pd_ > 0.2:
-                continue
-            loser = (
-                j
-                if (cdist[i] > cdist[j]) or (cdist[i] == cdist[j] and i < j)
-                else i
-            )
-            pruned.add(loser)
-    for i, _, _ in rows:
-        assert out[i].cell == assign[i], i
-        assert out[i].kept == (i not in pruned), i
-        assert out[i].cdist_micro == math.floor(1_000_000 * cdist[i]), i
-    assert pruned  # non-vacuous: the keep rule actually fired
-
-    con = duckdb.connect()
-    tbl = pa.table(
-        {
-            "vec_id": pa.array([i for i, _, _ in rows], pa.int64()),
-            "embedding": pa.array(
-                [v for _, v, _ in rows], pa.list_(pa.float64())
-            ),
-            "label": pa.array([l for _, _, l in rows], pa.int32()),
-        }
-    )
-    con.register("embeddings", tbl)
-    ora = con.execute(
-        DS._SEMANTIC_CELLS_SQL.replace("<= 0.6", "<= 0.2")
-    ).fetchall()
-    assert [tuple(r) for r in ora] == [tuple(out[i]) for i in sorted(out)]

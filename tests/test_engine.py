@@ -133,6 +133,30 @@ def test_dim_mismatch_raises(spark, engine):
     assert engine.status()["count_active"] >= 0
 
 
+@pytest.mark.parametrize(
+    "kwargs, call_limit, match",
+    [
+        ({"dim": 0}, None, "dim must be >= 1"),
+        ({"dim": 64, "limit": 0}, None, "limit must be >= 1"),
+        ({"dim": 64, "metric": "bogus"}, None, "unknown metric 'bogus'"),
+        ({"dim": 64}, 0, "k must be >= 1"),
+        ({"dim": 64}, -3, "k must be >= 1"),
+    ],
+    ids=["dim_0", "limit_0", "bad_metric", "search_limit_0", "search_limit_neg"],
+)
+def test_bad_facade_inputs_raise_at_call(spark, tmp_path, kwargs, call_limit, match):
+    """Bad constructor arguments raise ValueError in the constructor (not
+    at the first search), and a non-positive search limit raises in
+    search() instead of returning an empty result."""
+    q = spark.createDataFrame(
+        [(1, [1.0] * 64)], "query_id long, query_embedding array<double>"
+    )
+    with pytest.raises(ValueError, match=match):
+        eng = U1MIndexerSpark(spark, workspace=str(tmp_path), **kwargs)
+        if call_limit is not None:
+            eng.search(q, limit=call_limit)
+
+
 def test_traversal_paths_chunk_level_index_and_search(spark, tmp_path):
     """traversal_paths='c' (executor.py:86/138/181): chunk Documents —
     structs carrying their own id + embedding — are the operating level."""

@@ -82,7 +82,6 @@ def test_k_larger_than_corpus_degrades(spark, emb_df):
     ).limit(1)
     rows = knn.knn_search(small, queries, k=100, metric="cosine").collect()
     assert len(rows) == 5  # clamp semantics (executor.py:97-102)
-    assert knn.clamped_k(small, 100) == 5
 
 
 def test_payload_fetch_returns_full_rows(spark, emb_df, sf_dir):
@@ -135,9 +134,3 @@ def test_arrow_impl_empty_query_batch(spark, emb_df):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
     )
     assert knn.knn_search(emb_df, queries, k=5, impl="arrow").count() == 0
-
-
-def test_dim_validate_raises(spark, emb_df):
-    with pytest.raises(ValueError):
-        knn.validate_dim(emb_df, 32)
-    knn.validate_dim(emb_df, tables.EMBEDDING_DIM)  # should not raise

@@ -28,7 +28,7 @@ def test_morton_interleave_matches_python(spark):
 
 def test_rank_space_map_is_uniform_and_order_preserving(spark):
     df = spark.createDataFrame([(v,) for v in (3, 30, 7, 1000, 7, 3)], "x long")
-    got = {r.value: r.mapped for r in L.rank_space_map(df, "x", 4).collect()}
+    got = {r.value: r.mapped for r in L._rank_space_maps(df, ["x"], 4)["x"].collect()}
     # 4 distinct values spread over [0, 16): ranks 1..4 -> 0, 4, 8, 12
     assert got == {3: 0, 7: 4, 30: 8, 1000: 12}
 
@@ -58,7 +58,7 @@ def test_rank_space_map_no_single_partition_window(spark, sf_dir):
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     assert not plans.window_over_single_partition(
-        L.rank_space_map(li, "l_partkey")
+        L._rank_space_maps(li, ["l_partkey"])["l_partkey"]
     )
     assert not plans.window_over_single_partition(
         L.zorder_layout_stats(li, "l_partkey", "l_suppkey")
@@ -124,7 +124,7 @@ def test_rank_space_map_matches_single_window_reference(spark):
     ]
     for rows, schema in cases:
         df = spark.createDataFrame(rows, schema)
-        got = {r.value: r.mapped for r in L.rank_space_map(df, "x", 8).collect()}
+        got = {r.value: r.mapped for r in L._rank_space_maps(df, ["x"], 8)["x"].collect()}
         ref = {
             r.value: r.m
             for r in df.selectExpr("x AS value")

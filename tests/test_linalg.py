@@ -1,10 +1,9 @@
-"""linalg operators: exact Gram moments vs brute force, PCA properties
-(orthonormal axes, variance ordering, deterministic sign)."""
+"""linalg operators: exact Gram moments vs brute force and across
+partitionings."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from executor_u1mindexer_spark.operators import linalg as L
 
@@ -37,50 +36,3 @@ def test_gram_moments_partition_invariant(spark):
     a = sorted(map(tuple, L.gram_moments(df).collect()))
     b = sorted(map(tuple, L.gram_moments(df.repartition(13)).collect()))
     assert a == b
-
-
-def test_pca_components_orthonormal_and_sorted(spark):
-    rng = np.random.default_rng(3)
-    # anisotropic cloud: dim 0 has 10x the spread of the rest
-    mat = rng.normal(size=(200, 6)) * np.array([2.0, 0.2, 0.2, 0.2, 0.2, 0.2])
-    vals, comps = L.pca_components(_emb_df(spark, mat.astype(np.float32)), 3)
-    assert vals[0] >= vals[1] >= vals[2] > 0
-    assert np.allclose(comps @ comps.T, np.eye(3), atol=1e-9)
-    # the top axis must be dominated by dimension 0
-    assert abs(comps[0][0]) > 0.95
-    # deterministic sign: largest-|.| entry positive
-    for v in comps:
-        assert v[int(np.argmax(np.abs(v)))] >= 0
-
-
-def test_pca_project_variance_ordering(spark):
-    rng = np.random.default_rng(11)
-    mat = rng.normal(size=(150, 5)) * np.array([3.0, 1.5, 0.7, 0.3, 0.1])
-    out = L.pca_project(_emb_df(spark, mat.astype(np.float32)), 3).collect()
-    pcs = np.array([[r.pc_0, r.pc_1, r.pc_2] for r in out])
-    v = pcs.var(axis=0)
-    assert v[0] > v[1] > v[2]
-
-
-def test_pca_project_plan_is_expression_only(spark):
-    rng = np.random.default_rng(5)
-    mat = rng.normal(size=(40, 4)).astype(np.float32)
-    df = L.pca_project(_emb_df(spark, mat), 2)
-    plan = df._jdf.queryExecution().executedPlan().treeString()
-    # the projection itself must not shuffle or call Python
-    assert "Exchange" not in plan, plan
-    assert "Python" not in plan, plan
-
-
-def test_covariance_from_moments_matches_numpy_cov(spark):
-    rng = np.random.default_rng(21)
-    mat = rng.normal(scale=0.4, size=(80, 6)).astype(np.float32)
-    rows = [r.asDict() for r in L.gram_moments(_emb_df(spark, mat)).collect()]
-    cov = L.covariance_from_moments(rows)
-    q = np.round(mat.astype(np.float64) * L.GRAM_SCALE)
-    want = np.cov(q, rowvar=False, ddof=1)
-    assert np.allclose(cov, want, rtol=1e-12, atol=1e-6)
-    with pytest.raises(ValueError, match="n >= 2"):
-        L.covariance_from_moments(
-            [{"i": 0, "j": 0, "n": 1, "sum_qi": 5, "sum_qj": 5, "sum_qq": 25}]
-        )

@@ -96,12 +96,6 @@ def test_malformed_payloads_raise():
         MM.decode_ppm(b"P6\n4 4\n255\n" + b"\x00" * 3)  # truncated
 
 
-def test_lossy_decode_stub_is_loud():
-    # WebP stays gated behind the absent PIL; JPEG is real since r04
-    with pytest.raises(NotImplementedError):
-        MM.decode_image(b"RIFF\x00\x00\x00\x00WEBP")
-
-
 def test_wav_roundtrip_mono_and_stereo():
     for ch in (1, 2):
         samples = [((i * 17) % 65536) - 32768 for i in range(12 * ch)]

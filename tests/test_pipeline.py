@@ -121,37 +121,6 @@ def test_bpe_learn_merges_semantics(spark):
     assert got[2] == "  "  # NULL text flows through untouched
 
 
-def test_bm25_query_table_matches_literal_term_sets(spark):
-    """The query-TABLE form must produce exactly the per-query scores of
-    the literal-terms form — it is the same operator with the term sets
-    arriving as data."""
-    from executor_u1mindexer_spark.suites.text_suite import (
-        bm25_from_query_table,
-        bm25_multi_scores,
-    )
-
-    docs = spark.createDataFrame(
-        [(0, "query table spark"), (1, "join hash join"), (2, "query query hash")],
-        "doc_id long, text string",
-    )
-    qtab = spark.createDataFrame(
-        [(10, "query"), (10, "table"), (11, "hash"), (11, "join")],
-        "query_id long, term string",
-    )
-    via_table = {
-        (r.query_id, r.doc_id): r.score_micro
-        for r in bm25_from_query_table(docs, qtab).collect()
-    }
-    via_literals = {
-        (r.query_id, r.doc_id): r.score_micro
-        for r in bm25_multi_scores(
-            docs, ((10, ("query", "table")), (11, ("hash", "join")))
-        ).collect()
-    }
-    assert via_table == via_literals
-    assert len(via_table) == 6  # 2 queries x 3 docs
-
-
 def test_drift_bucket_ids_are_bigint_safe(spark):
     """ADVICE r06: bucket ids compute in BIGINT (an INT cast saturates in
     Spark / raises in DuckDB beyond 2^31) and edge buckets are overflow

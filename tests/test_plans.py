@@ -730,9 +730,10 @@ def test_file_skipping_has_no_unpartitioned_data_window(spark, sf_dir):
             assert re.search(r"windowspecdefinition\(__bkt#\d+", ln), ln
 
 
-def test_registry_has_no_unpartitioned_window(spark):
+def test_registry_has_no_unpartitioned_window(registry_builds):
     """Registry-wide forbidden-plan-shape lint: each query's physical plan
-    is compiled ONCE at sf0.001 and checked for every shape in the table.
+    (compiled ONCE at sf0.001 by the shared ``registry_builds`` fixture) is
+    checked for every shape in the table.
 
     - SinglePartition-fed Window (VERDICT r08 #4): the whole-relation-
       through-one-task shape that silently caps scale and spams
@@ -747,13 +748,10 @@ def test_registry_has_no_unpartitioned_window(spark):
 
     Adding a name to an allowlist requires a docstring in the query
     proving the relation feeding the shape is constant-bounded."""
-    import __spark_entry__ as em
-
     window_allowed: set[str] = set()
     cartesian_allowed: set[str] = set()
     bad_window, bad_cartesian = [], []
-    for name, fn in em.queries().items():
-        plan = plans.physical_plan(fn(spark, "/root/testdata/sf0.001"), "simple")
+    for name, (plan, _) in registry_builds.items():
         if name not in window_allowed and plans.window_over_single_partition_text(plan):
             bad_window.append(name)
         if name not in cartesian_allowed and plans.has_cartesian_product(plan):
@@ -1069,72 +1067,3 @@ def test_grouped_psi_broadcasts_bounded_metadata_only(spark, sf_dir):
         "BroadcastNestedLoopJoin",
     ):
         assert bad not in plan, plan
-
-
-def test_span_removal_broadcasts_keeper_set_no_window_no_python(spark, sf_dir):
-    """duplicated_span_removal (r16 r17-candidate): the keeper frame is
-    the dup-shingle set — bounded, hint-broadcast like the profile's
-    semi join (losing it = corpus-wide shingle-string shuffle). The
-    whole chain needs no window and no Python stage; the final per-doc
-    assembly join may legitimately flip broadcast/SMJ with size, so
-    only the keeper join shape is pinned."""
-    from executor_u1mindexer_spark.suites.dedup_suite import (
-        exact_dedup_substring_removed,
-    )
-
-    df = exact_dedup_substring_removed(spark, sf_dir)
-    plan = plans.physical_plan(df, "simple")
-    assert "BroadcastHashJoin [shingle" in plan, plan
-    assert "windowspecdefinition" not in plan, plan
-    for bad in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "CartesianProduct"):
-        assert bad not in plan, plan
-
-
-def test_nprobe_curve_broadcasts_probe_frame_single_window_axis(spark, sf_dir):
-    """eval_ann_recall_vs_nprobe (r16 candidate): the probed-cells
-    frame (queries x max nprobe rows) must be BROADCAST onto the
-    corpus — losing it shuffles the stored vectors by label for a
-    metadata-sized probe list — and the probes axis must ride ONE
-    (nprobe, query)-partitioned top-K window, not four passes. No
-    Python stage; no SinglePartition window."""
-    import re
-
-    from executor_u1mindexer_spark.suites.similarity_suite import (
-        eval_ann_recall_vs_nprobe,
-    )
-
-    df = eval_ann_recall_vs_nprobe(spark, sf_dir)
-    plan = plans.physical_plan(df, "simple")
-    assert plan.count("BroadcastExchange") >= 2, plan  # centroids + probed
-    for bad in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "CartesianProduct"):
-        assert bad not in plan, plan
-    specs = [
-        ln for ln in plan.splitlines() if "windowspecdefinition" in ln
-    ]
-    assert any(
-        re.search(r"windowspecdefinition\(nprobe#\d+, query_id#\d+", ln)
-        for ln in specs
-    ), plan
-    for ln in specs:
-        assert "windowspecdefinition()" not in ln, ln  # no SinglePartition
-
-
-def test_semantic_cells_broadcasts_centroids_no_python(spark, sf_dir):
-    """semantic_dedup_cells (r16 candidate): the centroid frame
-    (n_cells rows) must be BROADCAST for the assignment compare; the
-    within-cell pair join shuffles on the cell key only (the SemDeDup
-    design point — no global pairwise); no Python stage, no cartesian
-    between data-sized frames, no SinglePartition window (the argmin
-    window partitions by vector id)."""
-    from executor_u1mindexer_spark.suites.dedup_suite import (
-        near_dedup_semantic_cells,
-    )
-
-    df = near_dedup_semantic_cells(spark, sf_dir)
-    plan = plans.physical_plan(df, "simple")
-    assert "BroadcastExchange" in plan, plan
-    for bad in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "CartesianProduct"):
-        assert bad not in plan, plan
-    for ln in plan.splitlines():
-        if "windowspecdefinition" in ln:
-            assert "windowspecdefinition()" not in ln, ln

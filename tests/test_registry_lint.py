@@ -7,22 +7,20 @@ postings column was the round's only red). r11 added a second failure
 class: a DECIMAL(38,0) output column hash-mismatched at the driver even
 though both engines' values were bit-identical (``ivm_retractable_delta``
 — the driver's wide-decimal canonicalization is outside our control, and
-r01 burned on the same class). This test builds EVERY registered query's
-DataFrame at sf0.001 and asserts its output schema contains only
-driver-sortable scalar columns with a proven driver-hash witness: no
-array/map/struct, no decimal wider than 18 digits. Allowlist: empty.
+r01 burned on the same class). This test reads EVERY registered query's
+DataFrame, built once at sf0.001 by the shared ``registry_builds`` fixture
+(which ``test_plans.py::test_registry_has_no_unpartitioned_window`` reads
+too), and asserts its output schema contains only driver-sortable scalar
+columns with a proven driver-hash witness: no array/map/struct, no decimal
+wider than 18 digits. Allowlist: empty.
 """
 
 from __future__ import annotations
 
 
-def test_no_registered_query_emits_driver_unsafe_output_columns(spark, sf_dir):
-    import __spark_entry__ as entrymod
-    from tools.oracle_check import _driver_unsafe_output_cols
-
+def test_no_registered_query_emits_driver_unsafe_output_columns(registry_builds):
     offenders: dict[str, list[str]] = {}
-    for name, fn in entrymod.queries().items():
-        bad = _driver_unsafe_output_cols(fn(spark, sf_dir))
+    for name, (_, bad) in registry_builds.items():
         if bad:
             offenders[name] = bad
     assert not offenders, (

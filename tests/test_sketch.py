@@ -225,20 +225,6 @@ def test_bloom_fp_rate_within_theory(spark, sf_dir):
     assert fp / len(got) <= 5 * theory + 0.01, (fp, len(got), theory)
 
 
-def test_bloom_merge_is_bitwise_or(spark, sf_dir):
-    docs = tables.load(spark, sf_dir, "documents")
-    even = docs.filter(F.col("doc_id") % 2 == 0)
-    odd = docs.filter(F.col("doc_id") % 2 == 1)
-    merged = SK.bloom_merge(
-        SK.bloom_state(even, "doc_id", 4, 1024),
-        SK.bloom_state(odd, "doc_id", 4, 1024),
-    )
-    whole = SK.bloom_state(docs, "doc_id", 4, 1024)
-    assert sorted(r.bit for r in merged.collect()) == sorted(
-        r.bit for r in whole.collect()
-    )
-
-
 def test_bloom_params_validated(spark):
     df = spark.range(10).select(F.col("id").alias("v"))
     with pytest.raises(ValueError, match="power of two"):
@@ -247,8 +233,6 @@ def test_bloom_params_validated(spark):
         SK.bloom_state(df, "v", 0, 1024)
     with pytest.raises(ValueError, match="digest-slicing"):
         SK.bloom_state(df, "v", 4, 1 << 31)
-    with pytest.raises(ValueError, match="at least one"):
-        SK.bloom_merge()
 
 
 def test_hll_estimate_of_empty_input_is_zero_not_null(spark):
@@ -466,20 +450,6 @@ def test_ams_state_replay_beyond_one_digest(spark):
     got = {r.hash_row: r.z for r in SK.ams_state(df, "t", d).collect()}
     want = {j: sum(_ams_sign(v, j) for v in vals) for j in range(d)}
     assert got == want
-
-
-def test_ams_merge_is_linear(spark, sf_dir):
-    docs = tables.load(spark, sf_dir, "documents")
-    even = docs.filter(F.col("doc_id") % 2 == 0)
-    odd = docs.filter(F.col("doc_id") % 2 == 1)
-    merged = {
-        r.hash_row: r.z
-        for r in SK.ams_merge(
-            SK.ams_state(even, "lang", 16), SK.ams_state(odd, "lang", 16)
-        ).collect()
-    }
-    whole = {r.hash_row: r.z for r in SK.ams_state(docs, "lang", 16).collect()}
-    assert merged == whole
 
 
 def test_ams_f2_exact_on_known_multiset(spark):

@@ -1,83 +1,12 @@
-"""Streaming twins produce the same answers as the batch operators —
-batch is the oracle for the streaming path."""
+"""Streaming ingest and the per-batch streaming ledgers produce the same
+answers as the batch operators — batch is the oracle for the streaming
+path."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from executor_u1mindexer_spark import tables
-from executor_u1mindexer_spark.operators import events as E, knn
-from executor_u1mindexer_spark.streaming import events_stream as S
-
-
-def test_streaming_tumbling_matches_batch(spark, sf_dir):
-    stream = S.read_events_stream(spark, sf_dir)
-    S.run_available_now(S.streaming_tumbling_counts(stream), "stream_tumbling")
-    got = {
-        (r.window_start, r.event_type): r.n_events
-        for r in spark.table("stream_tumbling").collect()
-    }
-    ev = tables.load(spark, sf_dir, "events")
-    want = {
-        (r.window_start, r.event_type): r.n_events
-        for r in E.tumbling_window(ev, "1 hour", keys=("event_type",)).collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_streaming_sessionize_matches_batch(spark, sf_dir):
-    stream = S.read_events_stream(spark, sf_dir)
-    S.run_available_now(S.streaming_sessionize(stream), "stream_sessions")
-    got = {
-        (r.user_id, r.session_start): (r.session_end, r.n_events)
-        for r in spark.table("stream_sessions").collect()
-    }
-    ev = tables.load(spark, sf_dir, "events")
-    want = {
-        (r.user_id, r.session_start): (r.session_end, r.n_events)
-        for r in E.sessionize(ev, "30 minutes").collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_streaming_is_incremental(spark, sf_dir):
-    # the stream really is a stream (not a disguised batch read)
-    stream = S.read_events_stream(spark, sf_dir)
-    assert stream.isStreaming
-    assert E.tumbling_window(tables.load(spark, sf_dir, "events"), "1 hour").isStreaming is False
-
-
-def test_streaming_file_sink_exactly_once_across_restarts(spark, sf_dir, tmp_path):
-    """Checkpointed file sink + availableNow: a restarted query must resume
-    from the checkpoint and process NOTHING new when the source is
-    unchanged — duplicate rows in the sink would mean at-least-once, not
-    exactly-once. This is the recovery contract a 100 TB streaming backfill
-    leans on."""
-    sink, ck = str(tmp_path / "sink"), str(tmp_path / "ck")
-
-    def run_once():
-        stream = S.read_events_stream(spark, sf_dir).select(
-            "event_id", "user_id", "event_type"
-        )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    run_once()
-    first = spark.read.parquet(sink)
-    n_total, n_ids = first.count(), first.select("event_id").distinct().count()
-    assert n_total == n_ids > 0  # one row per event, no dupes
-
-    run_once()  # "restart" — same checkpoint, same source files
-    second = spark.read.parquet(sink)
-    assert second.count() == n_total  # nothing reprocessed
-    assert second.select("event_id").distinct().count() == n_ids
 
 
 def test_streaming_ingest_into_engine_matches_batch(spark, sf_dir, tmp_path):
@@ -172,594 +101,78 @@ def test_streaming_ingest_capacity_across_microbatches(spark, tmp_path):
     assert set(rejected_ids) <= set(range(8))
 
 
-def test_streaming_search_matches_batch(spark, sf_dir, tmp_path):
-    """The streaming /search twin: a query-vector file-stream scored
-    micro-batch by micro-batch against the static corpus must produce
-    exactly the batch knn_search results (the batch path is the oracle),
-    plus a batch_id provenance column."""
-    from executor_u1mindexer_spark.streaming.search_stream import run_streaming_search
-
-    emb = tables.load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    phys = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-
-    q_stream = (
-        spark.readStream.schema(phys)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-        .filter(F.col("vec_id") % 50 == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("query_embedding"),
-        )
-    )
-    handle = run_streaming_search(
-        q_stream,
-        emb,
-        str(tmp_path / "out"),
-        str(tmp_path / "ck"),
-        k=5,
-        metric="cosine",
-    )
-    handle.awaitTermination()
-
-    got = {
-        (r.query_id, r.vec_id, r.rank)
-        for r in spark.read.parquet(str(tmp_path / "out")).collect()
-    }
-    q_batch = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
-    )
-    want = {
-        (r.query_id, r.vec_id, r.rank)
-        for r in knn.knn_search(emb, q_batch, k=5, metric="cosine").collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_streaming_dedup_ledger_matches_batch(spark, sf_dir):
-    """The streaming dedup ledger (hash -> keep_id, n_copies) must equal
-    the batch exact_dedup over the same fixture."""
-    from executor_u1mindexer_spark.operators import dedup as D
-    from executor_u1mindexer_spark.streaming import dedup_stream as DS
-
-    stream = DS.read_documents_stream(spark, sf_dir)
-    assert stream.isStreaming
-    S.run_available_now(
-        DS.streaming_exact_dedup_ledger(stream), "stream_dedup_ledger"
-    )
-    got = {
-        r.text_hash: (r.keep_id, r.n_copies)
-        for r in spark.table("stream_dedup_ledger").collect()
-    }
-    docs = tables.load(spark, sf_dir, "documents")
-    want = {
-        r.text_hash: (r.keep_id, r.n_copies)
-        for r in D.exact_dedup(docs).collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_streaming_hll_registers_match_batch(spark, sf_dir):
-    """The streaming HLL sketch over the drained documents backlog must be
-    bit-identical to the batch sketch — and its state is bounded at 2^p
-    rows no matter how long the stream runs."""
-    from executor_u1mindexer_spark.operators import sketch as SK
-    from executor_u1mindexer_spark.streaming import dedup_stream as DS
-    from executor_u1mindexer_spark.streaming import sketch_stream as SS
-
-    stream = DS.read_documents_stream(spark, sf_dir)
-    assert stream.isStreaming
-    S.run_available_now(
-        SS.streaming_hll_registers(stream, "doc_id", 10), "stream_hll_regs"
-    )
-    got = {
-        (r.register, r.max_rank) for r in spark.table("stream_hll_regs").collect()
-    }
-    docs = tables.load(spark, sf_dir, "documents")
-    want = {
-        (r.register, r.max_rank)
-        for r in SK.hll_registers(docs, "doc_id", 10).collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_streaming_cms_state_matches_batch(spark, sf_dir):
-    from executor_u1mindexer_spark.operators import sketch as SK
-    from executor_u1mindexer_spark.streaming import dedup_stream as DS
-    from executor_u1mindexer_spark.streaming import sketch_stream as SS
-
-    stream = DS.read_documents_stream(spark, sf_dir)
-    S.run_available_now(
-        SS.streaming_cms_state(stream, "lang", 4, 64), "stream_cms_state"
-    )
-    got = {
-        (r.hash_row, r.bucket, r.cnt)
-        for r in spark.table("stream_cms_state").collect()
-    }
-    docs = tables.load(spark, sf_dir, "documents")
-    want = {
-        (r.hash_row, r.bucket, r.cnt)
-        for r in SK.cms_state(docs, "lang", 4, 64).collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_streaming_quantile_rollup_matches_batch(spark, sf_dir):
-    """The streaming quantile fold (one bounded state per micro-batch,
-    merged via the src tag) must answer whole-backlog rank queries within
-    the sketch's bounds — and with a single micro-batch the state must be
-    BIT-IDENTICAL to the batch state."""
-    from executor_u1mindexer_spark.operators import quantile as QT
-    from executor_u1mindexer_spark.streaming import events_stream as ES
-    from executor_u1mindexer_spark.streaming import sketch_stream as SS
-
-    stream = ES.read_events_stream(spark, sf_dir)
-    assert stream.isStreaming
-    writer, states = SS.streaming_quantile_state_fold(
-        stream, "value", "event_id", 4, 16
-    )
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
-    assert len(states) >= 1
-    flat = [row for batch in states.values() for row in batch]
-    merged = spark.createDataFrame(
-        flat, "src long, bucket long, tile long, rep_value double, weight long"
-    )
-    est = QT.quantile_estimate(
-        merged, [0.5], bucket_cols=["src", "bucket"],
-        order_cols=["src", "bucket", "tile"],
-    ).collect()[0]
-    events = tables.load(spark, sf_dir, "events")
-    vals = [r.value for r in events.select("value").collect()]
-    assert est.n_total == len(vals)
-    rank_le = sum(1 for v in vals if v <= est.est_value)
-    rank_lt = sum(1 for v in vals if v < est.est_value)
-    assert rank_le >= est.target
-    assert rank_lt <= est.target + est.max_tile + est.err_budget
-    if len(states) == 1:  # single micro-batch: state == batch state exactly
-        batch_state = {
-            (r.bucket, r.tile): (r.rep_value, r.weight)
-            for r in QT.quantile_state(events, "value", "event_id", 4, 16).collect()
-        }
-        got = {
-            (b, t): (rv, w)
-            for _, b, t, rv, w in next(iter(states.values()))
-        }
-        assert got == batch_state
-
-
-def test_streaming_gram_fold_matches_batch(spark, sf_dir):
-    """The streaming Gram fold's merged moments must BIT-EQUAL the batch
-    gram_moments over the drained backlog — integer sums are order-free,
-    so batch/stream equality is exact, not approximate. Also pins the
-    batch-id idempotence contract: re-folding a batch id overwrites."""
-    from executor_u1mindexer_spark.operators import linalg as L
-    from executor_u1mindexer_spark.streaming import events_stream as ES
-    from executor_u1mindexer_spark.streaming import sketch_stream as SS
-
-    stream = ES.read_fixture_stream(spark, sf_dir, "embeddings")
-    assert stream.isStreaming
-    writer, states, merged_moments = SS.streaming_gram_fold(stream)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
-    assert len(states) >= 1
-    emb = tables.load(spark, sf_dir, "embeddings")
-    batch = {
-        (r.i, r.j): (r.n, r.sum_qi, r.sum_qj, r.sum_qq)
-        for r in L.gram_moments(emb).collect()
-    }
-    assert merged_moments() == batch
-    # idempotence: redelivering a batch id must not change the merge
-    bid = next(iter(states))
-    states[bid] = dict(states[bid])
-    assert merged_moments() == batch
-
-
-def test_streaming_quantile_fold_kill_and_resume(spark, sf_dir, tmp_path):
-    """Kill-and-resume closure (r09, VERDICT r08 #7): a fold with a
-    `state_dir` survives driver death. Phase 1 processes half the
-    events and 'dies'; phase 2 is a NEW fold instance (fresh dict =
-    new driver process) on the same state_dir + checkpoint that sees
-    only the unprocessed file. The merged rank query over the resumed
-    states must cover the WHOLE backlog exactly once — no lost phase-1
-    state, no double-count."""
-    from executor_u1mindexer_spark.operators import quantile as QT
-    from executor_u1mindexer_spark.streaming import sketch_stream as SS
-
-    events = tables.load(spark, sf_dir, "events").select("event_id", "value")
-    n = events.count()
-    half = events.filter(F.col("event_id") % 2 == 0)
-    rest = events.filter(F.col("event_id") % 2 == 1)
-    src = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    sdir = str(tmp_path / "state")
-    half.coalesce(1).write.parquet(src)
-
-    schema = events.schema
-
-    def run_phase():
-        stream = spark.readStream.schema(schema).parquet(src)
-        writer, states = SS.streaming_quantile_state_fold(
-            stream, "value", "event_id", 4, 16, state_dir=sdir
-        )
-        q = (
-            writer.option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return states
-
-    states1 = run_phase()
-    assert len(states1) == 1 and sum(
-        w for b in states1.values() for *_, w in b
-    ) == half.count()
-
-    # driver dies here; new files land; a new process resumes
-    rest.coalesce(1).write.mode("append").parquet(src)
-    states2 = run_phase()
-
-    assert len(states2) == 2  # phase-1 state reloaded + the new batch
-    total_w = sum(w for b in states2.values() for *_, w in b)
-    assert total_w == n  # every event weighted exactly once
-    flat = [row for batch in states2.values() for row in batch]
-    merged = spark.createDataFrame(
-        flat, "src long, bucket long, tile long, rep_value double, weight long"
-    )
-    est = QT.quantile_estimate(
-        merged, [0.5], bucket_cols=["src", "bucket"],
-        order_cols=["src", "bucket", "tile"],
-    ).collect()[0]
-    assert est.n_total == n
-
-    # checkpoint-replay redelivery: overwriting the same batch id in the
-    # store leaves ONE file whose latest content wins
-    import pandas as pd
-
-    store = SS._BatchKeyedStore(sdir)
-    store.put(0, pd.DataFrame({"src": [0], "bucket": [0], "tile": [0],
-                               "rep_value": [1.0], "weight": [7]}))
-    store.put(0, pd.DataFrame({"src": [0], "bucket": [0], "tile": [0],
-                               "rep_value": [1.0], "weight": [9]}))
-    loaded = store.load()
-    assert set(loaded) == {0, 1}
-    assert loaded[0]["weight"].tolist() == [9]
-
-
-def test_streaming_gram_fold_resumes_from_state_dir(spark, sf_dir, tmp_path):
-    """The gram fold's persisted moments reload bit-equal in a fresh
-    fold instance and merge to the batch oracle."""
-    from executor_u1mindexer_spark.operators import linalg as L
-    from executor_u1mindexer_spark.streaming import events_stream as ES
-    from executor_u1mindexer_spark.streaming import sketch_stream as SS
-
-    sdir = str(tmp_path / "gram_state")
-    stream = ES.read_fixture_stream(spark, sf_dir, "embeddings")
-    writer, states, merged_moments = SS.streaming_gram_fold(
-        stream, state_dir=sdir
-    )
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
-    emb = tables.load(spark, sf_dir, "embeddings")
-    batch = {
-        (r.i, r.j): (r.n, r.sum_qi, r.sum_qj, r.sum_qq)
-        for r in L.gram_moments(emb).collect()
-    }
-    assert merged_moments() == batch
-
-    # 'new driver': a fresh fold on the same state_dir — no stream run —
-    # must already hold the identical merged moments
-    _, states2, merged2 = SS.streaming_gram_fold(stream, state_dir=sdir)
-    assert states2 == states
-    assert merged2() == batch
-
-
-def test_streaming_ivm_view_matches_batch(spark, sf_dir, tmp_path):
-    """The streaming IVM fold's maintained view must BIT-EQUAL the batch
-    ivm_agg_state over the drained backlog (count/sum/min/max are
-    order-free BIGINTs). Also pins multi-batch composition, batch-id
-    idempotence under redelivery, and the _BatchKeyedStore restart path."""
+def test_streaming_retract_ivm_cdc_matches_batch(spark, sf_dir):
+    """CDC retract ledger: a changelog built as the events (+1) unioned
+    with a -1 copy of every event_id % 10 == 0 row, split into three
+    batches, must fold through retract_ivm_view to the batch retract-state
+    of the SURVIVING rows exactly — deletes retract without base rescans,
+    and every retraction lands in a different batch than its insert,
+    sometimes an earlier one (addition commutes)."""
     from executor_u1mindexer_spark.operators import maintenance as M
-    from executor_u1mindexer_spark.streaming import events_stream as ES
     from executor_u1mindexer_spark.streaming import ivm_stream as IV
 
-    sdir = str(tmp_path / "ivm_state")
-    stream = ES.read_events_stream(spark, sf_dir)
-    assert stream.isStreaming
-    writer, states = IV.streaming_ivm_fold(stream, ["event_type"], "value", sdir)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
-    assert len(states) >= 1
+    keys = ["event_type"]
     events = tables.load(spark, sf_dir, "events")
-    want = {
-        r.event_type: (r.n_rows, r.sum_milli, r.min_milli, r.max_milli)
-        for r in M.ivm_agg_state(events, ["event_type"], "value").collect()
-    }
-    def view():
-        return {
-            r.event_type: (r.n_rows, r.sum_milli, r.min_milli, r.max_milli)
-            for r in IV.ivm_view(spark, states, ["event_type"]).collect()
-        }
-    assert view() == want and len(want) > 0
-    # multi-batch composition + redelivery idempotence: refold a manual
-    # split of the backlog under NEW batch ids into a fresh fold, deliver
-    # one chunk twice — the view must still equal the batch state
-    from pyspark.sql import functions as F
-
-    _, states2 = IV.streaming_ivm_fold(stream, ["event_type"], "value")
-    chunks = [events.filter(F.dayofmonth("ts") <= 15),
-              events.filter(F.dayofmonth("ts") > 15)]
-    cols = ("event_type", "n_rows", "sum_milli", "min_milli", "max_milli")
-    for bid, ch in enumerate(chunks):
-        st = M.ivm_agg_state(ch, ["event_type"], "value")
-        states2[bid] = [tuple(r[c] for c in cols) for r in st.collect()]
-    states2[1] = states2[1]  # redelivery of batch 1 overwrites its own key
-    got2 = {
-        r.event_type: (r.n_rows, r.sum_milli, r.min_milli, r.max_milli)
-        for r in IV.ivm_view(spark, states2, ["event_type"]).collect()
-    }
-    assert got2 == want
-    # restart path: a NEW fold pointed at the durable state_dir starts
-    # with the committed history already loaded
-    _, states3 = IV.streaming_ivm_fold(stream, ["event_type"], "value", sdir)
-    assert {
-        r.event_type: (r.n_rows, r.sum_milli, r.min_milli, r.max_milli)
-        for r in IV.ivm_view(spark, states3, ["event_type"]).collect()
-    } == want
-
-
-def test_streaming_dq_ledger_matches_batch_audit(spark, sf_dir, tmp_path):
-    """The streaming DQ ledger's accumulated counts must equal the batch
-    dq_audit of the drained backlog (violation counts are additive), with
-    the same redelivery-idempotence and restart closure as the IVM fold."""
-    from executor_u1mindexer_spark.operators import pipeline as P
-    from executor_u1mindexer_spark.streaming import events_stream as ES
-    from executor_u1mindexer_spark.streaming import ivm_stream as IV
-
-    constraints = {"value_positive": "value > 0",
-                   "type_known": "event_type IN ('view','click','purchase','signup','error')"}
-    sdir = str(tmp_path / "dq_state")
-    stream = ES.read_events_stream(spark, sf_dir)
-    writer, states = IV.streaming_dq_fold(stream, constraints, sdir)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
-    assert len(states) >= 1
-    events = tables.load(spark, sf_dir, "events")
-    want = {(r.check_name, r.n_violations, r.passed)
-            for r in P.dq_audit(events, constraints).collect()}
-    got = {(r.check_name, r.n_violations, r.passed)
-           for r in IV.dq_view(spark, states).collect()}
-    assert got == want and len(want) == 2
-    # redelivery: overwriting a batch id leaves the view unchanged
-    bid = next(iter(states))
-    states[bid] = list(states[bid])
-    assert {(r.check_name, r.n_violations, r.passed)
-            for r in IV.dq_view(spark, states).collect()} == want
-    # restart: a fresh fold on the durable dir resumes with history
-    _, states2 = IV.streaming_dq_fold(stream, constraints, sdir)
-    assert {(r.check_name, r.n_violations, r.passed)
-            for r in IV.dq_view(spark, states2).collect()} == want
-
-
-def test_batch_keyed_store_compaction(spark, sf_dir, tmp_path):
-    """_BatchKeyedStore.compact (r11, VERDICT r10 #5): folding all-but-
-    the-newest entries via the ivm_merge algebra must leave the view
-    EXACT under (a) the fold itself, (b) redelivery of the newest batch,
-    (c) a state_dir restart, and (d) stale per-batch files left by a
-    crashed cleanup (superseded files are ignored by load())."""
-    import os
-
-    from executor_u1mindexer_spark.operators import maintenance as M
-    from executor_u1mindexer_spark.streaming import events_stream as ES
-    from executor_u1mindexer_spark.streaming import ivm_stream as IV
-    from executor_u1mindexer_spark.streaming.sketch_stream import _BatchKeyedStore
-
-    sdir = str(tmp_path / "ivm_state")
-    events = tables.load(spark, sf_dir, "events")
-    cols = ["event_type", "n_rows", "sum_milli", "min_milli", "max_milli"]
-    chunks = [
-        events.filter(F.dayofmonth("ts") <= 8),
-        events.filter((F.dayofmonth("ts") > 8) & (F.dayofmonth("ts") <= 16)),
-        events.filter((F.dayofmonth("ts") > 16) & (F.dayofmonth("ts") <= 24)),
-        events.filter(F.dayofmonth("ts") > 24),
-    ]
-    store = _BatchKeyedStore(sdir)
-    pdfs = {}
-    for bid, ch in enumerate(chunks):
-        pdfs[bid] = M.ivm_agg_state(ch, ["event_type"], "value").toPandas()[cols]
-        store.put(bid, pdfs[bid])
-
-    want = {
-        r.event_type: (r.n_rows, r.sum_milli, r.min_milli, r.max_milli)
-        for r in M.ivm_agg_state(events, ["event_type"], "value").collect()
-    }
-
-    def view_of(entries):
-        states = {
-            bid: [tuple(t) for t in pdf[cols].itertuples(index=False)]
-            for bid, pdf in entries.items()
-        }
-        return {
-            r.event_type: (r.n_rows, r.sum_milli, r.min_milli, r.max_milli)
-            for r in IV.ivm_view(spark, states, ["event_type"]).collect()
-        }
-
-    assert view_of(store.load()) == want  # uncompacted baseline
-
-    # (a) compact: batches 0..2 fold into compact-2; batch 3 (newest —
-    # the only replayable one) keeps its own overwrite-idempotent entry
-    got = store.compact(IV.ivm_compact_fold(["event_type"]))
-    assert sorted(got) == [2, 3]
-    files = sorted(os.listdir(sdir))
-    assert files == ["batch-3.parquet", "compact-2.parquet"]
-    assert view_of(got) == want
-
-    # (b) redelivery of the newest batch overwrites its own entry only
-    store.put(3, pdfs[3])
-    assert view_of(store.load()) == want
-
-    # (c) restart: a fresh fold on the same state_dir reloads the
-    # compacted history and the maintained view is still exact
-    stream = ES.read_events_stream(spark, sf_dir)
-    _, states3 = IV.streaming_ivm_fold(stream, ["event_type"], "value", sdir)
-    assert {
-        r.event_type: (r.n_rows, r.sum_milli, r.min_milli, r.max_milli)
-        for r in IV.ivm_view(spark, states3, ["event_type"]).collect()
-    } == want
-
-    # (d) crash-safe cleanup: a stale superseded file beside compact-2 is
-    # invisible to load() and removed by the next compact()
-    pdfs[1].to_parquet(os.path.join(sdir, "batch-1.parquet"), index=False)
-    assert view_of(store.load()) == want
-    store.compact(IV.ivm_compact_fold(["event_type"]))
-    assert "batch-1.parquet" not in os.listdir(sdir)
-    assert view_of(store.load()) == want
-
-    # (e) a crash between to_parquet and os.replace leaves a .tmp-*
-    # leftover; it is uncommitted by construction — invisible to load()
-    # and removed by the next compact() (ADVICE r11: the cleanup regex
-    # alone never matched the dot-prefix, so these accumulated forever)
-    pdfs[1].to_parquet(os.path.join(sdir, ".tmp-compact-7.parquet"), index=False)
-    assert view_of(store.load()) == want
-    store.compact(IV.ivm_compact_fold(["event_type"]))
-    assert ".tmp-compact-7.parquet" not in os.listdir(sdir)
-
-    # (f) a put() at-or-below the compact floor would be silently
-    # superseded by the compact file (checkpoint/state_dir mismatch —
-    # e.g. a fresh checkpoint restarting batch ids at 0): loud failure,
-    # not silent data loss (ADVICE r11)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="compact floor"):
-        store.put(0, pdfs[0])
-    assert "batch-0.parquet" not in os.listdir(sdir)
-
-
-def test_dq_ledger_compaction(spark, sf_dir, tmp_path):
-    """The DQ ledger's compaction twin: additive violation counts fold to
-    the same accumulated report, and a compacted store + redelivered
-    newest batch still equals the batch audit of the backlog."""
-    from executor_u1mindexer_spark.operators import pipeline as P
-    from executor_u1mindexer_spark.streaming import ivm_stream as IV
-    from executor_u1mindexer_spark.streaming.sketch_stream import _BatchKeyedStore
-
-    constraints = {"value_positive": "value > 0",
-                   "type_known": "event_type IN ('view','click','purchase','signup','error')"}
-    events = tables.load(spark, sf_dir, "events")
-    chunks = [events.filter(F.dayofmonth("ts") <= 10),
-              events.filter((F.dayofmonth("ts") > 10) & (F.dayofmonth("ts") <= 20)),
-              events.filter(F.dayofmonth("ts") > 20)]
-    sdir = str(tmp_path / "dq_state")
-    store = _BatchKeyedStore(sdir)
-    pdfs = {}
-    for bid, ch in enumerate(chunks):
-        pdfs[bid] = (
-            P.dq_audit(ch, constraints).toPandas()[["check_name", "n_violations"]]
+    cdc = (
+        events.withColumn("sign", F.lit(1))
+        .withColumn("bid", F.col("event_id") % 3)
+        .unionByName(
+            events.filter(F.col("event_id") % 10 == 0)
+            .withColumn("sign", F.lit(-1))
+            .withColumn("bid", (F.col("event_id") + 1) % 3)
         )
-        store.put(bid, pdfs[bid])
-    want = {(r.check_name, r.n_violations, r.passed)
-            for r in P.dq_audit(events, constraints).collect()}
-
-    def view_of(entries):
-        states = {
-            bid: [tuple(t) for t in pdf.itertuples(index=False)]
-            for bid, pdf in entries.items()
-        }
-        return {(r.check_name, r.n_violations, r.passed)
-                for r in IV.dq_view(spark, states).collect()}
-
-    got = store.compact(IV.dq_compact_fold)
-    assert sorted(got) == [1, 2] and view_of(got) == want
-    store.put(2, pdfs[2])  # redelivered newest batch
-    assert view_of(store.load()) == want
-
-
-def test_streaming_retract_ivm_cdc_matches_batch(spark, sf_dir, tmp_path):
-    """CDC retract-stream fold (r11): a changelog built as the event
-    stream (+1) unioned with a -1 copy of every event_id % 10 == 0 row
-    must drain to the batch retract-state of the SURVIVING rows exactly
-    — deletes retract without base rescans, whatever batch interleaving
-    the union produced (addition commutes). Also pins the state_dir
-    restart and compaction with retract_compact_fold."""
-    from executor_u1mindexer_spark.operators import maintenance as M
-    from executor_u1mindexer_spark.streaming import events_stream as ES
-    from executor_u1mindexer_spark.streaming import ivm_stream as IV
-    from executor_u1mindexer_spark.streaming.sketch_stream import _BatchKeyedStore
-
-    sdir = str(tmp_path / "retract_state")
-    base = ES.read_events_stream(spark, sf_dir)
-    cdc = base.withColumn("sign", F.lit(1)).unionByName(
-        base.filter(F.col("event_id") % 10 == 0).withColumn("sign", F.lit(-1))
     )
-    assert cdc.isStreaming
-    writer, states = IV.streaming_retract_ivm_fold(
-        cdc, ["event_type"], "value", "sign", sdir
-    )
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
-    assert len(states) >= 1
+    state_cols = tuple(keys) + M.IVM_RETRACT_STATE_COLS
+    states = {
+        bid: [
+            tuple(r[c] for c in state_cols)
+            for r in M.ivm_retract_state_cdc(
+                cdc.filter(F.col("bid") == bid), keys, "value", "sign"
+            ).collect()
+        ]
+        for bid in range(3)
+    }
 
-    events = tables.load(spark, sf_dir, "events")
     surviving = events.filter(F.col("event_id") % 10 != 0)
     want = {
         r.event_type: (r.n_rows, r.sum_milli, str(r.sumsq_milli2))
-        for r in M.ivm_retract_state(surviving, ["event_type"], "value").collect()
+        for r in M.ivm_retract_state(surviving, keys, "value").collect()
     }
-
-    def view(st):
-        return {
-            r.event_type: (r.n_rows, r.sum_milli, str(r.sumsq_milli2))
-            for r in IV.retract_ivm_view(spark, st, ["event_type"]).collect()
-        }
-
-    assert view(states) == want and len(want) > 0
-
-    # restart: fresh fold on the durable dir reloads the committed history
-    _, states2 = IV.streaming_retract_ivm_fold(
-        cdc, ["event_type"], "value", "sign", sdir
-    )
-    assert view(states2) == want
-
-    # compaction preserves the view exactly (sums are group-invertible)
-    store = _BatchKeyedStore(sdir)
-    if len(store.load()) >= 3:
-        store.compact(IV.retract_compact_fold(["event_type"]))
-    _, states3 = IV.streaming_retract_ivm_fold(
-        cdc, ["event_type"], "value", "sign", sdir
-    )
-    assert view(states3) == want
+    got = {
+        r.event_type: (r.n_rows, r.sum_milli, str(r.sumsq_milli2))
+        for r in IV.retract_ivm_view(spark, states, keys).collect()
+    }
+    assert got == want and len(want) > 0
 
 
-def test_streaming_heavy_hitters_ledger_no_false_negatives(spark, sf_dir, tmp_path):
-    """The MG ledger (r12, SS.streaming_heavy_hitters_fold): per-batch
-    bounded summaries fold to a merged state whose candidates contain
-    EVERY true heavy hitter of the drained backlog (the Mergeable-
-    Summaries no-false-negative bound), cnt_lb never exceeds the true
-    count, and a fresh fold on the same state_dir reloads the identical
-    ledger."""
-    from executor_u1mindexer_spark.streaming import events_stream as ES
+def test_streaming_heavy_hitters_ledger_no_false_negatives(spark, sf_dir):
+    """The MG ledger: per-batch bounded summaries (mg_batch_entry) fold
+    through heavy_hitters_state to a merged state whose candidates
+    contain EVERY true heavy hitter of the whole backlog (the Mergeable-
+    Summaries no-false-negative bound), whose sentinel lane carries the
+    exact stream length, and whose cnt_lb never exceeds the true count."""
     from executor_u1mindexer_spark.streaming import sketch_stream as SS
 
     k = 64
-    sdir = str(tmp_path / "mg_state")
-    stream = ES.read_fixture_stream(spark, sf_dir, "lineitem").select(
+    li = tables.load(spark, sf_dir, "lineitem").select(
+        F.col("l_orderkey"),
         F.when(F.col("l_orderkey") % 4 == 0, F.col("l_partkey") % 10)
         .otherwise(F.col("l_partkey"))
-        .alias("item")
+        .alias("item"),
     )
-    writer, states = SS.streaming_heavy_hitters_fold(stream, "item", k, state_dir=sdir)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
+    states = {
+        bid: SS.mg_batch_entry(
+            li.filter(F.col("l_orderkey") % 3 == bid).select("item"), "item", k
+        )
+        for bid in range(3)
+    }
 
     merged = SS.heavy_hitters_state(states)
     n_total = merged.pop(None)
-    li = tables.load(spark, sf_dir, "lineitem").select(
-        F.when(F.col("l_orderkey") % 4 == 0, F.col("l_partkey") % 10)
-        .otherwise(F.col("l_partkey"))
-        .alias("item")
-    )
-    exact = {r.item: r.c for r in li.groupBy("item").agg(F.count(F.lit(1)).alias("c")).collect()}
+    exact = {
+        r.item: r.c
+        for r in li.groupBy("item").agg(F.count(F.lit(1)).alias("c")).collect()
+    }
     assert n_total == sum(exact.values())
     true_hh = {it for it, c in exact.items() if c * (k + 1) > n_total}
     assert true_hh  # the injected skew must make this non-vacuous
@@ -767,40 +180,24 @@ def test_streaming_heavy_hitters_ledger_no_false_negatives(spark, sf_dir, tmp_pa
     for it, lb in merged.items():
         assert lb <= exact[it]
 
-    # restart: a fresh fold on the same state_dir holds the same ledger
-    _, states2 = SS.streaming_heavy_hitters_fold(stream, "item", k, state_dir=sdir)
 
-    def norm(entries):  # the NULL-item sentinel defeats a plain sort
-        return sorted(((-1 if i is None else i), c) for i, c in entries)
-
-    assert {b: norm(e) for b, e in states2.items()} == {
-        b: norm(e) for b, e in states.items()
-    }
-
-
-def test_streaming_kmv_fold_matches_batch_sketch(tmp_path, spark, sf_dir):
-    """The KMV ledger (r12, SS.streaming_kmv_fold): the bottom-k merge of
-    per-batch bottom-k entries must be BIT-EQUAL to the batch sketch of
-    the drained backlog (the pigeonhole merge is exact, not a bound),
-    and a fresh fold on the same state_dir reloads the identical
-    ledger."""
-    from executor_u1mindexer_spark.streaming import events_stream as ES
-    from executor_u1mindexer_spark.streaming import sketch_stream as SS
+def test_streaming_kmv_fold_matches_batch_sketch(spark, sf_dir):
+    """The KMV ledger: the bottom-k merge (kmv_state) of per-batch
+    bottom-k entries (kmv_batch_entry) must be BIT-EQUAL to the batch
+    sketch of the whole backlog (the pigeonhole merge is exact, not a
+    bound), and every entry stays bounded at k hashes."""
     from executor_u1mindexer_spark.operators import sketch as SK
+    from executor_u1mindexer_spark.streaming import sketch_stream as SS
 
     k = 64
-    sdir = str(tmp_path / "kmv_state")
-    stream = ES.read_fixture_stream(spark, sf_dir, "events").select("event_id")
-    writer, states = SS.streaming_kmv_fold(stream, "event_id", k, state_dir=sdir)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
-
-    assert states, "no batches folded"
+    ev = tables.load(spark, sf_dir, "events")
+    states = {
+        bid: SS.kmv_batch_entry(
+            ev.filter(F.col("event_id") % 3 == bid), "event_id", k
+        )
+        for bid in range(3)
+    }
     assert all(len(e) <= k for e in states.values())
     merged = SS.kmv_state(states, k)
-    ev = tables.load(spark, sf_dir, "events")
     want = [r.h for r in SK.kmv_bottomk(ev, "event_id", k).collect()]
-    assert merged == want
-
-    _, states2 = SS.streaming_kmv_fold(stream, "event_id", k, state_dir=sdir)
-    assert {b: e for b, e in states2.items()} == {b: e for b, e in states.items()}
+    assert merged == want and len(want) > 0

@@ -1,83 +1,6 @@
-"""Streaming dedup + stream-stream interval join vs their batch twins."""
+"""As-of join edge semantics on hand-built event tables."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from executor_u1mindexer_spark import tables
-from executor_u1mindexer_spark.streaming import events_stream as S
-
-
-def test_streaming_dedup_matches_batch_distinct(spark, sf_dir):
-    stream = S.read_events_stream(spark, sf_dir)
-    S.run_available_now(S.streaming_dedup(stream), "stream_dedup", output_mode="append")
-    got = spark.table("stream_dedup").count()
-    want = tables.load(spark, sf_dir, "events").dropDuplicates(["event_id"]).count()
-    assert got == want > 0
-
-
-def test_streaming_parquet_sink_with_checkpoint(spark, sf_dir, tmp_path):
-    """Durable streaming sink: append-mode parquet + checkpoint dir; output
-    read back equals the batch aggregate (watermark-closed windows only is
-    moot here — availableNow drains everything, then the final windows
-    flush on the terminal batch)."""
-    from executor_u1mindexer_spark.operators import events as E
-    from executor_u1mindexer_spark import tables as T
-
-    stream = S.read_events_stream(spark, sf_dir)
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = (
-        S.streaming_dedup(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(out_dir).count()
-    want = T.load(spark, sf_dir, "events").dropDuplicates(["event_id"]).count()
-    assert got == want > 0
-    # restart on the same checkpoint: nothing new to process, no duplicates
-    q2 = (
-        S.streaming_dedup(S.read_events_stream(spark, sf_dir))
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination()
-    assert spark.read.parquet(out_dir).count() == want  # exactly-once held
-
-
-def test_stream_stream_join_matches_batch_range_join(spark, sf_dir):
-    stream = S.read_events_stream(spark, sf_dir)
-    S.run_available_now(
-        S.streaming_purchase_view_join(stream), "stream_pv_join", output_mode="append"
-    )
-    got = {
-        (r.purchase_id, r.view_ts) for r in spark.table("stream_pv_join").collect()
-    }
-    ev = tables.load(spark, sf_dir, "events")
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"), "user_id", F.col("ts").alias("purchase_ts")
-    )
-    v = ev.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts")
-    )
-    want = {
-        (r.purchase_id, r.view_ts)
-        for r in p.join(
-            v,
-            (F.col("user_id") == F.col("v_user"))
-            & (F.col("view_ts") <= F.col("purchase_ts"))
-            & (F.col("view_ts") > F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR")),
-        ).collect()
-    }
-    assert got == want and len(got) > 0
 
 
 def test_asof_nearest_tie_and_boundary_semantics(spark):
