@@ -352,11 +352,7 @@ class U1MIndexerSpark:
         status() shows zero tombstones after a workspace reload), so
         accounting starts fresh on load — the documented divergence from
         hnswlib's save_index, which persists dead slots."""
-        ids_df = (
-            ids
-            if isinstance(ids, DataFrame)
-            else self.spark.createDataFrame([(int(i),) for i in ids], f"{M.ID} long")
-        )
+        ids_df = ids if isinstance(ids, DataFrame) else M.id_frame(self.spark, ids)
         self._before_mutation()
         # ONE aggregate job against the state computes everything delete-time
         # accounting needs: how many ids actually hit, the pre-delete

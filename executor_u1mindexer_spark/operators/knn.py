@@ -274,9 +274,14 @@ def knn_search(
         )
     )
     if payload is not None:
-        # executor.py:116 — every match carries the full stored row.
-        topk = topk.join(payload, on=topk[id_col] == payload[payload_key], how="inner").drop(
-            payload_key
+        # executor.py:116 — every match carries the full stored row. The
+        # top-k side (k rows per query) broadcasts into the payload scan:
+        # a shuffle join would hash-partition the whole payload table for
+        # k x queries result rows.
+        topk = (
+            F.broadcast(topk)
+            .join(payload, on=topk[id_col] == payload[payload_key], how="inner")
+            .drop(payload_key)
         )
     return topk
 

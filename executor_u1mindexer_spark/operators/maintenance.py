@@ -16,13 +16,16 @@ Reference surface (executor.py):
 
 Spark-first state model: the "index" is a DataFrame with columns
 (id, internal_id, emb) — internal_id reproduces the reference's dense
-insertion-order ints via row_number() over an explicit arrival ordering
-(never monotonically_increasing_id, which is partition-dependent).
+insertion-order ints as a global rank over an explicit arrival ordering
+(dense_rank_by: a range exchange plus per-partition offsets, so the rank
+never depends on how the input happened to be partitioned).
 
 Scale notes (100 TB): the state side is the big side and is never
 shuffled by these builders except where a join requires it; maintenance
 batches are small → explicitly broadcast. Dense-id assignment for inserts
-is a window over the (small) batch only, not over the state.
+ranks the (small) batch only, not the state. Id lists built on the driver
+enter plans as Arrow local relations (id_frame), never as parallelized
+Python RDDs.
 """
 
 from __future__ import annotations
@@ -30,7 +33,9 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from executor_u1mindexer_spark import cache
@@ -47,18 +52,27 @@ def dense_rank_by(df: DataFrame, order_col: str, out_col: str) -> DataFrame:
     table through one task — the 100×-scale killer flagged in r01).
 
     Scheme: range-partition on the key (partition boundaries are contiguous
-    key ranges, so partition id order == key order), rank locally per
-    partition, and add the cumulative count of all earlier partitions. The
-    offsets table is one row per partition — its own window is over ~10²-10⁵
-    rows at any data scale — and broadcasts back onto the ranked rows.
-    Output is invariant to where the (sampled, nondeterministic) range
-    boundaries land because ranks only depend on the total order of the
-    unique key. Requires ``order_col`` values to be unique.
+    key ranges, so partition id order == key order), sort each partition by
+    the key, number its rows locally, and add the cumulative count of all
+    earlier partitions. The offsets table is one row per partition — its
+    triangular self-join is over ~10²-10⁵ rows at any data scale — and
+    broadcasts back onto the ranked rows. Output is invariant to where the
+    (sampled, nondeterministic) range boundaries land, and to how AQE
+    coalesces the range partitions (it merges contiguous ones, and the local
+    number and ``__pid`` are both read in the task that sorted them),
+    because ranks only depend on the total order of the unique key.
+    Requires ``order_col`` values to be unique.
+
+    The local number is ``monotonically_increasing_id()`` minus the
+    partition's base (``spark_partition_id() << 33``), taken right after the
+    in-partition sort. A ``row_number()`` window over ``__pid`` would add a
+    hash exchange on ``__pid``, though the range exchange already holds each
+    ``__pid`` in one task; the broadcast offsets join keeps the range
+    partitioning, so the rank costs one exchange.
 
     The ranking pipeline runs on the KEY COLUMN ONLY (the payload — e.g.
-    768-dim embeddings — would otherwise ride the range exchange AND the
-    rank window exchange); ranks join back on the unique key, so wide rows
-    shuffle exactly once."""
+    768-dim embeddings — would otherwise ride the range exchange); ranks
+    join back on the unique key, so wide rows shuffle exactly once."""
     keys = df.select(order_col)
     # The boundary-dependent ``__pid`` feeds BOTH the offsets branch and the
     # ranked stream. repartitionByRange samples its boundaries
@@ -71,8 +85,17 @@ def dense_rank_by(df: DataFrame, order_col: str, out_col: str) -> DataFrame:
     # invariant. An eager localCheckpoint would also pin it but costs a full
     # extra materialization + partition copy per ingest batch (measured
     # +57% on the ingest bench in r03) — rejected.
-    parted = keys.repartitionByRange(F.col(order_col)).withColumn(
-        "__pid", F.spark_partition_id()
+    pid = F.spark_partition_id()
+    parted = (
+        keys.repartitionByRange(F.col(order_col))
+        .sortWithinPartitions(order_col)
+        .select(
+            order_col,
+            pid.alias("__pid"),
+            (F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)).alias(
+                "__local"
+            ),
+        )
     )
     counts = parted.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
     # cumulative offsets via a triangular self-join over the per-partition
@@ -87,11 +110,8 @@ def dense_rank_by(df: DataFrame, order_col: str, out_col: str) -> DataFrame:
         .groupBy("__pid")
         .agg(F.coalesce(F.sum("__cnt_e"), F.lit(0)).alias("__off"))
     )
-    w_local = Window.partitionBy("__pid").orderBy(F.col(order_col))
-    ranked = (
-        parted.join(F.broadcast(offsets), on="__pid")
-        .withColumn(out_col, F.row_number().over(w_local) - 1 + F.col("__off"))
-        .select(order_col, out_col)
+    ranked = parted.join(F.broadcast(offsets), on="__pid").select(
+        order_col, (F.col("__local") + F.col("__off")).alias(out_col)
     )
     return df.join(ranked, on=order_col)
 
@@ -277,13 +297,30 @@ def skipped_updates(state: DataFrame, batch: DataFrame) -> DataFrame:
     )
 
 
+def id_frame(spark: SparkSession, ids: Sequence[int], col: str = ID) -> DataFrame:
+    """A driver-side list of integer ids (Python or numpy ints) as a
+    one-column BIGINT DataFrame that every plan reads on the JVM.
+
+    Built from an int64 pandas frame, which Arrow turns into a local
+    relation (`LocalTableScan`). A parallelized Python list
+    (`createDataFrame([(i,), ...])`) is a `Scan ExistingRDD` instead, and
+    every plan that reads it starts Python workers to re-run the list — a
+    delete list is read by the delete's own accounting job, the docstore
+    anti-join, the next status, search and checkpoint. An empty list is a
+    literal-false filter, which Catalyst folds to an empty relation."""
+    arr = np.asarray(ids, dtype=np.int64)
+    if arr.size == 0:
+        return spark.sql(f"SELECT CAST(NULL AS BIGINT) AS {col}").where(F.lit(False))
+    return spark.createDataFrame(pd.DataFrame({col: arr}), f"{col} long")
+
+
 def delete_by_ids(state: DataFrame, ids: DataFrame | Sequence[int]) -> DataFrame:
     """The /delete endpoint (executor.py:213-225): remove rows whose id is in
     the list; unknown ids silently ignored (set-intersection semantics,
     executor.py:221). Anti join keeps the big state side shuffle-free when
     the id list broadcasts."""
     if not isinstance(ids, DataFrame):
-        ids = state.sparkSession.createDataFrame([(int(i),) for i in ids], f"{ID} long")
+        ids = id_frame(state.sparkSession, ids)
     return state.join(F.broadcast(ids.select(ID)), on=ID, how="left_anti")
 
 

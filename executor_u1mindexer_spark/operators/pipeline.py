@@ -527,7 +527,7 @@ def deterministic_shuffle(df: DataFrame, id_col: str, seed: str = "42") -> DataF
     a hash-order rank is all three (no RNG state, no sort instability).
 
     100 TB shape: the rank comes from dense_rank_by's range-partition +
-    broadcast-offset scheme (operators/maintenance.py:42) — NO partition-less
+    broadcast-offset scheme (operators/maintenance.py) — NO partition-less
     window, NO single-task sort; the hash key range-partitions uniformly by
     construction, so the sort is skew-free by design."""
     from executor_u1mindexer_spark.operators.maintenance import dense_rank_by

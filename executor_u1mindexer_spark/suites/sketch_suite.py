@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from executor_u1mindexer_spark import tables
+from executor_u1mindexer_spark.operators import maintenance as M
 from executor_u1mindexer_spark.operators import quantile as QT
 from executor_u1mindexer_spark.operators import sketch as SK
 
@@ -1491,7 +1492,7 @@ def sketch_kmv_streaming_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
         for bid in range(3)
     }
     merged = SS.kmv_state(states, KMV_K)
-    ledger = spark.createDataFrame([(int(h),) for h in merged], "h long")
+    ledger = M.id_frame(spark, merged, "h")
     bk = SK.kmv_bottomk(ev, "event_id", KMV_K)
     n_diff = (
         ledger.subtract(bk)
@@ -1827,7 +1828,7 @@ def sketch_mg_streaming_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     merged = SS.heavy_hitters_state(states)
     n_total = merged.pop(None, 0)  # sentinel lane: exact stream length
-    cand = spark.createDataFrame([(int(it),) for it in merged], "item long")
+    cand = M.id_frame(spark, list(merged), "item")
     exact = (
         li.select(item)
         .join(F.broadcast(cand), "item", "leftsemi")

@@ -93,6 +93,34 @@ def test_delete_and_status_tombstones(spark, engine):
     assert st["size_dam"] == 98
 
 
+def test_delete_ids_enter_the_plan_as_a_local_relation(spark, engine):
+    """A Python id list is an Arrow local relation, not a parallelized
+    Python RDD: the pending vector plan reads the pre-delete checkpoint
+    (the one `Scan ExistingRDD`) and the ids as a `LocalTableScan`, so no
+    later plan that reads the ids starts a Python worker."""
+    from executor_u1mindexer_spark import plans
+
+    engine.delete([0, 1, 31337])
+    plan = plans.physical_plan(engine._vectors, "simple")
+    assert plan.count("Scan ExistingRDD") == 1, plan
+    assert "LocalTableScan" in plan, plan
+
+
+def test_delete_empty_list_is_a_noop(spark, engine):
+    before = engine.status()
+    engine.delete([])
+    assert engine.status() == before
+
+
+def test_delete_accepts_numpy_int64_ids(spark, engine):
+    import numpy as np
+
+    engine.delete(np.array([0, 1], dtype=np.int64))
+    engine.delete([np.int64(2)])
+    st = engine.status()
+    assert st["count_active"] == 97 and st["count_deleted"] == 3
+
+
 def test_dump_load_roundtrip_preserves_search(spark, engine, sf_dir, tmp_path):
     engine.dump()
     eng2 = U1MIndexerSpark(spark, dim=64, workspace=str(tmp_path))

@@ -25,15 +25,41 @@ def _batch(spark, rows):
 
 def test_dense_rank_by_matches_global_sort_order(spark):
     """The partition-offset rank scheme must equal row_number-by-key minus 1
-    regardless of input partitioning (shuffled input, many partitions)."""
+    regardless of input partitioning (shuffled input, many partitions), of
+    the range-partition count (1, 7 and 32), and of how AQE coalesces the
+    range partitions. The key set is skewed (a dense run of 3,000 keys
+    between a sparse head and a sparse tail), and a 2 KB advisory partition
+    size makes AQE coalesce unevenly: at 32 partitions the range exchange
+    of these keys reads back as 17 partitions, the end ones holding one
+    range partition and the rest two."""
     import random
 
-    keys = list(range(0, 2000, 3))
+    keys = (
+        list(range(0, 2000, 3))
+        + list(range(10_000, 13_000))
+        + list(range(10**6, 10**7, 99_991))
+    )
     random.Random(7).shuffle(keys)
     df = spark.createDataFrame([(k, k * 2) for k in keys], "k long, payload long").repartition(16)
-    out = {r.k: (r.rank, r.payload) for r in M.dense_rank_by(df, "k", "rank").collect()}
-    for pos, k in enumerate(sorted(keys)):
-        assert out[k] == (pos, k * 2)
+    confs = {
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "2k",
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1b",
+    }
+    prev = {k: spark.conf.get(k) for k in [*confs, "spark.sql.shuffle.partitions"]}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        for n in (1, 7, 32):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            rows = M.dense_rank_by(df, "k", "rank").collect()
+            out = {r.k: (r.rank, r.payload) for r in rows}
+            assert len(rows) == len(out) == len(keys), n
+            for pos, k in enumerate(sorted(keys)):
+                assert out[k] == (pos, k * 2), (n, k)
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def test_dense_rank_by_empty_and_single_row(spark):

@@ -57,6 +57,39 @@ def test_knn_is_broadcast_nested_loop(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan, plan
 
 
+def test_knn_payload_join_never_shuffles_the_payload(spark, sf_dir):
+    """The payload fetch broadcasts the top-k rows (k per query) into the
+    payload scan. A shuffle join would hash-partition the whole payload
+    table (at 100 TB, the whole docstore) for k x queries result rows: the
+    only hash exchange left is the per-query top-k window on query_id.
+    Size-based broadcasting is off here, as it is for a payload table too
+    big to broadcast (or a checkpointed docstore, whose size the planner
+    cannot see)."""
+    from pyspark.sql import functions as F
+
+    from executor_u1mindexer_spark import tables
+    from executor_u1mindexer_spark.operators import knn
+
+    emb = tables.load(spark, sf_dir, "embeddings")
+    docs = tables.load(spark, sf_dir, "documents")
+    q = emb.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")
+    )
+    df = knn.knn_search(emb, q, k=5, payload=docs)
+    assert df.columns == ["query_id", "vec_id", "rank", "score"] + [
+        c for c in docs.columns if c != "doc_id"
+    ]
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan = plans.physical_plan(df, "simple")
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert "SortMergeJoin" not in plan, plan
+    hashed = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
+    assert hashed and all("hashpartitioning(query_id#" in ln for ln in hashed), plan
+
+
 def test_knn_prunes_corpus_columns(spark, sf_dir):
     df = V.knn_search_cosine(spark, sf_dir)
     rs = plans.read_schemas(df)
