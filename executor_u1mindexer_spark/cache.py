@@ -3,8 +3,11 @@
 Every intermediate an operator shares between plan branches (self-join and
 confirm-join sharing points, where exchange reuse does not fire across join
 aliases), every bounded state an iterative operator carries between rounds,
-and every lineage cut in the facade goes through ``materialize``. The policy
-lives here and nowhere else:
+and every lineage cut in the facade goes through ``materialize``. A loop
+that needs a number about the frame it just materialized (a frontier
+size, a convergence signature) takes it from ``materialize_observed``,
+which computes it in the checkpoint job itself. The policy lives here and
+nowhere else:
 
 - eager: the DataFrame is computed before the call returns, so no two
   consumers can race to populate it, and its lineage collapses to one
@@ -24,7 +27,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation, Row
 
 _CALLBACKS: list[Callable[[], None]] = []
 
@@ -32,6 +35,15 @@ _CALLBACKS: list[Callable[[], None]] = []
 def materialize(df: DataFrame) -> DataFrame:
     """Eagerly compute ``df`` into a local checkpoint and return it."""
     return df.localCheckpoint(eager=True)
+
+
+def materialize_observed(df: DataFrame, **aggs: Column) -> tuple[DataFrame, Row]:
+    """``materialize(df)``, plus the aggregates ``aggs`` (name -> aggregate
+    Column) over the rows it checkpointed. They ride the checkpoint job as
+    a Spark ``Observation``, so no second job scans the frame."""
+    obs = Observation()
+    observed = df.observe(obs, *(c.alias(name) for name, c in aggs.items()))
+    return materialize(observed), Row(**obs.get)
 
 
 def on_release(cb: Callable[[], None]) -> None:

@@ -351,7 +351,10 @@ class U1MIndexerSpark:
         snapshot is a COMPACTED index (live rows only, same reason
         status() shows zero tombstones after a workspace reload), so
         accounting starts fresh on load — the documented divergence from
-        hnswlib's save_index, which persists dead slots."""
+        hnswlib's save_index, which persists dead slots. An empty id list
+        returns at once: no checkpoint, no accounting job, no dirty mark."""
+        if not isinstance(ids, DataFrame) and len(ids) == 0:
+            return
         ids_df = ids if isinstance(ids, DataFrame) else M.id_frame(self.spark, ids)
         self._before_mutation()
         # ONE aggregate job against the state computes everything delete-time

@@ -41,6 +41,8 @@ breadth alongside the iterative-BPE family.]
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -111,9 +113,10 @@ def _both_directions(edges: DataFrame, src: str = "src", dst: str = "dst") -> Da
     return edges.select(e).select(f"__e.{src}", f"__e.{dst}")
 
 
-def _adjacency(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+def _adjacency(edges: DataFrame) -> tuple[DataFrame, DataFrame, int]:
     """Shared loop-invariant build for the iterative graph operators:
-    (deg, adj) over the symmetrized edge list, all eagerly checkpointed.
+    (deg, adj, n) over the symmetrized edge list, both frames eagerly
+    checkpointed; n is deg's row count, observed by deg's checkpoint job.
 
     deg = (node, outdeg) — every node incident to an edge appears as a
     src once both directions are present, so deg doubles as the node
@@ -142,7 +145,8 @@ def _adjacency(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     # aggregate over the checkpointed adj (grouping key = its hash
     # partitioning key): no edge pass, no exchange — checkpointing it
     # keeps the consumers' residual plans flat (the plan-depth tripwire
-    # tests) for the cost of one tiny node-sized job.
+    # tests) for the cost of one tiny node-sized job, which also counts
+    # the nodes.
     from pyspark.sql import Window as _W
 
     directed = _both_directions(edges.select("src", "dst"))
@@ -160,11 +164,40 @@ def _adjacency(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
         )
         .agg(F.collect_list("dst").alias("__dsts"))
     )
-    deg = cache.materialize(
-        adj.groupBy("node")
-        .agg(F.max("__outdeg").alias("outdeg"))
+    deg, seen = cache.materialize_observed(
+        adj.groupBy("node").agg(F.max("__outdeg").alias("outdeg")),
+        n=F.count(F.lit(1)),
     )
-    return deg, adj
+    return deg, adj, seen.n
+
+
+def _supersteps(
+    adj: DataFrame,
+    state: DataFrame,
+    n_iter: int,
+    step: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The Pregel-style loop pagerank and label_propagation share: each of
+    n_iter rounds joins the node-keyed ``state`` onto ``adj`` and hands the
+    joined rows to ``step``, which explodes ``__dsts`` and reduces back to
+    the next node-keyed state.
+
+    Lineage is truncated every CHECKPOINT_WINDOW rounds, not every round.
+    Each round references the previous state exactly once, so plan depth
+    grows linearly inside a window and a per-round eager checkpoint would
+    be pure job-launch overhead: a 5-round run compiles to one Spark job
+    instead of six.
+
+    The shuffle_hash hint sits on the node-sized state side. Both sides
+    are already hash(node)-partitioned, so the join needs no exchange
+    either way; a sort-merge join paid two sorts per round, and AQE's
+    local choice, a per-round broadcast of the state, is impossible at
+    100 TB. A/B at 32 cores: pagerank wall −11%, LPA wall −21%."""
+    for it in range(n_iter):
+        state = step(adj.join(state.hint("shuffle_hash"), "node"))
+        if (it + 1) % CHECKPOINT_WINDOW == 0 and (it + 1) < n_iter:
+            state = cache.materialize(state)
+    return state
 
 
 def pagerank(
@@ -178,62 +211,35 @@ def pagerank(
     rank_scaled is the damped-power-method value after n_iter rounds at
     SCALE = 1e12. Undirected: each canonical edge contributes in both
     directions. The uniform init and the (1-d)/n base use the SAME floor
-    division the oracle replays.
-
-    Lineage is truncated every CHECKPOINT_WINDOW supersteps, not every
-    superstep. Unlike upsert's ~16×-per-batch self-embedding plan, each
-    pagerank round references the previous ranks exactly ONCE (share =
-    r ⋈ deg), so plan depth grows LINEARLY inside a window and a
-    per-round eager checkpoint would be pure job-launch overhead: a
-    default 5-iteration run compiles to one Spark job instead of six."""
+    division the oracle replays; the rounds run in _supersteps."""
     if not (1 <= n_iter <= 50):
         raise ValueError(f"n_iter must be in [1, 50], got {n_iter}")
     if not (0 <= damping_pct <= 100):
         raise ValueError(f"damping_pct must be in [0, 100], got {damping_pct}")
     # Loop-invariant hoists (the GraphX routing-table idea): after the
-    # shared adjacency build, NO iteration shuffles edge-sized rows — the
-    # one per-round join is node-keyed (ranks ⋈ adj, which carries
-    # __outdeg in-row), the fan-out happens by exploding in-partition
-    # arrays, and the partial groupBy(dst) combines the exploded stream
-    # map-side back down to ~distinct-dsts-per-partition before the only
-    # exchange. Per-iteration shuffled bytes drop from O(E) (the previous
-    # edges ⋈ share join) to O(N). The checkpointed (node, outdeg) table
-    # serves the base-rank init and the n scalar.
-    deg, adj = _adjacency(edges)
+    # shared adjacency build no round shuffles edge-sized rows. The one
+    # per-round join is node-keyed and reads __outdeg off the adjacency
+    # row, the fan-out explodes in-partition arrays, and the partial
+    # groupBy combines the exploded stream map-side before the only
+    # exchange: O(N) shuffled bytes per round, not O(E). _adjacency
+    # symmetrizes, so every node has an edge and receives a contribution:
+    # no dangling-node join either.
+    deg, adj, n = _adjacency(edges)
     nodes = deg.select("node")
-    n = deg.count()  # bounded driver scalar, like the literal-centroid fits
     if n == 0:
         return nodes.withColumn("rank_scaled", F.lit(0).cast("long"))
     base = SCALE // n
-    r = nodes.select("node", F.lit(base).cast("long").alias("rank_scaled"))
-    for it in range(n_iter):
-        # r16 loop slimming (guide §2.1/§3): ONE node-keyed join per
-        # round. The share division reads __outdeg off the adjacency row
-        # (hoisted into the state by _adjacency) instead of a ranks ⋈ deg
-        # pre-join, and the dangling-node left join is gone because it
-        # was VACUOUS: _adjacency symmetrizes, so every node has an edge,
-        # every neighbor holds a rank, and contrib covers the node set
-        # exactly — coalesce(__contrib, 0) never fired. Three node-sized
-        # joins per round -> one; identical integer arithmetic.
-        # r17: shuffle_hash hint on the node-sized ranks side (§3.1).
-        # Both sides are already hash(node)-partitioned (adj from the
-        # checkpoint, r from the previous round's groupBy), so the join
-        # needs no exchange either way — but the default SMJ paid two
-        # per-round sorts and AQE's local alternative was a per-round
-        # driver BROADCAST of the ranks (a serial barrier locally, and
-        # impossible at 100 TB where ranks are node-sized). The hash
-        # build over the small per-partition rank slices is the
-        # scale-correct strategy; A/B: wall −11% at 32c, jobs 22→17.
+
+    def step(joined: DataFrame) -> DataFrame:
         contrib = (
-            adj.join(r.hint("shuffle_hash"), "node")
-            .select(
+            joined.select(
                 F.explode("__dsts").alias("node"),
                 F.expr(_idiv("rank_scaled", "__outdeg", "spark")).alias("__c"),
             )
             .groupBy("node")
             .agg(F.sum("__c").cast("long").alias("__contrib"))
         )
-        r = contrib.select(
+        return contrib.select(
             "node",
             F.expr(
                 _idiv(
@@ -246,13 +252,9 @@ def pagerank(
             .cast("long")
             .alias("rank_scaled"),
         )
-        # one (node, rank) row per node at each truncation point — plan
-        # depth stays bounded by the checkpoint window (linear within it,
-        # see the docstring; same rationale as BPE's per-round truncation
-        # but amortized over CHECKPOINT_WINDOW rounds)
-        if (it + 1) % CHECKPOINT_WINDOW == 0 and (it + 1) < n_iter:
-            r = cache.materialize(r)
-    return r
+
+    r = nodes.select("node", F.lit(base).cast("long").alias("rank_scaled"))
+    return _supersteps(adj, r, n_iter, step)
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -353,40 +355,37 @@ def connected_components(
     first round and every edge stays within its component (min labels
     only ever decrease toward the component min). Convergence = the
     canonical edge set's signature (count + sum of xxhash64(src,dst)) is
-    unchanged by a full round; at the fixpoint every edge is
-    (component_min, v) — a star — which is returned directly.
+    unchanged by a full round, confirmed once by an exact set comparison;
+    at the fixpoint every edge is (component_min, v) — a star — which is
+    returned directly.
 
     100 TB shape: state between rounds is the contracted edge set itself
     (≤ input edges rows), each round is two shuffle pairs on node keys
-    with partial aggregation, and each round ends in an eager
-    localCheckpoint so plan depth stays constant (the Pregel-superstep
-    pattern shared with pagerank/BPE). The convergence probe is a 1-row
-    aggregate — the same bounded driver scalar every
-    iterate-until-fixpoint algorithm needs. No collect of node/edge rows.
+    with partial aggregation, and each round ends in an eager checkpoint
+    so plan depth stays constant (the Pregel-superstep pattern shared
+    with pagerank/BPE). The signature is observed by that checkpoint job
+    (cache.materialize_observed), so a round runs no job of its own to
+    test convergence. No collect of node/edge rows.
 
     [NOT IN REFERENCE — executor.py has no graph surface.]
     """
     if not (1 <= max_rounds <= 200):
         raise ValueError(f"max_rounds must be in [1, 200], got {max_rounds}")
-    e = cache.materialize(
+    # each hash term bounded to |h| < 2^31 so the ANSI-mode BIGINT sum
+    # cannot overflow below ~4e9 edges
+    sig = {
+        "c": F.count(F.lit(1)),
+        "h": F.coalesce(F.sum(F.xxhash64("src", "dst") % F.lit(2**31)), F.lit(0)),
+    }
+    e, prev = cache.materialize_observed(
         edges.select(
             F.least("src", "dst").cast("long").alias("src"),
             F.greatest("src", "dst").cast("long").alias("dst"),
         )
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
+        .distinct(),
+        **sig,
     )
-
-    def _sig(cur: DataFrame) -> tuple[int, int]:
-        # each term bounded to |h| < 2^31 so the ANSI-mode BIGINT sum
-        # cannot overflow below ~4e9 edges per partitioned aggregate
-        row = cur.agg(
-            F.count(F.lit(1)).alias("c"),
-            F.coalesce(
-                F.sum(F.xxhash64("src", "dst") % F.lit(2**31)), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
-        return (row["c"], row["h"])
 
     def _large_star(cur: DataFrame) -> DataFrame:
         # neighborhoods of u over symmetric edges; m(u) = min(N(u) ∪ {u})
@@ -421,12 +420,10 @@ def connected_components(
             .distinct()
         )
 
-    prev = _sig(e)
     converged = False
     for _ in range(max_rounds):
         prev_e = e
-        e = cache.materialize(_small_star(_large_star(e)))
-        cur = _sig(e)
+        e, cur = cache.materialize_observed(_small_star(_large_star(e)), **sig)
         if cur == prev:
             # the signature (count + bounded-hash sum) could in principle
             # collide; confirm set equality EXACTLY once, at the candidate
@@ -460,13 +457,11 @@ def label_propagation(edges: DataFrame, n_iter: int = 4) -> DataFrame:
     not a data-dependent fixpoint).
 
     Returns (node, label) for every node incident to an edge. Scale
-    shape mirrors pagerank's: edges fold ONCE into per-node-salted
-    adjacency arrays, each round is a node-keyed adj ⋈ labels join whose
-    fan-out explodes in-partition and partially aggregates map-side
-    before the one (node, label) exchange, and lineage truncates every
-    CHECKPOINT_WINDOW rounds (each round references the previous labels
-    exactly once, so in-window plan growth is linear and AQE's
-    ReuseExchange materializes the adjacency shuffle once per window).
+    shape is pagerank's, through the same _supersteps loop: edges fold
+    ONCE into per-node-salted adjacency arrays, each round is a
+    node-keyed adj ⋈ labels join whose fan-out explodes in-partition and
+    partially aggregates map-side before the one (node, label) exchange,
+    and lineage truncates every CHECKPOINT_WINDOW rounds.
     The per-node argmax is min_by over the (-count, label) vote struct —
     map-side combinable, no window sort, label never negated so any
     orderable label type stays deterministic. The oracle replays all
@@ -475,7 +470,7 @@ def label_propagation(edges: DataFrame, n_iter: int = 4) -> DataFrame:
     [NOT IN REFERENCE — executor.py has no graph surface.]"""
     if not (1 <= n_iter <= 50):
         raise ValueError(f"n_iter must be in [1, 50], got {n_iter}")
-    deg, adj = _adjacency(edges)
+    deg, adj, _ = _adjacency(edges)
     labels = deg.select("node", F.col("node").alias("label"))
     # (count desc, label asc) == min of the (-count, label) struct: only
     # the COUNT (always numeric) is negated, so the rule works for any
@@ -484,21 +479,16 @@ def label_propagation(edges: DataFrame, n_iter: int = 4) -> DataFrame:
     pick = F.min_by(
         F.col("label"), F.struct((-F.col("__c")).alias("__nc"), F.col("label"))
     )
-    for it in range(n_iter):
-        # r17: shuffle_hash hint on the node-sized labels side — same
-        # rationale and A/B as pagerank's loop (wall −21% vs the
-        # per-round broadcast AQE picks locally; broadcast is impossible
-        # for billion-node label state and SMJ pays two per-round sorts)
+
+    def step(joined: DataFrame) -> DataFrame:
         votes = (
-            adj.join(labels.hint("shuffle_hash"), "node")
-            .select(F.explode("__dsts").alias("node"), "label")
+            joined.select(F.explode("__dsts").alias("node"), "label")
             .groupBy("node", "label")
             .agg(F.count(F.lit(1)).alias("__c"))
         )
-        labels = votes.groupBy("node").agg(pick.alias("label"))
-        if (it + 1) % CHECKPOINT_WINDOW == 0 and (it + 1) < n_iter:
-            labels = cache.materialize(labels)
-    return labels
+        return votes.groupBy("node").agg(pick.alias("label"))
+
+    return _supersteps(adj, labels, n_iter, step)
 
 
 def oracle_label_propagation_sql(n_iter: int = 4) -> str:
@@ -629,9 +619,11 @@ def bfs_hop_distances(
 
     100 TB shape: per hop ONE equi-join of the frontier against the
     symmetric edge list (shuffle on node key) + one anti-join against
-    the visited set, then an eager localCheckpoint so plan depth stays
+    the visited set, then an eager checkpoint so plan depth stays
     constant (the Pregel-superstep pattern shared with pagerank / CC /
-    BPE). State between hops is the visited (node, dist) set — at most
+    BPE). That checkpoint job also counts the new frontier
+    (cache.materialize_observed); an empty frontier ends the loop before
+    max_hops. State between hops is the visited (node, dist) set — at most
     one row per reached node. Bounded hops is the honest contract at
     scale: an unbounded all-pairs BFS is a different (and quadratic)
     problem; bounded neighborhoods are what feature pipelines actually
@@ -655,16 +647,15 @@ def bfs_hop_distances(
     )
     frontier = visited
     for h in range(1, max_hops + 1):
-        nxt = cache.materialize(
+        nxt, seen = cache.materialize_observed(
             frontier.join(sym, frontier["node"] == sym["u"])
             .select(F.col("v").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
-            .withColumn("dist", F.lit(h).cast("int"))
+            .withColumn("dist", F.lit(h).cast("int")),
+            n=F.count(F.lit(1)),
         )
-        # bounded driver scalar — the same convergence probe every
-        # iterate-until-fixpoint operator here uses
-        if nxt.limit(1).count() == 0:
+        if seen.n == 0:
             break
         visited = cache.materialize(visited.unionByName(nxt))
         frontier = nxt
@@ -741,10 +732,12 @@ def sssp_weighted(
     100 TB shape: per hop ONE equi-join of the improved frontier against
     the symmetric weighted edge list + one grouped min + one join
     against the running best, each checkpointed so plan depth stays
-    constant (the Pregel-superstep pattern of pagerank/CC/BFS/BPE).
-    State between hops is one (node, cost) row per reached node. The
-    hop bound is the honest scale contract, as with BFS. [NOT IN
-    REFERENCE — executor.py has no graph surface.]"""
+    constant (the Pregel-superstep pattern of pagerank/CC/BFS/BPE). The
+    improved frontier's checkpoint job also counts it; a round that
+    improves nothing ends the loop before max_hops. State between hops
+    is one (node, cost) row per reached node. The hop bound is the
+    honest scale contract, as with BFS. [NOT IN REFERENCE — executor.py
+    has no graph surface.]"""
     if not (1 <= max_hops <= 20):
         raise ValueError(f"max_hops must be in [1, 20], got {max_hops}")
     sym = cache.materialize(
@@ -778,13 +771,13 @@ def sssp_weighted(
             .agg(F.min("cost").alias("cost"))
         )
         old = best.select("node", F.col("cost").alias("__old"))
-        improved = cache.materialize(
+        improved, seen = cache.materialize_observed(
             cand.join(old, "node", "left")
             .filter(F.col("__old").isNull() | (F.col("cost") < F.col("__old")))
-            .select("node", "cost")
+            .select("node", "cost"),
+            n=F.count(F.lit(1)),
         )
-        # bounded driver scalar — the module's standard convergence probe
-        if improved.limit(1).count() == 0:
+        if seen.n == 0:
             break
         best = cache.materialize(
             best.unionByName(improved)
@@ -1026,9 +1019,10 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 8) -> DataFrame:
     sf0.1 (registered row, same session): ~4.6-5.0 s -> ~3.5-4.1 s.
 
     The removed frontier (one id per peeled node) is broadcast into the
-    loss semi-join, so the edge list never shuffles there, and an
-    isEmpty() probe on the node-sized survivor state ends the loop at
-    the fixpoint.
+    loss semi-join, so the edge list never shuffles there. Each survivor
+    checkpoint job also counts the survivors below k
+    (cache.materialize_observed); a count of 0 is the fixpoint and ends
+    the loop before max_rounds.
     [NOT IN REFERENCE — executor.py has no graph surface.]"""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -1048,14 +1042,15 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 8) -> DataFrame:
         .distinct()
     )
     # (node, surviving-degree) state; one edge-sized groupBy, ONCE.
-    surv = cache.materialize(
-        sym.groupBy("a")
-        .agg(F.count(F.lit(1)).cast("long").alias("__d"))
+    below_k = F.count_if(F.col("__d") < k)
+    surv, seen = cache.materialize_observed(
+        sym.groupBy("a").agg(F.count(F.lit(1)).cast("long").alias("__d")),
+        below_k=below_k,
     )
     for _ in range(max_rounds):
-        removed = surv.filter(F.col("__d") < k).select(F.col("a").alias("b"))
-        if removed.isEmpty():
+        if seen.below_k == 0:
             break
+        removed = surv.filter(F.col("__d") < k).select(F.col("a").alias("b"))
         # edges whose far endpoint was just removed, counted per near
         # endpoint — the only edge-sized touch in the round, and its
         # shuffle carries one row per (survivor, lost-edge) only
@@ -1064,7 +1059,7 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 8) -> DataFrame:
             .groupBy("a")
             .agg(F.count(F.lit(1)).cast("long").alias("__l"))
         )
-        surv = cache.materialize(
+        surv, seen = cache.materialize_observed(
             surv.filter(F.col("__d") >= k)
             .join(loss, "a", "left")
             .select(
@@ -1072,7 +1067,8 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 8) -> DataFrame:
                 (F.col("__d") - F.coalesce(F.col("__l"), F.lit(0).cast("long")))
                 .cast("long")
                 .alias("__d"),
-            )
+            ),
+            below_k=below_k,
         )
     # a survivor whose every neighbor peeled has no surviving edge — the
     # induced-subgraph recount form had no row for it; drop it here too

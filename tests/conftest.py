@@ -48,3 +48,17 @@ def registry_builds(spark, sf_dir) -> dict[str, tuple[str, list[str]]]:
         df = fn(spark, sf_dir)
         builds[name] = (plans.physical_plan(df, "simple"), _driver_unsafe_output_cols(df))
     return builds
+
+
+@pytest.fixture(scope="session")
+def group_job_ids(spark):
+    """``fn(group) -> [job id]`` for the jobs run under a job group, read
+    after the listener bus has delivered every event posted so far (the
+    status tracker learns of a job from that bus)."""
+    sc = spark.sparkContext
+
+    def job_ids(group: str) -> list[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return job_ids

@@ -106,9 +106,20 @@ def test_delete_ids_enter_the_plan_as_a_local_relation(spark, engine):
     assert "LocalTableScan" in plan, plan
 
 
-def test_delete_empty_list_is_a_noop(spark, engine):
+def test_delete_empty_list_is_a_noop(spark, engine, group_job_ids):
+    """An empty delete changes nothing and is free: no lineage
+    checkpoint, no accounting aggregate, no Spark job at all."""
+    import uuid
+
     before = engine.status()
-    engine.delete([])
+    sc = spark.sparkContext
+    group = f"delete-empty-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        engine.delete([])
+    finally:
+        sc._jsc.clearJobGroup()
+    assert group_job_ids(group) == []
     assert engine.status() == before
 
 

@@ -732,3 +732,107 @@ def test_kcore_delta_peeling_matches_synchronous_recount_every_round(spark):
         got = {r.node: r.core_degree for r in rows}
         assert got == want, max_rounds
         assert all(r.converged == want_conv for r in rows), max_rounds
+
+
+# -- stop counts ride the checkpoint job ---------------------------------------
+
+
+def _jobs_outside_materialize(spark, monkeypatch, group_job_ids, build):
+    """Run ``build()`` (DataFrame construction only, no action) with every
+    cache.materialize call under a job group of its own. Returns (job ids
+    the build ran OUTSIDE any materialization, number of materializations)."""
+    import uuid
+
+    from executor_u1mindexer_spark import cache
+
+    sc = spark.sparkContext
+    outer = f"build-{uuid.uuid4().hex}"
+    inner_groups: list[str] = []
+    materialize = cache.materialize
+
+    def grouped(df):
+        g = f"{outer}-m{len(inner_groups)}"
+        inner_groups.append(g)
+        sc.setJobGroup(g, g)
+        try:
+            return materialize(df)
+        finally:
+            sc.setJobGroup(outer, outer)
+
+    monkeypatch.setattr(cache, "materialize", grouped)
+    sc.setJobGroup(outer, outer)
+    try:
+        build()
+    finally:
+        sc._jsc.clearJobGroup()
+        monkeypatch.undo()
+    assert all(group_job_ids(g) for g in inner_groups)  # each one ran
+    return group_job_ids(outer), len(inner_groups)
+
+
+_CASCADE = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 6)]  # 3 peel rounds
+_PATH = [(i, i + 1) for i in range(5)]  # 5 hops from node 0
+
+
+@pytest.mark.parametrize(
+    "build, min_materializations",
+    [
+        # sym + initial state + one survivor checkpoint per peel round
+        pytest.param(
+            lambda s: G.kcore(_edges_df(s, _CASCADE), 2, max_rounds=8), 5, id="kcore"
+        ),
+        # sym + visited + (frontier, visited) per hop; stops on an empty
+        # frontier before the hop bound
+        pytest.param(
+            lambda s: G.bfs_hop_distances(
+                _edges_df(s, _PATH), s.createDataFrame([(0,)], "node long"), 8
+            ),
+            7,
+            id="bfs",
+        ),
+        pytest.param(
+            lambda s: G.sssp_weighted(
+                s.createDataFrame([(a, b, 1) for a, b in _PATH], "src long, dst long, w long"),
+                s.createDataFrame([(0,)], "node long"),
+                8,
+            ),
+            7,
+            id="sssp",
+        ),
+        # adj + deg + the ranks at rounds 8 and 16
+        pytest.param(lambda s: G.pagerank(_edges_df(s, _PATH), 17), 4, id="pagerank"),
+    ],
+)
+def test_iterative_build_runs_jobs_only_inside_materializations(
+    spark, monkeypatch, group_job_ids, build, min_materializations
+):
+    """A loop's stop count (frontier size, survivors below k, node count)
+    is observed by the checkpoint job that wrote the frame, so building
+    the operator's DataFrame runs no Spark job of its own: no isEmpty,
+    limit(1).count() or count() probe over a frame just materialized."""
+    outside, n_mat = _jobs_outside_materialize(
+        spark, monkeypatch, group_job_ids, lambda: build(spark)
+    )
+    assert n_mat >= min_materializations, n_mat
+    assert outside == [], outside
+
+
+def test_connected_components_probes_only_at_the_fixpoint(
+    spark, monkeypatch, group_job_ids
+):
+    """CC's per-round signature rides each contraction checkpoint; the one
+    job sequence outside a materialization is the exceptAll confirmation
+    at the candidate fixpoint. So the jobs outside materializations do not
+    grow with the number of rounds: an 8-hop and a 120-hop chain differ
+    in rounds but not in probe jobs."""
+    seen = []
+    for n in (8, 120):
+        chain = _edges_df(spark, [(i, i + 1) for i in range(n)])
+        outside, n_mat = _jobs_outside_materialize(
+            spark, monkeypatch, group_job_ids,
+            lambda: G.connected_components(chain),
+        )
+        seen.append((len(outside), n_mat))
+    (short_jobs, short_mat), (long_jobs, long_mat) = seen
+    assert long_mat > short_mat >= 3, seen
+    assert short_jobs == long_jobs <= 3, seen
