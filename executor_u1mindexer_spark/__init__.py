@@ -21,7 +21,7 @@ Subpackages:
   operators/  DataFrame → DataFrame operator builders (knn, maintenance,
               dedup, similarity, relational, events, multimodal)
   sources/    parquet/csv/json state IO (dump/load equivalents)
-  plans/      plan-inspection helpers (explain, broadcast/pushdown asserts)
+  plans/      plan inspection: the physical plan as node records for asserts
   streaming/  Structured Streaming variants of the event operators
 """
 

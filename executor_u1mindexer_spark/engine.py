@@ -21,7 +21,8 @@ Differences by design (Spark-first, north star):
   keep their slots, hnswlib element-count semantics) stays under the cap
   and returns the overflow as a `rejected` warn-set DataFrame instead of
   reproducing the hnswlib raise;
-- ids may be any orderable type (the reference used strings).
+- ids are integers (the reference used strings): index, update and
+  delete reject any other id type with a ValueError at the call.
 """
 
 from __future__ import annotations
@@ -270,6 +271,7 @@ class U1MIndexerSpark:
         rejection decision to be consumable immediately, not a lazy plan
         whose admission cutoff would shift under later re-planning."""
         docs = traverse.traverse_flat(docs, traversal_paths, id_col=id_col)
+        M.check_integer_ids(docs, id_col)
         self._before_mutation()
         batch = self._as_batch(docs, id_col, vec_col)
         rejected = None
@@ -335,6 +337,7 @@ class U1MIndexerSpark:
         store: payload changes go through index(). We treat the reference
         behavior as a bug rather than semantics to reproduce."""
         docs = traverse.traverse_flat(docs, traversal_paths, id_col=id_col)
+        M.check_integer_ids(docs, id_col)
         self._before_mutation()
         batch = self._as_batch(docs, id_col, vec_col)
         skipped = M.skipped_updates(self._vectors, batch)
@@ -355,6 +358,8 @@ class U1MIndexerSpark:
         returns at once: no checkpoint, no accounting job, no dirty mark."""
         if not isinstance(ids, DataFrame) and len(ids) == 0:
             return
+        if isinstance(ids, DataFrame):
+            M.check_integer_ids(ids, M.ID)
         ids_df = ids if isinstance(ids, DataFrame) else M.id_frame(self.spark, ids)
         self._before_mutation()
         # ONE aggregate job against the state computes everything delete-time

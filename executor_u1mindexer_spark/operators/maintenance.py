@@ -37,6 +37,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from executor_u1mindexer_spark import cache
 
@@ -307,11 +308,26 @@ def id_frame(spark: SparkSession, ids: Sequence[int], col: str = ID) -> DataFram
     every plan that reads it starts Python workers to re-run the list — a
     delete list is read by the delete's own accounting job, the docstore
     anti-join, the next status, search and checkpoint. An empty list is a
-    literal-false filter, which Catalyst folds to an empty relation."""
-    arr = np.asarray(ids, dtype=np.int64)
+    literal-false filter, which Catalyst folds to an empty relation. A
+    list of anything but integers raises ValueError naming its type."""
+    arr = np.asarray(ids)
     if arr.size == 0:
         return spark.sql(f"SELECT CAST(NULL AS BIGINT) AS {col}").where(F.lit(False))
-    return spark.createDataFrame(pd.DataFrame({col: arr}), f"{col} long")
+    if arr.dtype.kind not in "iu":
+        raise ValueError(f"id column {col!r} has type {arr.dtype.name}; ids must be integers")
+    return spark.createDataFrame(pd.DataFrame({col: arr.astype(np.int64)}), f"{col} long")
+
+
+def check_integer_ids(df: DataFrame, col: str) -> None:
+    """Raise ValueError unless ``df[col]`` is an integer column. Reads the
+    schema only, so it runs no Spark job: state ids are BIGINT, and a
+    string id column would otherwise fail later, deep in a search or the
+    next upsert, as a cast error."""
+    dtype = df.schema[col].dataType
+    if not isinstance(dtype, IntegralType):
+        raise ValueError(
+            f"id column {col!r} has type {dtype.simpleString()}; ids must be integers"
+        )
 
 
 def delete_by_ids(state: DataFrame, ids: DataFrame | Sequence[int]) -> DataFrame:

@@ -123,13 +123,15 @@ def _knn_batch(spark: SparkSession, sf_dir: str, nq: int) -> DataFrame:
 
     The two impls are bit-identical (equivalence pinned in tests/test_knn.py)
     so the choice is pure routing: the arrow kernel (operators/knn.
-    _arrow_scored) has ~0.5 ms/query marginal batched cost vs ~12 ms/query
-    for the interpreted per-pair HOF fold, but pays a fixed pack/broadcast
-    cost per batch that dominates tiny batches. Measured at sf0.1/local[32]
-    (best-of-5, uncached read, r04): batch1 0.55s catalyst vs 0.56s arrow,
-    batch8 0.50 vs 0.52, batch32 0.70 vs 0.49 — crossover ~16 queries, so
-    batches below ARROW_MIN_BATCH route catalyst (zero Python in the plan,
-    same story as the flagship knn_search_cosine), larger route arrow."""
+    _arrow_scored) has a small marginal cost per query where the
+    interpreted per-pair HOF fold grows with every query, but pays a fixed
+    pack/broadcast cost per batch that dominates tiny batches. Measured on
+    a 4-core Xeon, local[4], k=20, best of 3 after a warm-up, toPandas:
+    sf0.1 embeddings at batch 8 read 0.63 s catalyst vs 0.69 s arrow,
+    batch 64 1.43 vs 0.64, batch 512 8.72 vs 1.05. Each impl wins its own
+    range, so batches below ARROW_MIN_BATCH route catalyst (zero Python in
+    the plan, same story as the flagship knn_search_cosine), larger route
+    arrow."""
     emb = tables.load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < nq).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_embedding")

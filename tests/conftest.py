@@ -32,9 +32,9 @@ def sf_correct_dir() -> str:
 
 
 @pytest.fixture(scope="session")
-def registry_builds(spark, sf_dir) -> dict[str, tuple[str, list[str]]]:
+def registry_builds(spark, sf_dir) -> dict[str, tuple[list, list[str]]]:
     """Build every registered query's DataFrame ONCE at sf0.001 and keep
-    what the registry-wide lints check: ``{name: (physical plan text,
+    what the registry-wide lints check: ``{name: (plans.nodes,
     driver-unsafe output columns)}``. The plan-shape lint in
     ``test_plans.py`` and the output-schema lint in
     ``test_registry_lint.py`` both read this, so the 216 builds are paid
@@ -43,10 +43,10 @@ def registry_builds(spark, sf_dir) -> dict[str, tuple[str, list[str]]]:
     from executor_u1mindexer_spark import plans
     from tools.oracle_check import _driver_unsafe_output_cols
 
-    builds: dict[str, tuple[str, list[str]]] = {}
+    builds: dict[str, tuple[list, list[str]]] = {}
     for name, fn in entrymod.queries().items():
         df = fn(spark, sf_dir)
-        builds[name] = (plans.physical_plan(df, "simple"), _driver_unsafe_output_cols(df))
+        builds[name] = (plans.nodes(df), _driver_unsafe_output_cols(df))
     return builds
 
 

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from executor_u1mindexer_spark import tables
+from executor_u1mindexer_spark import plans, tables
 from executor_u1mindexer_spark.operators import dedup as D
 from executor_u1mindexer_spark.operators import knn, multimodal as MM
 from executor_u1mindexer_spark.operators import similarity as S
@@ -200,8 +200,7 @@ def test_fit_sample_bounded_and_deterministic(spark):
     b = S.fit_sample(df.repartition(7), "vec_id", cap=50)
     assert sorted(r.vec_id for r in a.collect()) == sorted(r.vec_id for r in b.collect())
     # bounded plan: TakeOrderedAndProject, not a full global sort
-    plan = a._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
+    assert "TakeOrderedAndProject" in [n.name for n in plans.nodes(a)]
 
 
 def test_quantizers_fit_on_bounded_sample(spark, sf_dir):

@@ -101,9 +101,25 @@ def test_delete_ids_enter_the_plan_as_a_local_relation(spark, engine):
     from executor_u1mindexer_spark import plans
 
     engine.delete([0, 1, 31337])
-    plan = plans.physical_plan(engine._vectors, "simple")
+    plan = [n.name for n in plans.nodes(engine._vectors)]
     assert plan.count("Scan ExistingRDD") == 1, plan
     assert "LocalTableScan" in plan, plan
+
+
+def test_non_integer_ids_raise_at_the_call(spark, engine):
+    """State ids are BIGINT: a string id column or id list is rejected
+    with a ValueError naming the column and its type, before any Spark
+    job, instead of failing later as a cast error inside a search."""
+    docs = spark.createDataFrame([("a", [1.0] * 64)], "doc_id string, embedding array<double>")
+    with pytest.raises(ValueError, match="'doc_id' has type string"):
+        engine.index(docs)
+    with pytest.raises(ValueError, match="'doc_id' has type string"):
+        engine.update(docs)
+    with pytest.raises(ValueError, match="'id' has type str"):
+        engine.delete(["a"])
+    with pytest.raises(ValueError, match="'id' has type string"):
+        engine.delete(spark.createDataFrame([("a",)], "id string"))
+    assert engine.status()["count_active"] == 100
 
 
 def test_delete_empty_list_is_a_noop(spark, engine, group_job_ids):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from executor_u1mindexer_spark import plans
 from executor_u1mindexer_spark.operators import graph as G
 
 
@@ -185,11 +186,7 @@ def test_connected_components_plan_depth_constant_across_sizes(spark):
     depths = []
     for n in (8, 120):
         chain = [(i, i + 1) for i in range(n)]
-        plan = (
-            G.connected_components(_edges_df(spark, chain))
-            ._jdf.queryExecution().executedPlan().treeString()
-        )
-        depths.append(len(plan.splitlines()))
+        depths.append(len(plans.nodes(G.connected_components(_edges_df(spark, chain)))))
     assert max(depths) - min(depths) <= 2, depths
 
 
@@ -203,11 +200,7 @@ def test_pagerank_plan_depth_bounded_by_checkpoint_window(spark):
     e = _edges_df(spark, edges)
 
     def depth(n_iter):
-        plan = (
-            G.pagerank(e, n_iter)
-            ._jdf.queryExecution().executedPlan().treeString()
-        )
-        return len(plan.splitlines())
+        return len(plans.nodes(G.pagerank(e, n_iter)))
 
     # CHECKPOINT_WINDOW (8): iteration 9 sits one past the truncation at
     # 8, so its residual plan is exactly a single round's — same as n_iter=1
@@ -231,8 +224,8 @@ def test_pagerank_adjacency_exchange_reused_within_window(spark):
     try:
         df = G.pagerank(e, 5)
         df.collect()
-        plan = df._jdf.queryExecution().executedPlan().treeString()
-        assert "isFinalPlan=true" in plan
+        assert df._jdf.queryExecution().executedPlan().isFinalPlan()
+        plan = [n.name for n in plans.nodes(df)]
         # r16 loop shape: the ONE loop-invariant table (adj, carrying
         # __outdeg in-row) is re-read once per in-window iteration — the
         # deg share-join and dangling-join re-reads no longer exist at
@@ -310,11 +303,7 @@ def test_label_propagation_plan_depth_bounded_by_checkpoint_window(spark):
     e = _edges_df(spark, edges)
 
     def depth(n_iter):
-        plan = (
-            G.label_propagation(e, n_iter)
-            ._jdf.queryExecution().executedPlan().treeString()
-        )
-        return len(plan.splitlines())
+        return len(plans.nodes(G.label_propagation(e, n_iter)))
 
     assert abs(depth(9) - depth(1)) <= 2
     assert depth(4) < 4 * depth(1)

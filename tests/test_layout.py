@@ -57,11 +57,11 @@ def test_rank_space_map_no_single_partition_window(spark, sf_dir):
     from executor_u1mindexer_spark import plans
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    assert not plans.window_over_single_partition(
-        L._rank_space_maps(li, ["l_partkey"])["l_partkey"]
+    assert not plans.unpartitioned_window(
+        plans.nodes(L._rank_space_maps(li, ["l_partkey"])["l_partkey"])
     )
-    assert not plans.window_over_single_partition(
-        L.zorder_layout_stats(li, "l_partkey", "l_suppkey")
+    assert not plans.unpartitioned_window(
+        plans.nodes(L.zorder_layout_stats(li, "l_partkey", "l_suppkey"))
     )
 
 

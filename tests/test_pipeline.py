@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from executor_u1mindexer_spark import tables
+from executor_u1mindexer_spark import plans, tables
 from executor_u1mindexer_spark.operators import pipeline as P
 
 
@@ -187,30 +187,14 @@ def test_pps_systematic_no_single_partition_window(spark):
     df = spark.createDataFrame(
         [(i, i % 7 + 1) for i in range(500)], "doc_id long, n_chars int"
     )
-    plan = (
-        pps_systematic(df, key="doc_id", weight_col="n_chars", k=20)
-        ._jdf.queryExecution().executedPlan().treeString()
-    )
+    ns = plans.nodes(pps_systematic(df, key="doc_id", weight_col="n_chars", k=20))
+    ws = [n for n in ns if n.name == "Window"]
     # the only unpartitioned window is over the <= n_buckets totals
-    # (sum(__bt)); the per-row cumsum must be partitioned by bucket:
-    # windowspecdefinition(__b#.., __k#.. ASC, ...) carries the
-    # partition key as its first argument
-    import re
-
-    cum_lines = [
-        ln for ln in plan.splitlines()
-        if "Window" in ln and "__local_cum" in ln
-    ]
-    assert cum_lines and all(
-        re.search(r"windowspecdefinition\(__b#\d+L, __k#", ln)
-        for ln in cum_lines
-    ), cum_lines
-    unpartitioned = [
-        ln for ln in plan.splitlines()
-        if "Window" in ln
-        and not re.search(r"windowspecdefinition\(__b#\d+L, ", ln)
-    ]
-    assert all("__bt" in ln for ln in unpartitioned), unpartitioned
+    # (sum(__bt)); the per-row cumsum must be partitioned by bucket and
+    # ordered by key
+    cum = [w for w in ws if "__local_cum" in w.terms()]
+    assert cum and all(w.keys == ("__b",) and "__k" in w.terms() for w in cum), cum
+    assert all("__bt" in w.terms() for w in ws if w.keys != ("__b",)), ws
 
 
 def test_rolling_zscore_flags_spike_not_constant(spark):
