@@ -55,16 +55,16 @@ DOCSTORE = "docstore"
 DS_BATCH = "__ds_batch"
 DOCSTORE_COMPACT_EVERY = 16
 
-# Iterated mutations MUST truncate lineage every batch: one upsert embeds
-# the previous state's LOGICAL plan ~16 times (kept/updated/inserted/anti
-# branches, the prior-count aggregate, and the dense-rank key pipeline), so
-# N stacked batches give a ~16^N-node logical plan — measured 55k plan lines
-# and 40s of driver-side analysis after just 3 batches. persist() alone does
-# not help: the cache dedupes execution, not analysis. localCheckpoint
-# (eager) collapses the plan to a single LogicalRDD at the cost of one
-# materialization per batch — the same eager per-batch processing the
-# reference endpoints do. On a real cluster a durable dump()/load() snapshot
-# is the robust form (localCheckpoint does not survive executor loss).
+# Iterated mutations truncate lineage every batch. An upsert's plan embeds
+# the previous state once (the kept/updated left join; insert ranks are
+# classified on the driver), so N untruncated batches give an N-deep plan
+# that every read and every next known-id semi join re-executes, and each
+# union of lanes adds partitions. localCheckpoint (eager) collapses the
+# plan to a single LogicalRDD at the cost of one materialization per batch
+# — the same eager per-batch processing the reference endpoints do — and
+# that job also reads the engine's counters (see _before_mutation). On a
+# real cluster a durable dump()/load() snapshot is the robust form
+# (localCheckpoint does not survive executor loss).
 
 
 class U1MIndexerSpark:
@@ -92,22 +92,20 @@ class U1MIndexerSpark:
             raise ValueError(f"max_elements must be >= 0, got {max_elements}")
         self.max_elements = max_elements  # None = unbounded (the default)
         self.workspace = workspace
-        self._vectors = self._empty_vectors()
-        self._docstore: DataFrame | None = None
-        self._ds_pending = 0  # appended batches since the last compaction
-        self._ds_layers = 0  # delete anti-join layers since the last checkpoint
-        self._ds_batch_no = 0
-        self._dirty = False  # vector lineage grew since the last checkpoint
-        self._tombstones = 0  # deleted ids, counted by status()
-        self._slot_debt = 0  # freed top slots, charged by capacity admission
+        self.clear()
         if workspace and os.path.exists(os.path.join(workspace, VECTORS)):
             self._vectors = M.load(spark, os.path.join(workspace, VECTORS))
+            seen = self._vectors.agg(
+                F.count(F.lit(1)).alias("rows"), M.slot_mark().alias("mark")
+            ).collect()[0]
+            self._rows, self._mark = seen["rows"], seen["mark"]
             doc_path = os.path.join(workspace, DOCSTORE)
             if os.path.exists(doc_path):
                 # a dumped docstore is already compacted; batch 0 = loaded
                 self._docstore = M.load(spark, doc_path).withColumn(
                     DS_BATCH, F.lit(0)
                 )
+                self._ds_rows = self._docstore.count()
 
     # -- helpers ---------------------------------------------------------
 
@@ -115,11 +113,10 @@ class U1MIndexerSpark:
         """Known-empty state as a one-row projection under WHERE FALSE, NOT
         `createDataFrame([])`: the latter is an RDD-backed relation whose
         emptiness Catalyst cannot see, so a fresh engine's first upsert
-        would drag the full kept/updated/anti join machinery through the
-        plan (measured: a 166-node physical plan for a first-batch ingest).
-        A literal false filter folds to an empty LocalRelation and
+        would drag the kept/updated join machinery through the plan. A
+        literal false filter folds to an empty LocalRelation and
         PropagateEmptyRelation then prunes the state-side branches away —
-        the first batch compiles to just dedup + dense-rank + insert."""
+        the first batch compiles to just dedup + the insert lane."""
         return self.spark.sql(
             f"""SELECT CAST(NULL AS BIGINT) AS {M.ID},
                        CAST(NULL AS BIGINT) AS {M.IID},
@@ -133,7 +130,9 @@ class U1MIndexerSpark:
 
         Dim validation (executor.py:144-148) is the LAZY dim_guard fused
         into the emb column: it rides the batch into the pass that
-        materializes it (dump/search), so ingest reads the batch ONCE —
+        materializes it (dump/search), so ingest reads the batch's vectors
+        ONCE (the key read of index()/update() touches only id and seq,
+        except on a capacity-bounded index(), see there) —
         the eager validate-then-ingest shape would scan a 100 TB batch
         twice. Error timing divergence documented at knn.dim_guard."""
         seq = F.col("seq") if "seq" in docs.columns else F.col(id_col)
@@ -146,20 +145,35 @@ class U1MIndexerSpark:
     def _before_mutation(self) -> None:
         """Truncate pending VECTOR mutation lineage (see module note)
         BEFORE stacking another level: coalesce caps the partition fan-out
-        (each upsert unions 3 branches whose broadcast joins preserve child
-        partitioning — partitions would multiply ~3x per batch), then an
+        (each upsert unions 2 branches whose broadcast joins preserve child
+        partitioning — partitions would multiply per batch), then an
         eager localCheckpoint collapses the logical plan to one LogicalRDD
         so plan analysis stays O(1) per batch. Deferred to the NEXT
         mutation so the common one-shot flow (index once, then dump/search)
         pays no extra materialization. The docstore is NOT checkpointed
         here: its append-only lineage grows one externally-rooted union per
-        batch (linear, not the vectors' ~16x self-embedding), and the
-        compaction points own its truncation (see module note)."""
+        batch, and the compaction points own its truncation (see module
+        note).
+
+        The checkpoint job also observes the engine counters (live rows
+        and the next slot), so no mutation runs an aggregate of its own. A
+        delete is the only mutation that lowers either: its drop in rows is
+        the ids that hit (tombstones), its drop in mark the freed top
+        slots. The slot debt keeps those counted for capacity admission:
+        admission works off the surviving mark (see index()), so without
+        the debt a delete of the highest-slot row would silently refund its
+        slot — hnswlib never refunds (element_count keeps tombstones,
+        executor.py:252). mark + debt = slots ever allocated, exactly."""
         if not self._dirty:
             return
         self._dirty = False
         n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        self._vectors = cache.materialize(self._vectors.coalesce(n))
+        self._vectors, seen = cache.materialize_observed(
+            self._vectors.coalesce(n), rows=F.count(F.lit(1)), mark=M.slot_mark()
+        )
+        self._tombstones += max(self._rows - seen.rows, 0)
+        self._slot_debt += max(self._mark - seen.mark, 0)
+        self._rows, self._mark = seen.rows, seen.mark
 
     def _docstore_compact(self) -> None:
         """Collapse the appended batch log to keep-latest-batch per id —
@@ -183,7 +197,10 @@ class U1MIndexerSpark:
                 .drop("__ds_max")
             )
         n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        self._docstore = cache.materialize(ds.coalesce(n))
+        self._docstore, seen = cache.materialize_observed(
+            ds.coalesce(n), rows=F.count(F.lit(1))
+        )
+        self._ds_rows = seen.rows
         self._ds_pending = 0
         self._ds_layers = 0
 
@@ -256,38 +273,43 @@ class U1MIndexerSpark:
         (the update()-skipped pattern) rather than reproducing hnswlib's
         add_items raise — callers wanting the hard failure assert the
         set is empty. Rejected ids are also kept out of the doc store.
-        Unbounded engines (the default) return None and pay no extra
-        jobs.
+        Unbounded engines (the default) return None.
 
-        Error-timing divergence (ADVICE r09, deliberate): the eager
-        rejected-set materialization below runs the batch through
-        dedup_latest, so the lazy dim_guard fires AT index() TIME on a
-        capacity-bounded engine — matching the reference's request-time
-        ValueError (hnswlib raises inside add_items, executor.py:151) —
-        while the unbounded path defers the same error to the first
-        dump/search (documented there). The cost is one Spark job per
-        index() call even when nothing is rejected; accepted because the
-        warn-set contract ("callers assert it is empty") requires the
-        rejection decision to be consumable immediately, not a lazy plan
-        whose admission cutoff would shift under later re-planning."""
+        Either way the batch's (id, seq) keys are read once on the driver
+        and the known ids found by one semi join of the state's id column
+        (M.new_ids): new ids take the next slot plus their arrival rank,
+        and capacity admission is a driver-side cut over the same ranks,
+        so the returned warn-set is a local relation, ready at once.
+
+        Error-timing divergence (ADVICE r09, deliberate): on a
+        capacity-bounded engine the key read also evaluates the lazy
+        dim_guard, so a wrong-dim batch raises AT index() TIME — matching
+        the reference's request-time ValueError (hnswlib raises inside
+        add_items, executor.py:151) — while the unbounded path defers the
+        same error to the first dump/search (documented there). The
+        warn-set contract ("callers assert it is empty") makes the
+        rejection decision a request-time one, so its validation is too."""
         docs = traverse.traverse_flat(docs, traversal_paths, id_col=id_col)
         M.check_integer_ids(docs, id_col)
         self._before_mutation()
         batch = self._as_batch(docs, id_col, vec_col)
         rejected = None
         if self.max_elements is not None:
-            # the operator admits against the surviving high-water mark
-            # (next slot = max(internal_id) + 1); subtracting the slot
-            # debt accumulated by deletes of highest-slot rows makes the
-            # admission compare against slots EVER allocated — strict
-            # hnswlib element-count semantics (a delete never refunds
-            # room). Internal ids may renumber into freed top slots, but
-            # two live rows can never collide.
+            # the key read sees only (id, seq): make seq read the guarded
+            # emb column so the read raises on a wrong-dim batch
+            keyed = batch.withColumn(
+                M.SEQ, F.when(V.dim_check(F.col(M.EMB), self.dim), F.col(M.SEQ))
+            )
+            # the operator admits against the surviving high-water mark;
+            # subtracting the slot debt accumulated by deletes of
+            # highest-slot rows makes the admission compare against slots
+            # EVER allocated — strict hnswlib element-count semantics (a
+            # delete never refunds room). Internal ids may renumber into
+            # freed top slots, but two live rows can never collide.
             cap = self.max_elements - self._slot_debt
             new_state, rejected = M.upsert_capacity_bound(
-                self._vectors, batch, max(cap, 0)
+                self._vectors, keyed, max(cap, 0), self._mark
             )
-            rejected = cache.materialize(rejected)
             self._vectors = new_state.select(M.ID, M.IID, M.EMB)
             docs = docs.join(
                 F.broadcast(rejected.withColumnRenamed(M.ID, id_col)),
@@ -295,13 +317,16 @@ class U1MIndexerSpark:
                 how="left_anti",
             )
         else:
-            self._vectors = M.upsert(self._vectors, batch).select(M.ID, M.IID, M.EMB)
+            self._vectors = M.upsert(self._vectors, batch, self._mark).select(
+                M.ID, M.IID, M.EMB
+            )
         self._ds_batch_no += 1
         payload = (
             docs.withColumnRenamed(id_col, M.ID)
             .drop(vec_col)
             .withColumn(DS_BATCH, F.lit(self._ds_batch_no))
         )
+        self._ds_rows = None
         if self._docstore is None:
             self._docstore = payload
         else:
@@ -328,6 +353,8 @@ class U1MIndexerSpark:
         """Re-embed only already-indexed ids (executor.py:170-211); returns
         the skipped-id DataFrame (the reference logs a warning per skip).
         traversal_paths (executor.py:181): 'c' updates the chunk level.
+        The skipped ids are classified on the driver (M.new_ids) and
+        returned as a local relation, so collecting them runs no job.
 
         Known divergence, by design: the reference's /update writes ALL
         traversed docs to its doc store, including ids it just skipped as
@@ -347,51 +374,22 @@ class U1MIndexerSpark:
 
     def delete(self, ids: DataFrame | Sequence[int]) -> None:
         """Remove ids; unknown ids silently ignored (executor.py:213-225).
-        count_indexed keeps counting removed slots via the _tombstones
-        counter that status() adds to the live count; capacity admission
-        additionally carries the freed-top-slot debt (see below). Both
-        counters are driver state scoped to this engine's LIFE: a dump()
-        snapshot is a COMPACTED index (live rows only, same reason
-        status() shows zero tombstones after a workspace reload), so
-        accounting starts fresh on load — the documented divergence from
-        hnswlib's save_index, which persists dead slots. An empty id list
-        returns at once: no checkpoint, no accounting job, no dirty mark."""
+        count_indexed keeps counting removed slots via the tombstones that
+        status() adds to the live count; capacity admission additionally
+        carries the freed-top-slot debt. Both are read from the next
+        checkpoint as the drop in rows and mark (see _before_mutation), so
+        delete itself runs no job. Both are driver state scoped to this
+        engine's LIFE: a dump() snapshot is a COMPACTED index (live rows
+        only, same reason status() shows zero tombstones after a workspace
+        reload), so accounting starts fresh on load — the documented
+        divergence from hnswlib's save_index, which persists dead slots. An
+        empty id list returns at once: no checkpoint, no dirty mark."""
         if not isinstance(ids, DataFrame) and len(ids) == 0:
             return
         if isinstance(ids, DataFrame):
             M.check_integer_ids(ids, M.ID)
         ids_df = ids if isinstance(ids, DataFrame) else M.id_frame(self.spark, ids)
         self._before_mutation()
-        # ONE aggregate job against the state computes everything delete-time
-        # accounting needs: how many ids actually hit, the pre-delete
-        # internal-id mark, and the surviving mark. The gap between the two
-        # marks is recorded as SLOT DEBT: capacity admission works off the
-        # surviving high-water mark (see index()), so without the debt a
-        # delete of the highest-slot row would silently refund its slot —
-        # hnswlib never refunds (element_count keeps tombstones,
-        # executor.py:252). mark + debt = slots ever allocated, exactly.
-        # distinct() before the left join: a repeated id in the delete list
-        # would duplicate its matched state row and inflate n_hit (the old
-        # left_semi shape was naturally immune; a plain left join is not)
-        marked = self._vectors.join(
-            F.broadcast(
-                ids_df.select(M.ID).distinct().withColumn("__del", F.lit(True))
-            ),
-            on=M.ID,
-            how="left",
-        )
-        row = marked.agg(
-            F.count(F.when(F.col("__del"), F.lit(1))).alias("n_hit"),
-            F.max(M.IID).alias("mark_all"),
-            F.max(F.when(F.col("__del").isNull(), F.col(M.IID))).alias("mark_surv"),
-        ).collect()[0]
-        n_hit = row["n_hit"]
-        if n_hit:
-            freed_top = (int(row["mark_all"]) + 1) - (
-                int(row["mark_surv"]) + 1 if row["mark_surv"] is not None else 0
-            )
-            self._slot_debt += max(freed_top, 0)
-        self._tombstones += n_hit
         self._vectors = M.delete_by_ids(self._vectors, ids_df)
         if self._docstore is not None:
             # eager anti-join over the appended log: drops every copy of
@@ -402,6 +400,7 @@ class U1MIndexerSpark:
             self._docstore = self._docstore.join(
                 F.broadcast(ids_df.select(M.ID)), on=M.ID, how="left_anti"
             )
+            self._ds_rows = None
             self._ds_layers += 1
             if self._ds_layers >= DOCSTORE_COMPACT_EVERY:
                 self._docstore_compact()
@@ -419,30 +418,40 @@ class U1MIndexerSpark:
     def clear(self) -> None:
         """Drop everything, keep config (executor.py:238-244)."""
         self._vectors = self._empty_vectors()
-        self._docstore = None
-        self._ds_pending = 0
-        self._ds_layers = 0
+        self._docstore: DataFrame | None = None
+        self._ds_pending = 0  # appended batches since the last compaction
+        self._ds_layers = 0  # delete anti-join layers since the last checkpoint
         self._ds_batch_no = 0
-        self._tombstones = 0
-        self._slot_debt = 0
-        self._dirty = False
+        self._ds_rows: int | None = None  # docstore rows, once compacted
+        self._dirty = False  # vector lineage grew since the last checkpoint
+        # Counters of the vectors as of the last checkpoint (or load), read
+        # from that checkpoint's own job (see _before_mutation):
+        self._rows = 0  # live rows
+        self._mark = 0  # next slot: max(internal_id) + 1, the insert base
+        self._tombstones = 0  # deleted ids, counted by status()
+        self._slot_debt = 0  # freed top slots, charged by capacity admission
 
     def status(self) -> dict[str, int]:
         """Counts (executor.py:246-257): count_indexed includes tombstoned
-        slots, matching hnswlib element_count semantics. Both counts run in
-        ONE Spark job (the scalar aggregates cross-join into a single 1-row
-        plan) instead of two separate collects."""
-        tombstones = self._tombstones
-        vec_n = self._vectors.agg(F.count(F.lit(1)).alias("n_vec"))
+        slots, matching hnswlib element_count semantics.
+
+        The counters come from checkpoints: the vectors' last one (see
+        _before_mutation) and the docstore compaction that this read point
+        runs. Pending vector lineage is counted, not checkpointed: a count
+        prunes the emb column, so a pending wrong-dim batch does not raise
+        here (the guard is enforced where vectors are materialized). A
+        pending delete's tombstones are the drop in that count."""
+        active = self._rows
+        if self._dirty:
+            active = self._vectors.agg(F.count(F.lit(1))).collect()[0][0]
+        tombstones = self._tombstones + max(self._rows - active, 0)
         ds = self._docstore_view()
-        if ds is not None:
-            row = vec_n.crossJoin(
-                ds.agg(F.count(F.lit(1)).alias("n_doc"))
-            ).collect()[0]
-            active, dam = row["n_vec"], row["n_doc"]
-        else:
-            active = vec_n.collect()[0]["n_vec"]
+        if ds is None:
             dam = active
+        elif self._ds_rows is None:  # a lone first batch: never compacted
+            dam = ds.count()
+        else:
+            dam = self._ds_rows
         return {
             "count_indexed": active + tombstones,
             "count_active": active,

@@ -16,14 +16,16 @@ Reference surface (executor.py):
 
 Spark-first state model: the "index" is a DataFrame with columns
 (id, internal_id, emb) — internal_id reproduces the reference's dense
-insertion-order ints as a global rank over an explicit arrival ordering
-(dense_rank_by: a range exchange plus per-partition offsets, so the rank
-never depends on how the input happened to be partitioned).
+insertion-order ints. A fixture state ranks its ids with dense_rank_by (a
+range exchange plus per-partition offsets, so the rank never depends on
+how the input happened to be partitioned); an upsert ranks only the new
+ids of its batch, on the driver (new_ids), from a slot base the caller
+supplies.
 
 Scale notes (100 TB): the state side is the big side and is never
-shuffled by these builders except where a join requires it; maintenance
-batches are small → explicitly broadcast. Dense-id assignment for inserts
-ranks the (small) batch only, not the state. Id lists built on the driver
+shuffled by these builders; maintenance batches are small → explicitly
+broadcast. Insert ranks read the batch's (id, seq) keys only, never the
+state beyond a semi join of its id column. Id lists built on the driver
 enter plans as Arrow local relations (id_frame), never as parallelized
 Python RDDs.
 """
@@ -35,7 +37,7 @@ from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
@@ -151,7 +153,57 @@ def dedup_latest(batch: DataFrame, id_col: str = ID, seq_col: str = SEQ) -> Data
     return agged.select(id_col, *[F.col(f"__kept.{c}").alias(c) for c in others], seq_col)
 
 
-def upsert(state: DataFrame, batch: DataFrame) -> DataFrame:
+def slot_mark() -> Column:
+    """The next free internal id as an aggregate: max(internal_id) + 1, or
+    0 on an empty state. This is the slot base of inserts (see upsert)."""
+    return F.coalesce(F.max(IID) + 1, F.lit(0)).cast("long")
+
+
+def next_slot_of(state: DataFrame) -> int:
+    """``slot_mark()`` of ``state`` on the driver (one scalar aggregate)."""
+    return int(state.agg(slot_mark()).collect()[0][0])
+
+
+def new_ids(state: DataFrame, batch: DataFrame) -> np.ndarray:
+    """The batch's ids that ``state`` does not hold, deduplicated and in
+    arrival order — the one insert-ranking path: an inserted id takes the
+    slot base plus its position here as its internal_id.
+
+    Classified on the driver in two O(batch) reads, with no shuffle:
+    - read the batch's (id, seq) keys and keep the latest seq per id
+      (dedup_latest's keep-latest rule);
+    - find the known ids with one semi join of the state's id column
+      against those ids as a broadcast local relation (``id_frame``).
+
+    Arrival order is seq, ties broken by id. A null id matches no state
+    row and cannot be ranked, so it is never inserted. Both reads are
+    plain collects: a batch built from a driver frame is a local
+    relation, which Spark collects without a job."""
+    spark = batch.sparkSession
+    keys = batch.select(ID, SEQ).where(F.col(ID).isNotNull()).collect()
+    latest = pd.DataFrame(keys, columns=[ID, SEQ]).groupby(ID, sort=False)[SEQ].max()
+    ids = id_frame(spark, latest.index.to_numpy(np.int64))
+    known = state.select(ID).join(F.broadcast(ids), on=ID, how="left_semi").collect()
+    new = latest[~latest.index.isin([r[0] for r in known])].reset_index()
+    return new.sort_values([SEQ, ID], kind="stable")[ID].to_numpy(np.int64)
+
+
+def _inserted(b: DataFrame, ids: np.ndarray, base: int) -> DataFrame:
+    """The 'inserted' lane: rows of the deduplicated batch ``b`` whose id
+    is in ``ids`` (new ids in arrival order), each with internal_id
+    ``base`` + its arrival position. The ranks enter as a broadcast local
+    relation, so the lane costs no exchange of its own."""
+    ranks = _long_frame(
+        b.sparkSession, {ID: ids, IID: base + np.arange(len(ids), dtype=np.int64)}
+    )
+    return (
+        b.join(F.broadcast(ranks), on=ID)
+        .select(ID, IID, EMB)
+        .withColumn("status", F.lit("inserted"))
+    )
+
+
+def upsert(state: DataFrame, batch: DataFrame, next_slot: int) -> DataFrame:
     """Keyed upsert (the /index endpoint, executor.py:127-168).
 
     Returns the new state (id, internal_id, emb, status) where status marks
@@ -160,39 +212,19 @@ def upsert(state: DataFrame, batch: DataFrame) -> DataFrame:
     (new id; dense internal_id = next slot + arrival rank among new rows
     — executor.py:151-156).
 
-    The slot base is max(internal_id) + 1, NOT the live row count: after
-    a delete the two diverge, and a count-based base would hand a new id
-    an internal_id still held by a surviving row (hnswlib never reuses
-    slots — element_count includes tombstones, executor.py:252). On a
+    ``next_slot`` is the caller's slot base: the internal-id high-water
+    mark (``slot_mark``), NOT the live row count. After a delete the two
+    diverge, and a count-based base would hand a new id an internal_id
+    still held by a surviving row (hnswlib never reuses slots —
+    element_count includes tombstones, executor.py:252). On a
     never-deleted state the two are equal, which is why the fixture
-    oracles agree bit-for-bit.
+    oracles agree bit-for-bit. New ids are classified on the driver
+    (``new_ids``), so the plan never shuffles the state.
     """
     b = dedup_latest(batch)
-    # next slot as a 1-row DF so the whole thing stays one lazy plan
-    prior = state.agg(
-        F.coalesce(F.max(IID) + 1, F.lit(0)).cast("long").alias("__prior")
+    return _apply_updates(state, b).unionByName(
+        _inserted(b, new_ids(state, batch), next_slot)
     )
-
-    # kept + updated in ONE left join (r16, guide §3/§2.1): the old
-    # inner-join ('updated') + anti-join ('kept') pair walked the state
-    # twice and built the deduped-batch broadcast twice. b is unique per
-    # id (dedup_latest), so a left join emits each state row exactly once;
-    # the __hit flag (not __bemb's nullness) decides the status, so an
-    # explicit NULL batch embedding still classifies as 'updated' exactly
-    # like the inner-join form did.
-    kept_updated = _apply_updates(state, b)
-    new_rows = b.join(state.select(ID), on=ID, how="left_anti")
-    inserted = (
-        dense_rank_by(new_rows, SEQ, "__arrival")
-        .crossJoin(F.broadcast(prior))
-        .select(
-            F.col(ID),
-            (F.col("__prior") + F.col("__arrival")).alias(IID),
-            F.col(EMB),
-        )
-        .withColumn("status", F.lit("inserted"))
-    )
-    return kept_updated.unionByName(inserted)
 
 
 def _apply_updates(state: DataFrame, b: DataFrame) -> DataFrame:
@@ -218,7 +250,7 @@ def _apply_updates(state: DataFrame, b: DataFrame) -> DataFrame:
 
 
 def upsert_capacity_bound(
-    state: DataFrame, batch: DataFrame, capacity: int
+    state: DataFrame, batch: DataFrame, capacity: int, next_slot: int
 ) -> tuple[DataFrame, DataFrame]:
     """Capacity-bounded upsert — the reference's `max_elements` semantics
     (executor.py:21, 43, 54, 67: hnswlib preallocates a fixed slot count
@@ -238,44 +270,32 @@ def upsert_capacity_bound(
       raise, which a caller can turn back into the reference's hard
       failure by checking the set is empty.
 
-    Slot accounting: the next slot is max(internal_id) + 1 (see upsert),
-    so a tombstone BELOW the high-water mark keeps occupying its slot —
-    hnswlib's deletes-don't-refund semantics (mark_deleted keeps the
-    element count, executor.py:223) — with one documented divergence at
-    THIS level: deleting the HIGHEST-slot row lowers the mark and frees
-    that slot, where hnswlib would not. The engine facade closes even
-    that: its delete() records the freed top slots as debt and index()
-    shrinks the capacity it passes by the debt, so engine admission is
-    strict element-count semantics (see engine.py). What can never
-    happen anywhere is two live rows sharing an internal_id, which a
-    live-row-count base would produce on the first insert after any
-    delete.
+    Admission is a driver-side cut of the same arrival ranks the
+    unbounded path assigns (``new_ids``), so ``rejected`` is a local
+    relation that is ready the moment this returns.
+
+    Slot accounting: ``next_slot`` is the high-water mark (see upsert),
+    so a tombstone BELOW the mark keeps occupying its slot — hnswlib's
+    deletes-don't-refund semantics (mark_deleted keeps the element count,
+    executor.py:223) — with one documented divergence at THIS level:
+    deleting the HIGHEST-slot row lowers the mark and frees that slot,
+    where hnswlib would not. The engine facade closes even that: it
+    records the freed top slots as debt and index() shrinks the capacity
+    it passes by the debt, so engine admission is strict element-count
+    semantics (see engine.py). What can never happen anywhere is two live
+    rows sharing an internal_id, which a live-row-count base would
+    produce on the first insert after any delete.
 
     Returns (new_state, rejected): new_state has the upsert's
     (id, internal_id, emb, status) shape, rejected is (id) only.
     """
     if capacity < 0:
         raise ValueError(f"capacity must be >= 0, got {capacity}")
+    new = new_ids(state, batch)
+    room = max(capacity - next_slot, 0)
     b = dedup_latest(batch)
-    prior = state.agg(
-        F.coalesce(F.max(IID) + 1, F.lit(0)).cast("long").alias("__prior")
-    )
-    kept_updated = _apply_updates(state, b)  # one state pass (see helper)
-    ranked = (
-        dense_rank_by(
-            b.join(state.select(ID), on=ID, how="left_anti"), SEQ, "__arrival"
-        )
-        .crossJoin(F.broadcast(prior))
-        .withColumn(IID, (F.col("__prior") + F.col("__arrival")).cast("long"))
-    )
-    inserted = (
-        ranked.filter(F.col(IID) < capacity)
-        .select(ID, IID, EMB)
-        .withColumn("status", F.lit("inserted"))
-    )
-    rejected = ranked.filter(F.col(IID) >= capacity).select(ID)
-    new_state = kept_updated.unionByName(inserted)
-    return new_state, rejected
+    new_state = _apply_updates(state, b).unionByName(_inserted(b, new[:room], next_slot))
+    return new_state, id_frame(batch.sparkSession, new[room:])
 
 
 def update_existing(state: DataFrame, batch: DataFrame) -> DataFrame:
@@ -290,12 +310,9 @@ def update_existing(state: DataFrame, batch: DataFrame) -> DataFrame:
 
 def skipped_updates(state: DataFrame, batch: DataFrame) -> DataFrame:
     """Ids an /update would warn about and skip (executor.py:188-196):
-    batch ids not present in the index."""
-    return (
-        dedup_latest(batch)
-        .join(state.select(ID), on=ID, how="left_anti")
-        .select(ID)
-    )
+    batch ids not present in the index, classified on the driver
+    (``new_ids``) and returned as a local relation."""
+    return id_frame(batch.sparkSession, new_ids(state, batch))
 
 
 def id_frame(spark: SparkSession, ids: Sequence[int], col: str = ID) -> DataFrame:
@@ -311,11 +328,19 @@ def id_frame(spark: SparkSession, ids: Sequence[int], col: str = ID) -> DataFram
     literal-false filter, which Catalyst folds to an empty relation. A
     list of anything but integers raises ValueError naming its type."""
     arr = np.asarray(ids)
-    if arr.size == 0:
-        return spark.sql(f"SELECT CAST(NULL AS BIGINT) AS {col}").where(F.lit(False))
-    if arr.dtype.kind not in "iu":
+    if arr.size and arr.dtype.kind not in "iu":
         raise ValueError(f"id column {col!r} has type {arr.dtype.name}; ids must be integers")
-    return spark.createDataFrame(pd.DataFrame({col: arr.astype(np.int64)}), f"{col} long")
+    return _long_frame(spark, {col: arr})
+
+
+def _long_frame(spark: SparkSession, cols: dict[str, np.ndarray]) -> DataFrame:
+    """Equal-length driver arrays as a BIGINT local relation (see
+    id_frame); no rows is a literal-false filter."""
+    if len(next(iter(cols.values()))) == 0:
+        nulls = ", ".join(f"CAST(NULL AS BIGINT) AS {c}" for c in cols)
+        return spark.sql(f"SELECT {nulls}").where(F.lit(False))
+    frame = pd.DataFrame({c: np.asarray(a).astype(np.int64) for c, a in cols.items()})
+    return spark.createDataFrame(frame, ", ".join(f"{c} long" for c in cols))
 
 
 def check_integer_ids(df: DataFrame, col: str) -> None:

@@ -57,8 +57,8 @@ def _state(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16 (guide §2.1): one scan with a conditional-struct explode instead
     # of a 3-leg union — the union form re-scanned `embeddings` once per
-    # leg, and upsert/update evaluate this subtree several times (broadcast
-    # build + anti-join side + rank join), multiplying the waste. Same rows
+    # leg, and upsert/update evaluate this subtree several times (the key
+    # read, the broadcast build, the insert lane), multiplying the waste. Same rows
     # out (row order is union-leg order neither engine relies on).
     emb = tables.load(spark, sf_dir, "embeddings").select(
         "vec_id", V.as_double_array("embedding").alias("e")
@@ -103,7 +103,8 @@ def _with_norm(df: DataFrame) -> DataFrame:
 
 
 def index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _with_norm(M.upsert(_state(spark, sf_dir), _batch(spark, sf_dir)))
+    state = _state(spark, sf_dir)
+    return _with_norm(M.upsert(state, _batch(spark, sf_dir), M.next_slot_of(state)))
 
 
 CAPACITY_HEADROOM = 40  # slots beyond the state's internal-id high-water mark
@@ -120,12 +121,13 @@ def index_upsert_capacity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.01), so the driver's correctness SF exercises BOTH the admission
     and the rejection lane."""
     state = _state(spark, sf_dir)
-    # bounded driver scalar over the pinned state — the SAME base the
-    # operator and the oracle use (the internal-id high-water mark; equal
-    # to the row count here only because the fixture state has no gaps)
-    mark = state.agg(F.coalesce(F.max(M.IID) + 1, F.lit(0)).cast("long")).collect()[0][0]
-    cap = int(mark) + CAPACITY_HEADROOM
-    new_state, rejected = M.upsert_capacity_bound(state, _batch(spark, sf_dir), cap)
+    # the slot base the oracle uses too: the internal-id high-water mark
+    # (equal to the row count here only because the fixture state has no
+    # gaps)
+    mark = M.next_slot_of(state)
+    new_state, rejected = M.upsert_capacity_bound(
+        state, _batch(spark, sf_dir), mark + CAPACITY_HEADROOM, mark
+    )
     rej = rejected.select(
         M.ID,
         F.lit(None).cast("long").alias(M.IID),
@@ -151,7 +153,8 @@ def delete_by_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Counts after upsert-then-delete (executor.py:246-257 arithmetic)."""
-    state = M.upsert(_state(spark, sf_dir), _batch(spark, sf_dir)).select(M.ID, M.IID, M.EMB)
+    base = _state(spark, sf_dir)
+    state = M.upsert(base, _batch(spark, sf_dir), M.next_slot_of(base)).select(M.ID, M.IID, M.EMB)
     ids = state.filter(F.col(M.ID) % 5 == 0).select(M.ID)
     active = M.delete_by_ids(state, ids)
     return M.status_counts(state, active)
@@ -301,7 +304,7 @@ def index_state_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     while the kept majority is filtered as unchanged. One full outer join
     on id; change detection is codegen'd null-safe array equality."""
     state = _state(spark, sf_dir)
-    new = M.upsert(state, _batch(spark, sf_dir)).select(M.ID, M.IID, M.EMB)
+    new = M.upsert(state, _batch(spark, sf_dir), M.next_slot_of(state)).select(M.ID, M.IID, M.EMB)
     # the delete leg as a direct filter: delete_by_ids(new, ids-from-new)
     # would re-derive the whole upsert pipeline a second time just to name
     # the doomed ids (measured 5x slower); the anti-join form is already

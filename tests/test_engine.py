@@ -3,6 +3,8 @@ search → update → delete → dump → load → status) through U1MIndexerSpa
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -175,10 +177,10 @@ def test_dump_after_load_same_workspace(spark, engine, tmp_path):
 
 def test_dim_mismatch_raises(spark, engine):
     """Dim validation is the lazy dim_guard fused into the emb column
-    (knn.dim_guard): index() stays a zero-job plan build, and the
-    reference's ValueError message (executor.py:144-148) surfaces as
-    USER_RAISED_EXCEPTION at the first action that materializes the bad
-    vectors — here status(), which counts the new state."""
+    (knn.dim_guard): index() reads only the batch's (id, seq) keys, never
+    its vectors, and the reference's ValueError message
+    (executor.py:144-148) surfaces as USER_RAISED_EXCEPTION at the first
+    action that materializes the bad vectors — here dump()."""
     bad = spark.createDataFrame([(1, [1.0] * 32)], "doc_id long, embedding array<double>")
     engine.index(bad)  # lazy — the guard rides the plan
     with pytest.raises(Exception, match="dimension != the index dim"):
@@ -186,6 +188,18 @@ def test_dim_mismatch_raises(spark, engine):
     # the guard must NOT be prunable away by an action that skips emb:
     # status() only counts rows, so it succeeds — enforcement is data-plane
     assert engine.status()["count_active"] >= 0
+
+
+def test_capacity_index_raises_on_wrong_dim_at_the_call(spark, tmp_path):
+    """A capacity-bounded engine decides admission at index() time, and
+    validates the batch there too (the deliberate error-timing split
+    documented on index()): a wrong-dim batch raises at index(), not at
+    the first dump or search."""
+    eng = U1MIndexerSpark(spark, dim=2, workspace=str(tmp_path), max_elements=10)
+    eng.index(spark.createDataFrame([(1, [1.0, 0.0])], "doc_id long, embedding array<double>"))
+    bad = spark.createDataFrame([(2, [1.0, 0.0, 0.0])], "doc_id long, embedding array<double>")
+    with pytest.raises(Exception, match="dimension != the index dim"):
+        eng.index(bad)
 
 
 @pytest.mark.parametrize(
@@ -276,9 +290,9 @@ def test_traversal_paths_chunk_level_index_and_search(spark, tmp_path):
 
 
 def test_many_batches_checkpoint_bounds_plan_growth(spark, tmp_path):
-    """Each index() embeds the previous state's logical plan ~16 times; the
+    """Each index() embeds the previous state's logical plan; the
     per-mutation checkpoint must keep plan size AND per-batch latency O(1)
-    over many batches (un-truncated, 20 batches would be a ~16^20-node plan)
+    over many batches (un-truncated, 20 batches would stack 20 upserts)
     while results stay exact."""
     eng = U1MIndexerSpark(spark, dim=4, workspace=str(tmp_path))
     for b in range(20):
@@ -292,7 +306,7 @@ def test_many_batches_checkpoint_bounds_plan_growth(spark, tmp_path):
         eng._vectors._jdf.queryExecution().analyzed().numberedTreeString().count("\n")
     )
     # truncation defers to the next mutation, so at most ONE un-truncated
-    # level (~113 lines) may remain — never the stacked ~16^20 plan
+    # level may remain — never the 20 stacked upserts
     assert plan_lines < 150, plan_lines
 
 
@@ -377,3 +391,181 @@ def test_docstore_delete_only_lineage_truncates(spark, tmp_path):
         eng._docstore._jdf.queryExecution().analyzed().numberedTreeString().count("\n")
     )
     assert plan_lines < 30, plan_lines  # flat LogicalRDD, not stacked joins
+
+
+def test_delete_on_a_settled_engine_runs_no_job(spark, engine, tmp_path, group_job_ids):
+    """Delete accounting is read from the next checkpoint (the drop in
+    rows and mark), so a delete on an engine with no pending mutation —
+    here one just opened from its workspace — runs no Spark job."""
+    import uuid
+
+    engine.dump()
+    eng = U1MIndexerSpark(spark, dim=64, workspace=str(tmp_path))
+    sc = spark.sparkContext
+    group = f"delete-settled-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        eng.delete([0, 1, 31337, 1])
+    finally:
+        sc._jsc.clearJobGroup()
+    assert group_job_ids(group) == []
+    st = eng.status()
+    assert st == {"count_indexed": 100, "count_active": 98, "count_deleted": 2, "size_dam": 98}
+
+
+def _shuffle_inputs(ns):
+    """(Exchange node, names of the nodes beneath it) for every shuffle
+    Exchange in a pre-order ``plans.nodes`` list."""
+    for i, n in enumerate(ns):
+        if n.name == "Exchange":
+            below = itertools.takewhile(lambda m, d=n.depth: m.depth > d, ns[i + 1 :])
+            yield n, [m.name for m in below]
+
+
+def test_pending_mutation_plans_never_shuffle_the_state(spark, engine, sf_dir):
+    """index() and update() classify the batch on the driver, so the
+    pending vector plan shuffles batch rows only: no range exchange (the
+    insert ranks come from the driver) and no exchange over the state
+    (the checkpoint, the plan's one ``Scan ExistingRDD``)."""
+    from executor_u1mindexer_spark import plans
+
+    docs = (
+        tables.load(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id").between(50, 149))
+        .select(F.col("vec_id").alias("doc_id"), "embedding")
+    )
+    for mutate in (engine.index, engine.update):
+        mutate(docs)
+        ns = plans.nodes(engine._vectors)
+        assert [n.name for n in ns].count("Scan ExistingRDD") == 1, ns
+        assert "range" not in [n.partitioning for n in ns], ns
+        for ex, below in _shuffle_inputs(ns):
+            assert "Scan ExistingRDD" not in below, (ex, below)
+
+
+class _Replay:
+    """Pure-Python model of the facade's counters and internal ids:
+    keep-latest per id, new ids ranked by (seq, id) from the next slot
+    (max live internal id + 1), admission against max_elements minus the
+    freed-top-slot debt, tombstones for delete hits, and a docstore that
+    keeps every row of an id's latest batch."""
+
+    def __init__(self, max_elements=None):
+        self.cap = max_elements
+        self.iid: dict[int, int] = {}
+        self.docs: dict[int, int] = {}  # id -> rows in its latest batch
+        self.tombstones = self.debt = 0
+
+    def mark(self):
+        return max(self.iid.values(), default=-1) + 1
+
+    def index(self, rows):
+        latest = {}
+        for i, seq in rows:
+            latest[i] = max(seq, latest.get(i, seq))
+        new = sorted((i for i in latest if i not in self.iid), key=lambda i: (latest[i], i))
+        base = self.mark()
+        room = len(new) if self.cap is None else max(self.cap - self.debt - base, 0)
+        for r, i in enumerate(new[:room]):
+            self.iid[i] = base + r
+        rejected = set(new[room:])
+        for i in latest:
+            if i not in rejected:
+                self.docs[i] = sum(1 for j, _ in rows if j == i)
+        return sorted(rejected)
+
+    def update(self, rows):
+        return sorted({i for i, _ in rows} - set(self.iid))
+
+    def delete(self, ids):
+        before = self.mark()
+        hit = set(ids) & set(self.iid)
+        for i in hit:
+            del self.iid[i]
+            self.docs.pop(i, None)
+        self.tombstones += len(hit)
+        self.debt += before - self.mark()
+
+    def status(self):
+        return {
+            "count_indexed": len(self.iid) + self.tombstones,
+            "count_active": len(self.iid),
+            "count_deleted": self.tombstones,
+            "size_dam": sum(self.docs.values()),
+        }
+
+
+def _churn(spark, eng, model, seed, n_ops):
+    """Run a seeded churn on ``eng`` and ``model`` side by side, checking
+    every status and each op's returned id set."""
+    import random
+
+    r = random.Random(seed)
+    next_id = 0
+    for n in range(n_ops):
+        kind = ("index", "update", "index", "delete")[n % 4]
+        live = sorted(model.iid)
+        if kind == "delete":
+            ids = r.sample(live, min(2, len(live))) + [10**9 + r.randrange(5)]
+            if live:
+                ids += [max(live, key=model.iid.get), ids[0]]  # top slot, a repeat
+            eng.delete(ids)
+            model.delete(ids)
+        else:
+            fresh = list(range(next_id, next_id + r.randrange(1, 5)))
+            next_id += len(fresh)
+            old = r.sample(live, min(r.randrange(0, 3), len(live)))
+            unknown = [10**9 + r.randrange(5)] if kind == "update" else []
+            ids = fresh + old + unknown + r.sample(fresh + old, 1)  # one duplicate id
+            rows = [(i, seq) for seq, i in enumerate(r.sample(ids, len(ids)))]
+            docs = spark.createDataFrame(
+                [(i, [float(seq), 1.0], seq, f"t{i}-{seq}") for i, seq in rows],
+                "doc_id long, embedding array<double>, seq long, text string",
+            )
+            if kind == "index":
+                got = eng.index(docs)
+                want = model.index(rows)
+            else:
+                got = eng.update(docs)
+                want = model.update(rows)
+            got = [] if got is None else sorted(row.id for row in got.collect())
+            assert got == want, kind
+        assert eng.status() == model.status(), kind
+
+
+@pytest.mark.parametrize("max_elements", [None, 16], ids=["unbounded", "capacity"])
+def test_counters_match_a_python_replay(spark, tmp_path, max_elements):
+    """A seeded churn — overwrites, duplicate ids within a batch, unknown
+    update ids, deletes of repeated, unknown and highest-slot ids —
+    reports the same status after every op as the Python replay, and ends
+    with the same (id, internal_id) set."""
+    eng = U1MIndexerSpark(spark, dim=2, workspace=str(tmp_path), max_elements=max_elements)
+    model = _Replay(max_elements)
+    _churn(spark, eng, model, seed=7, n_ops=15)
+    got = {(row.id, row.internal_id) for row in eng._vectors.collect()}
+    assert got == set(model.iid.items())
+
+
+def test_reload_with_slot_gaps_inserts_above_the_mark(spark, tmp_path):
+    """A dumped index keeps the internal ids of its live rows, gaps and
+    all. Reopened, its counters come from the workspace: new ids start at
+    max(internal_id) + 1 and never reuse a live slot."""
+    eng = U1MIndexerSpark(spark, dim=2, workspace=str(tmp_path))
+    model = _Replay()
+    rows = [(i, i) for i in range(8)]
+    schema = "doc_id long, embedding array<double>"
+    eng.index(spark.createDataFrame([(i, [1.0, float(i)]) for i, _ in rows], schema))
+    model.index(rows)
+    eng.delete([1, 2, 5])  # live internal ids 0, 3, 4, 6, 7
+    model.delete([1, 2, 5])
+    eng.dump()
+    again = U1MIndexerSpark(spark, dim=2, workspace=str(tmp_path))
+    model.tombstones = 0  # a dump is a compacted index
+    assert again.status() == model.status()
+    more = [(20, 0), (21, 1)]
+    again.index(spark.createDataFrame([(i, [2.0, float(i)]) for i, _ in more], schema))
+    model.index(more)
+    assert again.status() == model.status()
+    got = {(row.id, row.internal_id) for row in again._vectors.collect()}
+    assert got == set(model.iid.items())
+    assert {20: 8, 21: 9}.items() <= dict(got).items()

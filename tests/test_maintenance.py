@@ -78,7 +78,7 @@ def test_upsert_keeps_internal_id_and_assigns_dense_new_ids(spark, state):
             (200, [2.0, 0.0], 2),   # insert: internal_id 11
         ],
     )
-    out = {r[M.ID]: r for r in M.upsert(state, batch).collect()}
+    out = {r[M.ID]: r for r in M.upsert(state, batch, M.next_slot_of(state)).collect()}
     assert len(out) == 12
     assert out[3][M.IID] == 3 and out[3]["status"] == "updated"
     assert out[3][M.EMB] == [99.0, 99.0]
@@ -89,7 +89,7 @@ def test_upsert_keeps_internal_id_and_assigns_dense_new_ids(spark, state):
 
 def test_upsert_duplicate_ids_last_write_wins(spark, state):
     batch = _batch(spark, [(5, [1.0, 1.0], 0), (5, [2.0, 2.0], 7)])
-    out = {r[M.ID]: r for r in M.upsert(state, batch).collect()}
+    out = {r[M.ID]: r for r in M.upsert(state, batch, M.next_slot_of(state)).collect()}
     assert out[5][M.EMB] == [2.0, 2.0]  # seq 7 arrived later
 
 
@@ -100,15 +100,15 @@ def test_upsert_after_delete_never_reuses_live_internal_ids(spark, state):
     executor.py:252)."""
     gapped = M.delete_by_ids(state, [0, 1, 2])  # live iids 3..9, count 7
     batch = _batch(spark, [(500, [1.0, 1.0], 0)])
-    out = {r[M.ID]: r for r in M.upsert(gapped, batch).collect()}
+    out = {r[M.ID]: r for r in M.upsert(gapped, batch, M.next_slot_of(gapped)).collect()}
     assert out[500][M.IID] == 10  # count-based would collide at 7
-    live_iids = [r[M.IID] for r in M.upsert(gapped, batch).collect()]
+    live_iids = [r[M.IID] for r in M.upsert(gapped, batch, M.next_slot_of(gapped)).collect()]
     assert len(live_iids) == len(set(live_iids))
     # capacity twin: the same base drives admission — live 7, mark 10,
     # so capacity 10 has NO room even though the live count suggests 3
-    st2, rej2 = M.upsert_capacity_bound(gapped, batch, capacity=10)
+    st2, rej2 = M.upsert_capacity_bound(gapped, batch, 10, M.next_slot_of(gapped))
     assert [r[M.ID] for r in rej2.collect()] == [500]
-    st3, rej3 = M.upsert_capacity_bound(gapped, batch, capacity=11)
+    st3, rej3 = M.upsert_capacity_bound(gapped, batch, 11, M.next_slot_of(gapped))
     assert {r[M.ID]: r[M.IID] for r in st3.collect()}[500] == 10
     assert rej3.count() == 0
 
@@ -125,7 +125,7 @@ def test_upsert_capacity_admits_in_arrival_order(spark, state):
             (400, [4.0, 0.0], 40),   # arrival rank 2 -> rejected
         ],
     )
-    new_state, rejected = M.upsert_capacity_bound(state, batch, capacity=11)
+    new_state, rejected = M.upsert_capacity_bound(state, batch, 11, M.next_slot_of(state))
     out = {r[M.ID]: r for r in new_state.collect()}
     assert len(out) == 11
     assert out[3]["status"] == "updated" and out[3][M.IID] == 3
@@ -136,17 +136,18 @@ def test_upsert_capacity_admits_in_arrival_order(spark, state):
 def test_upsert_capacity_full_and_roomy_extremes(spark, state):
     batch = _batch(spark, [(7, [5.0, 5.0], 0), (500, [1.0, 1.0], 1)])
     # capacity == current count: updates land, every new id is rejected
-    st_full, rej_full = M.upsert_capacity_bound(state, batch, capacity=10)
+    st_full, rej_full = M.upsert_capacity_bound(state, batch, 10, M.next_slot_of(state))
     assert st_full.count() == 10
     assert st_full.filter(F.col(M.ID) == 7).collect()[0]["status"] == "updated"
     assert [r[M.ID] for r in rej_full.collect()] == [500]
     # roomy capacity: identical to the unbounded upsert, empty warn-set
-    st_room, rej_room = M.upsert_capacity_bound(state, batch, capacity=1000)
-    unbounded = {(r[M.ID], r[M.IID], r["status"]) for r in M.upsert(state, batch).collect()}
+    st_room, rej_room = M.upsert_capacity_bound(state, batch, 1000, M.next_slot_of(state))
+    unbounded = M.upsert(state, batch, M.next_slot_of(state))
+    unbounded = {(r[M.ID], r[M.IID], r["status"]) for r in unbounded.collect()}
     assert {(r[M.ID], r[M.IID], r["status"]) for r in st_room.collect()} == unbounded
     assert rej_room.count() == 0
     with pytest.raises(ValueError):
-        M.upsert_capacity_bound(state, batch, capacity=-1)
+        M.upsert_capacity_bound(state, batch, -1, M.next_slot_of(state))
 
 
 from hypothesis import given, settings, strategies as st  # noqa: E402
@@ -174,7 +175,7 @@ def test_upsert_capacity_matches_python_replay(spark, n_state, batch, headroom):
         [(i, i, [float(i)]) for i in range(n_state)],
         f"{M.ID} long, {M.IID} long, {M.EMB} array<double>",
     )
-    # unique seq per row (dense_rank_by contract): seq = base*10 + position
+    # unique seq per row, so seq order alone is the arrival order: seq = base*10 + position
     brows = [(bid, [float(bid) + 0.5], base * 10 + pos) for pos, (bid, base) in enumerate(batch)]
     bdf = _batch(spark, brows)
     capacity = n_state + headroom
@@ -194,7 +195,7 @@ def test_upsert_capacity_matches_python_replay(spark, n_state, batch, headroom):
     } | {(i, n_state + r, "inserted") for r, i in enumerate(admitted)}
     want_rejected = sorted(set(new_ids) - set(admitted))
 
-    got_state_df, got_rej_df = M.upsert_capacity_bound(sdf, bdf, capacity)
+    got_state_df, got_rej_df = M.upsert_capacity_bound(sdf, bdf, capacity, n_state)
     got_state = {(r[M.ID], r[M.IID], r["status"]) for r in got_state_df.collect()}
     got_rejected = sorted(r[M.ID] for r in got_rej_df.collect())
     assert got_state == want_state

@@ -200,11 +200,12 @@ def test_dense_id_ingest_has_no_single_partition_window(spark, sf_dir):
     assert "single" not in [n.partitioning for n in ns]
     assert not plans.unpartitioned_window(ns)
 
-    # the upsert insert-rank path uses the same scheme
+    # the upsert ranks its inserts on the driver (M.new_ids): no window
     batch = state.select(
         (F.col(M.ID) + 100000).alias(M.ID), F.col(M.EMB), F.col(M.ID).alias(M.SEQ)
     )
-    assert not plans.unpartitioned_window(plans.nodes(M.upsert(state, batch)))
+    upserted = M.upsert(state, batch, M.next_slot_of(state))
+    assert not plans.unpartitioned_window(plans.nodes(upserted))
 
 
 def codegen_stages(df) -> int:
