@@ -40,18 +40,12 @@ from executor_u1mindexer_spark.operators import knn, maintenance as M, traverse
 VECTORS = "vectors"
 DOCSTORE = "docstore"
 
-# Docstore ingest is LSM-style since r04: index() APPENDS the batch payload
-# (tagged with a batch number) instead of eagerly anti-joining the whole
-# docstore per batch. The r03 eager form cost one full-docstore scan +
-# checkpoint per batch — O(B * S) for B batches over a docstore of size S;
-# the append form costs O(batch) per index() and ONE keep-latest compaction
-# (window on id over the appended log) at the next read point (search
-# payload / dump / status) or every DOCSTORE_COMPACT_EVERY appends,
-# whichever comes first. Crossover: a single ingest-then-read session pays
-# the same one compaction either way; a B-batch ingest session saves B-1
-# full-docstore rewrites. Deletes stay eager anti-joins (they must drop all
-# copies) — each adds one O(1)-analysis broadcast layer, bounded by the
-# compaction checkpoint at the next read.
+# The docstore is an append log: index() appends the batch payload, tagged
+# with a batch number, at O(batch) cost. One keep-latest compaction (a window
+# on id over the log) runs at the next read point (search payload, dump,
+# status) or every DOCSTORE_COMPACT_EVERY appends, whichever comes first.
+# Deletes are eager anti-joins (they must drop every copy); each adds one
+# broadcast layer, bounded by the compaction checkpoint at the next read.
 DS_BATCH = "__ds_batch"
 DOCSTORE_COMPACT_EVERY = 16
 
@@ -163,22 +157,24 @@ class U1MIndexerSpark:
         admission works off the surviving mark (see index()), so without
         the debt a delete of the highest-slot row would silently refund its
         slot — hnswlib never refunds (element_count keeps tombstones,
-        executor.py:252). mark + debt = slots ever allocated, exactly."""
+        executor.py:252). mark + debt = slots ever allocated, exactly.
+
+        A checkpoint that raises (a pending wrong-dim batch) leaves the
+        lineage, the flag and the counters as they were."""
         if not self._dirty:
             return
-        self._dirty = False
         n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         self._vectors, seen = cache.materialize_observed(
             self._vectors.coalesce(n), rows=F.count(F.lit(1)), mark=M.slot_mark()
         )
+        self._dirty = False
         self._tombstones += max(self._rows - seen.rows, 0)
         self._slot_debt += max(self._mark - seen.mark, 0)
         self._rows, self._mark = seen.rows, seen.mark
 
     def _docstore_compact(self) -> None:
-        """Collapse the appended batch log to keep-latest-batch per id —
-        the same state the r03 eager anti-join maintained per batch (ids
-        duplicated WITHIN one batch keep all their rows, as before). One
+        """Collapse the appended batch log to keep-latest-batch per id (ids
+        duplicated WITHIN one batch keep all their rows). One
         shuffle on id, then an eager checkpoint so later reads and delete
         layers start from a flat plan. Delete-ONLY lineage (anti-join
         layers with no pending appends) needs no window — just the
@@ -321,8 +317,10 @@ class U1MIndexerSpark:
                 M.ID, M.IID, M.EMB
             )
         self._ds_batch_no += 1
+        # a null id never gets a vector (M.new_ids), so it gets no payload
         payload = (
             docs.withColumnRenamed(id_col, M.ID)
+            .filter(F.col(M.ID).isNotNull())
             .drop(vec_col)
             .withColumn(DS_BATCH, F.lit(self._ds_batch_no))
         )
@@ -330,9 +328,8 @@ class U1MIndexerSpark:
         if self._docstore is None:
             self._docstore = payload
         else:
-            # LSM append: O(batch) per call; keep-latest resolution happens
-            # at the next read / every DOCSTORE_COMPACT_EVERY batches (see
-            # module note for the crossover vs the eager per-batch anti-join)
+            # append: keep-latest resolution happens at the next read or
+            # every DOCSTORE_COMPACT_EVERY batches (see module note)
             self._docstore = self._docstore.unionByName(
                 payload, allowMissingColumns=True
             )
@@ -407,13 +404,26 @@ class U1MIndexerSpark:
         self._dirty = True
 
     def dump(self) -> None:
-        """Snapshot state to the workspace (executor.py:227-236)."""
+        """Snapshot state to the workspace (executor.py:227-236).
+
+        M.dump swaps the old snapshot away, and this engine's lineage may
+        still read it (a loaded workspace, or an earlier dump), so both
+        frames are re-read from the new snapshot. Reading with the frame's
+        known schema skips the inference job over the parquet footers. The
+        counters and pending flags stay: the snapshot holds exactly the
+        state they describe."""
         if not self.workspace:
             raise ValueError("no workspace configured")
-        M.dump(self._vectors, os.path.join(self.workspace, VECTORS))
+        path = os.path.join(self.workspace, VECTORS)
+        M.dump(self._vectors, path)
+        self._vectors = self.spark.read.schema(self._vectors.schema).parquet(path)
         ds = self._docstore_view()
         if ds is not None:
-            M.dump(ds, os.path.join(self.workspace, DOCSTORE))
+            path = os.path.join(self.workspace, DOCSTORE)
+            M.dump(ds, path)
+            self._docstore = (
+                self.spark.read.schema(ds.schema).parquet(path).withColumn(DS_BATCH, F.lit(0))
+            )
 
     def clear(self) -> None:
         """Drop everything, keep config (executor.py:238-244)."""

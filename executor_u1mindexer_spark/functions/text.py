@@ -80,10 +80,10 @@ def punct_ratio(col: Column) -> Column:
     return F.length(stripped).cast("double") / F.greatest(F.length(col), F.lit(1)).cast("double")
 
 
-def stopword_ratio(col: Column, stopwords: tuple[str, ...] = LANG_STOPWORDS["en"]) -> Column:
+def stopword_ratio(col: Column) -> Column:
     """Fraction of whitespace tokens that are stopwords (quality signal)."""
     toks = words(col)
-    hits = F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
+    hits = F.size(F.filter(toks, lambda t: t.isin(*LANG_STOPWORDS["en"])))
     return hits.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
 
 

@@ -16,12 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    n_buckets: int = 8,
-) -> None:
+def write_bucketed(df: DataFrame, table: str, key: str) -> None:
     """Persist as a bucketed+sorted managed table (idempotent overwrite).
 
     A managed table's warehouse dir can survive from a previous session
@@ -39,7 +34,7 @@ def write_bucketed(
     (
         df.write.mode("overwrite")
         .format("parquet")
-        .bucketBy(n_buckets, key)
+        .bucketBy(8, key)
         .sortBy(key)
         .saveAsTable(table)
     )

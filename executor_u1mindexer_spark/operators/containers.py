@@ -44,6 +44,9 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+ID_COL = "doc_id"
+BIN_COL = "img"
+
 ALPHA_URN = b"urn:mpeg:mpegB:cicp:systems:auxiliary:alpha\x00"
 
 LOSSY_HEADER_SCHEMA = (
@@ -122,8 +125,8 @@ def _box(fourcc: bytes, payload: bytes) -> bytes:
     return struct.pack(">I", 8 + len(payload)) + fourcc + payload
 
 
-def _fullbox(fourcc: bytes, payload: bytes, version: int = 0, flags: int = 0) -> bytes:
-    return _box(fourcc, bytes([version]) + flags.to_bytes(3, "big") + payload)
+def _fullbox(fourcc: bytes, payload: bytes) -> bytes:
+    return _box(fourcc, bytes(4) + payload)  # version 0, flags 0
 
 
 def encode_avif(
@@ -349,7 +352,7 @@ def parse_lossy_container_header(b: bytes) -> dict:
 # --- Spark plumbing ---------------------------------------------------------
 
 
-def attach_synthetic_lossy(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_synthetic_lossy(docs: DataFrame) -> DataFrame:
     """Deterministic lossy-container payloads from the id alone:
     w = id%9+1, h = id%5+1; lane cycles id%3 → simple WebP / extended
     WebP (VP8X, ALPH when id is odd) / AVIF (auxC when id is odd); so
@@ -359,7 +362,7 @@ def attach_synthetic_lossy(docs: DataFrame, id_col: str = "doc_id") -> DataFrame
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, payloads = [], []
-            for did in pdf[id_col]:
+            for did in pdf[ID_COL]:
                 did = int(did)
                 w, h = did % 9 + 1, did % 5 + 1
                 filler = bytes((did * 7 + i) % 256 for i in range(8))
@@ -374,18 +377,16 @@ def attach_synthetic_lossy(docs: DataFrame, id_col: str = "doc_id") -> DataFrame
                     p = encode_avif(w, h, alpha=odd, filler=filler)
                 ids.append(did)
                 payloads.append(p)
-            yield pd.DataFrame({id_col: ids, "img": payloads})
+            yield pd.DataFrame({ID_COL: ids, "img": payloads})
 
     from executor_u1mindexer_spark.operators.dedup import _spread
 
-    return _spread(docs.select(id_col)).mapInPandas(
-        gen, schema=f"{id_col} long, img binary"
+    return _spread(docs.select(ID_COL)).mapInPandas(
+        gen, schema=f"{ID_COL} long, img binary"
     )
 
 
-def extract_lossy_header_metadata(
-    df: DataFrame, id_col: str = "doc_id", bin_col: str = "img"
-) -> DataFrame:
+def extract_lossy_header_metadata(df: DataFrame) -> DataFrame:
     """Arrow-batched header parse over a binary column (mapInPandas) —
     the same production shape as decode_images_metadata."""
 
@@ -399,14 +400,14 @@ def extract_lossy_header_metadata(
                 "height": [],
                 "has_alpha": [],
             }
-            for did, payload in zip(pdf[id_col], pdf[bin_col]):
+            for did, payload in zip(pdf[ID_COL], pdf[BIN_COL]):
                 meta = parse_lossy_container_header(bytes(payload))
                 rows["doc_id"].append(did)
                 for k in ("container", "codec", "width", "height", "has_alpha"):
                     rows[k].append(meta[k])
             yield pd.DataFrame(rows)
 
-    return df.select(id_col, bin_col).mapInPandas(parse, schema=LOSSY_HEADER_SCHEMA)
+    return df.select(ID_COL, BIN_COL).mapInPandas(parse, schema=LOSSY_HEADER_SCHEMA)
 
 
 # --- EXIF (TIFF) payload: byte order + orientation --------------------------
@@ -471,7 +472,7 @@ CONTAINER_PROPS_SCHEMA = (
 )
 
 
-def attach_synthetic_container_props(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_synthetic_container_props(docs: DataFrame) -> DataFrame:
     """Deterministic payloads exercising the r10 metadata lanes, all in
     closed form from the id: lane id%3 as in attach_synthetic_lossy
     (0 simple WebP / 1 extended WebP / 2 AVIF); extended WebP carries an
@@ -486,7 +487,7 @@ def attach_synthetic_container_props(docs: DataFrame, id_col: str = "doc_id") ->
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, payloads = [], []
-            for did in pdf[id_col]:
+            for did in pdf[ID_COL]:
                 did = int(did)
                 w, h = did % 9 + 1, did % 5 + 1
                 filler = bytes((did * 7 + i) % 256 for i in range(8))
@@ -522,18 +523,16 @@ def attach_synthetic_container_props(docs: DataFrame, id_col: str = "doc_id") ->
                     )
                 ids.append(did)
                 payloads.append(p)
-            yield pd.DataFrame({id_col: ids, "img": payloads})
+            yield pd.DataFrame({ID_COL: ids, "img": payloads})
 
     from executor_u1mindexer_spark.operators.dedup import _spread
 
-    return _spread(docs.select(id_col)).mapInPandas(
-        gen, schema=f"{id_col} long, img binary"
+    return _spread(docs.select(ID_COL)).mapInPandas(
+        gen, schema=f"{ID_COL} long, img binary"
     )
 
 
-def extract_container_properties(
-    df: DataFrame, id_col: str = "doc_id", bin_col: str = "img"
-) -> DataFrame:
+def extract_container_properties(df: DataFrame) -> DataFrame:
     """Arrow-batched parse of the full r10 property set (ICC/EXIF chunk
     presence+size, irot/imir orientation, pixi channel structure) — same
     mapInPandas shape as extract_lossy_header_metadata."""
@@ -547,13 +546,13 @@ def extract_container_properties(
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: dict[str, list] = {"doc_id": [], **{c: [] for c in cols}}
-            for did, payload in zip(pdf[id_col], pdf[bin_col]):
+            for did, payload in zip(pdf[ID_COL], pdf[BIN_COL]):
                 meta = parse_lossy_container_header(bytes(payload))
                 rows["doc_id"].append(did)
                 for c in cols:
                     rows[c].append(meta[c])
             yield pd.DataFrame(rows)
 
-    return df.select(id_col, bin_col).mapInPandas(
+    return df.select(ID_COL, BIN_COL).mapInPandas(
         parse, schema=CONTAINER_PROPS_SCHEMA
     )

@@ -33,6 +33,10 @@ from executor_u1mindexer_spark.functions import text as T
 from executor_u1mindexer_spark.functions import vector as V
 from executor_u1mindexer_spark.operators import graph as G
 
+TEXT_COL = "text"
+ID_COL = "doc_id"
+N_SHINGLE = 3
+
 # MinHash universe/coefficients. P is prime > 2^32; a,b < 2^20 keep
 # a*h32 + b < 2^52 (exact in int64 AND in double — DuckDB-safe).
 MINHASH_P = 4294967311
@@ -68,27 +72,27 @@ def content_hash(text_col: Column | str) -> Column:
     return F.md5(c)
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact duplicate collapse: keep the lowest id per content hash, count
     the copies. One shuffle on the 32-hex hash."""
-    h = content_hash(text_col).alias("text_hash")
-    w = Window.partitionBy("text_hash").orderBy(F.col(id_col).asc())
+    h = content_hash(TEXT_COL).alias("text_hash")
+    w = Window.partitionBy("text_hash").orderBy(F.col(ID_COL).asc())
     return (
-        df.select(F.col(id_col), h)
+        df.select(F.col(ID_COL), h)
         .withColumn("rn", F.row_number().over(w))
         .withColumn("n_copies", F.count(F.lit(1)).over(Window.partitionBy("text_hash")))
         .filter(F.col("rn") == 1)
-        .select(F.col(id_col).alias("keep_id"), "text_hash", "n_copies")
+        .select(F.col(ID_COL).alias("keep_id"), "text_hash", "n_copies")
     )
 
 
-def minhash_signature(text_col: Column | str, n_shingle: int = 3) -> Column:
+def minhash_signature(text_col: Column | str) -> Column:
     """k-element MinHash signature over word n-gram shingles.
 
     sig[i] = min over shingles s of (A[i]*hash32(s) + B[i]) mod P — all in
     nested higher-order functions (array_min . transform), zero UDFs.
     """
-    sh = T.word_shingles(F.col(text_col) if isinstance(text_col, str) else text_col, n_shingle)
+    sh = T.word_shingles(F.col(text_col) if isinstance(text_col, str) else text_col, N_SHINGLE)
     hashed = F.transform(sh, T.hash32)
     # One fold over the hashed shingles, updating all k mins per element:
     # md5 runs ONCE per shingle. (The naive k x array_min(transform(...))
@@ -176,13 +180,7 @@ def lsh_band_keys(sig_col: Column) -> Column:
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    n_shingle: int = 3,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact jaccard confirm.
 
     (a) signature+bands scan-side; (b) explode bands, self-join on
@@ -193,7 +191,7 @@ def minhash_lsh_pairs(
     # one kernel pass yields signatures AND shingle sets; materialize it so
     # the banding branch and the jaccard-confirm branch don't each rerun it
     both = cache.materialize(
-        minhash_signatures_arrow(df, id_col=id_col, text_col=text_col, n_shingle=n_shingle)
+        minhash_signatures_arrow(df, id_col=ID_COL, text_col=TEXT_COL, n_shingle=N_SHINGLE)
     )
     sig_df = both.select("id", "sig")
     shingled = both.select("id", "sh")
@@ -239,11 +237,8 @@ def minhash_lsh_pairs(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     block_col: str | None = "lang",
     threshold: float = 0.5,
-    n_shingle: int = 3,
 ) -> DataFrame:
     """Exact n-gram jaccard over blocked pairs (the non-approximate
     baseline; block_col bounds the quadratic fan-out, the classic
@@ -258,16 +253,16 @@ def ngram_jaccard_pairs(
     # shingles never materialize at all (they can't reach any threshold).
     proj = _spread(
         df.select(
-            F.col(id_col).alias("id"),
+            F.col(ID_COL).alias("id"),
             *( [F.col(block_col).alias("blk")] if block_col else [F.lit(1).alias("blk")] ),
-            F.col(text_col).alias("__text"),
+            F.col(TEXT_COL).alias("__text"),
         )
     )
     base = proj.select(
         "id",
         "blk",
         F.array_distinct(
-            F.transform(T.word_shingles(F.col("__text"), n_shingle), T.hash32)
+            F.transform(T.word_shingles(F.col("__text"), N_SHINGLE), T.hash32)
         ).alias("sh"),
     ).withColumn("n_sh", F.size("sh"))
     # the self-join's sharing point: exchange reuse does NOT fire across
@@ -300,14 +295,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def containment_prefix_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    t_num: int = 4,
-    t_den: int = 5,
-    n_shingle: int = 3,
-) -> DataFrame:
+def containment_prefix_pairs(df: DataFrame) -> DataFrame:
     """Asymmetric near-SUPERSET pairs by prefix filtering (the SSJoin /
     PPJoin device, Chaudhuri et al. ICDE'06 / Xiao et al. WWW'08):
     containment C(a→b) = |sh(a) ∩ sh(b)| / |sh(a)| >= t — the dedup case
@@ -324,8 +312,8 @@ def containment_prefix_pairs(
     the joined posting lists the SHORTEST ones — that choice is pure
     optimization, correctness never depends on it.
 
-    Exactness: the threshold is the rational t_num/t_den; required
-    overlap = ceil(t*n) = (t_num*n + t_den - 1) DIV t_den in both
+    Exactness: the threshold is the rational 4/5; required
+    overlap = ceil(t*n) = (4*n + 4) DIV 5 in both
     engines, and the reported containment i/n_a is one int/int IEEE-754
     division — bit-exact cross-engine.
 
@@ -336,12 +324,12 @@ def containment_prefix_pairs(
     candidates, with |prefix| = (1-t)*n + 1 per doc (5x fewer probe
     postings at t=0.8 than a full self-join) and the rare-first order
     keeping per-posting fan-out minimal."""
-    proj = _spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")))
+    proj = _spread(df.select(F.col(ID_COL).alias("id"), F.col(TEXT_COL).alias("__text")))
     base = cache.materialize(
         proj.select(
             "id",
             F.array_distinct(
-                F.transform(T.word_shingles(F.col("__text"), n_shingle), T.hash32)
+                F.transform(T.word_shingles(F.col("__text"), N_SHINGLE), T.hash32)
             ).alias("sh"),
         ).withColumn("n_sh", F.size("sh"))
     )
@@ -349,7 +337,7 @@ def containment_prefix_pairs(
     dfreq = post.groupBy("h").agg(F.count(F.lit(1)).alias("dfc"))
     postf = post.join(dfreq, "h")
     # required overlap and prefix length, integer-exact
-    req = F.expr(f"CAST(({t_num} * n_sh + {t_den} - 1) DIV {t_den} AS INT)")
+    req = F.expr("CAST((4 * n_sh + 4) DIV 5 AS INT)")  # ceil(0.8 * n_sh)
     w = Window.partitionBy("id").orderBy(F.col("dfc").asc(), F.col("h").asc())
     prefix = (
         postf.withColumn("__rk", F.row_number().over(w))
@@ -375,7 +363,7 @@ def containment_prefix_pairs(
             i.cast("long").alias("n_shared"),
             (i.cast("double") / F.col("n_a").cast("double")).alias("containment"),
         )
-        .filter(F.col("n_shared") * t_den >= F.col("n_a") * t_num)
+        .filter(F.col("n_shared") * 5 >= F.col("n_a") * 4)
     )
 
 
@@ -436,13 +424,7 @@ def simhash32_arrow(
     )
 
 
-def simhash_near_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    prefix_bits: int = 8,
-) -> DataFrame:
+def simhash_near_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup pairs: candidates share one of the banded bit
     chunks (4 x 8-bit bands => any pair within hamming distance 3 shares at
     least one exact band — pigeonhole), then exact hamming filter.
@@ -456,12 +438,12 @@ def simhash_near_pairs(
     operator; here a hot bucket is a single collect_list whose m² expansion
     is the pair OUTPUT itself — near-dup pairs among m identical docs are
     inherently m², so the expansion is the floor, not overhead."""
-    sim = simhash32_arrow(df, id_col=id_col, text_col=text_col)
-    n_bands = 32 // prefix_bits
+    sim = simhash32_arrow(df, id_col=ID_COL, text_col=TEXT_COL)
+    n_bands = 32 // 8
     bands = F.array(
         *[
-            ((F.col("simhash") / F.lit(2 ** (prefix_bits * i))).cast("long")
-             % F.lit(2 ** prefix_bits)).alias(f"b{i}")
+            ((F.col("simhash") / F.lit(2 ** (8 * i))).cast("long")
+             % F.lit(2 ** 8)).alias(f"b{i}")
             for i in range(n_bands)
         ]
     )
@@ -501,10 +483,7 @@ def simhash_near_pairs(
 def benchmark_contamination(
     train: DataFrame,
     bench: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_shingle: int = 8,
-    max_broadcast_shingles: int = 20_000_000,
 ) -> DataFrame:
     """Benchmark decontamination — the standard LLM-training hygiene step:
     a training doc is contaminated if it shares at least one word n-gram
@@ -517,31 +496,31 @@ def benchmark_contamination(
     hash join + partial-aggregated count, all codegen.
 
     The broadcast hint is GATED on a measured count (one cheap job over the
-    small side): an unexpectedly large benchmark (> max_broadcast_shingles
+    small side): an unexpectedly large benchmark (> 20M
     distinct 8-grams, ~160 MB of longs) degrades to a plain shuffled
     equi-join instead of OOMing executors or tripping the broadcast limit."""
-    t = _spread(train.select(id_col, text_col)).select(
-        F.col(id_col).alias("id"),
+    t = _spread(train.select(ID_COL, TEXT_COL)).select(
+        F.col(ID_COL).alias("id"),
         F.explode(
-            F.transform(T.word_shingles(F.col(text_col), n_shingle), T.hash32)
+            F.transform(T.word_shingles(F.col(TEXT_COL), n_shingle), T.hash32)
         ).alias("h"),
     )
     b = (
-        _spread(bench.select(text_col))
+        _spread(bench.select(TEXT_COL))
         .select(
             F.explode(
-                F.transform(T.word_shingles(F.col(text_col), n_shingle), T.hash32)
+                F.transform(T.word_shingles(F.col(TEXT_COL), n_shingle), T.hash32)
             ).alias("h")
         )
         .distinct()
     )
     n_bench_shingles = b.count()
-    b_side = F.broadcast(b) if n_bench_shingles <= max_broadcast_shingles else b
+    b_side = F.broadcast(b) if n_bench_shingles <= 20_000_000 else b
     return (
         t.join(b_side, on="h")
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("n_shared_shingles"))
-        .select(F.col("id").alias(id_col), "n_shared_shingles")
+        .select(F.col("id").alias(ID_COL), "n_shared_shingles")
     )
 
 
@@ -577,8 +556,6 @@ def _sign_band_bucket(vec_col: Column, band: list[list[float]]) -> Column:
 
 def embedding_near_dup_pairs(
     emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     block_col: str | None = "label",
     max_cos_dist: float = 0.2,
 ) -> DataFrame:
@@ -594,9 +571,9 @@ def embedding_near_dup_pairs(
     """
     base = _spread(
         emb.select(
-            F.col(id_col).alias("id"),
+            F.col("vec_id").alias("id"),
             *( [F.col(block_col).alias("blk")] if block_col else [F.lit(1).alias("blk")] ),
-            V.as_double_array(vec_col).alias("v"),
+            V.as_double_array("embedding").alias("v"),
         )
     ).withColumn("n", V.norm(F.col("v")))  # norm once per row, not per pair
     buckets_arr = F.array(*[_sign_band_bucket(F.col("v"), band) for band in EMB_PLANES])
@@ -639,9 +616,6 @@ def dedup_clusters(
     docs: DataFrame,
     pairs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    a_col: str = "id_a",
-    b_col: str = "id_b",
     quality_col: str | None = None,
 ) -> DataFrame:
     """Near-dup CLUSTERING + canonical-doc selection — the keep-list step a
@@ -649,7 +623,7 @@ def dedup_clusters(
     embedding) define an undirected graph; each connected component is one
     duplicate cluster; exactly one doc per cluster survives.
 
-    Returns (id_col, cluster_id, cluster_size, is_canonical) for EVERY doc
+    Returns (doc_id, cluster_id, cluster_size, is_canonical) for EVERY doc
     (unpaired docs are singleton clusters of themselves). cluster_id = the
     component's min doc id. The canonical doc is the cluster's best by
     ``quality_col`` (ties → lowest id), or the lowest id when no quality
@@ -668,15 +642,15 @@ def dedup_clusters(
     partition by cluster id (cluster sizes are detector-bounded).
     """
     labels = G.connected_components(
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     ).select(F.col("node").alias("id"), F.col("component").alias("label"))
-    all_ids = docs.select(F.col(id_col).cast("long").alias("id"))
+    all_ids = docs.select(F.col(ID_COL).cast("long").alias("id"))
     out = all_ids.join(labels, on="id", how="left").select(
         "id", F.coalesce("label", F.col("id")).alias("label")
     )
     if quality_col is not None:
         q = docs.select(
-            F.col(id_col).cast("long").alias("id"), F.col(quality_col).alias("__q")
+            F.col(ID_COL).cast("long").alias("id"), F.col(quality_col).alias("__q")
         )
         out = out.join(q, on="id")
         w = Window.partitionBy("label").orderBy(F.col("__q").desc(), F.col("id").asc())
@@ -684,20 +658,14 @@ def dedup_clusters(
         w = Window.partitionBy("label").orderBy(F.col("id").asc())
     wc = Window.partitionBy("label")
     return out.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias(ID_COL),
         F.col("label").alias("cluster_id"),
         F.count(F.lit(1)).over(wc).cast("long").alias("cluster_size"),
         (F.row_number().over(w) == 1).alias("is_canonical"),
     )
 
 
-def span_dedup(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    span_words: int = 5,
-) -> DataFrame:
+def span_dedup(df: DataFrame, *, span_words: int = 5) -> DataFrame:
     """Span-level exact dedup — the CCNet-style "drop duplicated paragraphs
     but keep the document" pass (Wenzek et al. 2020), fixture-adapted: the
     corpus has no newlines, so a "paragraph" is a fixed non-overlapping
@@ -705,7 +673,7 @@ def span_dedup(
     earlier in the corpus is removed (first occurrence wins, ordered by
     (doc_id, span_idx)); the cleaned document is reassembled in span order.
 
-    Returns (id_col, clean_text, n_spans, n_dropped) for EVERY input doc —
+    Returns (doc_id, clean_text, n_spans, n_dropped) for EVERY input doc —
     a fully-deduplicated doc comes back with clean_text = ''.
 
     At 100 TB: spans are derived by array slicing (no word-level explode —
@@ -721,7 +689,7 @@ def span_dedup(
     """
     df = _spread(df)  # per-doc span build; 1-split fixture input
     spans = T.let1(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), " "),
+        F.split(F.coalesce(F.col(TEXT_COL), F.lit("")), " "),
         lambda words: F.transform(
             F.sequence(
                 F.lit(0),
@@ -733,8 +701,8 @@ def span_dedup(
         ),
     )
     exploded = df.select(
-        F.col(id_col), F.posexplode(spans).alias("span_idx", "span")
-    ).withColumn("occ", F.struct(F.col(id_col), F.col("span_idx")))
+        F.col(ID_COL), F.posexplode(spans).alias("span_idx", "span")
+    ).withColumn("occ", F.struct(F.col(ID_COL), F.col("span_idx")))
     firsts = exploded.groupBy("span").agg(F.min("occ").alias("first_occ"))
     kept = exploded.join(firsts, "span").withColumn(
         "keep", F.col("occ") == F.col("first_occ")
@@ -742,7 +710,7 @@ def span_dedup(
     surviving = F.when(
         F.col("keep"), F.struct(F.col("span_idx"), F.col("span"))
     )
-    return kept.groupBy(id_col).agg(
+    return kept.groupBy(ID_COL).agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(surviving)), lambda s: s["span"]
@@ -754,13 +722,7 @@ def span_dedup(
     )
 
 
-def duplicated_span_profile(
-    df: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-) -> DataFrame:
+def duplicated_span_profile(df: DataFrame, *, k: int = 8) -> DataFrame:
     """Substring-level exact dedup profile (r15, VERDICT r14 #4a) — the
     suffix-array-style duplicated-span family member (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better"): find
@@ -772,7 +734,7 @@ def duplicated_span_profile(
     invisible there, while every k-token window sees it here.
 
     Per document WITH at least one cross-doc duplicated span, returns
-    (id_col, n_dup_spans, dup_tokens, total_tokens, dup_fraction_micro)
+    (doc_id, n_dup_spans, dup_tokens, total_tokens, dup_fraction_micro)
     where n_dup_spans counts maximal islands (consecutive duplicated
     start positions merged while the gap <= k, i.e. while spans overlap
     or touch), dup_tokens the tokens those islands cover, and
@@ -791,7 +753,7 @@ def duplicated_span_profile(
     byte-exact. [NOT IN REFERENCE — executor.py has no text surface.]
     """
     df = _spread(df)
-    words = F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
+    words = F.split(F.coalesce(F.col(TEXT_COL), F.lit("")), " ")
     shingles = T.let1(
         words,
         lambda ws: F.when(
@@ -803,7 +765,7 @@ def duplicated_span_profile(
         ).otherwise(F.array().cast("array<string>")),
     )
     occ = df.select(
-        F.col(id_col),
+        F.col(ID_COL),
         F.size(words).alias("total_tokens"),
         F.posexplode(shingles).alias("start_pos", "shingle"),
     )
@@ -811,7 +773,7 @@ def duplicated_span_profile(
     # min(doc) != max(doc) — map-side-combinable, no count-distinct
     dup = (
         occ.groupBy("shingle")
-        .agg(F.min(id_col).alias("__lo"), F.max(id_col).alias("__hi"))
+        .agg(F.min(ID_COL).alias("__lo"), F.max(ID_COL).alias("__hi"))
         .filter(F.col("__lo") != F.col("__hi"))
         .select("shingle")
     )
@@ -821,7 +783,7 @@ def duplicated_span_profile(
     # shingles only — and losing the broadcast here would shuffle every
     # shingle string corpus-wide.
     hits = occ.join(F.broadcast(dup), "shingle", "leftsemi")
-    w = Window.partitionBy(id_col).orderBy("start_pos")
+    w = Window.partitionBy(ID_COL).orderBy("start_pos")
     islands = hits.withColumn(
         "__new",
         F.when(
@@ -833,17 +795,17 @@ def duplicated_span_profile(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         ),
     )
-    per_island = islands.groupBy(id_col, "total_tokens", "__island").agg(
+    per_island = islands.groupBy(ID_COL, "total_tokens", "__island").agg(
         (F.max("start_pos") - F.min("start_pos") + F.lit(k)).alias("__covered")
     )
     return (
-        per_island.groupBy(id_col, "total_tokens")
+        per_island.groupBy(ID_COL, "total_tokens")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_dup_spans"),
             F.sum("__covered").cast("long").alias("dup_tokens"),
         )
         .select(
-            id_col,
+            ID_COL,
             "n_dup_spans",
             "dup_tokens",
             F.col("total_tokens").cast("long").alias("total_tokens"),
@@ -851,19 +813,13 @@ def duplicated_span_profile(
                 "CAST(1000000 * dup_tokens DIV total_tokens AS BIGINT)"
             ).alias("dup_fraction_micro"),
         )
-        .orderBy(id_col)
+        .orderBy(ID_COL)
     )
 
 
-def edit_distance_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    d: int = 2,
-    key_len: int = 48,
-) -> DataFrame:
+def edit_distance_pairs(df: DataFrame, d: int = 2, key_len: int = 48) -> DataFrame:
     """Edit-distance similarity join (r11): all unordered pairs whose
-    dedup keys — the first ``key_len`` characters of ``text_col`` — are
+    dedup keys — the first ``key_len`` characters of ``text`` — are
     within Levenshtein distance ``d``. The tenth near-dup family member,
     and the one the shingle/minhash/simhash lanes structurally miss:
     character-level typo/OCR variants keep ED tiny while every 3-word
@@ -895,8 +851,8 @@ def edit_distance_pairs(
     k = d + 1
     base = cache.materialize(
         df.select(
-            F.col(id_col).alias("id"),
-            F.substring(F.col(text_col), 1, key_len).alias("s"),
+            F.col(ID_COL).alias("id"),
+            F.substring(F.col(TEXT_COL), 1, key_len).alias("s"),
         )
         .withColumn("len", F.length("s"))
         .filter(F.col("len") >= k)
@@ -975,16 +931,11 @@ def edit_distance_pairs(
 
 def sorted_neighborhood_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     window: int = 4,
-    block_chars: int = 4,
-    key_chars: int = 24,
     threshold: float = 0.5,
-    n_shingle: int = 3,
 ) -> DataFrame:
     """Sorted-neighborhood near-dup candidates (Hernández & Stolfo,
-    SIGMOD'95): sort records by a fuzzy key (the first ``key_chars`` of
+    SIGMOD'95): sort records by a fuzzy key (the first 24 characters of
     the lowercased text), slide a window of ``window`` rows, and verify
     only pairs that fall inside the window — the third classic blocking
     discipline beside hash blocking (lang blocks in ngram_jaccard_pairs)
@@ -995,7 +946,7 @@ def sorted_neighborhood_pairs(
     complementary, which is why both exist.
 
     This is the BLOCKED form: the sort+window runs per key-prefix block
-    (first ``block_chars``), so it is parallel across blocks and never
+    (first 4 characters), so it is parallel across blocks and never
     a SinglePartition window; pairs straddling a block boundary are the
     hybrid form's stated miss (Hernández & Stolfo run multi-pass with
     different keys for the same reason). Verification is exact hashed-
@@ -1004,16 +955,16 @@ def sorted_neighborhood_pairs(
         raise ValueError(f"window must be >= 2, got {window}")
     from pyspark.sql import Window as W
 
-    key = F.substring(F.lower(F.col(text_col)), 1, key_chars)
+    key = F.substring(F.lower(F.col(TEXT_COL)), 1, 24)
     base = _spread(
-        df.filter(F.col(text_col).isNotNull()).select(
-            F.col(id_col).alias("id"),
+        df.filter(F.col(TEXT_COL).isNotNull()).select(
+            F.col(ID_COL).alias("id"),
             key.alias("__key"),
             F.array_distinct(
-                F.transform(T.word_shingles(F.col(text_col), n_shingle), T.hash32)
+                F.transform(T.word_shingles(F.col(TEXT_COL), N_SHINGLE), T.hash32)
             ).alias("sh"),
         )
-    ).withColumn("__blk", F.substring("__key", 1, block_chars)).withColumn(
+    ).withColumn("__blk", F.substring("__key", 1, 4)).withColumn(
         "n_sh", F.size("sh")
     )
     base = cache.materialize(base)

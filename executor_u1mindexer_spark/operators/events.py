@@ -25,17 +25,24 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+TS_COL = "ts"
+USER_COL = "user_id"
+TYPE_COL = "event_type"
+ORDER_COLS = ("ts", "event_id")
+PROB_SCALE = 10**6
+VIEW_TYPE = "view"
+CONVERT_TYPE = "purchase"
+
 
 def tumbling_window(
     events: DataFrame,
     duration: str,
     keys: Sequence[str] = (),
-    ts_col: str = "ts",
     aggs: Sequence[Column] | None = None,
 ) -> DataFrame:
     """Fixed (tumbling) window aggregation: F.window(ts, duration)."""
     aggs = list(aggs) if aggs else [F.count(F.lit(1)).alias("n_events")]
-    out = events.groupBy(F.window(F.col(ts_col), duration).alias("w"), *keys).agg(*aggs)
+    out = events.groupBy(F.window(F.col(TS_COL), duration).alias("w"), *keys).agg(*aggs)
     agg_cols = [c for c in out.columns if c != "w" and c not in keys]
     return out.select(
         F.col("w.start").alias("window_start"),
@@ -49,51 +56,38 @@ def sliding_window(
     events: DataFrame,
     duration: str,
     slide: str,
-    keys: Sequence[str] = (),
-    ts_col: str = "ts",
     aggs: Sequence[Column] | None = None,
 ) -> DataFrame:
     """Sliding window: each event lands in duration/slide windows."""
     aggs = list(aggs) if aggs else [F.count(F.lit(1)).alias("n_events")]
-    out = events.groupBy(F.window(F.col(ts_col), duration, slide).alias("w"), *keys).agg(*aggs)
-    agg_cols = [c for c in out.columns if c != "w" and c not in keys]
+    out = events.groupBy(F.window(F.col(TS_COL), duration, slide).alias("w")).agg(*aggs)
     return out.select(
         F.col("w.start").alias("window_start"),
         F.col("w.end").alias("window_end"),
-        *keys,
-        *agg_cols,
+        *[c for c in out.columns if c != "w"],
     )
 
 
 def sessionize(
     events: DataFrame,
     gap: str,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     aggs: Sequence[Column] | None = None,
 ) -> DataFrame:
     """Session windows: events of one user closer than `gap` merge into one
     session (F.session_window — native stateful merge; in batch mode a
     grouped sort-merge per user). window.end = last event + gap."""
     aggs = list(aggs) if aggs else [F.count(F.lit(1)).alias("n_events")]
-    out = events.groupBy(F.session_window(F.col(ts_col), gap).alias("w"), user_col).agg(*aggs)
-    agg_cols = [c for c in out.columns if c != "w" and c != user_col]
+    out = events.groupBy(F.session_window(F.col(TS_COL), gap).alias("w"), USER_COL).agg(*aggs)
+    agg_cols = [c for c in out.columns if c != "w" and c != USER_COL]
     return out.select(
-        user_col,
+        USER_COL,
         F.col("w.start").alias("session_start"),
         F.col("w.end").alias("session_end"),
         *agg_cols,
     )
 
 
-def sessionize_capped(
-    events: DataFrame,
-    gap_s: int,
-    cap_s: int,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def sessionize_capped(events: DataFrame, gap_s: int, cap_s: int) -> DataFrame:
     """Sessionization with BOTH an inactivity gap and a max-duration cap
     (r11) — the web-analytics session rule (GA/Snowplow default: 30-min
     idle OR the absolute session ceiling) that neither F.session_window
@@ -118,19 +112,19 @@ def sessionize_capped(
     if gap_s <= 0 or cap_s <= 0:
         raise ValueError(f"gap_s and cap_s must be > 0, got {gap_s}, {cap_s}")
     out_schema = (
-        f"{user_col} long, session_start_s long, session_end_s long, n_events long"
+        f"{USER_COL} long, session_start_s long, session_end_s long, n_events long"
     )
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([ts_col, id_col], kind="mergesort")
+        pdf = pdf.sort_values([TS_COL, "event_id"], kind="mergesort")
         # normalize to ns resolution BEFORE the epoch division: pandas 2.x
         # can deliver datetime64[us]/[ms] series from Arrow, where a bare
         # .astype('int64') would silently yield wrong "seconds" and shift
         # every session boundary (ADVICE r11)
         t = (
-            pdf[ts_col].astype("datetime64[ns]").astype("int64") // 1_000_000_000
+            pdf[TS_COL].astype("datetime64[ns]").astype("int64") // 1_000_000_000
         ).to_numpy()
-        uid = pdf[user_col].iloc[0]
+        uid = pdf[USER_COL].iloc[0]
         rows = []
         start = prev = None
         n = 0
@@ -148,22 +142,20 @@ def sessionize_capped(
         if start is not None:
             rows.append((uid, start, prev, n))
         return pd.DataFrame(
-            rows, columns=[user_col, "session_start_s", "session_end_s", "n_events"]
+            rows, columns=[USER_COL, "session_start_s", "session_end_s", "n_events"]
         )
 
-    return events.groupBy(user_col).applyInPandas(fold, out_schema)
+    return events.groupBy(USER_COL).applyInPandas(fold, out_schema)
 
 
 def asof_join_last_before(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     asof_col: str = "asof_ts",
 ) -> DataFrame:
     """As-of join: for each left row, the greatest right timestamp of the
-    same key with right_ts <= left_ts (NULL when none).
+    same key with right ts <= left ts (NULL when none).
 
     Union+window formulation: tag both sides, sort per key by (ts, tag) with
     right rows first at equal timestamps (<= semantics), then propagate the
@@ -171,20 +163,20 @@ def asof_join_last_before(
     preceding frame. One shuffle on the key; both sides can be arbitrarily
     large (DuckDB's ASOF JOIN is the oracle equivalent).
     """
-    rts_type = right.schema[right_ts].dataType  # keep tz-ness identical to the input
+    rts_type = right.schema[TS_COL].dataType  # keep tz-ness identical to the input
     l_tag = left.select(
         F.col(on).alias("__k"),
-        F.col(left_ts).alias("__ts"),
+        F.col(TS_COL).alias("__ts"),
         F.lit(1).alias("__is_left"),
         F.struct(*left.columns).alias("__row"),
         F.lit(None).cast(rts_type).alias("__rts"),
     )
     r_tag = right.select(
         F.col(on).alias("__k"),
-        F.col(right_ts).alias("__ts"),
+        F.col(TS_COL).alias("__ts"),
         F.lit(0).alias("__is_left"),
         F.lit(None).cast(l_tag.schema["__row"].dataType).alias("__row"),
-        F.col(right_ts).alias("__rts"),
+        F.col(TS_COL).alias("__rts"),
     )
     u = l_tag.unionByName(r_tag)
     w = (
@@ -200,13 +192,7 @@ def asof_join_last_before(
     return out
 
 
-def asof_join_nearest(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-) -> DataFrame:
+def asof_join_nearest(left: DataFrame, right: DataFrame, on: str) -> DataFrame:
     """The other two as-of directions in one pass (r11): for each left
     row, ``before_ts`` = greatest right ts <= left ts (what
     asof_join_last_before returns), ``after_ts`` = smallest right ts >=
@@ -221,20 +207,20 @@ def asof_join_nearest(
     right row behind it, >= ahead of it), so the plan is one exchange
     with two sorted Window nodes over it, still no join and no
     per-row probe."""
-    rts_type = right.schema[right_ts].dataType
+    rts_type = right.schema[TS_COL].dataType
     l_tag = left.select(
         F.col(on).alias("__k"),
-        F.col(left_ts).alias("__ts"),
+        F.col(TS_COL).alias("__ts"),
         F.lit(1).alias("__is_left"),
         F.struct(*left.columns).alias("__row"),
         F.lit(None).cast(rts_type).alias("__rts"),
     )
     r_tag = right.select(
         F.col(on).alias("__k"),
-        F.col(right_ts).alias("__ts"),
+        F.col(TS_COL).alias("__ts"),
         F.lit(0).alias("__is_left"),
         F.lit(None).cast(l_tag.schema["__row"].dataType).alias("__row"),
-        F.col(right_ts).alias("__rts"),
+        F.col(TS_COL).alias("__rts"),
     )
     u = l_tag.unionByName(r_tag)
     wb = (
@@ -283,13 +269,7 @@ def asof_join_nearest(
     )
 
 
-def funnel_stages(
-    events: DataFrame,
-    stages: Sequence[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
+def funnel_stages(events: DataFrame, stages: Sequence[str]) -> DataFrame:
     """Ordered-funnel analysis: per user, the earliest time each stage was
     reached STRICTLY AFTER the previous stage (view → click → purchase
     style). Returns one row per user who completed stage 1, with a nullable
@@ -304,19 +284,19 @@ def funnel_stages(
     if not stages:
         raise ValueError("funnel needs at least one stage")
     reached = (
-        events.filter(F.col(type_col) == stages[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("stage_1_ts"))
+        events.filter(F.col(TYPE_COL) == stages[0])
+        .groupBy(USER_COL)
+        .agg(F.min(TS_COL).alias("stage_1_ts"))
     )
     for i, stage in enumerate(stages[1:], start=2):
         nxt = (
-            events.filter(F.col(type_col) == stage)
-            .join(reached.select(user_col, f"stage_{i-1}_ts"), on=user_col)
-            .filter(F.col(ts_col) > F.col(f"stage_{i-1}_ts"))
-            .groupBy(user_col)
-            .agg(F.min(ts_col).alias(f"stage_{i}_ts"))
+            events.filter(F.col(TYPE_COL) == stage)
+            .join(reached.select(USER_COL, f"stage_{i-1}_ts"), on=USER_COL)
+            .filter(F.col(TS_COL) > F.col(f"stage_{i-1}_ts"))
+            .groupBy(USER_COL)
+            .agg(F.min(TS_COL).alias(f"stage_{i}_ts"))
         )
-        reached = reached.join(nxt, on=user_col, how="left")
+        reached = reached.join(nxt, on=USER_COL, how="left")
     return reached
 
 
@@ -326,12 +306,7 @@ def json_get_int(col: Column | str, path: str) -> Column:
     return F.get_json_object(c, path).cast("int")
 
 
-def gapfill_hourly(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
+def gapfill_hourly(events: DataFrame) -> DataFrame:
     """Time-bucket rollup with GAP FILLING + forward fill — the hypertable
     op TSDBs ship natively: hourly sums per key over a dense hour spine
     (every hour between the corpus min and max, whether or not events
@@ -343,50 +318,43 @@ def gapfill_hourly(
     summary-sized (hours × cardinality), so the forward-fill window runs
     over the SUMMARY, never the event stream. Sum in decimal so the filled
     values are partition-order independent."""
-    hour = F.date_trunc("hour", F.col(ts_col))
-    hourly = events.groupBy(hour.alias("h"), F.col(key_col)).agg(
-        F.sum(F.col(value_col).cast("decimal(18,6)")).cast("double").alias("v"),
+    hour = F.date_trunc("hour", F.col(TS_COL))
+    hourly = events.groupBy(hour.alias("h"), F.col(TYPE_COL)).agg(
+        F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("v"),
         F.count(F.lit(1)).alias("n_events"),
     )
     bounds = events.agg(
-        F.date_trunc("hour", F.min(ts_col)).alias("lo"),
-        F.date_trunc("hour", F.max(ts_col)).alias("hi"),
+        F.date_trunc("hour", F.min(TS_COL)).alias("lo"),
+        F.date_trunc("hour", F.max(TS_COL)).alias("hi"),
     )
     spine = bounds.select(
         F.explode(F.sequence("lo", "hi", F.expr("interval 1 hour"))).alias("h")
     )
-    keys = events.select(key_col).distinct()
+    keys = events.select(TYPE_COL).distinct()
     full = spine.crossJoin(keys)
     w = (
-        Window.partitionBy(key_col)
+        Window.partitionBy(TYPE_COL)
         .orderBy(F.col("h").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    joined = full.join(hourly, on=["h", key_col], how="left")
+    joined = full.join(hourly, on=["h", TYPE_COL], how="left")
     return joined.select(
         F.col("h").alias("hour"),
-        F.col(key_col),
+        F.col(TYPE_COL),
         F.last("v", ignorenulls=True).over(w).alias("v_filled"),
         F.coalesce("n_events", F.lit(0)).alias("n_events"),
         F.col("v").isNull().alias("is_gap"),
     )
 
 
-def markov_transitions(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    order_cols: tuple = ("ts", "event_id"),
-    prob_scale: int = 10**6,
-) -> DataFrame:
+def markov_transitions(events: DataFrame) -> DataFrame:
     """First-order Markov transition matrix over per-key event chains
     (r07) — the user-behavior model a product-analytics pipeline fits:
     for each (from_type, to_type) pair, the transition count over all
     consecutive event pairs of the same key, and the row-normalized
-    probability as a MICRO-SCALED INTEGER ((cnt * prob_scale) DIV
+    probability as a MICRO-SCALED INTEGER ((cnt * PROB_SCALE) DIV
     row_total — exact floor division, so the matrix is bit-identical
-    across engines; probabilities in a row sum to prob_scale minus the
+    across engines; probabilities in a row sum to PROB_SCALE minus the
     floor remainders, which is the documented convention, not an error).
 
     Scale shape: one lag window PARTITIONED by key (state = 1 row), one
@@ -396,10 +364,10 @@ def markov_transitions(
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(key_col).orderBy(*order_cols)
+    w = Window.partitionBy(USER_COL).orderBy(*ORDER_COLS)
     pairs = events.select(
-        F.col(type_col).alias("to_type"),
-        F.lag(type_col).over(w).alias("from_type"),
+        F.col(TYPE_COL).alias("to_type"),
+        F.lag(TYPE_COL).over(w).alias("from_type"),
     ).filter(F.col("from_type").isNotNull())
     counts = pairs.groupBy("from_type", "to_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_transitions")
@@ -413,7 +381,7 @@ def markov_transitions(
             "from_type",
             "to_type",
             "n_transitions",
-            F.expr(f"(n_transitions * {prob_scale}L) DIV __row_total")
+            F.expr(f"(n_transitions * {PROB_SCALE}L) DIV __row_total")
             .cast("long")
             .alias("prob_micro"),
         )
@@ -421,21 +389,14 @@ def markov_transitions(
     )
 
 
-def oracle_markov_sql(
-    source: str = "events",
-    *,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    order_cols: tuple = ("ts", "event_id"),
-    prob_scale: int = 10**6,
-) -> str:
-    order = ", ".join(order_cols)
+def oracle_markov_sql() -> str:
+    order = ", ".join(ORDER_COLS)
     return f"""
 WITH pairs AS (
-  SELECT lag({type_col}) OVER (PARTITION BY {key_col} ORDER BY {order})
+  SELECT lag({TYPE_COL}) OVER (PARTITION BY {USER_COL} ORDER BY {order})
            AS from_type,
-         {type_col} AS to_type
-  FROM {source}
+         {TYPE_COL} AS to_type
+  FROM events
 ), c AS (
   SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n_transitions
   FROM pairs WHERE from_type IS NOT NULL
@@ -445,7 +406,7 @@ WITH pairs AS (
   FROM c GROUP BY from_type
 )
 SELECT c.from_type, c.to_type, c.n_transitions,
-       CAST((c.n_transitions * {prob_scale}) // t.row_total AS BIGINT)
+       CAST((c.n_transitions * {PROB_SCALE}) // t.row_total AS BIGINT)
          AS prob_micro
 FROM c JOIN t ON c.from_type = t.from_type
 ORDER BY c.from_type, c.to_type
@@ -594,7 +555,6 @@ def decayed_counts(
     events: DataFrame,
     keys: Sequence[str],
     ts_col: str = "ts",
-    max_exponent: int = 33,
 ) -> DataFrame:
     """Exponentially time-decayed counts, EXACT (r12): per key, the sum of
     per-event weights 2^(event_day − oldest_day) — a per-day half-life-one
@@ -606,7 +566,7 @@ def decayed_counts(
     SinglePartition window.
 
     Overflow is a data property, not a silent wrap: the exponent is
-    guarded at ``max_exponent`` (default 33: n·2^33 stays under 2^63 for
+    guarded at 33 (n·2^33 stays under 2^63 for
     any n < 2^29 rows) and an out-of-range day span fails loudly via
     raise_error. For longer horizons, pre-bucket ts to weeks/months so
     the span fits, which is also the semantically honest reading of "decay"
@@ -620,11 +580,11 @@ def decayed_counts(
     anchor = tagged.agg(F.min("__day").alias("__day0"))
     exp = F.datediff(F.col("__day"), F.col("__day0"))
     checked = F.when(
-        (exp >= 0) & (exp <= max_exponent), exp
+        (exp >= 0) & (exp <= 33), exp
     ).otherwise(
         F.raise_error(
             F.lit(
-                f"decayed_counts: day span exceeds max_exponent={max_exponent} "
+                "decayed_counts: day span exceeds max_exponent=33 "
                 "(the BIGINT-exact weight range) — pre-bucket the timestamp"
             )
         )
@@ -648,14 +608,13 @@ def decayed_leaderboard(
     group_col: str,
     entity_col: str,
     top_n: int = 3,
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Top-N entities per group by exact decayed score (decayed_counts),
     ties broken by entity id ascending — the "trending now" leaderboard
     as a deterministic artifact. One grouped sum + one key-partitioned
     window; at scale the rank never sees more than one group per
     partition slice and the hot-group variant is topk_per_group_salted."""
-    scored = decayed_counts(events, [group_col, entity_col], ts_col)
+    scored = decayed_counts(events, [group_col, entity_col], TS_COL)
     w = Window.partitionBy(group_col).orderBy(
         F.col("decayed_score").desc(), F.col(entity_col).asc()
     )
@@ -667,11 +626,7 @@ def decayed_leaderboard(
     )
 
 
-def cusum_drift(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def cusum_drift(events: DataFrame) -> DataFrame:
     """One-sided CUSUM drift statistic over per-key daily counts (r12) —
     the classic sequential changepoint monitor (Page 1954): with daily
     deviations d_i = x_i − ref (ref = the key's floor-mean daily count),
@@ -693,32 +648,32 @@ def cusum_drift(
     rolling_zscore / drift_chi2.]"""
     daily = (
         events.groupBy(
-            key_col, F.date_trunc("day", F.col(ts_col)).cast("date").alias("day")
+            TYPE_COL, F.date_trunc("day", F.col(TS_COL)).cast("date").alias("day")
         )
         .agg(F.count(F.lit(1)).cast("long").alias("x"))
     )
     # integer DIV, not double /: a double quotient can round UP across an
     # integer boundary for large sums, and the oracle floors
-    ref = daily.groupBy(key_col).agg(
+    ref = daily.groupBy(TYPE_COL).agg(
         F.expr("sum(x) DIV count(1)").cast("long").alias("ref")
     )
-    w = Window.partitionBy(key_col).orderBy("day").rowsBetween(
+    w = Window.partitionBy(TYPE_COL).orderBy("day").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    d = daily.join(ref, key_col).withColumn("dev", F.col("x") - F.col("ref"))
+    d = daily.join(ref, TYPE_COL).withColumn("dev", F.col("x") - F.col("ref"))
     p = d.withColumn("pref", F.sum("dev").over(w))
     s = p.withColumn(
         "cusum",
         F.col("pref") - F.least(F.lit(0).cast("long"), F.min("pref").over(w)),
     )
     return s.select(
-        key_col,
+        TYPE_COL,
         "day",
         "x",
         "ref",
         F.col("cusum").cast("long").alias("cusum"),
         (F.col("cusum") * 2 > F.col("ref")).alias("flagged"),
-    ).orderBy(key_col, "day")
+    ).orderBy(TYPE_COL, "day")
 
 
 # ------------------------------------------------- per-group OLS (r12)
@@ -996,15 +951,7 @@ _AB_CHI2 = (
 AB_WINDOW_US = 86_400_000_000  # 24 h in microseconds
 
 
-def ab_conversion_lift(
-    df: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    view_type: str = "view",
-    convert_type: str = "purchase",
-    window_us: int = AB_WINDOW_US,
-) -> DataFrame:
+def ab_conversion_lift(df: DataFrame) -> DataFrame:
     """(arm, n_users, n_converted, conv_rate, rel_lift, chi2) — one row
     per arm; rel_lift (arm 1 vs arm 0) and the exact chi-square ride
     both rows as the experiment-level columns. One grouped min per
@@ -1019,38 +966,38 @@ def ab_conversion_lift(
     (tiny inputs hashing to one arm) the surviving arm's occupancy row
     still emits, with NULL rel_lift/chi2 where the 2x2 cannot form."""
     h32 = (
-        f"CAST(conv(substr(md5(CAST({user_col} AS STRING)), 1, 8), 16, 10)"
+        f"CAST(conv(substr(md5(CAST({USER_COL} AS STRING)), 1, 8), 16, 10)"
         " AS BIGINT)"
     )
     users = (
-        df.filter(F.col(user_col).isNotNull())
-        .select(user_col)
+        df.filter(F.col(USER_COL).isNotNull())
+        .select(USER_COL)
         .distinct()
         .withColumn("arm", F.expr(f"{h32} % 2"))
     )
     fv = (
-        df.filter(F.col(type_col) == view_type)
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("__fv"))
+        df.filter(F.col(TYPE_COL) == VIEW_TYPE)
+        .groupBy(USER_COL)
+        .agg(F.min(TS_COL).alias("__fv"))
     )
     conv = (
-        df.filter(F.col(type_col) == convert_type)
-        .select(user_col, F.col(ts_col).alias("__ct"))
-        .join(fv, user_col)
+        df.filter(F.col(TYPE_COL) == CONVERT_TYPE)
+        .select(USER_COL, F.col(TS_COL).alias("__ct"))
+        .join(fv, USER_COL)
         .filter(
             (F.col("__ct") > F.col("__fv"))
             & (
                 F.expr("unix_micros(CAST(__ct AS TIMESTAMP))")
                 - F.expr("unix_micros(CAST(__fv AS TIMESTAMP))")
-                <= F.lit(window_us)
+                <= F.lit(AB_WINDOW_US)
             )
         )
-        .select(user_col)
+        .select(USER_COL)
         .distinct()
         .withColumn("__conv", F.lit(1))
     )
     per_arm = (
-        users.join(conv, user_col, "left")
+        users.join(conv, USER_COL, "left")
         .groupBy("arm")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_users"),
@@ -1102,37 +1049,29 @@ def ab_conversion_lift(
     )
 
 
-def oracle_ab_conversion_sql(
-    source: str,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    view_type: str = "view",
-    convert_type: str = "purchase",
-    window_us: int = AB_WINDOW_US,
-) -> str:
+def oracle_ab_conversion_sql(source: str) -> str:
     h32 = (
-        f"CAST(concat('0x', substr(md5(CAST({user_col} AS STRING)), 1, 8))"
+        f"CAST(concat('0x', substr(md5(CAST({USER_COL} AS STRING)), 1, 8))"
         " AS BIGINT)"
     )
     return f"""
 WITH __users AS (
-  SELECT DISTINCT {user_col}, {h32} % 2 AS arm
-  FROM {source} WHERE {user_col} IS NOT NULL
+  SELECT DISTINCT {USER_COL}, {h32} % 2 AS arm
+  FROM {source} WHERE {USER_COL} IS NOT NULL
 ),
 __fv AS (
-  SELECT {user_col}, min({ts_col}) AS __fv FROM {source}
-  WHERE {type_col} = '{view_type}' GROUP BY {user_col}
+  SELECT {USER_COL}, min({TS_COL}) AS __fv FROM {source}
+  WHERE {TYPE_COL} = '{VIEW_TYPE}' GROUP BY {USER_COL}
 ),
 __conv AS (
-  SELECT DISTINCT s.{user_col} FROM {source} s JOIN __fv f USING ({user_col})
-  WHERE s.{type_col} = '{convert_type}' AND s.{ts_col} > f.__fv
-    AND epoch_us(s.{ts_col}) - epoch_us(f.__fv) <= {window_us}
+  SELECT DISTINCT s.{USER_COL} FROM {source} s JOIN __fv f USING ({USER_COL})
+  WHERE s.{TYPE_COL} = '{CONVERT_TYPE}' AND s.{TS_COL} > f.__fv
+    AND epoch_us(s.{TS_COL}) - epoch_us(f.__fv) <= {AB_WINDOW_US}
 ),
 __per_arm AS (
   SELECT u.arm, CAST(count(*) AS BIGINT) AS n_users,
-         CAST(count(c.{user_col}) AS BIGINT) AS n_converted
-  FROM __users u LEFT JOIN __conv c USING ({user_col})
+         CAST(count(c.{USER_COL}) AS BIGINT) AS n_converted
+  FROM __users u LEFT JOIN __conv c USING ({USER_COL})
   GROUP BY u.arm
 ),
 __w AS (

@@ -243,7 +243,6 @@ def encode_gif_animated(
     frames: list[dict],
     *,
     bg_color: tuple[int, int, int] = (0, 0, 0),
-    loop: int = 0,
 ) -> bytes:
     """Encode an animated GIF89a. Each frame dict:
       left, top, w, h   — sub-rectangle inside the sw x sh logical screen
@@ -294,7 +293,7 @@ def encode_gif_animated(
     out += b"\x00\x00"  # background color index 0, aspect
     out += gct
     # Netscape looping extension
-    out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01" + struct.pack("<H", loop) + b"\x00"
+    out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00"  # loop count 0: forever
     for fr, idxs, tidx in per_frame:
         # graphic control extension: disposal + delay + transparency
         gce_flags = ((fr.get("disposal", 0) & 0x07) << 2) | (

@@ -192,8 +192,6 @@ def knn_search(
     k: int = DEFAULT_K,
     metric: str = "cosine",
     is_distance: bool = True,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_embedding",
     payload: DataFrame | None = None,
@@ -226,8 +224,8 @@ def knn_search(
             queries,
             k=k,
             metric=metric,
-            id_col=id_col,
-            vec_col=vec_col,
+            id_col="vec_id",
+            vec_col="embedding",
             query_id_col=query_id_col,
             query_vec_col=query_vec_col,
         )
@@ -237,8 +235,8 @@ def knn_search(
             V.as_double_array(query_vec_col).alias("__qvec"),
         )
         s = stored.select(
-            F.col(id_col),
-            V.as_double_array(vec_col).alias("__svec"),
+            F.col("vec_id"),
+            V.as_double_array("embedding").alias("__svec"),
         )
         if metric == "cosine":
             # norms once per ROW before the join, not once per PAIR inside the
@@ -258,17 +256,17 @@ def knn_search(
             dist = V.distance(metric, F.col("__qvec"), F.col("__svec"))
         scored = joined.select(
             query_id_col,
-            id_col,
+            "vec_id",
             dist.alias("__dist"),
         )
 
-    w = Window.partitionBy(query_id_col).orderBy(F.col("__dist").asc(), F.col(id_col).asc())
+    w = Window.partitionBy(query_id_col).orderBy(F.col("__dist").asc(), F.col("vec_id").asc())
     topk = (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= F.lit(k))
         .select(
             query_id_col,
-            id_col,
+            "vec_id",
             "rank",
             V.score_transform(metric, F.col("__dist"), is_distance).alias("score"),
         )
@@ -280,7 +278,7 @@ def knn_search(
         # k x queries result rows.
         topk = (
             F.broadcast(topk)
-            .join(payload, on=topk[id_col] == payload[payload_key], how="inner")
+            .join(payload, on=topk["vec_id"] == payload[payload_key], how="inner")
             .drop(payload_key)
         )
     return topk

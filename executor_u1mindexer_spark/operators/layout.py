@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+N_BUCKET_BITS = 5
+
 BITS_DEFAULT = 16
 
 
@@ -287,14 +289,7 @@ def zorder_layout_stats(
 PRED_PCTS = ((0, 10), (45, 55), (80, 90))
 
 
-def file_skipping_stats(
-    df: DataFrame,
-    col_a: str,
-    col_b: str,
-    bits: int = BITS_DEFAULT,
-    n_bucket_bits: int = 5,
-    pred_pcts: tuple = PRED_PCTS,
-) -> DataFrame:
+def file_skipping_stats(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     """The OTHER half of the z-order story (r07): zorder_layout_stats
     measures min/max SPANS; this measures what those spans BUY — how many
     simulated files a range predicate on the second dimension actually
@@ -312,15 +307,15 @@ def file_skipping_stats(
     legitimate); the strict span inequality lives in
     layout_zorder_clustering.
 
-    Scale shape: per-file stats are one grouped agg to <= 2^n_bucket_bits
+    Scale shape: per-file stats are one grouped agg to <= 2^N_BUCKET_BITS
     rows; predicate evaluation is a broadcast join of those tiny stats
-    against the <= |pred_pcts|-row bounds table; rows_matched is one
+    against the <= |PRED_PCTS|-row bounds table; rows_matched is one
     broadcast-range filter + grouped count over the fact rows.
 
     r10: the Hilbert layout rides the same machinery as a third arm
     (h_files_total / h_files_read / h_not_worse_on_b) — the skipping
     proof for the curve layout_hilbert_clustering measures spans for."""
-    maps = _rank_space_maps(df, [col_a, col_b], bits)  # 2 driver jobs, not 4
+    maps = _rank_space_maps(df, [col_a, col_b], BITS_DEFAULT)  # 2 driver jobs, not 4
     amap = maps[col_a].withColumnRenamed("mapped", "__a16")
     bmap = maps[col_b].withColumnRenamed("mapped", "__b16")
     rows = (
@@ -333,10 +328,10 @@ def file_skipping_stats(
         .join(F.broadcast(bmap), F.col("__vb") == bmap["value"])
         .drop("value")
     )
-    rows = hilbert_apply(rows, "__a16", "__b16", bits, out="__h")
-    z = morton_interleave_sql("__a16", "__b16", bits, "spark")
-    zshift = 2 * bits - n_bucket_bits
-    ashift = bits - n_bucket_bits
+    rows = hilbert_apply(rows, "__a16", "__b16", BITS_DEFAULT, out="__h")
+    z = morton_interleave_sql("__a16", "__b16", BITS_DEFAULT, "spark")
+    zshift = 2 * BITS_DEFAULT - N_BUCKET_BITS
+    ashift = BITS_DEFAULT - N_BUCKET_BITS
     keyed = rows.select(
         "__vb",
         F.expr(_shr("__h", zshift, "spark")).cast("long").alias("__hb"),
@@ -344,7 +339,7 @@ def file_skipping_stats(
         F.expr(_shr("__a16", ashift, "spark")).cast("long").alias("__ab"),
     )
     spark = df.sparkSession
-    preds = spark.createDataFrame(list(pred_pcts), "p_lo int, p_hi int")
+    preds = spark.createDataFrame(list(PRED_PCTS), "p_lo int, p_hi int")
     mm = rows.agg(
         F.min("__vb").cast("long").alias("__mn"),
         F.max("__vb").cast("long").alias("__mx"),
@@ -586,22 +581,15 @@ def hilbert_layout_stats(
 # -- DuckDB oracle -----------------------------------------------------------
 
 
-def oracle_file_skipping_sql(
-    source: str,
-    col_a: str,
-    col_b: str,
-    bits: int = BITS_DEFAULT,
-    n_bucket_bits: int = 5,
-    pred_pcts: tuple = PRED_PCTS,
-) -> str:
-    z = morton_interleave_sql("__a16", "__b16", bits, "duck")
-    zshift = 2 * bits - n_bucket_bits
-    ashift = bits - n_bucket_bits
+def oracle_file_skipping_sql(source: str, col_a: str, col_b: str) -> str:
+    z = morton_interleave_sql("__a16", "__b16", BITS_DEFAULT, "duck")
+    zshift = 2 * BITS_DEFAULT - N_BUCKET_BITS
+    ashift = BITS_DEFAULT - N_BUCKET_BITS
 
     def rankmap(col: str) -> str:
         return f"""
   SELECT value,
-         CAST(((dense_rank() OVER (ORDER BY value ASC) - 1) * {1 << bits})
+         CAST(((dense_rank() OVER (ORDER BY value ASC) - 1) * {1 << BITS_DEFAULT})
               // (SELECT count(DISTINCT {col}) FROM {source}
                   WHERE {col} IS NOT NULL) AS BIGINT) AS mapped
   FROM (SELECT DISTINCT {col} AS value FROM {source}
@@ -610,8 +598,8 @@ def oracle_file_skipping_sql(
 
     # same unrolled xy2d stage chain as hilbert_apply (r10 third arm)
     stages, prev = [], "rows_m"
-    for i in range(bits - 1, -1, -1):
-        xn, yn, dt = _hilbert_stage_exprs(i, bits, "duck")
+    for i in range(BITS_DEFAULT - 1, -1, -1):
+        xn, yn, dt = _hilbert_stage_exprs(i, BITS_DEFAULT, "duck")
         name = f"hs{i}"
         stages.append(
             f"{name} AS (SELECT __vb, __a16, __b16, {xn} AS __hx,"
@@ -620,7 +608,7 @@ def oracle_file_skipping_sql(
         prev = name
     stage_sql = ",\n".join(stages)
 
-    values = ", ".join(f"({lo}, {hi})" for lo, hi in pred_pcts)
+    values = ", ".join(f"({lo}, {hi})" for lo, hi in PRED_PCTS)
     return f"""
 WITH amap AS ({rankmap(col_a)}),
 bmap AS ({rankmap(col_b)}),
@@ -696,21 +684,15 @@ ORDER BY b.p_lo
 """
 
 
-def oracle_zorder_stats_sql(
-    source: str,
-    col_a: str,
-    col_b: str,
-    bits: int = BITS_DEFAULT,
-    n_bucket_bits: int = 5,
-) -> str:
-    z = morton_interleave_sql("__a16", "__b16", bits, "duck")
-    zshift = 2 * bits - n_bucket_bits
-    ashift = bits - n_bucket_bits
+def oracle_zorder_stats_sql(source: str, col_a: str, col_b: str) -> str:
+    z = morton_interleave_sql("__a16", "__b16", BITS_DEFAULT, "duck")
+    zshift = 2 * BITS_DEFAULT - N_BUCKET_BITS
+    ashift = BITS_DEFAULT - N_BUCKET_BITS
 
     def rankmap(col: str) -> str:
         return f"""
   SELECT value,
-         CAST(((dense_rank() OVER (ORDER BY value ASC) - 1) * {1 << bits})
+         CAST(((dense_rank() OVER (ORDER BY value ASC) - 1) * {1 << BITS_DEFAULT})
               // (SELECT count(DISTINCT {col}) FROM {source}
                   WHERE {col} IS NOT NULL) AS BIGINT) AS mapped
   FROM (SELECT DISTINCT {col} AS value FROM {source}
@@ -757,24 +739,18 @@ FROM zs CROSS JOIN asx
 """
 
 
-def oracle_hilbert_stats_sql(
-    source: str,
-    col_a: str,
-    col_b: str,
-    bits: int = HB_BITS,
-    n_bucket_bits: int = 5,
-) -> str:
+def oracle_hilbert_stats_sql(source: str, col_a: str, col_b: str) -> str:
     """Same unrolled xy2d stages as hilbert_apply, emitted as a chain of
-    CTEs h{bits-1}..h0 — one stage per CTE, same fragment source, so the
+    CTEs h{HB_BITS-1}..h0 — one stage per CTE, same fragment source, so the
     curve index is bit-identical to the Spark side."""
-    z = morton_interleave_sql("__a16", "__b16", bits, "duck")
-    shift = 2 * bits - n_bucket_bits
-    ashift = bits - n_bucket_bits
+    z = morton_interleave_sql("__a16", "__b16", HB_BITS, "duck")
+    shift = 2 * HB_BITS - N_BUCKET_BITS
+    ashift = HB_BITS - N_BUCKET_BITS
 
     def rankmap(col: str) -> str:
         return f"""
   SELECT value,
-         CAST(((dense_rank() OVER (ORDER BY value ASC) - 1) * {1 << bits})
+         CAST(((dense_rank() OVER (ORDER BY value ASC) - 1) * {1 << HB_BITS})
               // (SELECT count(DISTINCT {col}) FROM {source}
                   WHERE {col} IS NOT NULL) AS BIGINT) AS mapped
   FROM (SELECT DISTINCT {col} AS value FROM {source}
@@ -782,8 +758,8 @@ def oracle_hilbert_stats_sql(
 """
 
     stages, prev = [], "rows_m"
-    for i in range(bits - 1, -1, -1):
-        xn, yn, dt = _hilbert_stage_exprs(i, bits, "duck")
+    for i in range(HB_BITS - 1, -1, -1):
+        xn, yn, dt = _hilbert_stage_exprs(i, HB_BITS, "duck")
         name = f"hs{i}"
         stages.append(
             f"{name} AS (SELECT __a16, __b16, {xn} AS __hx, {yn} AS __hy,"

@@ -53,9 +53,7 @@ def quantized_vectors(
     )
 
 
-def gram_moments(
-    emb: DataFrame, *, vec_col: str = "embedding", scale: int = GRAM_SCALE
-) -> DataFrame:
+def gram_moments(emb: DataFrame) -> DataFrame:
     """Exact second-moment accumulation: one row per dimension pair
     (i <= j) with (n, sum_qi, sum_qj, sum_qq) over quantized vectors.
     Everything a covariance/correlation/whitening step needs, in
@@ -64,7 +62,7 @@ def gram_moments(
     rows."""
     import numpy as np
 
-    q = quantized_vectors(emb, vec_col=vec_col, scale=scale)
+    q = quantized_vectors(emb, vec_col="embedding", scale=GRAM_SCALE)
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         acc = None

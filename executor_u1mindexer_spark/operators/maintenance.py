@@ -43,6 +43,8 @@ from pyspark.sql.types import IntegralType
 
 from executor_u1mindexer_spark import cache
 
+VALUE_SCALE = 1000
+
 ID = "id"
 IID = "internal_id"
 EMB = "emb"
@@ -119,7 +121,7 @@ def dense_rank_by(df: DataFrame, order_col: str, out_col: str) -> DataFrame:
     return df.join(ranked, on=order_col)
 
 
-def index_state(emb_df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def index_state(emb_df: DataFrame) -> DataFrame:
     """Build the canonical index-state DataFrame from a raw vector table.
 
     internal_id = dense insertion-order int; for the fixture we define
@@ -127,15 +129,15 @@ def index_state(emb_df: DataFrame, id_col: str = "vec_id", vec_col: str = "embed
     Rank assignment is the parallel partition-offset scheme (dense_rank_by),
     not a partition-less window.
     """
-    ranked = dense_rank_by(emb_df.select(id_col, vec_col), id_col, IID)
+    ranked = dense_rank_by(emb_df.select("vec_id", "embedding"), "vec_id", IID)
     return ranked.select(
-        F.col(id_col).alias(ID),
+        F.col("vec_id").alias(ID),
         F.col(IID),
-        F.col(vec_col).cast("array<double>").alias(EMB),
+        F.col("embedding").cast("array<double>").alias(EMB),
     )
 
 
-def dedup_latest(batch: DataFrame, id_col: str = ID, seq_col: str = SEQ) -> DataFrame:
+def dedup_latest(batch: DataFrame) -> DataFrame:
     """Keep-latest per id (last write in arrival order wins) — the batch-side
     half of upsert (executor.py:157-161 reprocesses duplicate ids in order;
     last assignment wins).
@@ -143,14 +145,14 @@ def dedup_latest(batch: DataFrame, id_col: str = ID, seq_col: str = SEQ) -> Data
     Shape: groupBy + max_by, NOT a row_number window. The aggregate gets
     map-side partial combine (duplicate ids collapse BEFORE the exchange,
     so a skewed 100 TB batch ships one row per id per map task), while the
-    window form must shuffle and sort every duplicate. Ties on seq_col pick
+    window form must shuffle and sort every duplicate. Ties on SEQ pick
     an arbitrary winner in both forms."""
-    others = [c for c in batch.columns if c not in (id_col, seq_col)]
-    agged = batch.groupBy(id_col).agg(
-        F.max_by(F.struct(*others), F.col(seq_col)).alias("__kept"),
-        F.max(seq_col).alias(seq_col),
+    others = [c for c in batch.columns if c not in (ID, SEQ)]
+    agged = batch.groupBy(ID).agg(
+        F.max_by(F.struct(*others), F.col(SEQ)).alias("__kept"),
+        F.max(SEQ).alias(SEQ),
     )
-    return agged.select(id_col, *[F.col(f"__kept.{c}").alias(c) for c in others], seq_col)
+    return agged.select(ID, *[F.col(f"__kept.{c}").alias(c) for c in others], SEQ)
 
 
 def slot_mark() -> Column:
@@ -323,8 +325,8 @@ def id_frame(spark: SparkSession, ids: Sequence[int], col: str = ID) -> DataFram
     relation (`LocalTableScan`). A parallelized Python list
     (`createDataFrame([(i,), ...])`) is a `Scan ExistingRDD` instead, and
     every plan that reads it starts Python workers to re-run the list — a
-    delete list is read by the delete's own accounting job, the docstore
-    anti-join, the next status, search and checkpoint. An empty list is a
+    delete list is read by the docstore anti-join, the next status, search
+    and checkpoint. An empty list is a
     literal-false filter, which Catalyst folds to an empty relation. A
     list of anything but integers raises ValueError naming its type."""
     arr = np.asarray(ids)
@@ -599,9 +601,7 @@ def scd2_apply(
 IVM_STATE_COLS = ("n_rows", "sum_milli", "min_milli", "max_milli")
 
 
-def ivm_agg_state(
-    df: DataFrame, keys: Sequence[str], value_col: str, value_scale: int = 1000
-) -> DataFrame:
+def ivm_agg_state(df: DataFrame, keys: Sequence[str], value_col: str) -> DataFrame:
     """Partial aggregate state for incremental view maintenance: per key,
     (n_rows, sum_milli, min_milli, max_milli) over the milli-scaled value
     (round(value*scale) BIGINT — the module-wide exact-integer
@@ -609,7 +609,7 @@ def ivm_agg_state(
     the distributive aggregates — count/sum/min/max merge associatively,
     and avg/variance derive from them at read time — which is what makes
     a materialized view maintainable without rescanning its base."""
-    v = F.round(F.col(value_col) * F.lit(float(value_scale))).cast("long")
+    v = F.round(F.col(value_col) * F.lit(float(VALUE_SCALE))).cast("long")
     return df.groupBy(*keys).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum(v).cast("long").alias("sum_milli"),
@@ -649,7 +649,6 @@ def ivm_retract_state(
     df: DataFrame,
     keys: Sequence[str],
     value_col: str,
-    value_scale: int = 1000,
     sign: int = 1,
 ) -> DataFrame:
     """Partial state for the RETRACTABLE incremental-view lanes (r11) —
@@ -669,7 +668,7 @@ def ivm_retract_state(
     variance derive at read time (ivm_retract_view)."""
     if sign not in (1, -1):
         raise ValueError(f"sign must be +1 or -1, got {sign}")
-    v = F.round(F.col(value_col) * F.lit(float(value_scale))).cast("long")
+    v = F.round(F.col(value_col) * F.lit(float(VALUE_SCALE))).cast("long")
     v_dec = v.cast("decimal(18,0)")
     return df.groupBy(*keys).agg(
         (F.lit(sign) * F.count(F.lit(1))).cast("long").alias("n_rows"),
@@ -685,7 +684,6 @@ def ivm_retract_state_cdc(
     keys: Sequence[str],
     value_col: str,
     sign_col: str,
-    value_scale: int = 1000,
 ) -> DataFrame:
     """ivm_retract_state over a CHANGELOG batch (the CDC/retract-stream
     shape): each row carries its own sign in ``sign_col`` (+1 insert,
@@ -696,7 +694,7 @@ def ivm_retract_state_cdc(
     checked = F.when((sg == 1) | (sg == -1), sg).otherwise(
         F.raise_error(F.lit("ivm_retract_state_cdc: sign must be +1 or -1"))
     )
-    v = F.round(F.col(value_col) * F.lit(float(value_scale))).cast("long")
+    v = F.round(F.col(value_col) * F.lit(float(VALUE_SCALE))).cast("long")
     v_dec = v.cast("decimal(18,0)")
     return df.groupBy(*keys).agg(
         F.sum(checked).cast("long").alias("n_rows"),

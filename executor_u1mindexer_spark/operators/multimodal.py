@@ -20,17 +20,20 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+ID_COL = "doc_id"
+BIN_COL = "img"
+
 BINARY_META_SCHEMA = "doc_id long, n_bytes int, first_byte int, fake_width int, fake_height int"
 
 
-def attach_fake_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_fake_binary(docs: DataFrame) -> DataFrame:
     """Deterministic stand-in payload: the 16 md5 bytes of the text column
     (the fixture has no real image bytes; this keeps every downstream step
     oracle-checkable)."""
-    return docs.withColumn("payload", F.unhex(F.md5(F.col(text_col))))
+    return docs.withColumn("payload", F.unhex(F.md5(F.col("text"))))
 
 
-def extract_binary_metadata(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload") -> DataFrame:
+def extract_binary_metadata(df: DataFrame) -> DataFrame:
     """Arrow-batched metadata extraction over a binary column (mapInPandas).
 
     The "decode" is a deterministic fake (dimensions derived from leading
@@ -41,10 +44,10 @@ def extract_binary_metadata(df: DataFrame, id_col: str = "doc_id", bin_col: str 
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = pdf[bin_col]
+            payloads = pdf["payload"]
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf[ID_COL],
                     "n_bytes": payloads.map(len),
                     "first_byte": payloads.map(lambda b: b[0]),
                     "fake_width": payloads.map(lambda b: b[0] % 64 + 1),
@@ -54,7 +57,7 @@ def extract_binary_metadata(df: DataFrame, id_col: str = "doc_id", bin_col: str 
 
     from executor_u1mindexer_spark.operators.dedup import _spread
 
-    return _spread(df.select(id_col, bin_col)).mapInPandas(
+    return _spread(df.select(ID_COL, "payload")).mapInPandas(
         extract, schema=BINARY_META_SCHEMA
     )
 
@@ -474,9 +477,7 @@ THUMB_META_SCHEMA = (
 )
 
 
-def thumbnail_metadata(
-    df: DataFrame, tw: int = 2, th: int = 2, id_col: str = "doc_id", bin_col: str = "img"
-) -> DataFrame:
+def thumbnail_metadata(df: DataFrame) -> DataFrame:
     """Decode + nearest-neighbor thumbnail + typed metadata in ONE Arrow
     pass (mapInPandas) — decode and feature-extract fused so payloads
     are touched once; the integer coordinate mapping keeps the
@@ -488,23 +489,23 @@ def thumbnail_metadata(
                 "doc_id": [], "format": [], "src_w": [], "src_h": [],
                 "thumb_w": [], "thumb_h": [], "thumb_pixel_sum": [],
             }
-            for did, payload in zip(pdf[id_col], pdf[bin_col]):
+            for did, payload in zip(pdf[ID_COL], pdf[BIN_COL]):
                 fmt, w, h, px = decode_image_px(bytes(payload))
                 ch = len(px) // (w * h)
-                thumb = resize_nearest(px, w, h, tw, th, ch)
+                thumb = resize_nearest(px, w, h, 2, 2, ch)
                 rows["doc_id"].append(did)
                 rows["format"].append(fmt)
                 rows["src_w"].append(w)
                 rows["src_h"].append(h)
-                rows["thumb_w"].append(tw)
-                rows["thumb_h"].append(th)
+                rows["thumb_w"].append(2)
+                rows["thumb_h"].append(2)
                 rows["thumb_pixel_sum"].append(sum(thumb))
             yield pd.DataFrame(rows)
 
-    return df.select(id_col, bin_col).mapInPandas(run, schema=THUMB_META_SCHEMA)
+    return df.select(ID_COL, BIN_COL).mapInPandas(run, schema=THUMB_META_SCHEMA)
 
 
-def attach_synthetic_images(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_synthetic_images(docs: DataFrame) -> DataFrame:
     """Deterministic test images derived ONLY from the id: width = id%5+2,
     height = id%3+2; container cycles id%4 → PPM / BMP / PNG / JPEG, with
     the PPM lane further split on id%8 == 4 → GIF (palette+LZW; lossless,
@@ -537,7 +538,7 @@ def attach_synthetic_images(docs: DataFrame, id_col: str = "doc_id") -> DataFram
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, payloads = [], []
-            for did in pdf[id_col]:
+            for did in pdf[ID_COL]:
                 did = int(did)
                 w, h = did % 5 + 2, did % 3 + 2
                 px = bytes((did * 7 + i) % 256 for i in range(w * h * 3))
@@ -581,16 +582,16 @@ def attach_synthetic_images(docs: DataFrame, id_col: str = "doc_id") -> DataFram
                         enc(w, h, color * (w * h), channels=3, subsampling="420")
                     )
                 ids.append(did)
-            yield pd.DataFrame({id_col: ids, "img": payloads})
+            yield pd.DataFrame({ID_COL: ids, "img": payloads})
 
     from executor_u1mindexer_spark.operators.dedup import _spread
 
-    return _spread(docs.select(id_col)).mapInPandas(
-        gen, schema=f"{id_col} long, img binary"
+    return _spread(docs.select(ID_COL)).mapInPandas(
+        gen, schema=f"{ID_COL} long, img binary"
     )
 
 
-def attach_synthetic_webp(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_synthetic_webp(docs: DataFrame) -> DataFrame:
     """Deterministic LOSSLESS WebP (VP8L) payloads from the id alone:
     w = id%6+3, h = id%4+3, RGB channel byte i = (id*7 + i) % 256 —
     the SAME pixel formula as the other lossless containers, so the
@@ -614,7 +615,7 @@ def attach_synthetic_webp(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, payloads = [], []
-            for did in pdf[id_col]:
+            for did in pdf[ID_COL]:
                 did = int(did)
                 w, h = did % 6 + 3, did % 4 + 3
                 px = bytes((did * 7 + i) % 256 for i in range(w * h * 3))
@@ -639,16 +640,16 @@ def attach_synthetic_webp(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
                     enc = encode_webp(w, h, px, transforms=("palette",))
                 payloads.append(enc)
                 ids.append(did)
-            yield pd.DataFrame({id_col: ids, "img": payloads})
+            yield pd.DataFrame({ID_COL: ids, "img": payloads})
 
     from executor_u1mindexer_spark.operators.dedup import _spread
 
-    return _spread(docs.select(id_col)).mapInPandas(
-        gen, schema=f"{id_col} long, img binary"
+    return _spread(docs.select(ID_COL)).mapInPandas(
+        gen, schema=f"{ID_COL} long, img binary"
     )
 
 
-def attach_synthetic_animations(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_synthetic_animations(docs: DataFrame) -> DataFrame:
     """Deterministic 4-frame animated GIFs derived ONLY from the id —
     built to exercise every GIF89a compositing rule with a closed-form
     per-frame pixel_sum (screen w = id%5+4, h = id%3+4; grays c0..c3 =
@@ -669,7 +670,7 @@ def attach_synthetic_animations(docs: DataFrame, id_col: str = "doc_id") -> Data
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, payloads = [], []
-            for did in pdf[id_col]:
+            for did in pdf[ID_COL]:
                 did = int(did)
                 w, h = did % 5 + 4, did % 3 + 4
                 c0, c1 = did * 3 % 256, did * 7 % 256
@@ -694,12 +695,12 @@ def attach_synthetic_animations(docs: DataFrame, id_col: str = "doc_id") -> Data
                     encode_gif_animated(w, h, frames, bg_color=(c0, c0, c0))
                 )
                 ids.append(did)
-            yield pd.DataFrame({id_col: ids, "anim": payloads})
+            yield pd.DataFrame({ID_COL: ids, "anim": payloads})
 
     from executor_u1mindexer_spark.operators.dedup import _spread
 
-    return _spread(docs.select(id_col)).mapInPandas(
-        gen, schema=f"{id_col} long, anim binary"
+    return _spread(docs.select(ID_COL)).mapInPandas(
+        gen, schema=f"{ID_COL} long, anim binary"
     )
 
 
@@ -709,9 +710,7 @@ ANIM_META_SCHEMA = (
 )
 
 
-def decode_gif_animation_metadata(
-    df: DataFrame, id_col: str = "doc_id", bin_col: str = "anim"
-) -> DataFrame:
+def decode_gif_animation_metadata(df: DataFrame) -> DataFrame:
     """Arrow-batched REAL multi-frame decode: one typed row per DISPLAYED
     frame (1->many mapInPandas explosion, like the video sampler) with
     the fully composited canvas's pixel_sum — the feature-extraction
@@ -724,7 +723,7 @@ def decode_gif_animation_metadata(
                 "doc_id": [], "frame_idx": [], "n_frames": [], "width": [],
                 "height": [], "delay_cs": [], "pixel_sum": [],
             }
-            for did, payload in zip(pdf[id_col], pdf[bin_col]):
+            for did, payload in zip(pdf[ID_COL], pdf["anim"]):
                 sw, sh, frames = decode_gif_frames(bytes(payload))
                 for fi, (delay, rgb) in enumerate(frames):
                     rows["doc_id"].append(did)
@@ -736,13 +735,13 @@ def decode_gif_animation_metadata(
                     rows["pixel_sum"].append(sum(rgb))
             yield pd.DataFrame(rows)
 
-    return df.select(id_col, bin_col).mapInPandas(decode, schema=ANIM_META_SCHEMA)
+    return df.select(ID_COL, "anim").mapInPandas(decode, schema=ANIM_META_SCHEMA)
 
 
 DECODED_META_SCHEMA = "doc_id long, format string, width int, height int, pixel_sum long"
 
 
-def decode_images_metadata(df: DataFrame, id_col: str = "doc_id", bin_col: str = "img") -> DataFrame:
+def decode_images_metadata(df: DataFrame) -> DataFrame:
     """Arrow-batched REAL decode of BMP/PPM payloads via mapInPandas —
     the production shape for 'decode 100 TB of images': binary rides the
     columnar path, Python sees bounded Arrow batches, output is a typed row
@@ -751,7 +750,7 @@ def decode_images_metadata(df: DataFrame, id_col: str = "doc_id", bin_col: str =
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {"doc_id": [], "format": [], "width": [], "height": [], "pixel_sum": []}
-            for did, payload in zip(pdf[id_col], pdf[bin_col]):
+            for did, payload in zip(pdf[ID_COL], pdf[BIN_COL]):
                 meta = decode_image_meta(bytes(payload))
                 rows["doc_id"].append(did)
                 rows["format"].append(meta["format"])
@@ -760,7 +759,7 @@ def decode_images_metadata(df: DataFrame, id_col: str = "doc_id", bin_col: str =
                 rows["pixel_sum"].append(meta["pixel_sum"])
             yield pd.DataFrame(rows)
 
-    return df.select(id_col, bin_col).mapInPandas(decode, schema=DECODED_META_SCHEMA)
+    return df.select(ID_COL, BIN_COL).mapInPandas(decode, schema=DECODED_META_SCHEMA)
 
 
 def multimodal_join(docs: DataFrame, emb: DataFrame) -> DataFrame:
@@ -848,7 +847,7 @@ def decode_wav(payload: bytes) -> dict:
     }
 
 
-def attach_synthetic_audio(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_synthetic_audio(docs: DataFrame) -> DataFrame:
     """Deterministic WAV payloads from the id alone: channels = id%2+1,
     sample_rate = 8000*(id%3+1), frames = id%40+5, interleaved sample i =
     ((id*131 + i*17) % 65536) - 32768; every 4th doc gets a LIST junk chunk
@@ -858,7 +857,7 @@ def attach_synthetic_audio(docs: DataFrame, id_col: str = "doc_id") -> DataFrame
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, payloads = [], []
-            for did in pdf[id_col]:
+            for did in pdf[ID_COL]:
                 did = int(did)
                 ch, sr, frames = did % 2 + 1, 8000 * (did % 3 + 1), did % 40 + 5
                 samples = [
@@ -866,12 +865,12 @@ def attach_synthetic_audio(docs: DataFrame, id_col: str = "doc_id") -> DataFrame
                 ]
                 payloads.append(encode_wav(sr, ch, samples, junk_chunk=did % 4 == 0))
                 ids.append(did)
-            yield pd.DataFrame({id_col: ids, "wav": payloads})
+            yield pd.DataFrame({ID_COL: ids, "wav": payloads})
 
     from executor_u1mindexer_spark.operators.dedup import _spread
 
-    return _spread(docs.select(id_col)).mapInPandas(
-        gen, schema=f"{id_col} long, wav binary"
+    return _spread(docs.select(ID_COL)).mapInPandas(
+        gen, schema=f"{ID_COL} long, wav binary"
     )
 
 
@@ -881,7 +880,7 @@ AUDIO_META_SCHEMA = (
 )
 
 
-def decode_audio_metadata(df: DataFrame, id_col: str = "doc_id", bin_col: str = "wav") -> DataFrame:
+def decode_audio_metadata(df: DataFrame) -> DataFrame:
     """Arrow-batched WAV decode via mapInPandas — same 100 TB shape as the
     image kernel: binary stays columnar, Python sees bounded batches."""
 
@@ -891,7 +890,7 @@ def decode_audio_metadata(df: DataFrame, id_col: str = "doc_id", bin_col: str = 
                 "doc_id": [], "sample_rate": [], "n_channels": [], "bit_depth": [],
                 "n_frames": [], "duration_us": [], "sum_abs": [],
             }
-            for did, payload in zip(pdf[id_col], pdf[bin_col]):
+            for did, payload in zip(pdf[ID_COL], pdf["wav"]):
                 meta = decode_wav(bytes(payload))
                 rows["doc_id"].append(did)
                 for k in ("sample_rate", "n_channels", "bit_depth", "n_frames",
@@ -899,7 +898,7 @@ def decode_audio_metadata(df: DataFrame, id_col: str = "doc_id", bin_col: str = 
                     rows[k].append(meta[k])
             yield pd.DataFrame(rows)
 
-    return df.select(id_col, bin_col).mapInPandas(decode, schema=AUDIO_META_SCHEMA)
+    return df.select(ID_COL, "wav").mapInPandas(decode, schema=AUDIO_META_SCHEMA)
 
 
 # --- video: frame-index container + every-Nth frame sampling ---------------
@@ -928,34 +927,32 @@ def decode_video_index(payload: bytes) -> tuple[int, list[int]]:
     return fps, list(struct.unpack(f"<{n}I", payload[12 : 12 + 4 * n]))
 
 
-def attach_synthetic_video(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_synthetic_video(docs: DataFrame) -> DataFrame:
     """Deterministic frame index from the id: n_frames = id%24+8,
     fps = 10*(id%3+1), checksum of frame f = (id*997 + f*31) % 2147483647."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, payloads = [], []
-            for did in pdf[id_col]:
+            for did in pdf[ID_COL]:
                 did = int(did)
                 n, fps = did % 24 + 8, 10 * (did % 3 + 1)
                 cks = [(did * 997 + f * 31) % 2147483647 for f in range(n)]
                 payloads.append(encode_video_index(fps, cks))
                 ids.append(did)
-            yield pd.DataFrame({id_col: ids, "video": payloads})
+            yield pd.DataFrame({ID_COL: ids, "video": payloads})
 
     from executor_u1mindexer_spark.operators.dedup import _spread
 
-    return _spread(docs.select(id_col)).mapInPandas(
-        gen, schema=f"{id_col} long, video binary"
+    return _spread(docs.select(ID_COL)).mapInPandas(
+        gen, schema=f"{ID_COL} long, video binary"
     )
 
 
 FRAME_SAMPLE_SCHEMA = "doc_id long, frame_idx int, ts_ms long, checksum long"
 
 
-def sample_video_frames(
-    df: DataFrame, every: int = 5, id_col: str = "doc_id", bin_col: str = "video"
-) -> DataFrame:
+def sample_video_frames(df: DataFrame, every: int = 5) -> DataFrame:
     """Every-Nth-frame sampling: one input row (video) -> ceil(n/every)
     output rows (sampled frames with timestamps). mapInPandas handles the
     1->many explosion without collecting; at 100 TB the output row count is
@@ -964,7 +961,7 @@ def sample_video_frames(
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: dict[str, list] = {"doc_id": [], "frame_idx": [], "ts_ms": [], "checksum": []}
-            for did, payload in zip(pdf[id_col], pdf[bin_col]):
+            for did, payload in zip(pdf[ID_COL], pdf["video"]):
                 fps, cks = decode_video_index(bytes(payload))
                 for f in range(0, len(cks), every):
                     rows["doc_id"].append(did)
@@ -973,4 +970,4 @@ def sample_video_frames(
                     rows["checksum"].append(cks[f])
             yield pd.DataFrame(rows)
 
-    return df.select(id_col, bin_col).mapInPandas(sample, schema=FRAME_SAMPLE_SCHEMA)
+    return df.select(ID_COL, "video").mapInPandas(sample, schema=FRAME_SAMPLE_SCHEMA)

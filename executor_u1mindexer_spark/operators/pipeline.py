@@ -22,6 +22,10 @@ from pyspark.sql import functions as F
 
 from executor_u1mindexer_spark.functions import text as T
 
+SIGMAS = 3
+WINDOW_ROWS = 20
+VALUE_SCALE = 1000
+
 HASH_BUCKETS = 1_000_000
 
 
@@ -472,46 +476,37 @@ def chunk_sliding_window(
     )
 
 
-def quantize_int8(
-    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def quantize_int8(emb: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 quantization: scale = max|x| / 127,
     q_i = round(x_i / scale). Returns scale + integer checksum + max
     reconstruction error (the storage-compression step of an embedding
     pipeline; int sums are order-independent so the oracle is exact)."""
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     max_abs = F.array_max(F.transform(v, lambda x: F.abs(x)))
     scale = max_abs / F.lit(127.0)
     q = F.transform(v, lambda x: F.round(x / scale).cast("int"))
     deq = F.zip_with(q, v, lambda qi, _x: qi.cast("double") * scale)
     max_err = F.array_max(F.zip_with(deq, v, lambda d, x: F.abs(d - x)))
     return emb.select(
-        F.col(id_col),
+        F.col("vec_id"),
         scale.alias("scale"),
         F.aggregate(q, F.lit(0), lambda a, x: a + x).alias("q_checksum"),
         F.round(max_err, 9).alias("max_abs_err"),
     )
 
 
-def split_assign(
-    df: DataFrame,
-    key: str,
-    *,
-    val_frac: float = 0.05,
-    test_frac: float = 0.05,
-    salt: str = "split",
-) -> DataFrame:
+def split_assign(df: DataFrame, key: str) -> DataFrame:
     """Deterministic train/val/test assignment — the holdout step of a
-    training-data pipeline. The decision hashes (key, salt), NOT the bare
+    training-data pipeline. The decision hashes (key, ':split'), NOT the bare
     key, so the split is statistically independent of every other
     hash-sampling decision on the same key (sampling with the bare key
     would correlate: the 10% sample and a 10% val split would select the
     SAME rows). Scan-side expression: no shuffle, no RNG state, stable
     across engines/partitionings; splits are exhaustive and disjoint by
     construction."""
-    b = hash_bucket(F.concat(F.col(key).cast("string"), F.lit(":" + salt)))
-    val_t = int(val_frac * HASH_BUCKETS)
-    test_t = val_t + int(test_frac * HASH_BUCKETS)
+    b = hash_bucket(F.concat(F.col(key).cast("string"), F.lit(":split")))
+    val_t = int(0.05 * HASH_BUCKETS)  # 5% val, then 5% test
+    test_t = 2 * val_t
     return df.withColumn(
         "split",
         F.when(b < val_t, F.lit("val"))
@@ -546,25 +541,23 @@ def rolling_zscore_anomaly(
     order_cols: tuple,
     value_col: str,
     id_col: str,
-    window_rows: int = 20,
-    sigmas: int = 3,
-    value_scale: int = 1000,
+    window_rows: int = WINDOW_ROWS,
 ) -> DataFrame:
     """Per-key rolling z-score anomaly flags (r07) — the point-anomaly
     monitor next to drift_chi2_buckets' distribution monitor: flag a
-    value more than `sigmas` standard deviations from the mean of the
+    value more than SIGMAS standard deviations from the mean of the
     `window_rows` values BEFORE it (the trailing baseline EXCLUDES the
     current row — including it bounds z^2 by n-1 algebraically, so a
     spike in a small window could never reach 3 sigma; excluding it
     leaves z unbounded, the semantics every production monitor uses).
 
-    EXACT integer arithmetic throughout: v = round(value * value_scale)
+    EXACT integer arithmetic throughout: v = round(value * VALUE_SCALE)
     as BIGINT, baseline sum and sum-of-squares are integer window sums,
     and the z-test is cross-multiplied to kill the division and sqrt —
 
-        (n*v - sum)^2  >  sigmas^2 * (n*sumsq - sum^2)
+        (n*v - sum)^2  >  SIGMAS^2 * (n*sumsq - sum^2)
 
-    which is z^2 > sigmas^2 scaled by n^2 * (population) variance — so
+    which is z^2 > SIGMAS^2 scaled by n^2 * (population) variance — so
     the flag is bit-identical across engines and partition orders (a
     float mean/std would not be). Baselines need n >= 2 and nonzero
     variance to flag (a constant baseline flags nothing).
@@ -572,7 +565,7 @@ def rolling_zscore_anomaly(
     Scale shape: ROWS-frame windows PARTITIONED BY the key — state per
     task is `window_rows` values; no global window, no shuffle beyond
     the one hash exchange on the key. Overflow bound: n * max|v| and
-    n * max(v^2) must stay under 2^63 — with value_scale=1000 and
+    n * max(v^2) must stay under 2^63 — with VALUE_SCALE=1000 and
     |value| <= 1e6 that holds to window_rows ~ 9e3.
 
     Returns (id_col, v_scaled, n_win, win_sum, win_sumsq, is_anomaly)."""
@@ -580,7 +573,7 @@ def rolling_zscore_anomaly(
 
     if window_rows < 2:
         raise ValueError(f"window_rows must be >= 2, got {window_rows}")
-    v = F.round(F.col(value_col) * F.lit(float(value_scale))).cast("long")
+    v = F.round(F.col(value_col) * F.lit(float(VALUE_SCALE))).cast("long")
     base = df.select(
         F.col(id_col),
         F.col(key).alias("__k"),
@@ -616,7 +609,7 @@ def rolling_zscore_anomaly(
         (
             (F.col("n_win") >= 2)
             & (var_n2 > 0)
-            & (lhs * lhs > F.lit(sigmas * sigmas) * var_n2)
+            & (lhs * lhs > F.lit(SIGMAS * SIGMAS) * var_n2)
         ).alias("is_anomaly"),
     )
 
@@ -628,19 +621,16 @@ def oracle_rolling_zscore_sql(
     order_cols: tuple,
     value_col: str,
     id_col: str,
-    window_rows: int = 20,
-    sigmas: int = 3,
-    value_scale: int = 1000,
 ) -> str:
     """DuckDB replay of rolling_zscore_anomaly — identical integer
     window sums and cross-multiplied test."""
     order = ", ".join(order_cols)
-    frame = f"ROWS BETWEEN {window_rows} PRECEDING AND 1 PRECEDING"
+    frame = f"ROWS BETWEEN {WINDOW_ROWS} PRECEDING AND 1 PRECEDING"
     over = f"OVER (PARTITION BY {key} ORDER BY {order} {frame})"
     return f"""
 WITH v AS (
   SELECT {id_col}, {key}, {order},
-         CAST(round({value_col} * {float(value_scale)!r}) AS BIGINT) AS v_scaled
+         CAST(round({value_col} * {float(VALUE_SCALE)!r}) AS BIGINT) AS v_scaled
   FROM {source}
 ), w AS (
   SELECT {id_col}, v_scaled,
@@ -653,7 +643,7 @@ WITH v AS (
 SELECT {id_col}, v_scaled, n_win, win_sum, win_sumsq,
        (n_win >= 2 AND (n_win * win_sumsq - win_sum * win_sum) > 0
         AND (n_win * v_scaled - win_sum) * (n_win * v_scaled - win_sum)
-            > {sigmas * sigmas} * (n_win * win_sumsq - win_sum * win_sum))
+            > {SIGMAS * SIGMAS} * (n_win * win_sumsq - win_sum * win_sum))
          AS is_anomaly
 FROM w
 """
@@ -842,12 +832,7 @@ def dq_audit(
     ).orderBy("check_name")
 
 
-def gopher_doc_metrics(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    stopwords: tuple = ("a", "the"),
-) -> DataFrame:
+def gopher_doc_metrics(docs: DataFrame) -> DataFrame:
     """Per-document quality metrics in the Gopher/C4 filter family (r12,
     VERDICT r11 #6) — the standard LLM-corpus heuristics: mean word
     length, stopword fraction, most-frequent-token fraction (the
@@ -865,16 +850,16 @@ def gopher_doc_metrics(
     predicates to get the melted (check, n_violations, passed) audit in
     one more tiny pass (suites/text_suite.text_gopher_quality_audit)."""
     toks = docs.select(
-        id_col,
+        "doc_id",
         F.explode(
-            F.filter(F.split(F.trim(F.col(text_col)), " "), lambda t: t != "")
+            F.filter(F.split(F.trim(F.col("text")), " "), lambda t: t != "")
         ).alias("tok"),
     )
-    tc = toks.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("c"))
-    m = tc.groupBy(id_col).agg(
+    tc = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
+    m = tc.groupBy("doc_id").agg(
         F.sum("c").cast("long").alias("n_words"),
         F.sum(F.col("c") * F.length("tok")).cast("long").alias("n_word_chars"),
-        F.sum(F.when(F.col("tok").isin(*stopwords), F.col("c")).otherwise(0))
+        F.sum(F.when(F.col("tok").isin("a", "the"), F.col("c")).otherwise(0))
         .cast("long")
         .alias("n_stop"),
         F.max("c").cast("long").alias("top_c"),
@@ -886,7 +871,7 @@ def gopher_doc_metrics(
     )
     nw = F.col("n_words").cast("double")
     return m.select(
-        id_col,
+        "doc_id",
         "n_words",
         (F.col("n_word_chars").cast("double") / nw).alias("mean_word_len"),
         (F.col("n_stop").cast("double") / nw).alias("stopword_frac"),

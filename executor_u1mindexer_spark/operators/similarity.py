@@ -28,6 +28,13 @@ from executor_u1mindexer_spark import cache
 from executor_u1mindexer_spark.functions import text as T
 from executor_u1mindexer_spark.functions import vector as V
 
+ID_COL = "vec_id"
+VEC_COL = "embedding"
+QUERY_ID_COL = "query_id"
+QUERY_VEC_COL = "query_embedding"
+N_CELLS = 8
+MAX_ITER = 5
+
 # Quantizer (KMeans) training never needs the full corpus: codebook quality
 # converges long before 100k training rows, while a full-corpus MLlib fit at
 # 100 TB is an iterative all-data job per codebook. Every trainer below fits
@@ -67,11 +74,10 @@ PLANES: list[list[float]] = [
 ]
 
 
-def sign_lsh_bucket(vec_col, planes: list[list[float]] | None = None):
-    """Bucket id = integer of sign bits of <v, plane_i> (0..2^n_planes-1)."""
-    planes = planes or PLANES
+def sign_lsh_bucket(vec_col):
+    """Bucket id = integer of sign bits of <v, plane_i> (0..2^N_PLANES-1)."""
     bits = []
-    for i, p in enumerate(planes):
+    for i, p in enumerate(PLANES):
         plane = F.array(*[F.lit(x) for x in p])
         bits.append(
             F.when(V.dot(vec_col, plane) >= 0, F.lit(2**i)).otherwise(F.lit(0))
@@ -90,10 +96,6 @@ def bucketed_topk(
     *,
     k: int,
     metric: str = "cosine",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_embedding",
 ) -> DataFrame:
     """Top-k restricted to matching buckets (IVF / LSH shared core).
 
@@ -102,13 +104,13 @@ def bucketed_topk(
     when the query side is small — Catalyst picks).
     """
     s = stored.select(
-        F.col(id_col),
-        V.as_double_array(vec_col).alias("__svec"),
+        F.col(ID_COL),
+        V.as_double_array(VEC_COL).alias("__svec"),
         bucket_stored.alias("__bucket"),
     )
     q = queries.select(
-        F.col(query_id_col),
-        V.as_double_array(query_vec_col).alias("__qvec"),
+        F.col(QUERY_ID_COL),
+        V.as_double_array(QUERY_VEC_COL).alias("__qvec"),
         bucket_query.alias("__bucket"),
     )
     if metric == "cosine":
@@ -122,30 +124,24 @@ def bucketed_topk(
         )
     else:
         dist = V.distance(metric, F.col("__qvec"), F.col("__svec"))
-    w = Window.partitionBy(query_id_col).orderBy(F.col("__dist").asc(), F.col(id_col).asc())
+    w = Window.partitionBy(QUERY_ID_COL).orderBy(F.col("__dist").asc(), F.col(ID_COL).asc())
     return (
-        joined.select(query_id_col, id_col, dist.alias("__dist"))
+        joined.select(QUERY_ID_COL, ID_COL, dist.alias("__dist"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", F.col("__dist").alias("dist"))
+        .select(QUERY_ID_COL, ID_COL, "rank", F.col("__dist").alias("dist"))
     )
 
 
-def _resolve_dim(
-    stored: DataFrame, vec_col: str, m: int, dim: int | None, op: str
-) -> int:
-    """Shared dim probe + divisibility gate for the PQ family: pass `dim`
-    when known (at 100 TB a catalog fact), else probe ONE row via
-    limit(1); reject widths m can't split evenly (a silent remainder drop
-    would leave dims unencoded while sq_norm sums all of them)."""
-    d = dim
-    if d is None:
-        probe = (
-            stored.select(F.size(V.as_double_array(vec_col)).alias("d")).limit(1).collect()
-        )
-        if not probe:
-            raise ValueError(f"{op}: empty input, pass dim= explicitly")
-        d = probe[0]["d"]
+def _resolve_dim(stored: DataFrame, m: int, op: str) -> int:
+    """Shared dim probe + divisibility gate for the PQ family: probe ONE
+    row via limit(1); reject widths m can't split evenly (a silent
+    remainder drop would leave dims unencoded while sq_norm sums all of
+    them)."""
+    probe = stored.select(F.size(V.as_double_array(VEC_COL)).alias("d")).limit(1).collect()
+    if not probe:
+        raise ValueError(f"{op}: empty input")
+    d = probe[0]["d"]
     if d % m != 0:
         raise ValueError(f"{op}: dim {d} not divisible by m={m}")
     return d
@@ -158,9 +154,7 @@ def train_pq_codebooks(
     n_codes: int,
     sub: int,
     max_iter: int = 10,
-    seed: int = 42,
     id_col: str = "vec_id",
-    vec_col: str = "__v",
 ) -> list[list[list[float]]]:
     """Train ALL m subspace codebooks in ONE cogrouped Spark job.
 
@@ -173,7 +167,7 @@ def train_pq_codebooks(
 
     Deterministic: the kernel sorts its group by id before touching the
     data (Arrow group order is partitioning-dependent), inits from
-    seed+j-chosen rows, and re-seeds empty/duplicate clusters to the
+    42+j-chosen rows, and re-seeds empty/duplicate clusters to the
     farthest point — a pure function of the sample content.
     """
     import pandas as pd
@@ -181,7 +175,7 @@ def train_pq_codebooks(
     rows = sample.select(
         F.col(id_col),
         F.posexplode(
-            F.array(*[F.slice(vec_col, j * sub + 1, sub) for j in range(m)])
+            F.array(*[F.slice("__v", j * sub + 1, sub) for j in range(m)])
         ).alias("j", "sv"),
     )
 
@@ -189,7 +183,7 @@ def train_pq_codebooks(
         j = int(pdf["j"].iloc[0])
         pdf = pdf.sort_values(id_col)
         x = np.stack(pdf["sv"].to_numpy()).astype(np.float64)
-        rng = np.random.RandomState(seed + j)
+        rng = np.random.RandomState(42 + j)
         k = min(n_codes, len(x))
         centers = x[rng.choice(len(x), k, replace=False)].copy()
         if k < n_codes:  # degenerate tiny sample: pad with repeats
@@ -295,14 +289,7 @@ def kmeans_ivf_topk(
     queries: DataFrame,
     *,
     k: int,
-    n_cells: int = 8,
     n_probe: int = N_PROBE,
-    max_iter: int = 5,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_embedding",
     fit_sample_cap: int = FIT_SAMPLE_CAP,
 ) -> DataFrame:
     """True IVF: a seeded MLlib KMeans coarse quantizer assigns cells; each
@@ -321,29 +308,29 @@ def kmeans_ivf_topk(
     from pyspark.ml.functions import array_to_vector
 
     s_feat = stored.select(
-        F.col(id_col),
-        V.as_double_array(vec_col).alias("__svec"),
+        F.col(ID_COL),
+        V.as_double_array(VEC_COL).alias("__svec"),
     ).withColumn("features", array_to_vector(F.col("__svec")))
-    fit_input = fit_sample(s_feat, id_col, fit_sample_cap).select("features")
-    model = KMeans(k=n_cells, seed=42, maxIter=max_iter).fit(fit_input)
+    fit_input = fit_sample(s_feat, ID_COL, fit_sample_cap).select("features")
+    model = KMeans(k=N_CELLS, seed=42, maxIter=MAX_ITER).fit(fit_input)
     s_cells = model.transform(s_feat).select(
-        id_col, "__svec", F.col("prediction").alias("__cell")
+        ID_COL, "__svec", F.col("prediction").alias("__cell")
     )
     q_feat = queries.select(
-        F.col(query_id_col),
-        V.as_double_array(query_vec_col).alias("__qvec"),
+        F.col(QUERY_ID_COL),
+        V.as_double_array(QUERY_VEC_COL).alias("__qvec"),
     )
     q_cells = probe_cells(
-        q_feat, "__qvec", query_id_col, model.clusterCenters(), n_probe
+        q_feat, "__qvec", QUERY_ID_COL, model.clusterCenters(), n_probe
     )
     joined = s_cells.join(F.broadcast(q_cells), on="__cell")
-    dist = V.distance(metric, F.col("__qvec"), F.col("__svec"))
-    w = Window.partitionBy(query_id_col).orderBy(F.col("__dist").asc(), F.col(id_col).asc())
+    dist = V.distance("cosine", F.col("__qvec"), F.col("__svec"))
+    w = Window.partitionBy(QUERY_ID_COL).orderBy(F.col("__dist").asc(), F.col(ID_COL).asc())
     return (
-        joined.select(query_id_col, id_col, dist.alias("__dist"), "__cell")
+        joined.select(QUERY_ID_COL, ID_COL, dist.alias("__dist"), "__cell")
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", F.col("__cell").alias("cell"))
+        .select(QUERY_ID_COL, ID_COL, "rank", F.col("__cell").alias("cell"))
     )
 
 
@@ -353,15 +340,10 @@ def partitioned_topk_merge(
     *,
     k: int,
     metric: str = "cosine",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_embedding",
-    n_partitions: int = 8,
 ) -> DataFrame:
     """Exact KNN via per-partition numpy top-k + global merge.
 
-    The corpus is bucketed into n_partitions deterministic hash buckets;
+    The corpus is bucketed into 8 deterministic hash buckets;
     each bucket computes its local top-k per query with one vectorized
     numpy pass over the Arrow-batched group (cogrouped applyInPandas),
     emitting k rows/query/partition; a final window keeps the global top-k.
@@ -372,14 +354,14 @@ def partitioned_topk_merge(
     BOTH sides stay DataFrames end-to-end (r03: the old signature took a
     driver-collected pandas query set — a driver OOM once the query set is
     corpus-derived and grows with the data). The query set is replicated to
-    every bucket via a broadcast cross-join against the n_partitions pid
-    table (q × n_partitions small rows — the standard scatter cost of
+    every bucket via a broadcast cross-join against the 8-row pid
+    table (q × 8 small rows — the standard scatter cost of
     scatter-gather search), then cogrouped with the stored bucket.
     """
     def local_topk(spdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-        qids = qpdf[query_id_col].to_numpy()
+        qids = qpdf[QUERY_ID_COL].to_numpy()
         qmat = np.stack(qpdf["__qvec"].to_numpy()).astype(np.float64)
-        ids = spdf[id_col].to_numpy()
+        ids = spdf[ID_COL].to_numpy()
         mat = np.stack(spdf["__svec"].to_numpy()).astype(np.float64)
         # With hnswlib available, this is where a per-partition HNSW
         # index build + knn_query would replace the exact numpy pass
@@ -397,8 +379,8 @@ def partitioned_topk_merge(
         part = np.argpartition(d, kk - 1, axis=0)[:kk]  # (kk, n_queries)
         return pd.DataFrame(
             {
-                query_id_col: np.repeat(qids, kk),
-                id_col: ids[part.T.ravel()],
+                QUERY_ID_COL: np.repeat(qids, kk),
+                ID_COL: ids[part.T.ravel()],
                 "dist": np.take_along_axis(d, part, axis=0).T.ravel(),
             }
         )
@@ -408,11 +390,11 @@ def partitioned_topk_merge(
         queries,
         k=k,
         kernel=local_topk,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
-        n_partitions=n_partitions,
+        id_col=ID_COL,
+        vec_col=VEC_COL,
+        query_id_col=QUERY_ID_COL,
+        query_vec_col=QUERY_VEC_COL,
+        n_partitions=8,
     )
 
 
@@ -482,14 +464,6 @@ def hnsw_partitioned_topk(
     queries: DataFrame,
     *,
     k: int,
-    metric: str = "cosine",
-    m: int = 16,
-    ef_construction: int = 100,
-    ef_search: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_embedding",
     n_partitions: int = 8,
     max_bucket_rows: int | None = None,
 ) -> DataFrame:
@@ -507,9 +481,9 @@ def hnsw_partitioned_topk(
     stable across partitionings and runs — unlike hnswlib, whose RNG
     levels make every build different.
 
-    ef/M forwarding (executor.py:22-24): ef_construction/m shape the
-    graph, ef_search trades recall for speed at query time — the knobs the
-    exact path accepts-and-ignores become REAL here.
+    Cosine distance and the reference's HNSW knobs (executor.py:22-24) are
+    fixed: M 16 and ef_search 50 (HNSW's own defaults), ef_construction
+    100.
 
     max_bucket_rows (r06, VERDICT r05 #2): a per-bucket build ceiling.
     When set, the corpus is counted (cheap metadata-ish scan next to the
@@ -521,12 +495,6 @@ def hnsw_partitioned_topk(
     untouched."""
     from executor_u1mindexer_spark.operators.hnsw import HNSW
 
-    metric_map = {"cosine": "cosine", "euclidean": "l2", "inner_product": "ip"}
-    if metric not in metric_map:
-        raise ValueError(
-            f"unknown metric {metric!r}; expected one of {sorted(metric_map)}"
-        )
-    hnsw_metric = metric_map[metric]
     if max_bucket_rows is not None:
         if max_bucket_rows < 1:
             raise ValueError(f"max_bucket_rows must be >= 1, got {max_bucket_rows}")
@@ -535,16 +503,14 @@ def hnsw_partitioned_topk(
         n_partitions = max(n_partitions, int(need))
 
     def local_hnsw_topk(spdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-        ids = spdf[id_col].to_numpy()
+        ids = spdf[ID_COL].to_numpy()
         mat = np.stack(spdf["__svec"].to_numpy()).astype(np.float64)
-        index = HNSW(
-            mat.shape[1], metric=hnsw_metric, m=m, ef_construction=ef_construction
-        ).build(ids, mat)
-        qids = qpdf[query_id_col].to_numpy()
+        index = HNSW(mat.shape[1], ef_construction=100).build(ids, mat)
+        qids = qpdf[QUERY_ID_COL].to_numpy()
         qmat = np.stack(qpdf["__qvec"].to_numpy()).astype(np.float64)
-        rows, out_ids, out_d = index.search_batch(qmat, k, ef=ef_search)
+        rows, out_ids, out_d = index.search_batch(qmat, k)
         return pd.DataFrame(
-            {query_id_col: qids[rows], id_col: out_ids, "dist": out_d}
+            {QUERY_ID_COL: qids[rows], ID_COL: out_ids, "dist": out_d}
         )
 
     return _scatter_gather_topk(
@@ -552,10 +518,10 @@ def hnsw_partitioned_topk(
         queries,
         k=k,
         kernel=local_hnsw_topk,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
+        id_col=ID_COL,
+        vec_col=VEC_COL,
+        query_id_col=QUERY_ID_COL,
+        query_vec_col=QUERY_VEC_COL,
         n_partitions=n_partitions,
     )
 
@@ -565,17 +531,8 @@ def ivf_pq_topk(
     queries: DataFrame,
     *,
     k: int,
-    n_cells: int = 8,
     n_probe: int = N_PROBE,
     m: int = 8,
-    n_codes: int = 16,
-    max_iter: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_embedding",
-    dim: int | None = None,
-    fit_sample_cap: int = FIT_SAMPLE_CAP,
 ) -> DataFrame:
     """IVF-PQ search with asymmetric distance (ADC) — the composed form of
     kmeans_ivf_topk + product_quantize, and the storage layout real
@@ -587,9 +544,9 @@ def ivf_pq_topk(
     1. both quantizers fit on ONE shared bounded sample (fit_sample); the
        PQ codebooks are trained on coarse-cell RESIDUALS (v − centroid),
        the standard IVFADC layout — residuals have far less variance than
-       raw vectors, so the same m×n_codes budget quantizes finer;
+       raw vectors, so the same m×16 budget quantizes finer;
     2. encode pass: corpus -> (id, cell, codes of v − centroid[cell]) —
-       map-only, one scan; the (n_cells × dim) centroid table is a literal
+       map-only, one scan; the (N_CELLS × dim) centroid table is a literal
        array-of-arrays indexed by element_at, residual is a zip_with;
     3. query side: each query probes its n_probe nearest cells
        (probe_cells — literal centroids, codegen ranking); per PROBE, per
@@ -612,22 +569,22 @@ def ivf_pq_topk(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    d = _resolve_dim(stored, vec_col, m, dim, "ivf_pq_topk")
+    d = _resolve_dim(stored, m, "ivf_pq_topk")
     sub = d // m
 
-    base = stored.select(F.col(id_col), V.as_double_array(vec_col).alias("__v"))
+    base = stored.select(F.col(ID_COL), V.as_double_array(VEC_COL).alias("__v"))
     feats = base.select(
-        id_col,
+        ID_COL,
         "__v",
         array_to_vector(F.col("__v")).alias("__full"),
     )
-    fit_input = cache.materialize(fit_sample(feats, id_col, fit_sample_cap))
+    fit_input = cache.materialize(fit_sample(feats, ID_COL, FIT_SAMPLE_CAP))
     coarse = KMeans(
-        k=n_cells, seed=42, maxIter=max_iter, featuresCol="__full"
+        k=N_CELLS, seed=42, maxIter=MAX_ITER, featuresCol="__full"
     ).fit(fit_input.select("__full"))
     coarse.setPredictionCol("__cell")
 
-    # literal (n_cells x dim) centroid table, element_at-indexed by cell id;
+    # literal (N_CELLS x dim) centroid table, element_at-indexed by cell id;
     # residual = v - centroid[cell] as a zip_with — map-only codegen
     cent_table = F.array(
         *[
@@ -645,18 +602,18 @@ def ivf_pq_topk(
     # on the fit sample's coarse-cell RESIDUALS — never m sequential fits;
     # encode below is the literal-argmin codegen pass
     fit_res = coarse.transform(fit_input).select(
-        id_col, _residual(F.col("__v"), F.col("__cell")).alias("__v")
+        ID_COL, _residual(F.col("__v"), F.col("__cell")).alias("__v")
     )
     books = train_pq_codebooks(
         fit_res,
-        m=m, n_codes=n_codes, sub=sub, max_iter=max_iter * 2, id_col=id_col,
+        m=m, n_codes=16, sub=sub, max_iter=MAX_ITER * 2, id_col=ID_COL,
     )
 
     s_enc = (
-        coarse.transform(feats.select(id_col, "__v", "__full"))
+        coarse.transform(feats.select(ID_COL, "__v", "__full"))
         .withColumn("__r", _residual(F.col("__v"), F.col("__cell")))
         .select(
-            id_col,
+            ID_COL,
             "__cell",
             *[
                 nearest_code(F.slice("__r", j * sub + 1, sub), books[j]).alias(f"__c{j}")
@@ -666,18 +623,18 @@ def ivf_pq_topk(
     )
 
     q_base = queries.select(
-        F.col(query_id_col), V.as_double_array(query_vec_col).alias("__qv")
+        F.col(QUERY_ID_COL), V.as_double_array(QUERY_VEC_COL).alias("__qv")
     )
     # n_probe nearest cells per query (literal centroids, codegen ranking)
     q_cells = probe_cells(
-        q_base, "__qv", query_id_col, coarse.clusterCenters(), n_probe
+        q_base, "__qv", QUERY_ID_COL, coarse.clusterCenters(), n_probe
     )
     # per-probe ADC lookup tables over the QUERY residual for that cell:
     # lut_j = [||(q - centroid[cell])_j - center_jc||^2 for c in codes]
     luts = q_cells.withColumn(
         "__qr", _residual(F.col("__qv"), F.col("__cell"))
     ).select(
-        query_id_col,
+        QUERY_ID_COL,
         "__cell",
         *[
             F.array(
@@ -686,7 +643,7 @@ def ivf_pq_topk(
                         F.slice("__qr", j * sub + 1, sub),
                         F.array(*[F.lit(x) for x in books[j][c]]),
                     )
-                    for c in range(n_codes)
+                    for c in range(16)
                 ]
             ).alias(f"__lut{j}")
             for j in range(m)
@@ -697,16 +654,16 @@ def ivf_pq_topk(
     adc = F.element_at(F.col("__lut0"), F.col("__c0") + 1)
     for j in range(1, m):
         adc = adc + F.element_at(F.col(f"__lut{j}"), F.col(f"__c{j}") + 1)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("__adc").asc(), F.col(id_col).asc()
+    w = Window.partitionBy(QUERY_ID_COL).orderBy(
+        F.col("__adc").asc(), F.col(ID_COL).asc()
     )
     return (
-        joined.select(query_id_col, id_col, F.col("__cell"), adc.alias("__adc"))
+        joined.select(QUERY_ID_COL, ID_COL, F.col("__cell"), adc.alias("__adc"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            query_id_col,
-            id_col,
+            QUERY_ID_COL,
+            ID_COL,
             "rank",
             F.col("__cell").alias("cell"),
             F.col("__adc").alias("adc_dist"),
@@ -720,10 +677,6 @@ def range_search(
     radius: float,
     *,
     metric: str = "cosine",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_embedding",
 ) -> DataFrame:
     """Radius (range) search: every stored vector within `radius` of each
     query — the unbounded-k sibling of knn_search (hnswlib exposes only
@@ -735,19 +688,19 @@ def range_search(
     scan-side, so output size is the only data-dependent cost; NO top-k
     window, NO shuffle at all (compare knn_search's rank window)."""
     qs = queries.select(
-        F.col(query_id_col),
-        V.as_double_array(query_vec_col).alias("_qv"),
+        F.col(QUERY_ID_COL),
+        V.as_double_array(QUERY_VEC_COL).alias("_qv"),
     )
-    st = stored.select(F.col(id_col), V.as_double_array(vec_col).alias("_sv"))
+    st = stored.select(F.col(ID_COL), V.as_double_array(VEC_COL).alias("_sv"))
     dist = V.distance(metric, F.col("_qv"), F.col("_sv"))
     return (
         st.join(F.broadcast(qs))
-        .select(query_id_col, id_col, dist.alias("dist"))
+        .select(QUERY_ID_COL, ID_COL, dist.alias("dist"))
         .filter(F.col("dist") <= F.lit(radius))
     )
 
 
-def label_centroids(emb: DataFrame, *, label_col: str = "label", vec_col: str = "embedding") -> DataFrame:
+def label_centroids(emb: DataFrame) -> DataFrame:
     """Per-label centroid in long form: (label, dim [1-based], centroid, n).
 
     posexplode -> groupBy(label, dim) — ONE shuffle on (label, dim), partial
@@ -758,8 +711,8 @@ def label_centroids(emb: DataFrame, *, label_col: str = "label", vec_col: str = 
     agg_stats_funcs); the magnitude here is O(1) so 6dp is ~1e10 ulps of
     slack."""
     exploded = emb.select(
-        F.col(label_col).alias("label"),
-        F.posexplode(V.as_double_array(vec_col)).alias("pos", "val"),
+        F.col("label"),
+        F.posexplode(V.as_double_array(VEC_COL)).alias("pos", "val"),
     )
     return (
         exploded.groupBy("label", (F.col("pos") + 1).alias("dim"))
@@ -775,10 +728,6 @@ def product_quantize(
     *,
     m: int = 8,
     n_codes: int = 16,
-    max_iter: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
     fit_sample_cap: int = FIT_SAMPLE_CAP,
 ) -> DataFrame:
     """Product quantization: split the d-dim vector into m contiguous
@@ -797,20 +746,19 @@ def product_quantize(
     (id, codes array, recon_err — the per-vector squared reconstruction
     error from the SAME literal codebooks, sq_norm).
 
-    `dim` is the vector width; pass it when known (at 100 TB a catalog
-    fact), else it is probed from ONE row via limit(1). Must be divisible
+    The vector width is probed from ONE row via limit(1). It must be divisible
     by m — a silent remainder drop would leave d % m dims unencoded while
     sq_norm still sums all d, skewing the mse invariant (ValueError).
 
     Like the IVF quantizer, trained centers aren't static SQL — the suite
     reduces this to an invariant row (codes in range, error bounded).
     """
-    d = _resolve_dim(stored, vec_col, m, dim, "product_quantize")
+    d = _resolve_dim(stored, m, "product_quantize")
     sub = d // m
-    base = stored.select(F.col(id_col), V.as_double_array(vec_col).alias("__v"))
+    base = stored.select(F.col(ID_COL), V.as_double_array(VEC_COL).alias("__v"))
     books = train_pq_codebooks(
-        fit_sample(base, id_col, fit_sample_cap),
-        m=m, n_codes=n_codes, sub=sub, max_iter=max_iter * 2, id_col=id_col,
+        fit_sample(base, ID_COL, fit_sample_cap),
+        m=m, n_codes=n_codes, sub=sub, max_iter=MAX_ITER * 2, id_col=ID_COL,
     )
     code_cols, err_cols = [], []
     for j in range(m):
@@ -830,7 +778,7 @@ def product_quantize(
     for e in err_cols[1:]:
         total_err = total_err + e
     return base.select(
-        F.col(id_col),
+        F.col(ID_COL),
         F.array(*code_cols).alias("codes"),
         total_err.alias("recon_err"),
         F.aggregate(
@@ -845,8 +793,6 @@ def mmr_rerank(
     m: int = 8,
     n: int = 4,
     lam: float = 0.5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Maximal Marginal Relevance re-rank (Carbonell & Goldstein, SIGIR'98)
     — diversity-aware top-n (r12): from each query's top-m cosine
@@ -880,7 +826,7 @@ def mmr_rerank(
         raise ValueError(f"lam must be in [0, 1], got {lam}")
     base = KNN.knn_search(emb, queries, k=m, metric="cosine", is_distance=False)
     e = emb.select(
-        F.col(id_col).alias("vec_id"), V.as_double_array(vec_col).alias("__emb")
+        F.col(ID_COL).alias("vec_id"), V.as_double_array(VEC_COL).alias("__emb")
     )
     cands = base.select("query_id", "vec_id", F.col("score").alias("rel")).join(
         e, "vec_id"

@@ -54,6 +54,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+ITEM_TYPE = "long"
+GROUP_TYPE = "string"
+
 P_MIN, P_MAX = 4, 16
 
 
@@ -962,7 +965,7 @@ def misra_gries_partials(
 
 
 def heavy_hitters_verified(
-    df: DataFrame, item_col: str, k: int = MG_K_DEFAULT, item_type: str = "long"
+    df: DataFrame, item_col: str, k: int = MG_K_DEFAULT
 ) -> DataFrame:
     """Exact heavy hitters via MG candidates + verify: every item whose
     true count exceeds n/(k+1), with its EXACT count — deterministic
@@ -977,7 +980,7 @@ def heavy_hitters_verified(
     n-threshold is one more broadcast of a 1-row total. Never an
     all-items shuffle: at 100 TB the full groupBy(item) this replaces
     would shuffle every distinct item; this shuffles ≤ P·k + k rows."""
-    parts = misra_gries_partials(df, item_col, k, item_type)
+    parts = misra_gries_partials(df, item_col, k, ITEM_TYPE)
     cand = (
         parts.filter(F.col(item_col).isNotNull())
         .groupBy(item_col)
@@ -1059,8 +1062,6 @@ def heavy_hitters_verified_grouped(
     group_col: str,
     item_col: str,
     k: int = MG_K_DEFAULT,
-    group_type: str = "string",
-    item_type: str = "long",
 ) -> DataFrame:
     """Per-group exact heavy hitters: for each group, every item whose
     in-group count exceeds n_g/(k+1), with exact counts — the grouped
@@ -1071,7 +1072,7 @@ def heavy_hitters_verified_grouped(
     totals (one row per group) both broadcast back over the second scan;
     the exact count shuffles only (group, candidate-item) pairs."""
     parts = misra_gries_partials_grouped(
-        df, group_col, item_col, k, group_type, item_type
+        df, group_col, item_col, k, GROUP_TYPE, ITEM_TYPE
     )
     cand = (
         parts.filter(F.col(item_col).isNotNull())
@@ -1226,7 +1227,6 @@ def kmv_bottomk_grouped(
     group_col: str,
     col: str,
     k: int = KMV_K_DEFAULT,
-    group_type: str = "string",
 ) -> DataFrame:
     """Per-group KMV summaries: for each group its k smallest distinct
     hashes. The global merge is a distinct + ONE group-partitioned
@@ -1234,7 +1234,7 @@ def kmv_bottomk_grouped(
     the full per-group distinct domain."""
     from pyspark.sql import Window
 
-    parts = kmv_partials_grouped(df, group_col, col, k, group_type).distinct()
+    parts = kmv_partials_grouped(df, group_col, col, k, GROUP_TYPE).distinct()
     w = Window.partitionBy(group_col).orderBy("h")
     return (
         parts.withColumn("__rk", F.row_number().over(w))

@@ -29,18 +29,16 @@ def salted_join(
     key: str,
     *,
     salt_source: Column,
-    n_salt: int = DEFAULT_SALTS,
-    how: str = "inner",
 ) -> DataFrame:
     """big ⋈ small on `key`, with the big side salted by `salt_source`
     (any deterministic expression over big's columns, e.g. a line number).
-    The small side is replicated n_salt x — keep it broadcast-sized or
+    The small side is replicated DEFAULT_SALTS x — keep it broadcast-sized or
     accept the replication cost for the skew relief."""
-    b = big.withColumn("__salt", F.pmod(salt_source.cast("long"), F.lit(n_salt)))
+    b = big.withColumn("__salt", F.pmod(salt_source.cast("long"), F.lit(DEFAULT_SALTS)))
     s = small.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)).cast("array<long>"))
+        "__salt", F.explode(F.sequence(F.lit(0), F.lit(DEFAULT_SALTS - 1)).cast("array<long>"))
     )
-    out = b.join(s, on=[key, "__salt"], how=how)
+    out = b.join(s, on=[key, "__salt"])
     return out.drop("__salt")
 
 
@@ -50,8 +48,6 @@ def salted_group_topk(
     order_col: str,
     tiebreak: str,
     k: int,
-    *,
-    n_salt: int | None = None,
 ) -> DataFrame:
     """Skew-resistant per-group top-k (r11): two salted phases instead of
     one full per-group sort. Phase 1 ranks within (group, salt) — a hot
@@ -73,8 +69,8 @@ def salted_group_topk(
     group regardless of group size. Returns the top-k rows per group
     with their final rank.
 
-    n_salt (r17, guide §2.5 skew probe): None derives the salt count
-    from spark.sql.shuffle.partitions (floored at DEFAULT_SALTS) — a
+    n_salt (r17, guide §2.5 skew probe): the salt count is
+    spark.sql.shuffle.partitions (floored at DEFAULT_SALTS) — a
     hash-partitioned key needs far more distinct values than reduce
     partitions to spread evenly, and a CONSTANT salt count starves the
     phase-1 exchange at cluster partition counts (25 groups x 8 salts
@@ -85,11 +81,9 @@ def salted_group_topk(
     stays bounded at k * n_salt rows per group."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if n_salt is None:
-        n_salt = max(
-            DEFAULT_SALTS,
-            int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-        )
+    n_salt = max(
+        DEFAULT_SALTS, int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    )
     from pyspark.sql import Window
 
     salt = F.pmod(F.xxhash64(F.col(tiebreak).cast("string")), F.lit(n_salt))

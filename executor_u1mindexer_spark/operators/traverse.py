@@ -15,10 +15,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def with_chunks(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_chunks(docs: DataFrame) -> DataFrame:
     """Attach a chunks array<struct<chunk_seq:int, chunk_text:string>>:
     two halves of the word sequence ((n+1) div 2 words, then the rest)."""
-    toks: Column = F.split(F.col(text_col), r"\s+")
+    toks: Column = F.split(F.col("text"), r"\s+")
     n = F.size(toks)
     h = F.floor((n + 1) / 2).cast("int")  # (n+1) div 2; exact for int-range doubles
     first = F.array_join(F.slice(toks, 1, h), " ")
@@ -34,7 +34,6 @@ def traverse_flat(
     docs: DataFrame,
     path: str = "r",
     id_col: str = "doc_id",
-    chunks_col: str = "chunks",
 ) -> DataFrame:
     """Select a tree level: 'r' returns roots unchanged (executor.py:88
     default); 'c' explodes the chunks level, one row per chunk, lifting
@@ -51,7 +50,7 @@ def traverse_flat(
         return docs
     if path == "c":
         exploded = docs.select(
-            F.col(id_col), F.explode(F.col(chunks_col)).alias("__chunk")
+            F.col(id_col), F.explode(F.col("chunks")).alias("__chunk")
         )
         fields = [f.name for f in exploded.schema["__chunk"].dataType.fields]
         lifted = [F.col(f"__chunk.{f}").alias(f) for f in fields]

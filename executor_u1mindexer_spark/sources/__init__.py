@@ -41,7 +41,6 @@ def write_table(
     df: DataFrame,
     path: str,
     fmt: str = "parquet",
-    mode: str = "overwrite",
     partition_by: Sequence[str] = (),
     **options: str,
 ) -> None:
@@ -49,7 +48,7 @@ def write_table(
     read — the on-disk analog of a coarse index."""
     if fmt not in FORMATS:
         raise ValueError(f"unknown format {fmt!r}; expected one of {FORMATS}")
-    writer = df.write.mode(mode).options(**options)
+    writer = df.write.mode("overwrite").options(**options)
     if fmt == "csv":
         writer = writer.option("header", "true")
     if partition_by:

@@ -173,7 +173,6 @@ def fold_family(
     members: list[tuple[str, list[str], list[str], dict]],
     queries: dict,
     oracles: dict,
-    doc: str = "",
 ):
     """Build the folded (query_fn, oracle_sql) pair for one family.
 
@@ -206,7 +205,7 @@ def fold_family(
     # design, so every family keeps one dtype-faithful witness in pytest.
     q.__fold_members__ = members
     q.__fold_sources__ = (queries, oracles)
-    q.__doc__ = doc or (
+    q.__doc__ = (
         f"Parameterized twin row (VERDICT r09 #3): UNION of "
         f"{[m[0] for m in members]} under the canonical melted schema — "
         "see suites/_fold.py."

@@ -802,7 +802,7 @@ def bm25_sql_fragments(terms: tuple[str, ...]) -> tuple[str, str, str]:
     return tf, contrib, dfs
 
 
-def _bm25_sql(terms: tuple[str, ...], k: int = BM25_K) -> str:
+def _bm25_sql(terms: tuple[str, ...]) -> str:
     """DuckDB twin of bm25_scores(terms) + top-k — generated from the same
     term list the Spark builder consumes, so both sides parameterize
     identically."""
@@ -824,11 +824,11 @@ SELECT doc_id,
        {tf_out}
 FROM per_doc CROSS JOIN stats
 ORDER BY score_micro DESC, doc_id ASC
-LIMIT {k}
+LIMIT {BM25_K}
 """
 
 
-def _bpe_sql_stages(n: int = BPE_MERGES) -> str:
+def _bpe_sql_stages() -> str:
     """The BPE training loop replayed as chained CTE stages: per merge i,
     p{i} counts adjacent pairs of the current tokenization, m{i} takes the
     deterministic argmax, c{i} rewrites the corpus with the boundary-
@@ -836,15 +836,15 @@ def _bpe_sql_stages(n: int = BPE_MERGES) -> str:
     uses (see the BPE block comment)."""
     # every stage is MATERIALIZED: DuckDB inlines plain CTEs, and each
     # stage references its predecessor twice (pair counts + rewrite), so
-    # un-materialized chaining re-expands c0 2^n times — the observed
-    # "too many open files" fd explosion at n=8
+    # un-materialized chaining re-expands c0 2^BPE_MERGES times — the
+    # observed "too many open files" fd explosion at 8 merges
     parts = [
         r"""c0 AS MATERIALIZED (
   SELECT doc_id,
          ' ' || array_to_string(str_split_regex(coalesce(text, ''), '\s+'), ' ') || ' ' AS s
   FROM documents)"""
     ]
-    for i in range(1, n + 1):
+    for i in range(1, BPE_MERGES + 1):
         prev = f"c{i - 1}"
         parts.append(
             f"""p{i} AS MATERIALIZED (

@@ -165,12 +165,22 @@ def test_dump_load_roundtrip_preserves_search(spark, engine, sf_dir, tmp_path):
 
 def test_dump_after_load_same_workspace(spark, engine, tmp_path):
     """dump over a workspace the state was LOADED from (lineage reads the
-    path being overwritten) — must not corrupt the snapshot."""
+    path being overwritten) — must not corrupt the snapshot, and the
+    engine that dumped must stay usable: its lineage read the snapshot
+    the dump swapped away."""
     engine.dump()
     eng2 = U1MIndexerSpark(spark, dim=64, workspace=str(tmp_path))
     upd = spark.createDataFrame([(3, [2.0] * 64)], "doc_id long, embedding array<double>")
     eng2.index(upd)
     eng2.dump()  # self-overwrite cycle
+    eng2.index(
+        spark.createDataFrame([(100, [-1.0] * 64)], "doc_id long, embedding array<double>")
+    )
+    assert eng2.status() == {
+        "count_indexed": 101, "count_active": 101, "count_deleted": 0, "size_dam": 101,
+    }
+    q = spark.createDataFrame([(0, [2.0] * 64)], "query_id long, query_embedding array<double>")
+    assert [r.vec_id for r in eng2.search(q, limit=1).collect()] == [3]
     eng3 = U1MIndexerSpark(spark, dim=64, workspace=str(tmp_path))
     assert eng3.status()["count_active"] == 100
 
@@ -188,6 +198,36 @@ def test_dim_mismatch_raises(spark, engine):
     # the guard must NOT be prunable away by an action that skips emb:
     # status() only counts rows, so it succeeds — enforcement is data-plane
     assert engine.status()["count_active"] >= 0
+
+
+def test_failed_checkpoint_keeps_the_counters(spark, tmp_path):
+    """A pending wrong-dim batch makes the next mutation's checkpoint
+    raise; the engine must report the same status before and after."""
+    eng = U1MIndexerSpark(spark, dim=2, workspace=str(tmp_path))
+
+    def batch(ids, dim):
+        return spark.createDataFrame(
+            [(i, [1.0] * dim) for i in ids], "doc_id long, embedding array<double>"
+        )
+
+    eng.index(batch(range(4), 2))
+    eng.index(batch([4, 5], 3))  # lazy: the guard rides the pending plan
+    before = eng.status()
+    assert before["count_active"] == 6
+    with pytest.raises(Exception, match="dimension != the index dim"):
+        eng.index(batch([6], 2))
+    assert eng.status() == before
+
+
+def test_null_ids_never_enter_the_docstore(spark, tmp_path):
+    """A null id gets no vector (M.new_ids) and no payload either, so two
+    batches that each carry one leave size_dam equal to count_active."""
+    eng = U1MIndexerSpark(spark, dim=2, workspace=str(tmp_path))
+    schema = "doc_id long, embedding array<double>, text string"
+    eng.index(spark.createDataFrame([(1, [1.0, 0.0], "a"), (None, [0.0, 1.0], "n")], schema))
+    eng.index(spark.createDataFrame([(2, [1.0, 1.0], "b"), (None, [1.0, 0.5], "m")], schema))
+    st = eng.status()
+    assert (st["count_active"], st["size_dam"]) == (2, 2)
 
 
 def test_capacity_index_raises_on_wrong_dim_at_the_call(spark, tmp_path):

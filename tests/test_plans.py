@@ -6,6 +6,7 @@ join, global sort for a top-k) is a regression at scale even when the small
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -744,6 +745,62 @@ def test_package_materializes_only_through_cache():
         if call.search(line.split("#", 1)[0])
     ]
     assert not offenders, offenders
+
+
+def test_every_operator_option_has_a_caller():
+    """An option that no call sets has one value in use, so it is a
+    constant. Scans the defaulted parameters of module-level package
+    functions against every call, by name, in the package, tests/,
+    tools/, perfbench/, bench.py and __spark_entry__.py: a parameter
+    must be passed by keyword or reached by a positional argument.
+    Exempt: class methods, a name the package defines twice, and a
+    function some call reaches through a ``*``/``**`` splat."""
+    repo = Path(__file__).parent.parent
+    root = Path(pkg.__file__).parent
+    defs: dict[str, list[tuple[Path, ast.FunctionDef]]] = {}
+    for path in sorted(root.rglob("*.py")):
+        for fn in ast.parse(path.read_text()).body:
+            if isinstance(fn, ast.FunctionDef):
+                defs.setdefault(fn.name, []).append((path, fn))
+    callers = [
+        *root.rglob("*.py"),
+        *(p for d in ("tests", "tools", "perfbench") for p in (repo / d).rglob("*.py")),
+        repo / "bench.py",
+        repo / "__spark_entry__.py",
+    ]
+    n_pos: dict[str, int] = {}
+    keywords: dict[str, set[str]] = {}
+    splat: set[str] = set()
+    for path in callers:
+        for call in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name not in defs:
+                continue
+            if any(isinstance(a, ast.Starred) for a in call.args) or any(
+                k.arg is None for k in call.keywords
+            ):
+                splat.add(name)
+            n_pos[name] = max(n_pos.get(name, 0), len(call.args))
+            keywords.setdefault(name, set()).update(k.arg for k in call.keywords)
+    unset = []
+    for name, found in defs.items():
+        if len(found) > 1 or name in splat:
+            continue
+        path, fn = found[0]
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        first = len(pos) - len(a.defaults)
+        options = [(i, p.arg) for i, p in enumerate(pos) if i >= first]
+        options += [(None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        unset += [
+            f"{path.relative_to(root)}:{fn.lineno} {name}({arg}=)"
+            for i, arg in options
+            if arg not in keywords.get(name, ()) and (i is None or i >= n_pos.get(name, 0))
+        ]
+    assert not unset, f"{len(unset)} options no call sets: {unset}"
 
 
 def test_asof_nearest_is_one_exchange_two_windows_no_join(spark, sf_dir):
